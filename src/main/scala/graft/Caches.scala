@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.GraftDatasetBridge
+import org.apache.spark.storage.StorageLevel
 
-/** Registry for operator-internal persisted intermediates.
+/** Registry for operator-internal persisted intermediates and lineage
+  * cuts.
   *
   * Several operators (the classed dedup miners, [[operators.GroupOps.denseId]])
   * `persist()` a mid-plan table because it feeds 3–5 plan branches; the
@@ -10,6 +13,22 @@ import org.apache.spark.sql.DataFrame
   * operator itself can never safely unpersist. Without cleanup, a
   * long-lived session running the dedup family accumulates cached class
   * tables until memory-pressure eviction.
+  *
+  * Checkpoint/release contract (the one place it is stated): every
+  * iteration loop ([[operators.Components]], [[operators.Graph]]) cuts
+  * its per-round state with [[checkpoint]] — an eager local checkpoint
+  * that computes the round, truncates lineage (state feeds two plan
+  * branches per round, so an uncut plan doubles every round) and
+  * carries MEASURED statistics (rows × per-row size), so size estimates
+  * stay flat over rounds and auto-broadcast sees the real state size.
+  * The loop [[release]]s round i's state once round i+1 is
+  * materialized; the final round's state is tracked, so the scope that
+  * materializes the result frees it — a result re-read after its
+  * scope closed fails on the missing checkpoint blocks rather than
+  * recomputing, so materialize inside the scope. Local checkpoints trade
+  * lineage-replay recovery for speed — the right trade in a bounded
+  * iterative refinement (on a real cluster `sc.setCheckpointDir` +
+  * `checkpoint()` adds fault tolerance).
   *
   * Scoping: a process-global registry alone is wrong for concurrent
   * queries (Spark supports concurrent actions on one session) — query A's
@@ -35,7 +54,7 @@ object Caches {
     def close(): Unit = {
       var df = dfs.poll()
       while (df != null) {
-        df.unpersist(blocking = false)
+        release(df)
         df = dfs.poll()
       }
     }
@@ -44,16 +63,32 @@ object Caches {
   private val global = new Scope()
   private val current = new ThreadLocal[Scope]() // null => no open scope
 
-  /** Register an operator-internal persisted DataFrame; returns it. */
+  /** Register an operator-internal persisted or checkpointed DataFrame;
+    * returns it.
+    */
   def track(df: DataFrame): DataFrame = {
     val scope = Option(current.get()).getOrElse(global)
     scope.dfs.add(df)
     df
   }
 
+  /** Eagerly local-checkpoint `df` (one job) under measured statistics
+    * and [[track]] the result — the lineage cut of the contract above.
+    */
+  def checkpoint(df: DataFrame): DataFrame =
+    track(GraftDatasetBridge.localCheckpoint(df))
+
+  /** Free `df`'s blocks now (non-blocking): its cache when it is
+    * persisted, otherwise the local checkpoint it is (up to
+    * projections). A second release of the same frame is a no-op.
+    */
+  def release(df: DataFrame): Unit =
+    if (df.storageLevel != StorageLevel.NONE) df.unpersist(blocking = false)
+    else GraftDatasetBridge.releaseLocalCheckpoint(df)
+
   /** Run `body` (plan construction AND materialization) under a fresh
     * scope; every cache tracked by this thread inside `body` is
-    * unpersisted on exit (also on failure). Nests: the previous scope is
+    * released on exit (also on failure). Nests: the previous scope is
     * restored afterwards.
     */
   def withScope[A](body: => A): A = {
@@ -67,7 +102,7 @@ object Caches {
     }
   }
 
-  /** Unpersist every GLOBALLY tracked intermediate (non-blocking) and
+  /** Release every GLOBALLY tracked intermediate (non-blocking) and
     * clear the registry. Safe whenever no un-scoped query is in flight.
     */
   def unpersistAll(): Unit = global.close()

@@ -24,14 +24,7 @@ import org.apache.spark.sql.functions._
   * The edge list is symmetrized once up front; iteration stops when an
   * iteration changes no label (checked with one count per round — the
   * driver-side loop is bounded by `maxIterations`, not data size).
-  * Each round's labels are `localCheckpoint`ed: labels feed TWO plan
-  * branches per round (the neighbour aggregation and the join back), so
-  * without lineage TRUNCATION the logical plan doubles every round and
-  * planning itself blows up long before the data does — persist alone
-  * caches execution but not the plan. (On a real cluster prefer
-  * `sc.setCheckpointDir` + `checkpoint()` for fault tolerance;
-  * localCheckpoint trades lineage-replay recovery for speed, the right
-  * trade in a bounded iterative refinement.)
+  * Each round's labels are cut with [[graft.Caches.checkpoint]].
   */
 object Components {
 
@@ -84,10 +77,7 @@ object Components {
     val nodes = (if (allIds == null) nodes0
                  else nodes0.unionByName(allIds.select(col(idCol).cast("long").as("id")))
                    .distinct())
-    // curCk is always the CHECKPOINTED df backing `labels`; the previous
-    // round's checkpoint is released once the next one is materialized
-    var curCk = nodes.select(col("id"), col("id").as("component")).localCheckpoint(true)
-    var labels = curCk
+    var labels = graft.Caches.checkpoint(nodes.select(col("id"), col("id").as("component")))
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxIterations) {
@@ -106,16 +96,13 @@ object Components {
       // double per round, turning O(diameter) neighbour-only propagation
       // into O(log diameter) (labels only ever decrease, so the jump is
       // always sound)
-      // eager localCheckpoint: computes the round AND truncates lineage
-      val next = cand.join(labels.withColumnsRenamed(
+      val next = graft.Caches.checkpoint(cand.join(labels.withColumnsRenamed(
           Map("id" -> "cand", "component" -> "cand_lbl")), Seq("cand"), "left")
         .select(col("id"),
           least(col("cand"), coalesce(col("cand_lbl"), col("cand"))).as("component"),
-          col("prev"))
-        .localCheckpoint(true)
+          col("prev")))
       changed = next.filter(col("component") =!= col("prev")).count()
-      curCk.unpersist(blocking = false)
-      curCk = next
+      graft.Caches.release(labels)
       labels = next.select("id", "component")
       round += 1
     }
@@ -124,12 +111,11 @@ object Components {
     // labels would still mix components. Fail loudly — with pointer
     // jumping, hitting this needs a component diameter over ~2^maxIterations
     if (changed > 0) {
-      curCk.unpersist(blocking = false)
+      graft.Caches.release(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIterations rounds " +
           s"($changed labels still changing); raise maxIterations")
     }
-    graft.Caches.track(curCk)
     labels
   }
 

@@ -348,8 +348,9 @@ object Dedup {
     // lineage barrier: without it Catalyst pushes the threshold filter
     // INTO the join condition, re-evaluating the intersection kernel
     // per conjunct on every raw match instead of once per pair above
-    // the join (measured 2.3× on q174)
-    verified.localCheckpoint(false)
+    // the join (measured 2.3× on q174). Lazy (no extra build job) and
+    // tracked, so scope exit frees its blocks
+    graft.Caches.track(verified.localCheckpoint(false))
       .withColumn("cont_a", col("shared").cast("double") / col("na"))
       .withColumn("cont_b", col("shared").cast("double") / col("nb"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)

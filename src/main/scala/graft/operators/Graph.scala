@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * joins keyed on node id — edge ⨝ rank on `src`, contribution sum on
   * `dst` — plus a left join back to the node spine, all distributed
   * hash aggregations with map-side combine. The rank table is one row
-  * per NODE (never per edge) and the per-iteration lineage is truncated
-  * with an eager `localCheckpoint` (the [[Components]] pattern) so the
-  * plan and its stage DAG stay constant-size regardless of iteration
-  * count. Nothing node- or edge-sized ever reaches the driver.
+  * per NODE (never per edge) and each round's state is cut with
+  * [[graft.Caches.checkpoint]], so the plan and its stage DAG stay
+  * constant-size regardless of iteration count. Nothing node- or
+  * edge-sized ever reaches the driver.
   */
 object Graph {
 
@@ -89,27 +89,21 @@ object Graph {
     val attach: DataFrame => DataFrame =
       if (n <= BroadcastNodeState) df => broadcast(df) else identity
 
-    // curCk backs `ranks`; each round's eager checkpoint both computes
-    // the iteration and truncates lineage, then releases the previous one
-    var curCk = nodes.withColumn("pr", lit(1.0 / n)).localCheckpoint(true)
-    var ranks = curCk
+    var ranks = graft.Caches.checkpoint(nodes.withColumn("pr", lit(1.0 / n)))
     for (_ <- 1 to iterations) {
       val contribs = eDeg
         .join(attach(ranks.withColumnRenamed("id", "src")), "src")
         .select(col("dst").as("id"), (col("pr") / col("__deg")).as("__c"))
         .groupBy("id")
         .agg(sum(col("__c")).as("__in"))
-      val next = nodes
+      val next = graft.Caches.checkpoint(nodes
         .join(attach(contribs), Seq("id"), "left")
         .select(col("id"),
           (lit(teleport) + lit(damping) * coalesce(col("__in"), lit(0.0)))
-            .as("pr"))
-        .localCheckpoint(true)
-      curCk.unpersist(blocking = false)
-      curCk = next
+            .as("pr")))
+      graft.Caches.release(ranks)
       ranks = next
     }
-    graft.Caches.track(curCk)
     ranks
   }
 
@@ -128,8 +122,7 @@ object Graph {
     *
     * Scale shape mirrors [[pageRank]]: per half-iteration one edge ⨝
     * score join, a node-keyed sum with map-side combine, a 1-row total
-    * broadcast back, and eager localCheckpoint lineage cuts; score
-    * state is one row per node.
+    * broadcast back; score state is one row per node.
     *
     * Output: (id, auth, hub), one row per node.
     */
@@ -163,9 +156,8 @@ object Graph {
     // node join, and used to be recomputed (a whole extra edge pass)
     // for each.
     // returns (normalized scores, the persisted per-step `raw` table) —
-    // the caller releases `raw` once the iteration's checkpoint has
-    // materialized, keeping cache usage O(1) in iterations instead of
-    // accumulating 2 node-sized tables per round until scope close
+    // the caller releases `raw` once the round's checkpoint has
+    // materialized, keeping cache usage O(1) in iterations
     def halfStep(scores: DataFrame, scoreCol: String,
                  from: String, onto: String, outCol: String)
         : (DataFrame, DataFrame) = {
@@ -185,26 +177,17 @@ object Graph {
       (out, raw)
     }
 
-    var curCk = nodes
+    var scores = graft.Caches.checkpoint(nodes
       .withColumn("auth", lit(0.0))
-      .withColumn("hub", lit(1.0 / n))
-      .localCheckpoint(true)
-    var scores = curCk
+      .withColumn("hub", lit(1.0 / n)))
     for (_ <- 1 to iterations) {
       val (auth, rawA) = halfStep(scores.select(col("id"), col("hub")), "hub",
         "src", "dst", "auth")
       val (hub, rawH) = halfStep(auth, "auth", "dst", "src", "hub")
-      val next = auth.join(hub, "id").localCheckpoint(true)
-      // next is materialized: this round's raw caches are dead (the
-      // curCk release pattern — Caches.track stays as the safety net;
-      // a second unpersist at scope close is a no-op)
-      rawA.unpersist(blocking = false)
-      rawH.unpersist(blocking = false)
-      curCk.unpersist(blocking = false)
-      curCk = next
+      val next = graft.Caches.checkpoint(auth.join(hub, "id"))
+      Seq(rawA, rawH, scores).foreach(graft.Caches.release)
       scores = next
     }
-    graft.Caches.track(curCk)
     scores.select(col("id"), col("auth"), col("hub"))
   }
 
@@ -221,9 +204,8 @@ object Graph {
     *
     * Scale shape mirrors [[pageRank]]: per iteration one edge ⨝ label
     * join, an (id, label)-keyed count with map-side combine, a
-    * node-keyed window over the ≤ degree candidate labels per node,
-    * and lineage truncation via eager localCheckpoint. Label state is
-    * one row per node.
+    * node-keyed window over the ≤ degree candidate labels per node.
+    * Label state is one row per node.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int): DataFrame = {
@@ -245,8 +227,7 @@ object Graph {
     val attach: DataFrame => DataFrame =
       if (n <= BroadcastNodeState) df => broadcast(df) else identity
 
-    var curCk = nodes.withColumn("label", col("id")).localCheckpoint(true)
-    var labels = curCk
+    var labels = graft.Caches.checkpoint(nodes.withColumn("label", col("id")))
     for (_ <- 1 to iterations) {
       val votes = e
         .join(attach(labels.withColumnRenamed("id", "dst")), "dst")
@@ -265,15 +246,12 @@ object Graph {
       // labels IS the node spine (one row per node by construction), so
       // joining back through `nodes` was a redundant third node-sized
       // join per iteration — carry the old label directly
-      val next = labels.withColumnRenamed("label", "__old")
+      val next = graft.Caches.checkpoint(labels.withColumnRenamed("label", "__old")
         .join(attach(winner), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("__old")).as("label"))
-        .localCheckpoint(true)
-      curCk.unpersist(blocking = false)
-      curCk = next
+        .select(col("id"), coalesce(col("__new"), col("__old")).as("label")))
+      graft.Caches.release(labels)
       labels = next
     }
-    graft.Caches.track(curCk)
     labels
   }
 
@@ -291,8 +269,7 @@ object Graph {
     *
     * Scale shape: each round is one degree aggregation (map-side
     * combined) + two node-keyed semi-joins restricting the edge list;
-    * state is the edge set itself, shrinking monotonically, with
-    * lineage truncated per round by eager localCheckpoint. Output:
+    * state is the edge set itself, shrinking monotonically. Output:
     * (id, degree) over the surviving subgraph — nodes that lost every
     * edge drop out with it.
     */
@@ -303,12 +280,11 @@ object Graph {
     def degrees(e: DataFrame) = e.select(col("a").as("id"))
       .unionByName(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
-    var e = edges
+    var e = graft.Caches.checkpoint(edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // survivor sets are node-sized (≤ 2·edges, shrinking every round):
     // below the cutoff they broadcast, making both per-round semi-joins
     // map-side so the edge list is never shuffled (the [[pageRank]]
@@ -323,15 +299,12 @@ object Graph {
       // differ, so exchange reuse never matched them)
       val surv = degrees(e).filter(col("degree") >= k).select(col("id"))
         .persist()
-      val next = e
+      val next = graft.Caches.checkpoint(e
         .join(attach(surv.withColumnRenamed("id", "a")), Seq("a"), "left_semi")
-        .join(attach(surv.withColumnRenamed("id", "b")), Seq("b"), "left_semi")
-        .localCheckpoint(true)
-      e.unpersist(blocking = false)
-      surv.unpersist(blocking = false)
+        .join(attach(surv.withColumnRenamed("id", "b")), Seq("b"), "left_semi"))
+      Seq(e, surv).foreach(graft.Caches.release)
       e = next
     }
-    graft.Caches.track(e)
     degrees(e)
   }
 

@@ -239,8 +239,9 @@ object Retrieval {
         .filter(col("__rn") === 1)
         .select(col("__q"), col("__d"),
           lit(rank.toLong).as("mmr_rank"), col("__score").as("mmr_score"))
-    var all = pickRound(c.withColumn("__pen", lit(null).cast("double")), 1)
-      .localCheckpoint(false)
+    var all = graft.Caches.track(
+      pickRound(c.withColumn("__pen", lit(null).cast("double")), 1)
+        .localCheckpoint(false))
     for (i <- 2 to k) {
       val remaining = c.join(all.select(col("__q"), col("__d")),
         Seq("__q", "__d"), "left_anti")
@@ -250,10 +251,12 @@ object Retrieval {
         .agg(max(col("__sim")).as("__pen"))
       // checkpoint per round: the accumulated picks feed the NEXT
       // round's anti-join and penalty join — without lineage
-      // truncation round i replays rounds 1..i−1 (quadratic replans)
-      all = all.unionByName(
+      // truncation round i replays rounds 1..i−1 (quadratic replans).
+      // Lazy (an eager cut would add a build job per round) and tracked,
+      // so scope exit frees every round's blocks
+      all = graft.Caches.track(all.unionByName(
           pickRound(remaining.join(penalties, Seq("__q", "__d"), "left"), i))
-        .localCheckpoint(false)
+        .localCheckpoint(false))
     }
     all.select(col("__q").as(queryCol), col("mmr_rank"),
       col("__d").as(docCol), col("mmr_score"))

@@ -4,8 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-query runtime profiler (the r14 optimization round's
-  * measurement harness, generalizing [[StallProbe]]): runs each named
-  * query like Bench does (noop sink inside a cache scope), twice, and
+  * measurement harness): runs each named query like Bench does (noop
+  * sink inside a cache scope), twice, and
   * prints for the WARM round every Spark job's wall time, the
   * driver-side gap preceding it, and per-stage shuffle read/write
   * bytes + task time — so a query's seconds are attributed to

@@ -1,14 +1,56 @@
 package org.apache.spark.sql.classic
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Minimal bridge into the classic API's private[sql] Dataset.ofRows —
   * the one hook a third-party whole-operator extension needs to hand a
   * custom LogicalPlan back to the session (standard practice for Spark
   * extension libraries; nothing else in graft lives in Spark's
-  * namespace).
+  * namespace) — plus the private[sql] half of `graft.Caches`' lineage
+  * cut.
   */
 object GraftDatasetBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
+
+  /** `df.localCheckpoint(eager = true)` with MEASURED statistics: the
+    * checkpoint job's own row count × the schema's per-row size. The
+    * stock checkpoint rewrites the origin plan's estimate instead, which
+    * squares every round in a loop that joins its state to itself.
+    */
+  def localCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[Dataset[_]]
+    val qe = ds.queryExecution
+    val (rdd, rows) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.toRdd.map(_.copy())
+      rdd.localCheckpoint()
+      (rdd, rdd.count())
+    }
+    val stats = Statistics(
+      sizeInBytes = EstimationUtils.getSizePerRow(qe.analyzed.output) * rows,
+      rowCount = Some(rows))
+    val plan = LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
+      .copy()(ds.sparkSession, Some(stats), None)
+    Dataset.ofRows(ds.sparkSession, plan)
+  }
+
+  /** Drop the blocks of the local checkpoint (eager or lazy) that `df`
+    * is, up to projections; a no-op for any other frame. Deeper leaves
+    * are not `df`'s own: they may back frames that are still live.
+    * Goes through the context directly, because `RDD.unpersist` warns on
+    * every local checkpoint, and here the release is the intent.
+    */
+  def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit = {
+    @scala.annotation.tailrec
+    def root(plan: LogicalPlan): Option[RDD[_]] = plan match {
+      case Project(_, child) => root(child)
+      case r: LogicalRDD
+          if r.rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]) => Some(r.rdd)
+      case _ => None
+    }
+    root(df.queryExecution.logical).foreach(r => r.sparkContext.unpersistRDD(r.id, blocking = false))
+  }
 }
