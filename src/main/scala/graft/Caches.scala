@@ -15,8 +15,11 @@ import org.apache.spark.storage.StorageLevel
   * tables until memory-pressure eviction.
   *
   * Checkpoint/release contract (the one place it is stated): every
-  * iteration loop ([[operators.Components]], [[operators.Graph]]) cuts
-  * its per-round state with [[checkpoint]] — an eager local checkpoint
+  * SQL iteration loop ([[operators.Components]], [[operators.Graph]]'s
+  * operators; `pageRank` and `kCore` only above
+  * [[operators.Graph.BroadcastNodeState]], below which their per-round
+  * state is a driver array and there is no plan to cut) cuts its
+  * per-round state with [[checkpoint]] — an eager local checkpoint
   * that computes the round, truncates lineage (state feeds two plan
   * branches per round, so an uncut plan doubles every round) and
   * carries MEASURED statistics (rows × per-row size), so size estimates

@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.GraftDatasetBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative link-analysis over edge lists — centrality for corpus
   * graphs a training-data pipeline actually builds (near-duplicate
@@ -16,8 +23,9 @@ import org.apache.spark.sql.functions._
   * hash aggregations with map-side combine. The rank table is one row
   * per NODE (never per edge) and each round's state is cut with
   * [[graft.Caches.checkpoint]], so the plan and its stage DAG stay
-  * constant-size regardless of iteration count. Nothing node- or
-  * edge-sized ever reaches the driver.
+  * constant-size regardless of iteration count. How much node-sized
+  * state may reach the driver is the [[BroadcastNodeState]] contract;
+  * nothing edge-sized ever does.
   */
 object Graph {
 
@@ -28,14 +36,27 @@ object Graph {
     */
   val BroadcastAdjacencyEdges: Long = 8000000L
 
-  /** The iterative operators ([[pageRank]], [[hits]],
-    * [[labelPropagation]], [[kCore]]) broadcast their node-sized
-    * per-iteration state (ranks / scores / labels / survivors) while
-    * the graph has at most this many nodes — ~200 MB of id+score rows
-    * at the cutoff — so no iteration ever shuffles the edge list
-    * (guide §2.4: a broadcast join replaces the shuffle of the large
-    * side). Larger graphs fall back to the keyed shuffle joins, which
-    * compute the identical result.
+  /** The node-state gate of the iterative operators: below it, node-
+    * sized state lives on the driver and is broadcast; above it, no
+    * node- or edge-sized state leaves the executors.
+    *
+    * [[hits]] and [[labelPropagation]] broadcast their per-iteration
+    * state table (scores / labels) while the graph has at most this many
+    * nodes — ~200 MB of id+score rows at the cutoff — so no iteration
+    * shuffles the edge list (guide §2.4: a broadcast join replaces the
+    * shuffle of the large side). [[pageRank]] (nodes) and [[kCore]]
+    * (2·edges, the node bound before the first peel) go further below
+    * it: the driver holds the distinct node ids, one dense index
+    * broadcast once per call, and one primitive array per round
+    * (`double[n]` ranks or an n-bit alive set), broadcast in turn; the
+    * edge list is cached once as `Array[Int]` index pairs, and each
+    * round is one `treeReduce` of per-partition `n`-sized partials,
+    * with no SQL plan. The index is a boxed hash map, tens of bytes
+    * per node on the driver and on each executor, and each running
+    * task holds one n-sized partial (32 MB of doubles at the cutoff).
+    * Above the gate every operator runs keyed shuffle joins with its
+    * per-round state cut by [[graft.Caches.checkpoint]]; both sides
+    * compute the same result.
     */
   val BroadcastNodeState: Long = 4000000L
 
@@ -57,54 +78,111 @@ object Graph {
     * Output: (id, pr), one row per node.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int, damping: Double = 0.85): DataFrame = {
+               iterations: Int, damping: Double = 0.85): DataFrame =
+    pageRank(edges, srcCol, dstCol, iterations, damping, BroadcastNodeState)
+
+  /** [[pageRank]] with the node-state gate as an argument, so specs can
+    * run the SQL path on small graphs.
+    */
+  private[operators] def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+                                  iterations: Int, damping: Double,
+                                  nodeStateGate: Long): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
+    val sc = edges.sparkSession.sparkContext
     val e = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
       .persist()
     graft.Caches.track(e)
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
       .distinct()
       .persist()
     graft.Caches.track(nodes)
-    val n = nodes.count()
+    val n = inRound(sc, "pageRank", 0)(nodes.count())
     if (n == 0) {
       // empty graph: empty (id, pr) result with the right schema
       return nodes.withColumn("pr", lit(0.0))
     }
     val teleport = (1.0 - damping) / n
+    if (n <= nodeStateGate)
+      return pageRankArrays(e, nodes, iterations, damping, teleport)
+
+    val outDeg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
     // degree is attached to the edge list ONCE (it used to be re-joined
     // every iteration — one whole extra edge-sized join per round); the
     // division stays pr/__deg with the raw long count, so the per-edge
     // contribution doubles are bit-identical to the old plan's
     val eDeg = e.join(outDeg, "src").persist()
     graft.Caches.track(eDeg)
-    // node-sized state broadcasts below the cutoff: the per-iteration
-    // joins become map-side and the edge list is never shuffled
-    val attach: DataFrame => DataFrame =
-      if (n <= BroadcastNodeState) df => broadcast(df) else identity
 
-    var ranks = graft.Caches.checkpoint(nodes.withColumn("pr", lit(1.0 / n)))
-    for (_ <- 1 to iterations) {
+    var ranks = inRound(sc, "pageRank", 0)(
+      graft.Caches.checkpoint(nodes.withColumn("pr", lit(1.0 / n))))
+    for (r <- 1 to iterations) {
       val contribs = eDeg
-        .join(attach(ranks.withColumnRenamed("id", "src")), "src")
+        .join(ranks.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), (col("pr") / col("__deg")).as("__c"))
         .groupBy("id")
         .agg(sum(col("__c")).as("__in"))
-      val next = graft.Caches.checkpoint(nodes
-        .join(attach(contribs), Seq("id"), "left")
+      val next = inRound(sc, "pageRank", r)(graft.Caches.checkpoint(nodes
+        .join(contribs, Seq("id"), "left")
         .select(col("id"),
           (lit(teleport) + lit(damping) * coalesce(col("__in"), lit(0.0)))
-            .as("pr")))
+            .as("pr"))))
       graft.Caches.release(ranks)
       ranks = next
     }
     ranks
+  }
+
+  /** [[pageRank]] below the node-state gate, with the SQL path's
+    * arithmetic: each node's share `pr/outdeg` is one division on the
+    * driver (the SQL path divides per edge, with the same operands), and
+    * each round's contribution sums are one job. A null id is a node no
+    * edge reaches and none leaves, but an edge to it still counts in its
+    * source's out-degree — exactly the SQL path's equi-joins, which never
+    * match null.
+    */
+  private def pageRankArrays(e: DataFrame, nodes: DataFrame, iterations: Int,
+                             damping: Double, teleport: Double): DataFrame = {
+    val sc = e.sparkSession.sparkContext
+    val g = inRound(sc, "pageRank", 0)(denseGraph(nodes, e))
+    val n = g.ids.length
+    try {
+      lazy val outDeg = inRound(sc, "pageRank", 0) {
+        g.pairs.map { p =>
+          val d = new Array[Int](n)
+          var j = 0
+          while (j < p.length) { if (p(j) >= 0) d(p(j)) += 1; j += 2 }
+          d
+        }.treeReduce(addInto)
+      }
+      var ranks = Array.fill(n)(1.0 / n)
+      for (r <- 1 to iterations) {
+        val share = sc.broadcast(
+          Array.tabulate(n)(i => if (outDeg(i) > 0) ranks(i) / outDeg(i) else 0.0))
+        val in = try inRound(sc, "pageRank", r) {
+          g.pairs.map { p =>
+            val s = share.value
+            val acc = new Array[Double](n)
+            var j = 0
+            while (j < p.length) {
+              if (p(j) >= 0 && p(j + 1) >= 0) acc(p(j + 1)) += s(p(j))
+              j += 2
+            }
+            acc
+          }.treeReduce(addInto)
+        } finally share.destroy()
+        ranks = in.map(c => teleport + damping * c)
+      }
+      driverFrame(e.sparkSession, nodes.withColumn("pr", lit(0.0)).schema,
+        ranks.indices.map(i => InternalRow(g.ids(i), ranks(i))))
+    } finally {
+      g.release()
+      Seq(e, nodes).foreach(graft.Caches.release)
+    }
   }
 
   /** HITS hubs-and-authorities (Kleinberg, JACM 1999) over a DIRECTED
@@ -144,9 +222,9 @@ object Graph {
       return nodes.withColumn("auth", lit(0.0)).withColumn("hub", lit(0.0))
     }
 
-    // node-sized score tables broadcast below the cutoff (the
-    // [[pageRank]] dispatch): both per-half-step joins go map-side and
-    // the edge list is never shuffled
+    // node-sized score tables broadcast below the [[BroadcastNodeState]]
+    // gate: both per-half-step joins go map-side and the edge list is
+    // never shuffled
     val attach: DataFrame => DataFrame =
       if (n <= BroadcastNodeState) df => broadcast(df) else identity
 
@@ -221,9 +299,9 @@ object Graph {
       .persist()
     graft.Caches.track(nodes)
     val n = nodes.count()
-    // node-sized label state broadcasts below the cutoff (the
-    // [[pageRank]] dispatch): the per-iteration joins go map-side and
-    // the edge list is never shuffled
+    // node-sized label state broadcasts below the [[BroadcastNodeState]]
+    // gate: the per-iteration joins go map-side and the edge list is
+    // never shuffled
     val attach: DataFrame => DataFrame =
       if (n <= BroadcastNodeState) df => broadcast(df) else identity
 
@@ -274,38 +352,167 @@ object Graph {
     * edge drop out with it.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, rounds: Int): DataFrame = {
+            k: Int, rounds: Int): DataFrame =
+    kCore(edges, srcCol, dstCol, k, rounds, BroadcastNodeState)
+
+  /** [[kCore]] with the node-state gate as an argument, so specs can
+    * run the SQL path on small graphs.
+    */
+  private[operators] def kCore(edges: DataFrame, srcCol: String, dstCol: String,
+                               k: Int, rounds: Int, nodeStateGate: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
+    val sc = edges.sparkSession.sparkContext
     def degrees(e: DataFrame) = e.select(col("a").as("id"))
       .unionByName(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
-    var e = graft.Caches.checkpoint(edges
+    var e = inRound(sc, "kCore", 0)(graft.Caches.checkpoint(edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct())
-    // survivor sets are node-sized (≤ 2·edges, shrinking every round):
-    // below the cutoff they broadcast, making both per-round semi-joins
-    // map-side so the edge list is never shuffled (the [[pageRank]]
-    // dispatch, decided once on the initial — largest — survivor bound
-    // of 2·edges, so the broadcast stays within the same ~200 MB
-    // node-state envelope as the other three operators)
-    val attach: DataFrame => DataFrame =
-      if (e.count() * 2 <= BroadcastNodeState) df => broadcast(df) else identity
-    for (_ <- 1 to rounds) {
+      .distinct()))
+    // survivor sets are node-sized, at most 2·edges before the first
+    // peel; the checkpoint measured the edge count
+    if (2 * e.queryExecution.optimizedPlan.stats.rowCount.get <= nodeStateGate)
+      return kCoreArrays(e, k, rounds, degrees(e).schema)
+    for (r <- 1 to rounds) {
       // persisted: surv feeds BOTH semi-joins — without it the degree
       // aggregation runs twice per round (the two subtrees' exprIds
       // differ, so exchange reuse never matched them)
       val surv = degrees(e).filter(col("degree") >= k).select(col("id"))
         .persist()
-      val next = graft.Caches.checkpoint(e
-        .join(attach(surv.withColumnRenamed("id", "a")), Seq("a"), "left_semi")
-        .join(attach(surv.withColumnRenamed("id", "b")), Seq("b"), "left_semi"))
+      val next = inRound(sc, "kCore", r)(graft.Caches.checkpoint(e
+        .join(surv.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+        .join(surv.withColumnRenamed("id", "b"), Seq("b"), "left_semi")))
       Seq(e, surv).foreach(graft.Caches.release)
       e = next
     }
     degrees(e)
+  }
+
+  /** [[kCore]] below the node-state gate: the survivors are an n-bit
+    * alive set on the driver, and round r is one job counting each
+    * node's degree over the edges whose endpoints both survived round
+    * r−1 (round 0 counts every edge). Peeling is monotone, so a round
+    * that removes no node is the fixpoint and ends the loop early.
+    */
+  private def kCoreArrays(e: DataFrame, k: Int, rounds: Int,
+                          schema: StructType): DataFrame = {
+    val sc = e.sparkSession.sparkContext
+    val nodes = e.select(col("a").as("id")).unionByName(e.select(col("b").as("id"))).distinct()
+    val g = inRound(sc, "kCore", 0)(denseGraph(nodes, e))
+    val n = g.ids.length
+    try {
+      def degrees(alive: java.util.BitSet): Array[Int] = {
+        val live = sc.broadcast(alive)
+        try g.pairs.map { p =>
+          val a = live.value
+          val d = new Array[Int](n)
+          var j = 0
+          while (j < p.length) {
+            val u = p(j)
+            val v = p(j + 1)
+            if (a.get(u) && a.get(v)) { d(u) += 1; d(v) += 1 }
+            j += 2
+          }
+          d
+        }.treeReduce(addInto)
+        finally live.destroy()
+      }
+      val all = new java.util.BitSet(n)
+      all.set(0, n)
+      var deg = if (n == 0) Array.emptyIntArray else inRound(sc, "kCore", 0)(degrees(all))
+      var alive = n
+      var fixpoint = n == 0
+      var r = 1
+      while (r <= rounds && !fixpoint) {
+        val survivors = new java.util.BitSet(n)
+        deg.indices.foreach(i => if (deg(i) >= k) survivors.set(i))
+        fixpoint = survivors.cardinality == alive
+        if (!fixpoint) {
+          alive = survivors.cardinality
+          deg = inRound(sc, "kCore", r)(degrees(survivors))
+        }
+        r += 1
+      }
+      driverFrame(e.sparkSession, schema,
+        deg.indices.filter(deg(_) > 0).map(i => InternalRow(g.ids(i), deg(i).toLong)))
+    } finally {
+      g.release()
+      graft.Caches.release(e)
+    }
+  }
+
+  /** Below the node-state gate: the distinct node ids (`nodes.id`) held
+    * on the driver in a dense order, and `edges` (two id columns) cached
+    * once on the executors as one `Array[Int]` of endpoint-index pairs
+    * per partition, a null endpoint as −1. The id → index map is
+    * broadcast once, for that cache.
+    */
+  private final class DenseGraph(val ids: Array[Any], val pairs: RDD[Array[Int]],
+                                 index: Broadcast[_]) {
+    def release(): Unit = {
+      pairs.unpersist(blocking = false)
+      index.destroy()
+    }
+  }
+
+  private def denseGraph(nodes: DataFrame, edges: DataFrame): DenseGraph = {
+    val idType = nodes.schema("id").dataType
+    // binary ids are byte arrays, equal only by reference: key them by
+    // content, as SQL equality compares them
+    def key(v: Any): Any = v match {
+      case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+      case other => other
+    }
+    val ids = nodes.queryExecution.toRdd.map(_.copy().get(0, idType)).collect()
+    val index = new java.util.HashMap[Any, Int](2 * ids.length)
+    ids.indices.foreach(i => if (ids(i) != null) index.put(key(ids(i)), i))
+    val bIndex = edges.sparkSession.sparkContext.broadcast(index)
+    // endpoints cast to the node id type, as the SQL joins compare them
+    val pairs = edges.select(edges.columns.map(c => col(c).cast(idType)).toIndexedSeq: _*)
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ix = bIndex.value
+        val out = Array.newBuilder[Int]
+        rows.foreach { row =>
+          out += ix.getOrDefault(key(row.get(0, idType)), -1)
+          out += ix.getOrDefault(key(row.get(1, idType)), -1)
+        }
+        Iterator.single(out.result())
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    new DenseGraph(ids, pairs, bIndex)
+  }
+
+  /** Elementwise `a += b` for the per-partition partials. */
+  private def addInto(a: Array[Int], b: Array[Int]): Array[Int] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  /** A node-sized result built on the driver, with measured statistics. */
+  private def driverFrame(spark: SparkSession, schema: StructType,
+                          rows: Seq[InternalRow]): DataFrame = {
+    val sc = spark.sparkContext
+    GraftDatasetBridge.ofRows(spark, schema,
+      sc.parallelize(rows, sc.defaultParallelism), rows.length.toLong)
+  }
+
+  /** Runs `body` with its Spark jobs described as `op/round r`, then
+    * restores the caller's description.
+    */
+  private def inRound[A](sc: SparkContext, op: String, r: Int)(body: => A): A = {
+    val key = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
+    val caller = sc.getLocalProperty(key)
+    sc.setJobDescription(s"$op/round $r")
+    try body
+    finally sc.setLocalProperty(key, caller)
   }
 
   /** Per-node triangle counts + local clustering coefficient over an

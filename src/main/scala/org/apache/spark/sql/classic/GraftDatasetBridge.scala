@@ -1,16 +1,21 @@
 package org.apache.spark.sql.classic
 
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into the classic API's private[sql] Dataset.ofRows —
   * the one hook a third-party whole-operator extension needs to hand a
   * custom LogicalPlan back to the session (standard practice for Spark
   * extension libraries; nothing else in graft lives in Spark's
   * namespace) — plus the private[sql] half of `graft.Caches`' lineage
-  * cut.
+  * cut, and frames over driver-built rows that carry the same measured
+  * statistics.
   */
 object GraftDatasetBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
@@ -29,13 +34,26 @@ object GraftDatasetBridge {
       rdd.localCheckpoint()
       (rdd, rdd.count())
     }
-    val stats = Statistics(
-      sizeInBytes = EstimationUtils.getSizePerRow(qe.analyzed.output) * rows,
-      rowCount = Some(rows))
     val plan = LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
-      .copy()(ds.sparkSession, Some(stats), None)
+      .copy()(ds.sparkSession, Some(measured(qe.analyzed.output, rows)), None)
     Dataset.ofRows(ds.sparkSession, plan)
   }
+
+  /** A frame of `schema` over `rdd`, which holds exactly `rows` rows,
+    * with the same measured statistics as [[localCheckpoint]]. A frame
+    * built by `createDataFrame` from an RDD estimates Long.MaxValue
+    * bytes and no row count, which keeps every downstream join from
+    * broadcasting it.
+    */
+  def ofRows(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+             rdd: RDD[InternalRow], rows: Long): org.apache.spark.sql.DataFrame = {
+    val session = spark.asInstanceOf[SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    Dataset.ofRows(session, LogicalRDD(output, rdd)(session, Some(measured(output, rows)), None))
+  }
+
+  private def measured(output: Seq[Attribute], rows: Long): Statistics =
+    Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * rows, rowCount = Some(rows))
 
   /** Drop the blocks of the local checkpoint (eager or lazy) that `df`
     * is, up to projections; a no-op for any other frame. Deeper leaves

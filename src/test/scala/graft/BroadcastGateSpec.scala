@@ -86,12 +86,16 @@ class BroadcastGateSpec extends AnyFunSuite {
     "graft/operators/Dsir.scala" -> (4, "contract: hashed-bucket count tables, 2^b rows by parameter"),
     "graft/operators/Features.scala" -> (3, "contract: per-category stats, scalar agg, k breakpoints"),
     "graft/operators/Funnel.scala" -> (1, "contract: per-variant aggregate, variant-count-sized"),
-    "graft/operators/Graph.scala" -> (7,
+    "graft/operators/Graph.scala" -> (8,
       "gated: adjacency broadcast iff edges <= BroadcastAdjacencyEdges (bytes proxy: one long/edge); " +
-        "the four iterative-state attach sites (pageRank ranks/contribs, hits scores, " +
-        "labelPropagation labels/winner, kCore survivors) broadcast iff nodes <= " +
-        "BroadcastNodeState (bytes proxy: one edge-width id + one fixed-width " +
-        "score/label per node); triangleCounts' degree attach broadcasts iff " +
+        "the two iterative-state attach sites (hits scores, labelPropagation " +
+        "labels/winner) broadcast iff nodes <= BroadcastNodeState (bytes proxy: " +
+        "one edge-width id + one fixed-width score/label per node); the three " +
+        "sc.broadcast sites of pageRank's and kCore's array paths (the dense id " +
+        "index once per call, pageRank's double[n] rank shares and kCore's n-bit " +
+        "alive set once per round) run only below BroadcastNodeState (nodes; " +
+        "2·edges for kCore) — driver broadcasts of node state, same proxy: one id " +
+        "+ one fixed-width value per node; triangleCounts' degree attach broadcasts iff " +
         "nodes <= BroadcastNodeState (same proxy: one id + one long degree per node); " +
         "contract: hits' 1-row L1 total"),
     "graft/operators/GroupOps.scala" -> (7,

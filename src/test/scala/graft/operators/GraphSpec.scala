@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -257,5 +259,124 @@ class GraphSpec extends SparkSpec {
     a.foreach { case (k, (au, hu)) =>
       assert(math.abs(au - b(k)._1) < 1e-9 && math.abs(hu - b(k)._2) < 1e-9)
     }
+  }
+
+  /** Below [[Graph.BroadcastNodeState]] pageRank and kCore run on driver
+    * arrays; the SQL path (forced with a gate of −1) is the reference.
+    * Same schema, same rows, values equal up to the order of the
+    * floating-point sums; the array path's frame carries its row count.
+    */
+  private def sameAsSql(arrays: DataFrame, sql: DataFrame): Unit = {
+    assert(arrays.schema == sql.schema)
+    val rows = arrays.count()
+    assert(arrays.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(rows)))
+    def byId(df: DataFrame): Map[Any, Double] = df.collect().map { r =>
+      val id = r.get(0) match {
+        case b: Array[Byte] => b.toSeq
+        case other => other
+      }
+      id -> r.getAs[Number](1).doubleValue
+    }.toMap
+    val (a, s) = (byId(arrays), byId(sql))
+    assert(a.size == rows && a.keySet == s.keySet)
+    a.foreach { case (id, v) =>
+      assert(math.abs(v - s(id)) <= 1e-12 * math.max(1.0, math.abs(v)), s"$id: $v vs ${s(id)}")
+    }
+  }
+
+  /** Long, string and binary ids over one graph: hubs, chains, dangling
+    * sinks (50..60 have no out-edges), duplicate edges and self-loops.
+    */
+  private def idVariants(raw: Seq[(Long, Long)]): Seq[DataFrame] = {
+    import spark.implicits._
+    Seq(raw.toDF("s", "d"),
+      raw.map { case (a, b) => (s"n$a", s"n$b") }.toDF("s", "d"),
+      raw.map { case (a, b) => (Array(a.toByte), Array(b.toByte)) }.toDF("s", "d"))
+  }
+
+  private val mixed: Seq[(Long, Long)] =
+    (0L until 300L).map(i => (i % 50, (i * 37 + 11) % 61)) ++
+      Seq((3L, 3L), (7L, 7L), (1L, 2L), (1L, 2L), (2L, 1L))
+
+  test("pageRank: the array path equals the SQL path") {
+    import spark.implicits._
+    def check(e: DataFrame, iterations: Int): Unit = sameAsSql(
+      Graph.pageRank(e, "s", "d", iterations, 0.85, Graph.BroadcastNodeState),
+      Graph.pageRank(e, "s", "d", iterations, 0.85, nodeStateGate = -1L))
+    for (e <- idVariants(mixed); iterations <- Seq(0, 1, 4)) check(e, iterations)
+    // a null id is a node: it gets only the teleport term, it passes no
+    // rank on, and the edge a -> null still counts in a's out-degree
+    val withNulls = Seq[(String, String)](("a", "b"), ("a", null), ("b", "a"),
+      (null, "b"), ("c", null)).toDF("s", "d")
+    for (iterations <- Seq(0, 2)) check(withNulls, iterations)
+    // more partitions than nodes
+    check(Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("s", "d").repartition(16), 3)
+    graft.Caches.unpersistAll()
+  }
+
+  test("kCore: the array path equals the SQL path") {
+    import spark.implicits._
+    def check(e: DataFrame, k: Int, rounds: Int): Unit = sameAsSql(
+      Graph.kCore(e, "s", "d", k, rounds, Graph.BroadcastNodeState),
+      Graph.kCore(e, "s", "d", k, rounds, nodeStateGate = -1L))
+    for (e <- idVariants(mixed); (k, rounds) <- Seq((3, 0), (9, 1), (9, 3), (12, 2), (99, 2)))
+      check(e, k, rounds)
+    // the cascade graph, plus a null endpoint (dropped like a self-loop)
+    val cascade = Seq[(String, String)](("a", "b"), ("b", "c"), ("c", "d"), ("d", "x"),
+      ("x", "y"), ("y", "d"), ("d", "d"), ("e", null)).toDF("s", "d")
+    for (rounds <- 0 to 4) check(cascade, 2, rounds)
+    // more partitions than nodes
+    check(Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("s", "d").repartition(16), 2, 2)
+    graft.Caches.unpersistAll()
+  }
+
+  test("pageRank and kCore describe each round's jobs; below the gate a round is one job") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val e = mixed.toDF("s", "d")
+    /** Descriptions of the jobs `body` starts, in order. */
+    def jobsOf(body: => Unit): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          seen.add(String.valueOf(js.properties.getProperty(key)))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobDescription("caller")
+        body
+        assert(sc.getLocalProperty(key) == "caller", "the caller's description is restored")
+        // listener events arrive in order: once the marker job shows,
+        // every job before it has been seen
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1)).count()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      } finally {
+        sc.setJobDescription(null)
+        sc.removeSparkListener(listener)
+      }
+      val all = seen.toArray(Array.empty[String]).toSeq
+      assert(all.contains("marker"))
+      all.takeWhile(_ != "marker")
+    }
+    def perRound(jobs: Seq[String], op: String): Map[Int, Int] = {
+      assert(jobs.forall(_.startsWith(s"$op/round ")), jobs)
+      jobs.groupBy(_.stripPrefix(s"$op/round ").toInt).map { case (r, js) => r -> js.size }
+    }
+    val prArrays = perRound(jobsOf(Graph.pageRank(e, "s", "d", 3, 0.85, Graph.BroadcastNodeState)),
+      "pageRank")
+    assert(prArrays.keySet == Set(0, 1, 2, 3) && (1 to 3).forall(prArrays(_) == 1), prArrays)
+    val prSql = perRound(jobsOf(Graph.pageRank(e, "s", "d", 3, 0.85, nodeStateGate = -1L)),
+      "pageRank")
+    assert(prSql.keySet == Set(0, 1, 2, 3), prSql)
+    // k = 9 peels in both rounds on this graph
+    val kcArrays = perRound(jobsOf(Graph.kCore(e, "s", "d", 9, 2, Graph.BroadcastNodeState)),
+      "kCore")
+    assert(kcArrays.keySet == Set(0, 1, 2) && (1 to 2).forall(kcArrays(_) == 1), kcArrays)
+    val kcSql = perRound(jobsOf(Graph.kCore(e, "s", "d", 9, 2, nodeStateGate = -1L)), "kCore")
+    assert(kcSql.keySet == Set(0, 1, 2), kcSql)
+    graft.Caches.unpersistAll()
   }
 }
