@@ -1,12 +1,14 @@
 package graft
 
+import graft.expressions.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the settings every entry point (tests, bench, verify)
-  * shares. Tuned for `local[32]` here, but nothing below is local-only: AQE,
-  * UTC session time, and a shuffle-partition count sized to the parallelism
-  * are what we'd set on a real cluster too (where shuffle.partitions scales
-  * with executor cores instead of 32).
+/** Session factory with the settings every entry point (tests, bench,
+  * verify, the dev tools) shares. Nothing below is local-only: AQE, UTC
+  * session time, a shuffle-partition count sized to the parallelism, and
+  * [[graft.expressions.GraftExtensions]] (graft's SQL functions and its
+  * optimizer rule) are what we'd set on a real cluster too, where
+  * shuffle.partitions scales with executor cores instead.
   */
 object GraftSession {
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
@@ -14,6 +16,7 @@ object GraftSession {
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

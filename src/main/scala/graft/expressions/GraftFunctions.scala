@@ -1,18 +1,20 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.classic.GraftDatasetBridge
 
-/** Registration for graft's native expressions, two ways:
+/** graft's native expressions: one name table, two consumers.
   *
-  *  - [[GraftFunctions.register]]: imperative, idempotent, on a live
-  *    session — used by the operator library and tests.
-  *  - [[GraftExtensions]]: the `spark.sql.extensions` injection point for
-  *    clusters configured with
-  *    `--conf spark.sql.extensions=graft.expressions.GraftExtensions`,
-  *    making `cosine_similarity(a, b)` available in pure SQL.
+  *  - DataFrame code builds a column with [[GraftFunctions.call]], which
+  *    runs the table's builder directly: no session, no registry lookup,
+  *    and the arity checks fire when the column is built.
+  *  - SQL text reaches the same names through [[GraftExtensions]], the
+  *    `spark.sql.extensions` entry point. `graft.GraftSession.local`
+  *    installs it; elsewhere set
+  *    `--conf spark.sql.extensions=graft.expressions.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -300,20 +302,12 @@ object GraftFunctions {
         PoissonReplicates(children.head, children(1))
       }))
 
-  /** Idempotent runtime registration: the function registry AND the
-    * optimizer rules (`experimental.extraOptimizations` — the imperative
-    * twin of [[GraftExtensions]]'s `injectOptimizerRule`).
-    */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach {
-      case (ident, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    val rule = graft.plans.LevenshteinThresholdRule
-    if (!spark.experimental.extraOptimizations.contains(rule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
-  }
+  private val builders: Map[String, Seq[Expression] => Expression] =
+    functions.map { case (ident, _, builder) => ident.funcName -> builder }.toMap
+
+  /** The native expression `name` over `args`, as a Column. */
+  def call(name: String, args: Column*): Column =
+    GraftDatasetBridge.column(builders(name)(args.map(GraftDatasetBridge.expression)))
 }
 
 /** `spark.sql.extensions` entry point. */

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Text-analysis operators for LLM training-data pipelines: token stats,
   * quality scoring, stopword-profile language ID, and document
@@ -64,8 +65,7 @@ object TextFunctions {
     * [[graft.expressions.TextArrayStats]] kernel. The per-stat columns
     * above each re-run `split` AND evaluate their lambda interpreted
     * per element; for corpus-wide profiling use this (split once, one
-    * array scan). Value-compatible with the declarative forms. Requires
-    * [[graft.expressions.GraftFunctions.register]] on the session.
+    * array scan). Value-compatible with the declarative forms.
     */
   def tokenStatsNative(text: Column, stopwords: Seq[String]): Column =
     tokenStatsNative(text, stopwords, Tokenize.Whitespace)
@@ -86,7 +86,7 @@ object TextFunctions {
       case Tokenize.Whitespace => tokens(text)
       case _ => Tokenize.tokens(text, mode)
     }
-    call_function("text_array_stats", toks, typedlit(stopwords))
+    GraftFunctions.call("text_array_stats", toks, typedlit(stopwords))
   }
 
   /** Composite quality score in [0,1], Gopher-flavoured: rewards normal
@@ -248,9 +248,8 @@ object TextFunctions {
   def repetitionStats(df: org.apache.spark.sql.DataFrame, idCol: String,
                       textCol: String, n: Int = 2): org.apache.spark.sql.DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
-        call_function("ngram_repetition", tokens(col(textCol)), lit(n)).as("__r"))
+        GraftFunctions.call("ngram_repetition", tokens(col(textCol)), lit(n)).as("__r"))
       .filter(col("__r.n_grams") > 0)
       .select(col(idCol), col("__r.n_grams").as("n_grams"),
         (col("__r.top_cnt").cast("double") / col("__r.n_grams")).as("top_frac"),
@@ -301,9 +300,8 @@ object TextFunctions {
   def tokenEntropyTable(df: org.apache.spark.sql.DataFrame, idCol: String,
                         textCol: String, n: Int = 1): org.apache.spark.sql.DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
-        call_function("ngram_repetition", tokens(col(textCol)), lit(n)).as("__r"))
+        GraftFunctions.call("ngram_repetition", tokens(col(textCol)), lit(n)).as("__r"))
       .filter(col("__r.n_grams") > 0)
       .select(col(idCol), col("__r.n_grams").as("n_grams"),
         ((log(col("__r.n_grams")) - col("__r.sum_c_ln_c") / col("__r.n_grams"))
@@ -346,8 +344,7 @@ object TextFunctions {
                         textCol: String, stopwords: Seq[String],
                         weights: QualityWeights = QualityWeights.default,
                         threshold: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    val s = call_function("text_array_stats", tokens(col(textCol)), typedlit(stopwords))
+    val s = GraftFunctions.call("text_array_stats", tokens(col(textCol)), typedlit(stopwords))
     val nTok = col("__s.n_tokens").cast("double")
     val z = lit(weights.bias) +
       lit(weights.wLogTokens) * log(nTok + 1.0) +

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** THE TOKENIZER SEAM. Every token-level operator family — stats
   * ([[TextFunctions.tokenStatsNative]]), generation-eval metrics
@@ -17,11 +18,9 @@ import org.apache.spark.sql.functions._
   *    "token" per clause).
   *  - [[Unicode]]: UAX#29 word boundaries + Thai dictionary + per-char
   *    Han/Hiragana via the native
-  *    [[graft.expressions.UnicodeTokens]] kernel. Needs
-  *    [[graft.expressions.GraftFunctions.register]] on the session
-  *    (all threaded operators register it themselves). Not
-  *    SQL-replayable — pinned by the q209 degradation/round-trip
-  *    oracle and hand-segmented spec fixtures instead.
+  *    [[graft.expressions.UnicodeTokens]] kernel. Not SQL-replayable —
+  *    pinned by the q209 degradation/round-trip oracle and
+  *    hand-segmented spec fixtures instead.
   *
   * Both modes agree bit-for-bit on single-space-separated ASCII text
   * (q209 asserts this corpus-wide), so switching a pipeline to
@@ -41,7 +40,7 @@ object Tokenize {
   /** Lowercased word tokens of `text` under `mode`, empties dropped. */
   def tokens(text: Column, mode: Mode): Column = mode match {
     case Whitespace => filter(split(lower(trim(text)), "\\s+"), t => t =!= lit(""))
-    case Unicode => call_function("unicode_tokens", text)
+    case Unicode => GraftFunctions.call("unicode_tokens", text)
   }
 
   /** [[tokens]] in the single-space split form the DuckDB oracles use
@@ -50,6 +49,6 @@ object Tokenize {
     */
   def tokensSpaceSplit(text: Column, mode: Mode): Column = mode match {
     case Whitespace => filter(split(lower(trim(text)), " "), t => t =!= lit(""))
-    case Unicode => call_function("unicode_tokens", text)
+    case Unicode => GraftFunctions.call("unicode_tokens", text)
   }
 }

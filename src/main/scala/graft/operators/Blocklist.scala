@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Blocklist screening — the curation gate that drops or flags
   * documents containing banned terms (slurs, boilerplate markers, DRM
@@ -25,17 +26,15 @@ object Blocklist {
     // Locale.ROOT: the text side case-folds via Spark's locale-
     // independent lower(); default-locale toLowerCase would turn
     // "WINDOW" into "wındow" on a Turkish JVM and silently never match
-    call_function("aho_corasick_counts", lower(text),
+    GraftFunctions.call("aho_corasick_counts", lower(text),
       array(patterns.map(p => lit(p.toLowerCase(java.util.Locale.ROOT))): _*))
   }
 
   /** Adds `hits` (per-pattern counts), `hits_total`, `patterns_hit`,
-    * and `blocked` (any hit) to `df`. Registers the native function
-    * idempotently.
+    * and `blocked` (any hit) to `df`.
     */
   def annotate(df: DataFrame, textCol: String,
                patterns: Seq[String]): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.withColumn("hits", hitCounts(col(textCol), patterns))
       .withColumn("hits_total",
         aggregate(col("hits"), lit(0L), (acc, c) => acc + c))

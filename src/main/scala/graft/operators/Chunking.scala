@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Document chunking for LLM context windows: overlapping token windows
   * of `size` tokens every `stride` tokens — the step between cleaned
@@ -60,9 +61,8 @@ object Chunking {
   def sentenceChunks(df: DataFrame, idCol: String, textCol: String,
                      maxTokens: Int): DataFrame = {
     require(maxTokens >= 1, s"maxTokens must be >= 1, got $maxTokens")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), posexplode(
-        call_function("sentence_chunks", col(textCol), lit(maxTokens))))
+        GraftFunctions.call("sentence_chunks", col(textCol), lit(maxTokens))))
       .select(col(idCol),
         col("pos").cast("long").as("chunk_id"),
         col("col.chunk").as("chunk_text"),
@@ -156,14 +156,13 @@ object Chunking {
                            window: Int, modulus: Int): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
     require(modulus >= 2, s"modulus must be >= 2, got $modulus")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(textCol).as("__t"))
     // cut positions: gram at window-start p (1-based) covers chars
     // [p, p+window-1] — the cut lands after its LAST char
     val cuts = base
       .filter(length(col("__t")) >= window)
       .select(col("id"),
-        posexplode(call_function("char_gram_hashes", col("__t"), lit(window))))
+        posexplode(GraftFunctions.call("char_gram_hashes", col("__t"), lit(window))))
       .filter(
         conv(hex(substring(col("col"), 1, 4)), 16, 10).cast("long") % modulus === 0)
       .select(col("id"), (col("pos") + window).cast("long").as("cut_after"))

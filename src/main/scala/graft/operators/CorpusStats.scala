@@ -25,8 +25,6 @@ object CorpusStats {
   def tokenFrequencies(df: DataFrame, textCol: String,
                        mode: graft.functions.Tokenize.Mode =
                          graft.functions.Tokenize.Whitespace): DataFrame = {
-    if (mode != graft.functions.Tokenize.Whitespace)
-      graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(explode(
         graft.functions.Tokenize.tokens(col(textCol), mode)).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))
@@ -71,7 +69,7 @@ object CorpusStats {
       .limit(topN)
     val ranked = top
       .withColumn("rank", row_number().over(
-        Windows.boundedGlobal(top)(col("freq").desc, col("token").asc)))
+        Windows.boundedGlobal(col("freq").desc, col("token").asc)))
       .select(log(col("rank")).as("x"), log(col("freq")).as("y"))
     ranked.agg(
       count(lit(1)).as("n_ranks"),
@@ -99,7 +97,7 @@ object CorpusStats {
     import org.apache.spark.sql.expressions.Window
     val sizes = df.groupBy(col(keyCol)).agg(count(lit(1)).as("x"))
       .withColumn("i", row_number().over(
-        Windows.boundedGlobal(df)(col("x").asc, col(keyCol).asc)).cast("long"))
+        Windows.boundedGlobal(col("x").asc, col(keyCol).asc)).cast("long"))
     sizes.agg(
       count(lit(1)).as("n_groups"),
       sum(col("x")).as("total"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Document deduplication family for LLM training-data pipelines — exact,
   * MinHash+LSH, SimHash, and exact n-gram/token Jaccard. No reference
@@ -114,21 +115,20 @@ object Dedup {
     * `removeEmpty` drops the "" token a whitespace-only doc produces
     * (the [[simhashTable]] contract).
     */
-  def hashedShingleSet(df: DataFrame, text: Column, n: Int,
+  def hashedShingleSet(text: Column, n: Int,
                        removeEmpty: Boolean = false,
                        mode: graft.functions.Tokenize.Mode =
                          graft.functions.Tokenize.Whitespace): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // the tokenizer seam: Unicode mode segments CJK/Thai into real word
     // tokens before shingling (drops empties itself, so removeEmpty is
     // a no-op there); both modes agree on space-separated ASCII, which
     // is what lets q216 reuse q23's brute-force oracle unchanged
     val raw0 = mode match {
       case graft.functions.Tokenize.Whitespace => split(lower(trim(text)), "\\s+")
-      case graft.functions.Tokenize.Unicode => call_function("unicode_tokens", text)
+      case graft.functions.Tokenize.Unicode => GraftFunctions.call("unicode_tokens", text)
     }
     val raw = if (removeEmpty) array_remove(raw0, "") else raw0
-    val k = call_function("shingle_hashes", raw, lit(math.max(1, n)))
+    val k = GraftFunctions.call("shingle_hashes", raw, lit(math.max(1, n)))
     if (n <= 1) k else coalesce(k, typedlit(Array.empty[Long]))
   }
 
@@ -141,11 +141,8 @@ object Dedup {
     * 32-bit halves so every intermediate fits a non-negative BIGINT).
     * [[md5TokenHashesDeclarative]] is the kernel's executable spec.
     */
-  def md5TokenHashes(df: DataFrame, text: Column): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    call_function("md5_hashes64",
-      array_remove(split(lower(trim(text)), "\\s+"), ""))
-  }
+  def md5TokenHashes(text: Column): Column =
+    GraftFunctions.call("md5_hashes64", array_remove(split(lower(trim(text)), "\\s+"), ""))
 
   /** Declarative form of [[md5TokenHashes]] — two conv'd 32-bit hex
     * halves per token, interpreted HOF lambdas (measured 2.6× slower at
@@ -269,7 +266,7 @@ object Dedup {
     // (longer prefixes only add candidates; shorter would break
     // exactness).
     val base = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        hashedShingleSet(df, col(textCol), n, removeEmpty = n == 1).as("grams"))
+        hashedShingleSet(col(textCol), n, removeEmpty = n == 1).as("grams"))
       .withColumn("n", size(col("grams")))
       .filter(col("n") > 0)
       .persist()
@@ -297,7 +294,7 @@ object Dedup {
             col("n"), blockPairRows)
           .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
             col("a.n").as("na"), col("b.n").as("nb"),
-            call_function("sorted_intersect_size",
+            GraftFunctions.call("sorted_intersect_size",
               col("a.grams"), col("b.grams")).as("shared"))
       } else {
         val dfreq = tok.groupBy(col("g")).agg(count(lit(1)).as("__df"))
@@ -342,7 +339,7 @@ object Dedup {
           .join(base.select(col("id").as("id_b"), col("grams").as("__gb"),
             col("n").as("nb")), Seq("id_b"))
           .select(col("id_a"), col("id_b"), col("na"), col("nb"),
-            call_function("sorted_intersect_size",
+            GraftFunctions.call("sorted_intersect_size",
               col("__ga"), col("__gb")).as("shared"))
       }
     // lineage barrier: without it Catalyst pushes the threshold filter
@@ -378,7 +375,6 @@ object Dedup {
                            blockCol: String, k: Int, w: Int,
                            minShared: Int): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // Same cost-based strategy as [[containmentPairs]], and for the
     // same reason: on a small shared vocabulary the window minima
     // concentrate on the globally smallest hash values, so a
@@ -429,7 +425,7 @@ object Dedup {
             base.select(col("id"), col("blk"), col("fps")),
             size(col("fps")), blockPairRows)
           .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-            call_function("sorted_intersect_size",
+            GraftFunctions.call("sorted_intersect_size",
               col("a.fps"), col("b.fps")).cast("long").as("shared_fps"))
       } else {
         tok.as("a")
@@ -501,7 +497,7 @@ object Dedup {
     // ngram > 1 mines word-shingle Jaccard (sequence-sensitive) instead of
     // token-set Jaccard (bag-of-words); hashing is the fused native kernel
     val toks = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      hashedShingleSet(df, col(textCol), ngram, removeEmpty = false, mode).as("toks"))
+      hashedShingleSet(col(textCol), ngram, removeEmpty = false, mode).as("toks"))
     // deliberate materialization point: the class table feeds three plan
     // branches (within-pairs + both sides of the class join); without
     // persist each branch re-runs the scan + groupBy
@@ -522,7 +518,6 @@ object Dedup {
     // would be the whole corpus in every executor. (For mostly-unique
     // corpora prefer [[minhashDupPairsClassed]] outright: all-pairs over
     // class reps is quadratic regardless of join strategy.)
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // size-ratio prefilter INSIDE the join condition (the similarity-
     // join length filter): J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so any
     // pair with min < t·max can never reach the threshold — pruned
@@ -537,7 +532,7 @@ object Dedup {
       // toks are sorted+distinct by construction → native O(n+m) merge
       // intersect (codegen) instead of array_intersect's per-pair hash set
       .withColumn("__inter",
-        call_function("sorted_intersect_size", col("a.toks"), col("b.toks")))
+        GraftFunctions.call("sorted_intersect_size", col("a.toks"), col("b.toks")))
       .withColumn("jaccard", col("__inter").cast("double") /
         (size(col("a.toks")) + size(col("b.toks")) - col("__inter")))
       .filter(col("jaccard") >= threshold)
@@ -745,15 +740,14 @@ object Dedup {
     // Tokens are hashed to longs once, then the native signature kernel
     // runs (statistically equivalent to slot-hashing the strings directly;
     // candidates differ but the exact-Jaccard verify fixes the output).
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // the fused signature+banding kernel (LshBandHashes): the two-step
     // minhash_signature → lshBands form re-evaluated the signature once
     // per band inside the interpreted transform lambda after projection
     // collapse (no CSE inside HOF lambdas) — b× the kernel cost
     val withBand = df.select(
       col(idCol).as("id"), col(blockCol).as("blk"),
-      explode(call_function("lsh_band_hashes",
-        hashedShingleSet(df, col(textCol), 1), lit(k), lit(b))).as("band"))
+      explode(GraftFunctions.call("lsh_band_hashes",
+        hashedShingleSet(col(textCol), 1), lit(k), lit(b))).as("band"))
       .select(col("id"), col("blk"),
         col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
     val candidates = withBand.as("a")
@@ -768,7 +762,7 @@ object Dedup {
     // and the candidate-side shuffle shrinks ~2×. xxhash64 collisions
     // within one pair's union are ~1e-16 — numerically exact.
     val toks = df.select(col(idCol).as("id"),
-      hashedShingleSet(df, col(textCol), 1).as("toks"))
+      hashedShingleSet(col(textCol), 1).as("toks"))
     candidates
       .join(toks.withColumnsRenamed(Map("id" -> "id_a", "toks" -> "ta")), "id_a")
       .join(toks.withColumnsRenamed(Map("id" -> "id_b", "toks" -> "tb")), "id_b")
@@ -801,7 +795,7 @@ object Dedup {
     // persist: this class table feeds five plan branches (within-pairs,
     // both band-join sides, and two verification joins)
     val classes = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        hashedShingleSet(df, col(textCol), ngram).as("toks"))
+        hashedShingleSet(col(textCol), ngram).as("toks"))
       .groupBy(col("blk"), col("toks"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .withColumn("cls", xxhash64(col("blk"), col("toks")))
@@ -821,10 +815,9 @@ object Dedup {
     // minhash_signature into lshBands' interpreted transform lambda,
     // re-evaluating the signature once per band (104× here under
     // selective banding) with JIT-profile-dependent 8× bench swings
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val banded = classes
       .select(col("cls"), col("blk"),
-        explode(call_function("lsh_band_hashes", col("toks"), lit(k), lit(b))).as("band"))
+        explode(GraftFunctions.call("lsh_band_hashes", col("toks"), lit(k), lit(b))).as("band"))
       .select(col("cls"), col("blk"),
         col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
     val candidates = banded.as("a").join(banded.as("b"),
@@ -835,11 +828,10 @@ object Dedup {
       .select(col("a.cls").as("cls_a"), col("b.cls").as("cls_b"))
       .dropDuplicates("cls_a", "cls_b")
     val clsInfo = classes.select(col("cls"), col("toks"), col("ids"))
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val cross = candidates
       .join(clsInfo.withColumnsRenamed(Map("cls" -> "cls_a", "toks" -> "ta", "ids" -> "ids_a")), "cls_a")
       .join(clsInfo.withColumnsRenamed(Map("cls" -> "cls_b", "toks" -> "tb", "ids" -> "ids_b")), "cls_b")
-      .withColumn("__inter", call_function("sorted_intersect_size", col("ta"), col("tb")))
+      .withColumn("__inter", GraftFunctions.call("sorted_intersect_size", col("ta"), col("tb")))
       // nullif: two sub-n-token documents both shingle to EMPTY arrays
       // and meet 0/0 here — under ANSI that throws DIVIDE_BY_ZERO; a
       // NULL jaccard instead falls out of the >= threshold filter
@@ -898,12 +890,11 @@ object Dedup {
     */
   private def bandRows(df: DataFrame, idCol: String, textCol: String,
                        blockCol: String, k: Int, b: Int, ngram: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // fused kernel — see [[minhashDupPairs]] for why the two-step form
     // re-evaluated the signature once per band
     df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        explode(call_function("lsh_band_hashes",
-          hashedShingleSet(df, col(textCol), ngram), lit(k), lit(b))).as("band"))
+        explode(GraftFunctions.call("lsh_band_hashes",
+          hashedShingleSet(col(textCol), ngram), lit(k), lit(b))).as("band"))
       .select(col("id"), col("blk"),
         col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
   }
@@ -943,9 +934,9 @@ object Dedup {
       .select(col("x.id").as("corpus_id"), col("n.id").as("new_id"))
       .dropDuplicates("corpus_id", "new_id")
     val ctoks = corpus.select(col(idCol).as("corpus_id"),
-      hashedShingleSet(corpus, col(textCol), ngram).as("ta"))
+      hashedShingleSet(col(textCol), ngram).as("ta"))
     val ntoks = newDf.select(col(idCol).as("new_id"),
-      hashedShingleSet(newDf, col(textCol), ngram).as("tb"))
+      hashedShingleSet(col(textCol), ngram).as("tb"))
     // the shingle sets are sorted+distinct by construction, so the
     // native O(n+m) merge kernel computes the intersection (codegen)
     // and |union| = na + nb - inter — array_intersect/array_union
@@ -954,7 +945,7 @@ object Dedup {
       .join(ctoks, "corpus_id")
       .join(ntoks, "new_id")
       .withColumn("__inter",
-        call_function("sorted_intersect_size", col("ta"), col("tb")))
+        GraftFunctions.call("sorted_intersect_size", col("ta"), col("tb")))
       // nullif: two sub-n-token documents both shingle to EMPTY arrays
       // and meet 0/0 here — under ANSI that throws DIVIDE_BY_ZERO; a
       // NULL jaccard instead falls out of the >= threshold filter
@@ -1060,7 +1051,6 @@ object Dedup {
                      minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // 16-byte BINARY md5 as the shuffle key: the full 128-bit identity
     // (collision-free at any corpus size, unlike a 64-bit hash at 10^14
     // grams) at half the bytes of the hex rendering; the oracle
@@ -1077,7 +1067,7 @@ object Dedup {
       .select(col(idCol).as("id"), col(textCol).as("__t"))
       .filter(length(col("__t")) >= minLen))
       .select(col("id"),
-        posexplode(call_function("char_gram_hashes", col("__t"), lit(minLen))))
+        posexplode(GraftFunctions.call("char_gram_hashes", col("__t"), lit(minLen))))
       .select(col("id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("h"))
     val dup = grams.groupBy(col("h"))
       .agg(count(lit(1)).as("__n"))
@@ -1183,9 +1173,9 @@ object Dedup {
                          textCol: String, n: Int,
                          broadcastEval: Boolean = true): DataFrame = {
     val tGrams = train.select(col(idCol).as("id"),
-      explode(hashedShingleSet(train, col(textCol), n)).as("__g"))
+      explode(hashedShingleSet(col(textCol), n)).as("__g"))
     val eGrams0 = evalSet
-      .select(explode(hashedShingleSet(evalSet, col(textCol), n)).as("__g"))
+      .select(explode(hashedShingleSet(col(textCol), n)).as("__g"))
       .distinct()
     val eGrams = if (broadcastEval) broadcast(eGrams0) else eGrams0
     // per-doc grams are already distinct (hashedShingleSet contract), so
@@ -1210,7 +1200,6 @@ object Dedup {
     */
   def simhashTable(df: DataFrame, idCol: String, textCol: String,
                    portableHash: Boolean = false): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // zero-token docs are EXCLUDED, matching the original explode+agg
     // formulation (no tokens -> no group -> no row). Without the filter
     // the per-row kernel emits sh=0 for every empty/whitespace-only doc,
@@ -1221,11 +1210,11 @@ object Dedup {
     // portableHash picks md5-based token hashes ([[md5TokenHashes]]) so
     // the signature is reproducible outside Spark; the bit-fold kernel
     // is hash-agnostic (it folds whatever longs it is given)
-    val tokHashes = if (portableHash) md5TokenHashes(df, col(textCol))
-                    else hashedShingleSet(df, col(textCol), 1, removeEmpty = true)
+    val tokHashes = if (portableHash) md5TokenHashes(col(textCol))
+                    else hashedShingleSet(col(textCol), 1, removeEmpty = true)
     df.select(col(idCol).as("id"), tokHashes.as("__toks"))
       .filter(size(col("__toks")) > 0)
-      .select(col("id"), call_function("simhash64", col("__toks")).as("sh"))
+      .select(col("id"), GraftFunctions.call("simhash64", col("__toks")).as("sh"))
   }
 
   /** 64-bit SimHash of a token array: bit b of the hash is 1 iff the sum
@@ -1278,8 +1267,8 @@ object Dedup {
     // class collapse: group ids by identical token set. Zero-token docs
     // (empty/whitespace text) are excluded — same contract as
     // [[simhashTable]]: they'd otherwise form one giant hamming-0 class.
-    val tokHashes = if (portableHash) md5TokenHashes(df, col(textCol))
-                    else hashedShingleSet(df, col(textCol), 1, removeEmpty = true)
+    val tokHashes = if (portableHash) md5TokenHashes(col(textCol))
+                    else hashedShingleSet(col(textCol), 1, removeEmpty = true)
     val classes = df.select(col(idCol).as("id"), tokHashes.as("toks"))
       .filter(size(col("toks")) > 0)
       .groupBy(col("toks"))
@@ -1296,9 +1285,8 @@ object Dedup {
     // simhash per class: native one-pass kernel over the pre-hashed
     // tokens — map-side, replacing an explode + 64-sum hash aggregate
     // (one shuffled row per (class, token)) with zero shuffle
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val clsSh = classes.select(col("cls"),
-      call_function("simhash64", col("toks")).as("sh"))
+      GraftFunctions.call("simhash64", col("toks")).as("sh"))
     val sh = clsSh
       .withColumn("seg", explode(transform(sequence(lit(0), lit(nSeg - 1)),
         s => struct(s.as("seg_idx"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Edit-distance self-join via deletion-neighborhood blocking (the
   * SymSpell idea): if `lev(a, b) <= d`, then deleting at most `d`
@@ -32,9 +33,6 @@ object FuzzyJoin {
                         maxDist: Int): DataFrame = {
     require(maxDist == 1 || maxDist == 2,
       s"deletion-neighborhood blocking supports maxDist 1 or 2, got $maxDist")
-    // installs LevenshteinThresholdRule: the `dist <= maxDist` verify
-    // below optimizes to the banded O(len·k) DP with early exit
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val rows = df.select(col(idCol).as("__id"), col(strCol).as("__s"))
       .filter(col("__s").isNotNull)
 
@@ -56,9 +54,11 @@ object FuzzyJoin {
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
         col("a.__s").as("__sa"), col("b.__s").as("__sb"))
       .distinct()
+    // the banded O(len·k) DP with early exit: the exact distance when
+    // it is <= maxDist, -1 past the bound
     candidates
-      .withColumn("dist", levenshtein(col("__sa"), col("__sb")).cast("long"))
-      .filter(col("dist") <= maxDist)
+      .withColumn("dist", levenshtein(col("__sa"), col("__sb"), maxDist).cast("long"))
+      .filter(col("dist") >= 0)
       .select(col("id_a"), col("id_b"), col("dist"))
   }
 
@@ -113,10 +113,9 @@ object FuzzyJoin {
     val r = clean.select(col(cleanId).as("match_id"), col(cleanStr).as("__cs"))
       .filter(col("__cs").isNotNull)
       .withColumn("__k", blockKey(col("__cs")))
-    graft.expressions.GraftFunctions.register(dirty.sparkSession)
     val scored = l.join(r, "__k")
       .withColumn("score_ppm",
-        floor(call_function("jaro_winkler", col("__ds"), col("__cs")) * lit(1e6))
+        floor(GraftFunctions.call("jaro_winkler", col("__ds"), col("__cs")) * lit(1e6))
           .cast("long"))
       .filter(col("score_ppm") >= minScorePpm)
     val w = Window.partitionBy("dirty_id")

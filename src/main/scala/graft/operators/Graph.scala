@@ -9,6 +9,7 @@ import org.apache.spark.sql.classic.GraftDatasetBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import graft.expressions.GraftFunctions
 
 /** Iterative link-analysis over edge lists — centrality for corpus
   * graphs a training-data pipeline actually builds (near-duplicate
@@ -561,8 +562,6 @@ object Graph {
     }
     val integralIds = isIntegral(edges.schema(srcCol).dataType) &&
       isIntegral(edges.schema(dstCol).dataType)
-    if (integralIds)
-      graft.expressions.GraftFunctions.register(edges.sparkSession)
     val und0 = edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
     val und = (if (integralIds)
@@ -631,7 +630,7 @@ object Graph {
       .join(attach(adj.select(col("lo").as("hi"), col("nb").as("__nbv"))), Seq("hi"))
       .select(col("lo"), col("hi"),
         (if (integralIds)
-          call_function("sorted_intersect", col("__nbu"), col("__nbv"))
+          GraftFunctions.call("sorted_intersect", col("__nbu"), col("__nbv"))
         else
           array_intersect(col("__nbu"), col("__nbv"))).as("__w"))
       .filter(size(col("__w")) > 0)

@@ -133,7 +133,7 @@ object GroupOps {
     */
   def rowNumberId(df: DataFrame, orderCols: Seq[Column], out: String): DataFrame =
     df.withColumn(out,
-      row_number().over(Windows.boundedGlobal(df)(orderCols: _*)).cast(LongType))
+      row_number().over(Windows.boundedGlobal(orderCols: _*)).cast(LongType))
 
   /** Exact global quantile binning: `out` = the bucket `ntile(k) OVER
     * (ORDER BY orderCols)` would assign, WITHOUT the single-partition

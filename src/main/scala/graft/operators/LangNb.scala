@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Trained character-n-gram language classifier: multinomial naive
   * Bayes over hashed char-3-gram features — the fastText-class model
@@ -99,10 +100,8 @@ object LangNb {
   /** Hashed char-n-gram bucket ids of a text column (the fused
     * [[graft.expressions.CharGramBuckets]] kernel; one pass, codegen'd).
     */
-  def gramBuckets(df: DataFrame, text: Column, n: Int, buckets: Int): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    call_function("char_gram_buckets", normalized(text), lit(n), lit(buckets))
-  }
+  def gramBuckets(text: Column, n: Int, buckets: Int): Column =
+    GraftFunctions.call("char_gram_buckets", normalized(text), lit(n), lit(buckets))
 
   /** Train on a labeled corpus: one aggregate per model table (gram
     * counts ≤ classes×buckets rows, class totals, doc priors), all
@@ -119,7 +118,7 @@ object LangNb {
     // OPTIMIZATION_r15.md) measured the probe+shuffle costing MORE than
     // the parallelism buys on this kernel (q248 1.18x slower with it)
     val grams = docs.select(col("lang"),
-      explode(gramBuckets(df, col("__t"), n, buckets)).as("b"))
+      explode(gramBuckets(col("__t"), n, buckets)).as("b"))
     // persisted: counts (≤ classes×buckets rows) feeds both the class
     // totals and the final log-likelihood join — without the cache the
     // corpus-sized gram pass above runs once per consumer
@@ -177,7 +176,7 @@ object LangNb {
     val score = udf((grams: Seq[Int]) =>
       bc.value.predict(if (grams == null) Nil else grams))
     df.withColumn("__pred",
-        score(gramBuckets(df, col(textCol), model.n, model.buckets)))
+        score(gramBuckets(col(textCol), model.n, model.buckets)))
       .withColumn("pred_lang", col("__pred._1"))
       .withColumn("score_q", col("__pred._2"))
       .drop("__pred")
@@ -192,7 +191,7 @@ object LangNb {
     val score = udf((grams: Seq[Int]) =>
       bc.value.predictWithMargin(if (grams == null) Nil else grams))
     df.withColumn("__pred",
-        score(gramBuckets(df, col(textCol), model.n, model.buckets)))
+        score(gramBuckets(col(textCol), model.n, model.buckets)))
       .withColumn("pred_lang", col("__pred._1"))
       .withColumn("score_q", col("__pred._2"))
       .withColumn("margin_q", col("__pred._3"))

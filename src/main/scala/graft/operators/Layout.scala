@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering, the
   * standard data-skipping lever for tables queried on TWO selective
@@ -73,17 +74,15 @@ object Layout {
     * envelopes, spec-measured). Backed by the codegen'd
     * [[graft.expressions.HilbertIndex2]] expression.
     */
-  def hilbertValue2(df: DataFrame, x: Column, y: Column, bits: Int = 16): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    call_function("hilbert2", x, y, lit(bits))
-  }
+  def hilbertValue2(x: Column, y: Column, bits: Int = 16): Column =
+    GraftFunctions.call("hilbert2", x, y, lit(bits))
 
   /** Rewrite `df` into Hilbert order on two int columns — [[zorderBy]]
     * with the adjacency-guaranteed walk.
     */
   def hilbertBy(df: DataFrame, xCol: String, yCol: String, bits: Int = 16,
                 numPartitions: Int = 0): DataFrame = {
-    val withH = df.withColumn("__h", hilbertValue2(df, col(xCol), col(yCol), bits))
+    val withH = df.withColumn("__h", hilbertValue2(col(xCol), col(yCol), bits))
     val parted =
       if (numPartitions > 0) withH.repartitionByRange(numPartitions, col("__h"))
       else withH.repartitionByRange(col("__h"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Gopher/C4-style document-quality rule pack — the published heuristic
   * filter set a pretraining pipeline runs over every crawled document,
@@ -51,7 +52,6 @@ object QualityRules {
   def ruleTable(df: DataFrame, idCol: String, textCol: String,
                 stopwords: Seq[String] = gopherStopwords,
                 carryCols: Seq[String] = Nil): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val txt = coalesce(col(textCol).cast("string"), lit(""))
     val base = df.select(col(idCol) +: carryCols.map(col) :+ txt.as("__t"): _*)
       .withColumn("__w", filter(split(trim(col("__t")), "\\s+"),
@@ -59,8 +59,8 @@ object QualityRules {
       .withColumn("__wl", transform(col("__w"), w => lower(w)))
       .withColumn("__l", filter(transform(split(col("__t"), "\n"),
         l => trim(l)), l => length(l) > 0))
-      .withColumn("__r2", call_function("ngram_repetition", col("__wl"), lit(2)))
-      .withColumn("__r3", call_function("ngram_repetition", col("__wl"), lit(3)))
+      .withColumn("__r2", GraftFunctions.call("ngram_repetition", col("__wl"), lit(2)))
+      .withColumn("__r3", GraftFunctions.call("ngram_repetition", col("__wl"), lit(3)))
     val nW = size(col("__w")).cast("long")
     val nL = size(col("__l")).cast("long")
     def frac(num: Column, den: Column): Column =

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Embedding compression for vector stores: symmetric per-vector int8
   * quantization — the standard 4× shrink applied before a 100 TB
@@ -52,16 +53,14 @@ object Quantize {
     * kernel ≡ declarative on random vectors.
     */
   def quantizeReport(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol), call_function("quantize_int8_stats", col(vecCol)).as("__q"))
+    df.select(col(idCol), GraftFunctions.call("quantize_int8_stats", col(vecCol)).as("__q"))
       .select(col(idCol), col("__q.scale").as("scale"), col("__q.q_sum").as("q_sum"),
         col("__q.q_l1").as("q_l1"), col("__q.max_err").as("max_err"))
   }
 
   /** The declarative form of [[quantizeReport]] — higher-order Column
-    * expressions only, kept as the kernel's executable specification
-    * (and the portable fallback for a session that can't register
-    * functions). The scale is staged as a projected column so it is
+    * expressions only, kept as the kernel's executable specification.
+    * The scale is staged as a projected column so it is
     * computed once per row, not once per element inside each lambda.
     */
   def quantizeReportDeclarative(df: DataFrame, idCol: String, vecCol: String): DataFrame = {

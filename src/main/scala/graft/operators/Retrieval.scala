@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Ranking-quality evaluation for retrieval pipelines: the metrics a
   * search/RAG stack runs after every index or model change — P@k,
@@ -209,7 +210,6 @@ object Retrieval {
                    lambda: Double, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lambda >= 0 && lambda <= 1, s"lambda must be in [0,1], got $lambda")
-    graft.expressions.GraftFunctions.register(cands.sparkSession)
     // both tables feed every greedy round — persist, or round i
     // re-derives the candidate pull and the N² cosine pass i times.
     // TRACKED: an untracked persist outlives its query, and the next
@@ -224,7 +224,7 @@ object Retrieval {
         col("a.__q") === col("b.__q") && col("a.__d") =!= col("b.__d"))
       .select(col("a.__q").as("__q"), col("a.__d").as("__d"),
         col("b.__d").as("__db"),
-        round(call_function("cosine_similarity", col("a.__v"), col("b.__v")), 6)
+        round(GraftFunctions.call("cosine_similarity", col("a.__v"), col("b.__v")), 6)
           .as("__sim"))
       .persist())
     val mu = lit(1 - lambda) // IEEE 1−λ, restated identically by oracles

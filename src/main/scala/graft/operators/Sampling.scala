@@ -297,9 +297,9 @@ object Sampling {
         col(tokensCol).cast("double").as("tokens"))
       .withColumn("cap", col("tokens") * lit(maxEpochs))
     val ord = base.withColumn("i",
-      row_number().over(Windows.boundedGlobal(base)(col("cap"), col("source"))).cast("long"))
+      row_number().over(Windows.boundedGlobal(col("cap"), col("source"))).cast("long"))
     val pre = ord
-      .withColumn("P", sum(col("cap")).over(Windows.boundedGlobal(ord)(col("i"))
+      .withColumn("P", sum(col("cap")).over(Windows.boundedGlobal(col("i"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .crossJoin(broadcast(ord.agg(count(lit(1)).as("k"))))
       .persist()

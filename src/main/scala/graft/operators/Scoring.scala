@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Corpus-relative text relevance scoring (TF-IDF / BM25) — the ranking
   * primitive behind corpus search, quality-weighted sampling, and
@@ -114,9 +115,8 @@ object Scoring {
     require(k >= 1, s"k must be positive, got $k")
     val cap = if (capacity > 0) capacity else 16 * k
     require(cap >= k, s"capacity $cap must be >= k=$k")
-    graft.expressions.GraftFunctions.register(items.sparkSession)
     val candidates = items
-      .agg(call_function("misra_gries", col(itemCol), lit(cap)).as("__sk"))
+      .agg(GraftFunctions.call("misra_gries", col(itemCol), lit(cap)).as("__sk"))
       .select(explode(col("__sk")).as("__c"))
       .select(col("__c.item").as(itemCol))
     items.join(broadcast(candidates), Seq(itemCol), "left_semi")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Embedding similarity search over `Array[Float]` columns — brute-force
   * cosine top-k as the exact baseline, plus a random-hyperplane LSH path
@@ -49,14 +50,11 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = cosineUdf(a, b)
 
   /** Fastest path: the native codegen'd [[graft.expressions.CosineSimilarity]]
-    * Expression (no per-row boxing, inlined into whole-stage codegen).
-    * Needs a session to (idempotently) register the function; the
-    * operators below all route through this.
+    * Expression (no per-row boxing, inlined into whole-stage codegen);
+    * the operators below all route through this.
     */
-  private def cosineNative(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    call_function("cosine_similarity", a, b)
-  }
+  private def cosineNative(a: Column, b: Column): Column =
+    GraftFunctions.call("cosine_similarity", a, b)
 
   /** Pure-expression cosine (no UDF) — interpreted, so ~100× slower per
     * pair; useful where UDFs can't go.
@@ -81,7 +79,7 @@ object Similarity {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
     val c = corpus.select(col(idCol).as("neighbour_id"), col(vecCol).as("cv"))
     val scored = c.join(q, col("query_id") =!= col("neighbour_id"))
-      .withColumn("cosine_sim", cosineNative(corpus)(col("qv"), col("cv")))
+      .withColumn("cosine_sim", cosineNative(col("qv"), col("cv")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
     scored.withColumn("rn", row_number().over(w))
@@ -171,7 +169,7 @@ object Similarity {
                        threshold: Double): DataFrame = {
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
-      .withColumn("cosine_sim", cosineNative(df)(col("a.v"), col("b.v")))
+      .withColumn("cosine_sim", cosineNative(col("a.v"), col("b.v")))
       // explicit NaN kill: a zero-norm vector has UNDEFINED cosine, and
       // Spark's ordering treats NaN as greater than every number — so
       // without this, `NaN >= threshold` is TRUE and every pair touching
@@ -345,7 +343,7 @@ object Similarity {
     val out = aSide.join(bSide, col("cell_b") === col("__bc"))
       .filter(col("cell_a") =!= col("cell_b") || col("id_l") < col("id_r"))
       .filter(col("id_l") =!= col("id_r"))
-      .withColumn("cosine_sim", cosineNative(df)(col("va"), col("vb")))
+      .withColumn("cosine_sim", cosineNative(col("va"), col("vb")))
       .filter(col("cosine_sim") >= threshold)
       .select(least(col("id_l"), col("id_r")).as("id_a"),
         greatest(col("id_l"), col("id_r")).as("id_b"), col("cosine_sim"))
@@ -411,7 +409,7 @@ object Similarity {
       .select(col("q.query_id").as("query_id"), col("c.neighbour_id").as("neighbour_id"),
         col("q.qv").as("qv"), col("c.cv").as("cv"))
       .dropDuplicates("query_id", "neighbour_id")
-      .withColumn("cosine_sim", cosineNative(corpus)(col("qv"), col("cv")))
+      .withColumn("cosine_sim", cosineNative(col("qv"), col("cv")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
     cand.withColumn("rn", row_number().over(w))
@@ -604,7 +602,7 @@ object Similarity {
       .withColumn("cell", explode(probeCells(col("__qv"))))
     val scored = queryCells.join(corpusCells, "cell")
       .filter(col("query_id") =!= col("neighbour_id"))
-      .withColumn("cosine_sim", cosineNative(corpus)(col("__qv"), col("__cv")))
+      .withColumn("cosine_sim", cosineNative(col("__qv"), col("__cv")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
     scored.withColumn("__rn", row_number().over(w))
@@ -668,7 +666,7 @@ object Similarity {
     val b = assigned.select(col("cell"), col(idCol).as("__idb"), col(vecCol).as("__vb"))
     val dropIds = a.join(b, "cell")
       .filter(col("__idb") < col("__ida"))
-      .withColumn("__sim", cosineNative(df)(col("__va"), col("__vb")))
+      .withColumn("__sim", cosineNative(col("__va"), col("__vb")))
       .filter(col("__sim") >= threshold)
       .select(col("__ida").as(idCol))
       .distinct()
@@ -699,7 +697,7 @@ object Similarity {
       col(vecCol).as("__ev")))
     train.select(col(idCol), col(vecCol).as("__tv"))
       .join(ev, col(idCol) =!= col("eval_id"))
-      .withColumn("cosine", cosineNative(train)(col("__tv"), col("__ev")))
+      .withColumn("cosine", cosineNative(col("__tv"), col("__ev")))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col(idCol))
           .orderBy(col("cosine").desc, col("eval_id").asc)))

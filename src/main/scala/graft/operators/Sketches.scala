@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** The sketch-table pattern: collapse each shard (day / source / file
   * batch) of a fact stream to ONE mergeable sketch per group, persist
@@ -37,9 +38,8 @@ object Sketches {
     * output is persist-shaped: `shardCols…, sketch binary`.
     */
   def bitmapShards(df: DataFrame, shardCols: Seq[Column], keyCol: Column): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.groupBy(shardCols: _*)
-      .agg(call_function("bitmap_build", keyCol).as("sketch"))
+      .agg(GraftFunctions.call("bitmap_build", keyCol).as("sketch"))
   }
 
   /** Exact rollup of a shard sketch table to `groupCols`: distinct =
@@ -50,8 +50,8 @@ object Sketches {
   def bitmapRollup(shards: DataFrame, groupCols: Seq[Column]): DataFrame =
     shards.groupBy(groupCols: _*)
       .agg(count(lit(1)).as("n_shards"),
-        call_function("bitmap_union_agg", col("sketch")).as("sketch"))
-      .withColumn("n_distinct", call_function("bitmap_cardinality", col("sketch")))
+        GraftFunctions.call("bitmap_union_agg", col("sketch")).as("sketch"))
+      .withColumn("n_distinct", GraftFunctions.call("bitmap_cardinality", col("sketch")))
 
   /** Rolling distinct-count time series off a DAILY sketch table — the
     * WAU/MAU question ("distinct users over the trailing w days, per
@@ -71,15 +71,14 @@ object Sketches {
   def rollingDistinct(shards: DataFrame, dayCol: String,
                       windowDays: Int): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
-    graft.expressions.GraftFunctions.register(shards.sparkSession)
     val d = shards.select(col(dayCol).as("day"), col("sketch").as("__sk"))
     val spine = d.select(col("day")).distinct()
     spine.join(d.select(col("day").as("__sd"), col("__sk")),
         datediff(col("day"), col("__sd")).between(0, windowDays - 1))
       .groupBy(col("day"))
-      .agg(call_function("bitmap_union_agg", col("__sk")).as("sketch"))
+      .agg(GraftFunctions.call("bitmap_union_agg", col("__sk")).as("sketch"))
       .select(col("day"),
-        call_function("bitmap_cardinality", col("sketch")).as("n_distinct"),
+        GraftFunctions.call("bitmap_cardinality", col("sketch")).as("n_distinct"),
         col("sketch"))
   }
 
@@ -104,7 +103,6 @@ object Sketches {
                       periodDays: Int, maxOffset: Int): DataFrame = {
     require(periodDays >= 1, s"periodDays must be >= 1, got $periodDays")
     require(maxOffset >= 0, s"maxOffset must be >= 0, got $maxOffset")
-    graft.expressions.GraftFunctions.register(activity.sparkSession)
     val act = activity.select(col(periodCol).as("period"), col(keyCol).as("__k"))
       .where(col("__k").isNotNull).distinct()
     val cohorts = act.groupBy(col("__k")).agg(min(col("period")).as("cohort"))
@@ -118,8 +116,8 @@ object Sketches {
         // "offset" is a reserved word in SQL dialects (LIMIT/OFFSET)
         (datediff(col("period"), col("cohort")) / lit(periodDays)).cast("long")
           .as("week_offset"),
-        call_function("bitmap_cardinality", col("__cs")).as("cohort_size"),
-        call_function("bitmap_and_cardinality", col("__cs"), col("__ps"))
+        GraftFunctions.call("bitmap_cardinality", col("__cs")).as("cohort_size"),
+        GraftFunctions.call("bitmap_and_cardinality", col("__cs"), col("__ps"))
           .as("retained"))
       .withColumn("rate", round(col("retained") / col("cohort_size"), 6))
   }
@@ -132,9 +130,8 @@ object Sketches {
     */
   def ddsketchShards(df: DataFrame, shardCols: Seq[Column], valueCol: Column,
                      alpha: Double = 0.01): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.groupBy(shardCols: _*)
-      .agg(call_function("ddsketch_build", valueCol, lit(alpha)).as("sketch"))
+      .agg(GraftFunctions.call("ddsketch_build", valueCol, lit(alpha)).as("sketch"))
   }
 
   /** Quantile rollup of a DDSketch shard table: bin-wise union, then
@@ -147,10 +144,10 @@ object Sketches {
                      quantiles: Seq[Double] = Seq(0.5, 0.95, 0.99)): DataFrame = {
     val merged = shards.groupBy(groupCols: _*)
       .agg(count(lit(1)).as("n_shards"),
-        call_function("ddsketch_merge_agg", col("sketch")).as("sketch"))
+        GraftFunctions.call("ddsketch_merge_agg", col("sketch")).as("sketch"))
     quantiles.foldLeft(merged) { (df, q) =>
       df.withColumn(s"p${(q * 100).round}",
-        call_function("ddsketch_quantile", col("sketch"), lit(q)))
+        GraftFunctions.call("ddsketch_quantile", col("sketch"), lit(q)))
     }
   }
 

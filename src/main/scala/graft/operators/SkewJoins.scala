@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Explicit skew mitigation for equi-joins. First resorts at 100 TB, in
   * order: (1) broadcast the small side — no shuffle, no skew; (2) AQE's
@@ -248,12 +249,11 @@ object SkewJoins {
   def estimateJoinOutputRows(left: DataFrame, right: DataFrame,
                              keys: Seq[String],
                              width: Int = 4096, depth: Int = 4): Long = {
-    graft.expressions.GraftFunctions.register(left.sparkSession)
     def sk(df: DataFrame) =
-      df.agg(call_function("cms_build", tagOf(keys), lit(width), lit(depth)).as("sk"))
+      df.agg(GraftFunctions.call("cms_build", tagOf(keys), lit(width), lit(depth)).as("sk"))
     sk(left).select(col("sk").as("a"))
       .crossJoin(broadcast(sk(right).select(col("sk").as("b"))))
-      .select(call_function("cms_inner_product", col("a"), col("b")).as("est"))
+      .select(GraftFunctions.call("cms_inner_product", col("a"), col("b")).as("est"))
       .collect()(0).getLong(0)
   }
 

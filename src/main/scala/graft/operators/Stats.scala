@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Statistical inference over corpus-scale data — resampling confidence
   * intervals and inter-annotator agreement. No reference implementation
@@ -82,7 +83,6 @@ object Stats {
     */
   private def poissonReplicated(df: DataFrame, idCol: String,
                                 nReplicates: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // posexplode_OUTER: the kernel's array is non-null and non-empty
     // for every (non-null-id) row, so outer vs inner explode emit the
     // same rows — but the inner form lets InferFiltersFromGenerate
@@ -93,7 +93,7 @@ object Stats {
     // 4.8 s before this line). The rule skips outer generates.
     df
       .repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-      .withColumn("__ws", call_function("poisson_replicates",
+      .withColumn("__ws", GraftFunctions.call("poisson_replicates",
         col(idCol).cast("string"), lit(nReplicates)))
       .select(col("*"), posexplode_outer(col("__ws")).as(Seq("__bi", "__w")))
       .withColumn("b", (col("__bi") + 1).cast("long"))
@@ -313,7 +313,7 @@ object Stats {
     graft.Caches.track(byBin)
     // global window over the ≤nBins-row bin table — the bounded-dim
     // convention (GroupOps.rowNumberId), never over corpus rows
-    val cum = Windows.boundedGlobal(byBin)(col("bin"))
+    val cum = Windows.boundedGlobal(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pre = byBin.select(col("bin"), col("n"), col("accuracy"),
       sum(col("n")).over(cum).as("cw"),

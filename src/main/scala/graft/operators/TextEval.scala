@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** Generation-quality text metrics — sentence BLEU (Papineni et al.
   * ACL '02) and ROUGE-N precision/recall/F1 (Lin '04) — as map-side
@@ -59,12 +60,11 @@ object TextEval {
 
   /** The shared stats column: `array<struct<n, clipped, cand_total,
     * ref_total>>` for n = 1..maxN, one kernel pass per pair row.
-    * Requires [[graft.expressions.GraftFunctions.register]].
     */
   private def overlapStats(candText: Column, refText: Column, maxN: Int,
                            mode: graft.functions.Tokenize.Mode =
                              graft.functions.Tokenize.Whitespace): Column =
-    call_function("ngram_overlap_stats",
+    GraftFunctions.call("ngram_overlap_stats",
       toks(candText, mode), toks(refText, mode), lit(maxN))
 
   /** Sentence BLEU-maxN with Lin–Och add-one smoothing for n ≥ 2
@@ -80,7 +80,6 @@ object TextEval {
            mode: graft.functions.Tokenize.Mode =
              graft.functions.Tokenize.Whitespace): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"bleu maxN must be in [1,8], got $maxN")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withStats = pairs.withColumn("__ov",
       overlapStats(col(candTextCol), col(refTextCol), maxN, mode))
     bleuFromStats(withStats, pairs.columns.toSeq, maxN)
@@ -101,9 +100,8 @@ object TextEval {
                 mode: graft.functions.Tokenize.Mode =
                   graft.functions.Tokenize.Whitespace): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"bleuMulti maxN must be in [1,8], got $maxN")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withStats = pairs.withColumn("__ov",
-      call_function("ngram_overlap_stats_multi",
+      GraftFunctions.call("ngram_overlap_stats_multi",
         toks(col(candTextCol), mode),
         transform(col(refsTextCol), r => toks(r, mode)),
         lit(maxN)))
@@ -157,7 +155,6 @@ object TextEval {
   def corpusBleu(docs: DataFrame, idCol: String, textCol: String,
                  partCol: String, maxN: Int = 4): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"corpusBleu maxN must be in [1,8], got $maxN")
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val pairs = adjacentPairsKeep(docs, idCol, textCol, partCol)
     val withStats = pairs.withColumn("__ov",
       overlapStats(col("cand_text"), col("ref_text"), maxN))
@@ -216,11 +213,10 @@ object TextEval {
   def rougeL(pairs: DataFrame, candTextCol: String, refTextCol: String,
              beta: Double = 1.0): DataFrame = {
     require(beta > 0, s"rougeL beta must be positive, got $beta")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withLcs = pairs
       .withColumn("__ct", toks(col(candTextCol)))
       .withColumn("__rt", toks(col(refTextCol)))
-      .withColumn("__lcs", call_function("lcs_length", col("__ct"), col("__rt")))
+      .withColumn("__lcs", GraftFunctions.call("lcs_length", col("__ct"), col("__rt")))
     val cLen = size(col("__ct")).cast("long")
     val rLen = size(col("__rt")).cast("long")
     val p = when(cLen === 0, lit(0.0)).otherwise(col("__lcs").cast("double") / cLen)
@@ -245,11 +241,10 @@ object TextEval {
     * that is standard).
     */
   def wer(pairs: DataFrame, hypTextCol: String, refTextCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withEd = pairs
       .withColumn("__ht", toks(col(hypTextCol)))
       .withColumn("__rt", toks(col(refTextCol)))
-      .withColumn("__ed", call_function("token_edit_distance", col("__ht"), col("__rt")))
+      .withColumn("__ed", GraftFunctions.call("token_edit_distance", col("__ht"), col("__rt")))
     val hLen = size(col("__ht")).cast("long")
     val rLen = size(col("__rt")).cast("long")
     val rate = when(rLen > 0, col("__ed").cast("double") / rLen)
@@ -276,12 +271,11 @@ object TextEval {
   def werMulti(pairs: DataFrame, hypTextCol: String, refsTextCol: String,
                mode: graft.functions.Tokenize.Mode =
                  graft.functions.Tokenize.Whitespace): DataFrame = {
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val staged = pairs
       .withColumn("__ht", toks(col(hypTextCol), mode))
       .withColumn("__ws", transform(col(refsTextCol), (r, i) => {
         val rt = toks(r, mode)
-        val ed = call_function("token_edit_distance", col("__ht"), rt)
+        val ed = GraftFunctions.call("token_edit_distance", col("__ht"), rt)
         val hLen = size(col("__ht"))
         val rLen = size(rt)
         val w = when(rLen > 0, ed.cast("double") / rLen)
@@ -314,11 +308,10 @@ object TextEval {
            maxN: Int = 6, beta: Double = 2.0): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"chrF maxN must be in [1,8], got $maxN")
     require(beta > 0, s"chrF beta must be positive, got $beta")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     def chars(c: Column): Column =
       filter(split(regexp_replace(lower(trim(c)), "\\s+", ""), ""), t => t =!= lit(""))
     val withStats = pairs.withColumn("__ov",
-      call_function("ngram_overlap_stats",
+      GraftFunctions.call("ngram_overlap_stats",
         chars(col(candTextCol)), chars(col(refTextCol)), lit(maxN)))
     def st(n: Int): Column = element_at(col("__ov"), n)
     def pN(n: Int): Column = {
@@ -387,7 +380,6 @@ object TextEval {
   def rougeN(pairs: DataFrame, candTextCol: String, refTextCol: String,
              ns: Seq[Int] = Seq(1, 2)): DataFrame = {
     require(ns.nonEmpty && ns.forall(n => n >= 1 && n <= 8), s"rougeN orders must be in [1,8], got $ns")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val maxN = ns.max
     val withStats = pairs.withColumn("__ov",
       overlapStats(col(candTextCol), col(refTextCol), maxN))
@@ -428,12 +420,11 @@ object TextEval {
                     graft.functions.Tokenize.Whitespace): DataFrame = {
     require(ns.nonEmpty && ns.forall(n => n >= 1 && n <= 8),
       s"rougeNMulti orders must be in [1,8], got $ns")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val maxN = ns.max
     val staged = pairs
       .withColumn("__ct", toks(col(candTextCol), mode))
       .withColumn("__ovs", transform(col(refsTextCol),
-        r => call_function("ngram_overlap_stats", col("__ct"), toks(r, mode), lit(maxN))))
+        r => GraftFunctions.call("ngram_overlap_stats", col("__ct"), toks(r, mode), lit(maxN))))
     def bestFor(n: Int): Column = {
       val scored = transform(col("__ovs"), (ov, i) => {
         val st = element_at(ov, n)

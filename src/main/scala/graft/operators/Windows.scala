@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
-import org.apache.spark.sql.functions.call_function
+import graft.expressions.GraftFunctions
 
 /** Shared window-spec helpers. */
 object Windows {
@@ -16,17 +16,14 @@ object Windows {
     * makes WindowExec's partitionSpec non-empty so it does NOT log its
     * per-task "No Partition Defined for Window operation" warning — at
     * 100+ query families those warnings bury real ones in the bench
-    * tail. `df` is any frame on the target session (needed to register
-    * the key expression); the spec itself is frame-independent.
+    * tail. The spec is frame- and session-independent.
     *
     * Callers MUST hold the bounded-frame contract (the
     * [[GroupOps.rowNumberId]] convention); for corpus-sized input use
     * the two-phase scan ([[GroupOps.denseId]]) instead.
     */
-  def boundedGlobal(df: Dataset[_])(orderCols: Column*): WindowSpec = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    Window.partitionBy(call_function("singleton_key")).orderBy(orderCols: _*)
-  }
+  def boundedGlobal(orderCols: Column*): WindowSpec =
+    boundedGlobalWhole.orderBy(orderCols: _*)
 
   /** Unordered whole-frame variant (grand totals over a bounded dim —
     * the q107 share-of-total shape): the frame is the entire partition,
@@ -34,8 +31,6 @@ object Windows {
     * [[boundedGlobal]] because an EMPTY orderBy is not the same spec as
     * no orderBy (ordering switches the default frame to running).
     */
-  def boundedGlobalWhole(df: Dataset[_]): WindowSpec = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    Window.partitionBy(call_function("singleton_key"))
-  }
+  def boundedGlobalWhole: WindowSpec =
+    Window.partitionBy(GraftFunctions.call("singleton_key"))
 }

@@ -105,7 +105,6 @@ object CorpusCuration {
   private def stages(df: DataFrame, idCol: String, textCol: String,
                      lang: String): (DataFrame, DataFrame) = {
     import graft.functions.TextFunctions
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val inLangIds = TextFunctions.langScoreTable(df.select(col(idCol), col(textCol)),
         idCol, textCol)
       .filter(col("pred_lang") === lang)

@@ -28,9 +28,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * At a fuzzy-join verify stage this is the difference between a DP
   * table per candidate pair and a thin k-band — the candidate
   * generation ([[graft.operators.FuzzyJoin]]) bounds HOW MANY pairs,
-  * this bounds the cost of EACH. Installed by
-  * [[graft.expressions.GraftFunctions.register]] (imperative) and
-  * [[graft.expressions.GraftExtensions]] (`spark.sql.extensions`).
+  * this bounds the cost of EACH (that operator writes the banded form
+  * itself; the rule serves hand-written SQL and DataFrame code).
+  * Installed by [[graft.expressions.GraftExtensions]]
+  * (`spark.sql.extensions`).
   */
 object LevenshteinThresholdRule extends Rule[LogicalPlan] {
 

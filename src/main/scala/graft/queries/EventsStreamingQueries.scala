@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GroupOps, Validation, ValidationRule}
 import graft.sources.Tables
+import graft.expressions.GraftFunctions
 
 /** Event-time, windowed, funnel/session/retention and streaming-state queries (SURVEY.md §7.4 events family).
   *
@@ -117,19 +118,18 @@ private[graft] object EventsStreamingQueries extends QueryRegistry {
     * Exact, so the oracle is the plain DISTINCT-users intersection.
     */
   private def q127Retention(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val ev = Tables.withEventTime(t(s, dir, "events"))
     val cut = lit("2024-01-15").cast("timestamp")
     ev.groupBy(col("event_type"))
       .agg(
-        call_function("bitmap_build",
+        GraftFunctions.call("bitmap_build",
           when(col("event_time") < cut, col("user_id"))).as("a"),
-        call_function("bitmap_build",
+        GraftFunctions.call("bitmap_build",
           when(col("event_time") >= cut, col("user_id"))).as("b"))
       .select(col("event_type"),
-        call_function("bitmap_cardinality", col("a")).as("users_p1"),
-        call_function("bitmap_cardinality", col("b")).as("users_p2"),
-        call_function("bitmap_and_cardinality", col("a"), col("b")).as("retained"))
+        GraftFunctions.call("bitmap_cardinality", col("a")).as("users_p1"),
+        GraftFunctions.call("bitmap_cardinality", col("b")).as("users_p2"),
+        GraftFunctions.call("bitmap_and_cardinality", col("a"), col("b")).as("retained"))
       .withColumn("retention_rate",
         round(col("retained") / col("users_p1"), 6))
       .orderBy(col("event_type"))

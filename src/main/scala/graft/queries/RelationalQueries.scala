@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GroupOps, Validation, ValidationRule}
 import graft.sources.Tables
+import graft.expressions.GraftFunctions
 
 /** Relational core: scans, joins, aggregation, window, storage layout, snapshots/CDC, and data-governance queries (SURVEY.md §2.1–§2.12).
   *
@@ -883,7 +884,7 @@ private[graft] object RelationalQueries extends QueryRegistry {
     val byRegion = org.apache.spark.sql.expressions.Window.partitionBy(col("r_name"))
     // bounded dim (region×nation) — the constant-key whole frame keeps
     // WindowExec's partitionSpec non-empty (no per-task warning)
-    val overall = graft.operators.Windows.boundedGlobalWhole(rev)
+    val overall = graft.operators.Windows.boundedGlobalWhole
     rev
       .withColumn("region_share", round(col("rev") / sum(col("rev")).over(byRegion), 6))
       .withColumn("total_share", round(col("rev") / sum(col("rev")).over(overall), 6))
@@ -933,11 +934,10 @@ private[graft] object RelationalQueries extends QueryRegistry {
     * deterministic grid makes the estimates exactly SQL-replayable.
     */
   private def q137JoinCardinality(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val li = t(s, dir, "lineitem")
     val ord = t(s, dir, "orders")
     def sk(df: DataFrame, key: String) =
-      df.agg(call_function("cms_build", col(key), lit(4096), lit(4)).as("sk"))
+      df.agg(GraftFunctions.call("cms_build", col(key), lit(4096), lit(4)).as("sk"))
     val cL = li.groupBy(col("l_orderkey").as("k")).agg(count(lit(1)).as("ca"))
     val cO = ord.groupBy(col("o_orderkey").as("k")).agg(count(lit(1)).as("cb"))
     val cP = li.groupBy(col("l_partkey").as("k")).agg(count(lit(1)).as("c"))
@@ -945,11 +945,11 @@ private[graft] object RelationalQueries extends QueryRegistry {
       .crossJoin(broadcast(sk(li, "l_orderkey").select(col("sk").as("a"))))
       .crossJoin(broadcast(sk(ord, "o_orderkey").select(col("sk").as("b"))))
       .select(lit("lineitem_orders_orderkey").as("join_key"), col("exact"),
-        call_function("cms_inner_product", col("a"), col("b")).as("cms_est"))
+        GraftFunctions.call("cms_inner_product", col("a"), col("b")).as("cms_est"))
     val row2 = cP.agg(sum(col("c") * col("c")).as("exact"))
       .crossJoin(broadcast(sk(li, "l_partkey").select(col("sk").as("a"))))
       .select(lit("lineitem_self_partkey").as("join_key"), col("exact"),
-        call_function("cms_inner_product", col("a"), col("a")).as("cms_est"))
+        GraftFunctions.call("cms_inner_product", col("a"), col("a")).as("cms_est"))
     row1.unionByName(row2).orderBy(col("join_key"))
   }
 
@@ -967,7 +967,7 @@ private[graft] object RelationalQueries extends QueryRegistry {
       .select((col("l_orderkey") % 256).cast("long").as("x"),
         (col("l_partkey") % 256).cast("long").as("y"))
     base.withColumn("h",
-        graft.operators.Layout.hilbertValue2(base, col("x"), col("y"), 8))
+        graft.operators.Layout.hilbertValue2(col("x"), col("y"), 8))
       .orderBy(col("h"), col("x"), col("y"))
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GroupOps, Validation, ValidationRule}
 import graft.sources.Tables
+import graft.expressions.GraftFunctions
 
 /** Statistics, sampling/mixture planning, sketches and model-audit queries (SURVEY.md §7.4 stats family).
   *
@@ -325,12 +326,12 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
       alpha = 0.25)
       .withColumn("half", col("day") < to_date(cut))
     val halves = shards.groupBy(col("event_type"), col("half"))
-      .agg(call_function("ddsketch_merge_agg", col("sketch")).as("sketch"))
+      .agg(GraftFunctions.call("ddsketch_merge_agg", col("sketch")).as("sketch"))
     val a = halves.filter(col("half")).select(col("event_type"), col("sketch").as("base"))
     val b = halves.filter(!col("half")).select(col("event_type"), col("sketch").as("cur"))
     val sketchPsi = a.join(b, "event_type")
       .select(col("event_type"),
-        call_function("ddsketch_psi", col("base"), col("cur")).as("__psi_sk"))
+        GraftFunctions.call("ddsketch_psi", col("base"), col("cur")).as("__psi_sk"))
     val exactPsi = graft.operators.Drift
       .psiSummary(ev.filter(col("event_time") < cut),
         ev.filter(col("event_time") >= cut),
@@ -373,22 +374,21 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
     * with an exact-match oracle.
     */
   private def q131KmvRetention(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val ev = Tables.withEventTime(t(s, dir, "events"))
       .filter(col("user_id").isNotNull)
     val cut = lit("2024-01-15").cast("timestamp")
     ev.groupBy(col("event_type"))
       .agg(
-        call_function("kmv_build",
+        GraftFunctions.call("kmv_build",
           when(col("event_time") < cut, col("user_id")), lit(256)).as("a"),
-        call_function("kmv_build",
+        GraftFunctions.call("kmv_build",
           when(col("event_time") >= cut, col("user_id")), lit(256)).as("b"))
       .select(col("event_type"),
-        round(call_function("kmv_cardinality", col("a")), 6).as("est_p1"),
-        round(call_function("kmv_cardinality", col("b")), 6).as("est_p2"),
-        round(call_function("kmv_and_cardinality", col("a"), col("b")), 6)
+        round(GraftFunctions.call("kmv_cardinality", col("a")), 6).as("est_p1"),
+        round(GraftFunctions.call("kmv_cardinality", col("b")), 6).as("est_p2"),
+        round(GraftFunctions.call("kmv_and_cardinality", col("a"), col("b")), 6)
           .as("est_retained"),
-        round(call_function("kmv_or_cardinality", col("a"), col("b")), 6)
+        round(GraftFunctions.call("kmv_or_cardinality", col("a"), col("b")), 6)
           .as("est_either"))
       .orderBy(col("event_type"))
   }
@@ -403,18 +403,17 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
     * min-over-rows estimate exactly.
     */
   private def q133CmsFreq(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val toks = t(s, dir, "documents")
       .select(explode(
         filter(split(lower(trim(col("text"))), " "), t => t =!= lit("")))
         .as("token"))
     val sketch = toks.agg(
-      call_function("cms_build", col("token"), lit(2048), lit(4)).as("sk"))
+      GraftFunctions.call("cms_build", col("token"), lit(2048), lit(4)).as("sk"))
     val top = toks.groupBy("token").agg(count(lit(1)).as("exact"))
       .orderBy(col("exact").desc, col("token").asc).limit(30)
     top.crossJoin(broadcast(sketch))
       .select(col("token"), col("exact"),
-        call_function("cms_estimate", col("sk"), col("token")).as("cms_est"))
+        GraftFunctions.call("cms_estimate", col("sk"), col("token")).as("cms_est"))
       .orderBy(col("exact").desc, col("token"))
   }
 
@@ -442,10 +441,9 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
     * in SQL.
     */
   private def q138GroupSample(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     t(s, dir, "events").filter(col("user_id").isNotNull)
       .groupBy(col("event_type"))
-      .agg(call_function("sample_bottomk", col("user_id"), lit(5)).as("sample"))
+      .agg(GraftFunctions.call("sample_bottomk", col("user_id"), lit(5)).as("sample"))
       .select(col("event_type"), posexplode(col("sample")).as(Seq("pos", "user_id_str")))
       .select(col("event_type"), col("pos").cast("long").as("pos"), col("user_id_str"))
       .orderBy(col("event_type"), col("pos"))

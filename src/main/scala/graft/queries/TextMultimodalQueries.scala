@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GroupOps, Validation, ValidationRule}
 import graft.sources.Tables
+import graft.expressions.GraftFunctions
 
 /** Text analysis, tokenization, multimodal decode and generation-eval queries (SURVEY.md §7.4 text + multimodal families).
   *
@@ -25,7 +26,6 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     */
   private def q29TextStats(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions._
-    graft.expressions.GraftFunctions.register(s)
     val stop = Seq("the", "a", "and", "of", "to")
     t(s, dir, "documents")
       .select(col("doc_id"), tokenStatsNative(col("text"), stop).as("st"))
@@ -120,13 +120,12 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     * n_composed counts compositions (char-length delta).
     */
   private def q55NormalizeNfc(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val injected = t(s, dir, "documents").select(col("doc_id"),
       concat(col("text"),
         lit(" cafe\u0301 u\u0308ni A\u030A end")).as("injected"))
     injected.select(col("doc_id"),
-        md5(call_function("normalize_nfc", col("injected"))).as("norm_md5"),
-        (length(col("injected")) - length(call_function("normalize_nfc", col("injected"))))
+        md5(GraftFunctions.call("normalize_nfc", col("injected"))).as("norm_md5"),
+        (length(col("injected")) - length(GraftFunctions.call("normalize_nfc", col("injected"))))
           .cast("long").as("n_composed"))
       .orderBy(col("doc_id"))
   }
@@ -740,7 +739,6 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     */
   private def q209UnicodeTokens(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Tokenize
-    graft.expressions.GraftFunctions.register(s)
     t(s, dir, "documents")
       .withColumn("__u", Tokenize.tokens(col("text"), Tokenize.Unicode))
       .select(col("doc_id"),
@@ -855,10 +853,9 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     * spec-pinned on hand-segmented fixtures (incl. CJK 。).
     */
   private def q217SentenceChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     t(s, dir, "documents")
       .filter(col("text").isNotNull && col("text") =!= "")
-      .withColumn("__c", call_function("sentence_chunks", col("text"), lit(64)))
+      .withColumn("__c", GraftFunctions.call("sentence_chunks", col("text"), lit(64)))
       .select(col("doc_id"),
         md5(concat_ws("", transform(col("__c"), c => c.getField("chunk"))))
           .as("chunks_md5"),

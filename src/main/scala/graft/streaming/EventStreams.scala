@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.expressions.GraftFunctions
 
 /** Structured-Streaming operators over the events table shape
   * (event_id, ts, user_id, event_type, value, props). The reference has no
@@ -258,11 +259,10 @@ object EventStreams {
   def windowedHeavyHitters(events: DataFrame, itemCol: String,
                            window_ : String = "1 hour", capacity: Int = 8,
                            delay: String = "10 minutes"): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))
-      .agg(call_function("misra_gries", col(itemCol), lit(capacity)).as("heavy"))
+      .agg(GraftFunctions.call("misra_gries", col(itemCol), lit(capacity)).as("heavy"))
       .select(col("window.start").as("window_start"), col("heavy"))
   }
 
@@ -281,13 +281,12 @@ object EventStreams {
   def windowedDistinct(events: DataFrame, keyCol: String,
                        window_ : String = "1 hour",
                        delay: String = "10 minutes"): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))
-      .agg(call_function("bitmap_build", col(keyCol)).as("sketch"))
+      .agg(GraftFunctions.call("bitmap_build", col(keyCol)).as("sketch"))
       .select(col("window.start").as("window_start"),
-        call_function("bitmap_cardinality", col("sketch")).as("n_distinct"),
+        GraftFunctions.call("bitmap_cardinality", col("sketch")).as("n_distinct"),
         col("sketch"))
   }
 
@@ -306,13 +305,12 @@ object EventStreams {
                              window_ : String = "1 hour",
                              delay: String = "10 minutes",
                              k: Int = 1024): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))
-      .agg(call_function("kmv_build", col(keyCol), lit(k)).as("sketch"))
+      .agg(GraftFunctions.call("kmv_build", col(keyCol), lit(k)).as("sketch"))
       .select(col("window.start").as("window_start"),
-        call_function("kmv_cardinality", col("sketch")).as("approx_distinct"),
+        GraftFunctions.call("kmv_cardinality", col("sketch")).as("approx_distinct"),
         col("sketch"))
   }
 
@@ -327,16 +325,15 @@ object EventStreams {
                         window_ : String = "1 hour",
                         delay: String = "10 minutes",
                         alpha: Double = 0.01): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))
-      .agg(call_function("ddsketch_build",
+      .agg(GraftFunctions.call("ddsketch_build",
         col(valueCol).cast("double"), lit(alpha)).as("sketch"))
       .select(col("window.start").as("window_start"),
-        call_function("ddsketch_quantile", col("sketch"), lit(0.5)).as("p50"),
-        call_function("ddsketch_quantile", col("sketch"), lit(0.95)).as("p95"),
-        call_function("ddsketch_quantile", col("sketch"), lit(0.99)).as("p99"),
+        GraftFunctions.call("ddsketch_quantile", col("sketch"), lit(0.5)).as("p50"),
+        GraftFunctions.call("ddsketch_quantile", col("sketch"), lit(0.95)).as("p95"),
+        GraftFunctions.call("ddsketch_quantile", col("sketch"), lit(0.99)).as("p99"),
         col("sketch"))
   }
 

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.expressions.GraftFunctions
 
 /** LSH quality instrumentation for the SURVEY §9 scale adjudication:
   * measures, on a documents table (typically a [[ScaleUp]] `perturb`
@@ -63,15 +64,8 @@ object DedupStats {
     val selectiveBudget = args.find(_.startsWith("selective="))
       .map(_.stripPrefix("selective=").toInt)
     val simhashMode = args.contains("simhash")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, appName = "graft-dedup-stats")
     try {
       if (simhashMode) runSimhash(spark, dir, threshold.toInt.max(1))
       else run(spark, dir, threshold, wantExact, ngram, selectiveBudget, noVerify)
@@ -82,7 +76,6 @@ object DedupStats {
     * segment-bucket join + Hamming verify + id expansion). */
   def runSimhash(spark: SparkSession, dir: String, maxDistance: Int): Unit = {
     import graft.operators.Dedup
-    graft.expressions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val nDocs = docs.count()
     val t0 = System.nanoTime()
@@ -102,8 +95,6 @@ object DedupStats {
           selectiveBudget: Option[Int] = None,
           noVerify: Boolean = false): Unit = {
     import graft.operators.Dedup
-    graft.expressions.GraftFunctions.register(spark)
-
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val nDocs = docs.count()
     // the miners' own first move: collapse identical content per block
@@ -127,8 +118,8 @@ object DedupStats {
     def secsSince(start: Long): Double = (System.nanoTime() - start) / 1e9
     val withBand = reps.select(
       col("cls"), col("lang").as("blk"),
-      call_function("minhash_signature",
-        Dedup.hashedShingleSet(reps, col("text"), ngram), lit(k)).as("sig"))
+      GraftFunctions.call("minhash_signature",
+        Dedup.hashedShingleSet(col("text"), ngram), lit(k)).as("sig"))
       .withColumn("band", explode(Dedup.lshBands(col("sig"), b, r)))
       .select(col("cls"), col("blk"),
         col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
@@ -146,7 +137,7 @@ object DedupStats {
 
     val tVerify = System.nanoTime()
     val toks = reps.select(col("cls"),
-      Dedup.hashedShingleSet(reps, col("text"), ngram).as("toks"))
+      Dedup.hashedShingleSet(col("text"), ngram).as("toks"))
     val verifiedPairs =
       if (noVerify) -1L
       else candidates

@@ -43,15 +43,8 @@ object ScaleUp {
       case _ => sys.error(
         "usage: ScaleUp <inDir> <outDir> <factor> [perturb]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, appName = "graft-scaleup")
     try run(spark, inDir, outDir, factorS.toInt, perturb)
     finally spark.stop()
   }

@@ -2,7 +2,7 @@ package org.apache.spark.sql.classic
 
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -14,10 +14,14 @@ import org.apache.spark.sql.types.StructType
   * custom LogicalPlan back to the session (standard practice for Spark
   * extension libraries; nothing else in graft lives in Spark's
   * namespace) — plus the private[sql] half of `graft.Caches`' lineage
-  * cut, and frames over driver-built rows that carry the same measured
-  * statistics.
+  * cut, frames over driver-built rows that carry the same measured
+  * statistics, and the Column <-> Expression conversions that let
+  * operators build graft's native expressions directly.
   */
 object GraftDatasetBridge {
+  def column(e: Expression): org.apache.spark.sql.Column = ExpressionUtils.column(e)
+  def expression(c: org.apache.spark.sql.Column): Expression = ExpressionUtils.expression(c)
+
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 

@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The pure-SQL surface: every native expression must be usable from
-  * `spark.sql` after registration — the path SqlRunner and
-  * `spark.sql.extensions`-configured clusters take.
+  * `spark.sql` on a session built with [[graft.expressions.GraftExtensions]]
+  * (as `GraftSession.local` builds the shared one) — the path SqlRunner
+  * and `spark.sql.extensions`-configured clusters take.
   */
 class SqlRunnerSpec extends SparkSpec {
 
   test("native functions run from pure SQL") {
-    graft.expressions.GraftFunctions.register(spark)
     import spark.implicits._
     Seq((1L, "the cat the cat sat", Seq(0.6f, -0.8f)))
       .toDF("id", "text", "v").createOrReplaceTempView("sql_docs")

@@ -18,7 +18,6 @@ class AhoCorasickCountsSpec extends SparkSpec {
     }
 
   private def kernel(text: String, pats: Seq[String]): Seq[Long] = {
-    GraftFunctions.register(spark)
     Seq(Tuple1(text)).toDF("t")
       .select(call_function("aho_corasick_counts", col("t"),
         array(pats.map(lit): _*)))
@@ -55,7 +54,6 @@ class AhoCorasickCountsSpec extends SparkSpec {
   }
 
   test("null text yields null; refusals on bad pattern lists") {
-    GraftFunctions.register(spark)
     val r = Seq(Tuple1(null: String)).toDF("t")
       .select(call_function("aho_corasick_counts", col("t"), array(lit("a"))))
       .collect().head

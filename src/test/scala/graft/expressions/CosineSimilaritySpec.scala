@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class CosineSimilaritySpec extends SparkSpec {
 
   test("native expression matches known geometry and the UDF kernel") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f)),
@@ -28,7 +27,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("available from pure SQL after registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT cosine_similarity(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)), " +
         "array(CAST(4.0 AS FLOAT), CAST(3.0 AS FLOAT)))").collect()(0).getDouble(0)
@@ -36,7 +34,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("sorted_intersect_size: merge semantics on sorted long arrays") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1L, 3L, 5L, 9L), Array(2L, 3L, 5L, 10L), 2),
@@ -49,7 +46,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null inputs yield null, not a crash") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT cosine_similarity(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT)))")
       .collect()(0)
@@ -57,7 +53,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("minhash_signature is bit-identical to the declarative HOF formulation") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val k = 32
     val rows = Seq(
@@ -79,7 +74,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("simhash64 native kernel matches the interpreted HOF bit-for-bit") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq("the quick brown fox", "the quick brown fox", "lorem ipsum dolor sit amet",
       "a", "x y z w v u t s").toDF("text")
@@ -92,7 +86,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("mismatched dimensions yield null in every path (Expression and UDF)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f))).toDF("a", "b")
     val r = df.select(
@@ -108,7 +101,6 @@ class CosineSimilaritySpec extends SparkSpec {
     // Janino fail ("Redefinition of local variable") and Spark silently
     // fell back to interpreted eval. fallback=false makes that failure a
     // test failure instead of a silent perf cliff.
-    GraftFunctions.register(spark)
     withCodegenFallbackDisabled {
       val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       // projection + pushed-down filter both referencing the expression,
@@ -161,7 +153,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("whole-stage codegen compiles the expression (no interpreter fallback)") {
-    GraftFunctions.register(spark)
     // a parquet scan source so ConvertToLocalRelation can't pre-evaluate
     // the projection on the driver
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -37,7 +37,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("codegen and interpreted paths agree; SQL-registered; null-safe") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = duckdbPinned.map { case (a, b, _) => (a, b) }.toDF("a", "b")
     val viaExpr = df.select(call_function("jaro_winkler", col("a"), col("b")))

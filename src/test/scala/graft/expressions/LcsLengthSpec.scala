@@ -18,7 +18,6 @@ class LcsLengthSpec extends SparkSpec {
   }
 
   private def kernel(a: Seq[String], b: Seq[String]): Long = {
-    GraftFunctions.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(call_function("lcs_length", col("a"), col("b")))
       .collect().head.getLong(0)

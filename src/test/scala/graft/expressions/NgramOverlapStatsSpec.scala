@@ -26,7 +26,6 @@ class NgramOverlapStatsSpec extends SparkSpec {
     }
 
   private def kernel(cand: Seq[String], ref: Seq[String], maxN: Int): Seq[(Int, Long, Long, Long)] = {
-    GraftFunctions.register(spark)
     val row = Seq((cand, ref)).toDF("c", "r")
       .select(call_function("ngram_overlap_stats", col("c"), col("r"), lit(maxN)).as("ov"))
       .collect().head

@@ -38,7 +38,6 @@ class SentenceSplitSpec extends SparkSpec {
 
   private def chunksOf(text: String, maxTokens: Int): Seq[(String, Int, Int)] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(Tuple1(text)).toDF("t")
       .select(explode(call_function("sentence_chunks", col("t"), lit(maxTokens))).as("c"))
       .select(col("c.chunk"), col("c.n_sentences"), col("c.n_tokens"))

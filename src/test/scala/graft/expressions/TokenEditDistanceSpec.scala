@@ -21,7 +21,6 @@ class TokenEditDistanceSpec extends SparkSpec {
   }
 
   private def kernel(a: Seq[String], b: Seq[String]): Long = {
-    GraftFunctions.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(call_function("token_edit_distance", col("a"), col("b")))
       .collect().head.getLong(0)

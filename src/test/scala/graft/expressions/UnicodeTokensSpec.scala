@@ -66,7 +66,6 @@ class UnicodeTokensSpec extends SparkSpec {
   }
 
   test("null text yields null array (expression level)") {
-    GraftFunctions.register(spark)
     val df = spark.createDataFrame(
       java.util.List.of(org.apache.spark.sql.Row(null.asInstanceOf[String])),
       org.apache.spark.sql.types.StructType(Seq(
@@ -105,7 +104,6 @@ class UnicodeTokensSpec extends SparkSpec {
   }
 
   test("ASCII degradation: unicode tokens == whitespace tokens on the oracle corpus") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val mismatches = docs.select(
         call_function("unicode_tokens", col("text")).as("u"),
@@ -145,7 +143,6 @@ class UnicodeTokensSpec extends SparkSpec {
 
   test("token stats through the seam: Chinese doc gets real counts") {
     import graft.functions.{TextFunctions, Tokenize}
-    GraftFunctions.register(spark)
     val df = spark.createDataFrame(Seq((1, "我爱北京天安门 我爱"))).toDF("id", "t")
     val st = df.select(TextFunctions.tokenStatsNative(col("t"), Seq("的"),
       Tokenize.Unicode).as("st")).select(col("st.*")).collect()(0)

@@ -22,7 +22,6 @@ class TextFunctionsSpec extends SparkSpec {
   test("tokenStatsNative kernel == declarative stats on real documents") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val stop = Seq("the", "a", "and", "of", "to")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -45,7 +44,6 @@ class TextFunctionsSpec extends SparkSpec {
   test("normalize_nfc: composes decomposed sequences; idempotent; null-safe") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = Seq(
       ("café", "café"),          // e + combining acute -> é
       ("Ångström", "Ångström"),
@@ -289,7 +287,6 @@ class TextFunctionsSpec extends SparkSpec {
     conf.set("spark.sql.codegen.fallback", "false")
     conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      graft.expressions.GraftFunctions.register(spark)
       val df = Seq((1L, "a b a b", "x x x")).toDF("id", "t1", "t2")
       val out = df.select(
         call_function("ngram_repetition", split(col("t1"), " "), lit(2)).as("r1"),

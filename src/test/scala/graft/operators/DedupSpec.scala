@@ -56,7 +56,6 @@ class DedupSpec extends SparkSpec {
   test("lsh_band_hashes fused kernel == declarative lshBands(minhashSignature) " +
     "bit-for-bit, including empty token arrays") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (0 until 64).map { i =>
       Tuple1(Seq.fill(if (i % 16 == 0) 0 else rnd.nextInt(80) + 1)(rnd.nextLong()))
@@ -142,7 +141,7 @@ class DedupSpec extends SparkSpec {
       val want = df.select(col("doc_id"),
         array_sort(transform(items, t => xxhash64(t))).as("h"))
       val got = df.select(col("doc_id"),
-        Dedup.hashedShingleSet(df, col("text"), n).as("h"))
+        Dedup.hashedShingleSet(col("text"), n).as("h"))
       assert(rowsOf(got) == rowsOf(want), s"n=$n")
     }
   }
@@ -196,7 +195,7 @@ class DedupSpec extends SparkSpec {
     assert(rowsOf(seg) == rowsOf(full))
     // spot-check the token hash itself: first 16 md5 hex chars as a long
     val df1 = Seq("tok").toDF("t")
-    val h = df1.select(explode(Dedup.md5TokenHashes(df1, col("t"))).as("h"))
+    val h = df1.select(explode(Dedup.md5TokenHashes(col("t"))).as("h"))
       .collect()(0).getLong(0)
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest("tok".getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
@@ -277,7 +276,7 @@ class DedupSpec extends SparkSpec {
     val texts = Seq("a b c", "dup dup dup", "Ünïcødé tøkens hére", "",
       "  spaced   out  ", "xyz").toDF("text")
     val both = texts.select(
-      Dedup.md5TokenHashes(texts, col("text")).as("k"),
+      Dedup.md5TokenHashes(col("text")).as("k"),
       Dedup.md5TokenHashesDeclarative(col("text")).as("d"))
     both.collect().foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1),
@@ -461,7 +460,6 @@ class DedupSpec extends SparkSpec {
 
   test("char_gram_hashes kernel == declarative unhex(md5(substr)) pipeline, incl. multibyte") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     // multibyte chars make code-point windows differ from byte windows —
     // the kernel's offset table must slice on code points like substr
     val df = Seq("hello world repeated text", "héllo wörld ünïcode",

@@ -47,7 +47,6 @@ class FuzzyJoinSpec extends SparkSpec {
 
   test("LevenshteinThresholdRule rewrites the verify filter to the banded DP") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = Seq((1L, "kitten"), (2L, "sitten"), (3L, "zzzzzz")).toDF("id", "s")
     val filtered = df.as("a").crossJoin(df.as("b"))
       .filter(col("a.id") < col("b.id") &&
@@ -69,7 +68,6 @@ class FuzzyJoinSpec extends SparkSpec {
 
   test("the rule leaves unbounded and negative-bound comparisons alone") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = Seq((1L, "abc")).toDF("id", "s")
     // projection with no bound: stays the 2-arg form
     val proj = df.select(levenshtein(col("s"), lit("abd")).as("d"))

@@ -40,7 +40,7 @@ class LangNbSpec extends SparkSpec {
     // emptying, so the bare transform would mint phantom grams
     val got = df
       .withColumn("__c", LangNb.normalized(col("t")))
-      .withColumn("kernel", LangNb.gramBuckets(df, col("t"), n, b))
+      .withColumn("kernel", LangNb.gramBuckets(col("t"), n, b))
       .withColumn("decl", expr(
         s"""case when length(__c) >= $n then transform(
            |  sequence(1, length(__c) - ${n - 1}),
@@ -108,7 +108,7 @@ class LangNbSpec extends SparkSpec {
     assert(pEs == "es" && mEs > 0)
     // recompute the gap by scoring every class directly
     val grams = Seq("el rápido zorro marrón").toDF("text")
-      .select(LangNb.gramBuckets(df, col("text"), model.n, model.buckets))
+      .select(LangNb.gramBuckets(col("text"), model.n, model.buckets))
       .collect()(0).getSeq[Int](0)
     val scores = model.langs.indices.map { c =>
       model.priorsQ(c) + grams.map(model.logLikQ(c)(_)).sum

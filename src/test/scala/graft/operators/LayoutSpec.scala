@@ -101,7 +101,7 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val n = 1L << bits
     val df = (for (x <- 0L until n; y <- 0L until n) yield (x, y)).toDF("x", "y")
-    df.withColumn("h", Layout.hilbertValue2(df, col("x"), col("y"), bits))
+    df.withColumn("h", Layout.hilbertValue2(col("x"), col("y"), bits))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
   }
 
@@ -128,7 +128,7 @@ class LayoutSpec extends SparkSpec {
     val viaSql = spark.sql(
         Layout.hilbertSqlLevels(Seq("x", "y"), "x", "y", 7, "hpts"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val viaExpr = df.withColumn("h", Layout.hilbertValue2(df, col("x"), col("y"), 7))
+    val viaExpr = df.withColumn("h", Layout.hilbertValue2(col("x"), col("y"), 7))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     assert(viaSql == viaExpr)
   }
@@ -137,8 +137,8 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val df = (0L until 200L).map(i => (i % 32, (i * 11) % 32)).toDF("x", "y")
     val rows = df.select(col("x"), col("y"),
-        Layout.hilbertValue2(df, col("x"), col("y"), 5).as("h5"),
-        Layout.hilbertValue2(df, col("y"), col("x"), 4).as("h4"))
+        Layout.hilbertValue2(col("x"), col("y"), 5).as("h5"),
+        Layout.hilbertValue2(col("y"), col("x"), 4).as("h4"))
       .collect()
     rows.foreach { r =>
       assert(r.getLong(2) == hilbertLocal(5, r.getLong(0), r.getLong(1)))

@@ -71,7 +71,6 @@ class QuantizeSpec extends SparkSpec {
     try {
       val df = Seq((1L, Seq(0.5f, -0.25f), Seq(1.0f, 2.0f)))
         .toDF("vec_id", "a", "b")
-      graft.expressions.GraftFunctions.register(spark)
       val out = df.select(
         call_function("quantize_int8_stats", col("a")).as("qa"),
         call_function("quantize_int8_stats", col("b")).as("qb"))

@@ -145,7 +145,6 @@ class ScoringSpec extends SparkSpec {
 
   test("misra_gries sketch survives partial/final merge across many partitions") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     // 40% 'hot' guarantees survival at capacity 4 regardless of the
     // partitioning of the remaining long tail
     val rows = Seq.fill(400)("hot") ++ (0 until 600).map(i => s"cold_$i")

@@ -61,7 +61,6 @@ class SketchesSpec extends SparkSpec {
 
   test("bitmap_contains/bitmap_cardinality as SQL functions") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val row = Seq(1L, 5L, 100000L, 1L).toDF("k")
       .agg(call_function("bitmap_build", col("k")).as("sk"))
       .select(
@@ -90,7 +89,6 @@ class SketchesSpec extends SparkSpec {
 
   test("bitmap retention end-to-end: sketch intersection == distinct-user intersection") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = (0 until 2000).map { i =>
       (s"g${i % 2}", i % 3 == 0, (i % 97).toLong) // period flag, user
     }.toDF("grp", "p1", "user")
@@ -110,7 +108,6 @@ class SketchesSpec extends SparkSpec {
 
   test("rollingDistinct: hand-computed trailing windows; window sketch == direct build") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     def d(s: String) = java.sql.Date.valueOf(s)
     val rows = Seq(
       (d("2024-01-01"), 1L), (d("2024-01-01"), 2L),
@@ -137,7 +134,6 @@ class SketchesSpec extends SparkSpec {
 
   test("cohortRetention: hand-computed matrix incl. explicit zero cells") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     def d(s: String) = java.sql.Date.valueOf(s)
     val (w0, w1, w2) = (d("2024-01-01"), d("2024-01-08"), d("2024-01-15"))
     // u1: w0,w1,w2; u2: w0,w2; u3: w1 only
@@ -270,7 +266,6 @@ class SketchesSpec extends SparkSpec {
 
   test("KmvSketch: exact below k for long and string keys; nulls skipped") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = (0L until 150L).map(i => (i % 100, s"u${i % 100}"))
       .toDF("lk", "sk")
       .union(Seq((java.lang.Long.valueOf(5L).longValue(), null.asInstanceOf[String]))
@@ -303,7 +298,6 @@ class SketchesSpec extends SparkSpec {
 
   test("KmvSketch: shard union byte-identical to cold build; SQL merge path") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = (0L until 5000L).map(i => (s"s${i % 7}", i % 3001L)).toDF("shard", "key")
     val rolled = df.groupBy("shard")
       .agg(call_function("kmv_build", col("key"), lit(128)).as("sk"))
@@ -401,7 +395,6 @@ class SketchesSpec extends SparkSpec {
 
   test("Cms: shard merge byte-identical to cold build; geometry mismatch refused") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = (0L until 3000L).map(i => (s"s${i % 5}", s"k${i % 97}")).toDF("shard", "key")
     val rolled = df.groupBy("shard")
       .agg(call_function("cms_build", col("key"), lit(64), lit(4)).as("sk"))
@@ -452,7 +445,6 @@ class SketchesSpec extends SparkSpec {
   test("BottomKSample: below k returns ALL distinct keys in hash order; repeats collapse") {
     import spark.implicits._
     import graft.expressions.KmvSketch
-    graft.expressions.GraftFunctions.register(spark)
     val df = Seq("a", "b", "c", "b", "a", "a").toDF("key")
     val got = df.agg(call_function("sample_bottomk", col("key"), lit(10)).as("s"))
       .collect().head.getSeq[String](0)
@@ -463,7 +455,6 @@ class SketchesSpec extends SparkSpec {
   test("BottomKSample: pick rule is the k smallest (hash, key) pairs; deterministic") {
     import spark.implicits._
     import graft.expressions.KmvSketch
-    graft.expressions.GraftFunctions.register(spark)
     val keys = (0 until 300).map(i => s"u$i")
     def sample(parts: Int) = keys.toDF("key").repartition(parts)
       .agg(call_function("sample_bottomk", col("key"), lit(7)).as("s"))
@@ -475,7 +466,6 @@ class SketchesSpec extends SparkSpec {
 
   test("BottomKSample: nulls skipped; integral keys render in decimal") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val df = Seq(Some(42L), None, Some(7L), Some(42L)).toDF("key")
     val got = df.agg(call_function("sample_bottomk", col("key"), lit(5)).as("s"))
       .collect().head.getSeq[String](0)
@@ -484,7 +474,6 @@ class SketchesSpec extends SparkSpec {
 
   test("Cms: sketch bytes are partitioning-invariant") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     def build(parts: Int) = (0L until 2000L).map(i => s"t${i % 313}").toDF("key")
       .repartition(parts)
       .agg(call_function("cms_build", col("key"), lit(128), lit(4)).as("sk"))
@@ -494,7 +483,6 @@ class SketchesSpec extends SparkSpec {
 
   test("KmvSketch: estimates are partitioning-invariant (deterministic bytes)") {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     def build(parts: Int) = (0L until 4000L).map(i => i % 2345L).toDF("key")
       .repartition(parts)
       .agg(call_function("kmv_build", col("key"), lit(64)).as("sk"))

@@ -23,7 +23,6 @@ class StatsSpec extends SparkSpec {
     // "id|blk" → per-j conv(substr) → CDF CASE ladder) — kept here as
     // the kernel's executable specification, the Md5Hashes64 convention
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     val n = 10 // not a multiple of 4: exercises the final partial block
     val cdf = Seq(
       0.36787944117144233, 0.7357588823428847, 0.9196986029286058,

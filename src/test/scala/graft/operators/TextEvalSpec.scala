@@ -382,8 +382,8 @@ class TextEvalSpec extends SparkSpec {
   }
 
   test("standalone session path: bleu() self-registers the kernel function") {
-    // regression: call_function("ngram_overlap_stats") must not depend
-    // on an earlier query having registered GraftFunctions
+    // regression: the ngram_overlap_stats kernel must not depend on an
+    // earlier query having set anything up on the session
     val fresh = spark.newSession()
     import fresh.implicits._
     val df = Seq(("a b", "a b")).toDF("cand_text", "ref_text")

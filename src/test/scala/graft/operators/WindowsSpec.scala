@@ -12,7 +12,7 @@ class WindowsSpec extends SparkSpec {
     val bare = df.withColumn("i",
       row_number().over(Window.orderBy(col("v"), col("k"))))
     val bounded = df.withColumn("i",
-      row_number().over(Windows.boundedGlobal(df)(col("v"), col("k"))))
+      row_number().over(Windows.boundedGlobal(col("v"), col("k"))))
     assert(rowsOf(bounded) == rowsOf(bare))
   }
 
@@ -20,7 +20,7 @@ class WindowsSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
     val q = df.withColumn("i",
-      row_number().over(Windows.boundedGlobal(df)(col("v"))))
+      row_number().over(Windows.boundedGlobal(col("v"))))
     q.collect() // finalize the adaptive plan before inspecting it
     // AQE wraps stages in QueryStageExec leaves — unwrap while walking
     def allNodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
@@ -46,7 +46,7 @@ class WindowsSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(1L, 2L, 3L, 4L).toDF("v")
     val got = df.withColumn("p", sum(col("v")).over(
-        Windows.boundedGlobal(df)(col("v"))
+        Windows.boundedGlobal(col("v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .orderBy("v").as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 1L), (2L, 3L), (3L, 6L), (4L, 10L)))

@@ -119,7 +119,7 @@ class ZoneMapsSpec extends SparkSpec {
       (all, xp, yp)
     }
     val (hAll, hx, hy) = prunedCounts(grid.withColumn("__k",
-      Layout.hilbertValue2(grid, col("x"), col("y"), 8)))
+      Layout.hilbertValue2(col("x"), col("y"), 8)))
     val (zAll, zx, zy) = prunedCounts(grid.withColumn("__k",
       Layout.zValue2(col("x"), col("y"), 8)))
     assert(hAll == zAll)
