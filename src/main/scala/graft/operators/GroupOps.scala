@@ -34,35 +34,38 @@ object GroupOps {
   /** A2 grouped median, exact (`percentile`, mean-of-middle-two) to match
     * pandas `median()` — SURVEY §2.13.4 chooses exact over
     * `percentile_approx` for oracle parity. Returns one row per key group.
-    * At 100 TB prefer `percentile_approx(c, 0.5, accuracy)` (sketch-mergeable,
-    * no sort buffer per group); exposed via `approximate = true`.
     */
-  def groupedMedian(df: DataFrame, keys: Seq[String], valueCol: String, out: String,
-                    approximate: Boolean = false): DataFrame = {
-    val med =
-      if (approximate) percentile_approx(col(valueCol), lit(0.5), lit(10000))
-      else expr(s"percentile(`$valueCol`, 0.5)")
-    df.groupBy(keys.map(col): _*).agg(med.as(out))
-  }
+  def groupedMedian(df: DataFrame, keys: Seq[String], valueCol: String, out: String): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(exactMedian(valueCol).as(out))
 
-  /** A2/M3 grouped-median imputation with fallback, as the reference's
-    * stage-II height/weight fill (data_clean_II.py:34-45): null values get
-    * the median of their (fine) group, then of the (coarse) group. Adds an
-    * `<valueCol>_Imputed` audit flag. Implemented as two broadcast-joined
-    * median tables (group counts are tiny relative to the fact table) rather
-    * than a window over every row.
+  private def exactMedian(valueCol: String): Column = expr(s"percentile(`$valueCol`, 0.5)")
+
+  /** A2/M3 grouped-median imputation with a fallback, as the reference's
+    * stage-II height/weight fill (data_clean_II.py:34-45): a null value
+    * gets the median of its fine group; what is still null then gets the
+    * median of its coarse group, taken over the FINE-FILLED column —
+    * pandas' chained `fillna(groupby(...).transform('median'))`. `flags`
+    * pairs each value column with the name of the boolean column that
+    * records whether the value was null before any fill.
+    *
+    * One exact median aggregate per key level covers every value column
+    * and joins back once by broadcast (group counts are tiny relative to
+    * the fact table), so `df` is referenced four times whatever the number
+    * of value columns. A null key matches no group, as pandas' groupby
+    * drops null keys, and its row stays unfilled at that level.
     */
   def imputeWithGroupedMedian(df: DataFrame, fineKeys: Seq[String], coarseKeys: Seq[String],
-                              valueCol: String): DataFrame = {
-    val fine = broadcast(
-      groupedMedian(df.filter(col(valueCol).isNotNull), fineKeys, valueCol, "__fine_med"))
-    val coarse = broadcast(
-      groupedMedian(df.filter(col(valueCol).isNotNull), coarseKeys, valueCol, "__coarse_med"))
-    df.join(fine, fineKeys, "left")
-      .join(coarse, coarseKeys, "left")
-      .withColumn(s"${valueCol}_Imputed", col(valueCol).isNull)
-      .withColumn(valueCol, coalesce(col(valueCol), col("__fine_med"), col("__coarse_med")))
-      .drop("__fine_med", "__coarse_med")
+                              flags: Seq[(String, String)]): DataFrame = {
+    val meds = flags.zipWithIndex.map { case ((v, _), i) => v -> s"__med$i" }
+    def fill(in: DataFrame, keys: Seq[String]): DataFrame = {
+      val aggs = meds.map { case (v, m) => exactMedian(v).as(m) }
+      val table = broadcast(in.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*))
+      in.join(table, keys, "left")
+        .withColumns(meds.map { case (v, m) => v -> coalesce(col(v), col(m)) }.toMap)
+        .drop(meds.map(_._2): _*)
+    }
+    val flagged = flags.foldLeft(df) { case (d, (v, f)) => d.withColumn(f, col(v).isNull) }
+    fill(fill(flagged, fineKeys), coarseKeys)
   }
 
   /** W4 forward-fill: within each `partCols` group ordered by `orderCols`,

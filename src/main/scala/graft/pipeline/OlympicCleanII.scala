@@ -13,8 +13,9 @@ import graft.operators.GroupOps
   *   - the Sex-only fallback median is computed over the column AFTER the
   *     (Sex, Discipline) fill, as pandas' chained transform does;
   *   - imputation flags record was-null-before-impute.
-  * All medians ride broadcast joins (group cardinality is bounded by
-  * |Sex|×|Discipline|), never a window over the fact table.
+  * The medians are [[graft.operators.GroupOps.imputeWithGroupedMedian]]'s:
+  * one broadcast-joined aggregate per key level, never a window over the
+  * fact table.
   */
 object OlympicCleanII {
 
@@ -23,24 +24,10 @@ object OlympicCleanII {
     */
   def imputeHeightWeight(bio: DataFrame, results: DataFrame): DataFrame = {
     val discipline = GroupOps.groupMode(results, Seq("Athlete_Id"), "Discipline", "Discipline")
-    val withDisc = bio.join(discipline, Seq("Athlete_Id"), "left")
-      .withColumn("Height_Imputed", col("Height (cm)").isNull)
-      .withColumn("Weight_Imputed", col("Weight (kg)").isNull)
-
-    def fillBy(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame = {
-      val med = broadcast(
-        GroupOps.groupedMedian(df.filter(col(valueCol).isNotNull), keys, valueCol, "__med"))
-      df.join(med, keys, "left")
-        .withColumn(valueCol, coalesce(col(valueCol), col("__med")))
-        .drop("__med")
-    }
-
-    // fine fill first; the Sex-only median then sees the filled values
-    // (pandas chained-transform semantics)
-    val fine = fillBy(fillBy(withDisc, Seq("Sex", "Discipline"), "Height (cm)"),
-      Seq("Sex", "Discipline"), "Weight (kg)")
-    val coarse = fillBy(fillBy(fine, Seq("Sex"), "Height (cm)"), Seq("Sex"), "Weight (kg)")
-    coarse.drop("Discipline")
+    GroupOps.imputeWithGroupedMedian(bio.join(discipline, Seq("Athlete_Id"), "left"),
+      Seq("Sex", "Discipline"), Seq("Sex"),
+      Seq("Height (cm)" -> "Height_Imputed", "Weight (kg)" -> "Weight_Imputed"))
+      .drop("Discipline")
   }
 
   /** Born_Country from the first NOC token via the ISO lookup

@@ -13,7 +13,8 @@ import graft.sources.Tables
   * Usage: OlympicPipelineMain <bronzeDir> <outDir>
   *   bronzeDir must hold biodata.parquet, results.parquet,
   *   editions.parquet, iso_codes.csv (header CSV).
-  * Writes silver/ + gold/ + failure_cases/ under outDir.
+  * Writes gold/ + failure_cases/ under outDir; the silver tables are
+  * intermediate frames and are not written.
   */
 object OlympicPipelineMain {
 

@@ -98,8 +98,9 @@ class BroadcastGateSpec extends AnyFunSuite {
         "+ one fixed-width value per node; triangleCounts' degree attach broadcasts iff " +
         "nodes <= BroadcastNodeState (same proxy: one id + one long degree per node); " +
         "contract: hits' 1-row L1 total"),
-    "graft/operators/GroupOps.scala" -> (7,
-      "contract: per-group medians/modes over bounded dims, scalar counts, column-name maps"),
+    "graft/operators/GroupOps.scala" -> (6,
+      "contract: per-group medians/MADs/percentile bounds over bounded dims, " +
+        "scalar counts, per-column distinct counts keyed by column name"),
     "graft/operators/LangNb.scala" -> (3,
       "contract: 1-row doc-total aggregate for priors; the two scoring " +
         "model broadcasts (predict/predictMargins) bounded by the " +
@@ -127,7 +128,7 @@ class BroadcastGateSpec extends AnyFunSuite {
     "graft/operators/Validation.scala" -> (1, "contract: rule table, rule-count-sized"),
     "graft/pipeline/Erasure.scala" -> (2, "contract: subject-key set (erasure requests, small by contract), scalar audit"),
     "graft/pipeline/OlympicCleanI.scala" -> (1, "contract: affiliation dim, bounded by distinct affiliations"),
-    "graft/pipeline/OlympicCleanII.scala" -> (2, "contract: per-discipline medians, ISO lookup (~250 rows)"),
+    "graft/pipeline/OlympicCleanII.scala" -> (1, "contract: ISO lookup (~250 rows)"),
     "graft/plans/CosineTopKJoin.scala" -> (1, "contract: query-vector rows, parameter-sized (TorrentBroadcast)"),
     "graft/streaming/EventStreams.scala" -> (1, "contract: stream-side dim table, caller-owned dim contract"),
     "graft/operators/PerplexityBuckets.scala" -> (1,

@@ -31,13 +31,35 @@ class GroupOpsSpec extends SparkSpec {
       ("M", "swim", None), // no fine group values → falls back to sex median
       ("F", "run", Some(160.0))
     ).toDF("sex", "disc", "h")
-    val got = GroupOps.imputeWithGroupedMedian(df, Seq("sex", "disc"), Seq("sex"), "h")
+    val got = GroupOps.imputeWithGroupedMedian(df, Seq("sex", "disc"), Seq("sex"), Seq("h" -> "h_Imputed"))
     val byKey = got.collect().map(r =>
       (r.getString(0), r.getString(1), r.getDouble(2), r.getBoolean(3))).toSeq
     // fine group (M,run) median = 185; (M,swim) → coarse M median = 185
     assert(byKey.count(_._4) == 2)
     assert(byKey.filter(t => t._2 == "swim").head._3 == 185.0)
     assert(byKey.forall(_._3 > 0))
+  }
+
+  test("imputeWithGroupedMedian: coarse median over the fine-filled columns (pandas chained transform)") {
+    import spark.implicits._
+    val df = Seq(
+      ("M", "run", Some(100.0), Some(60.0)), ("M", "run", Some(200.0), None),
+      ("M", "run", None, Some(80.0)), ("M", "run", None, None),
+      ("M", "jump", Some(300.0), None),
+      ("M", "swim", None, Some(90.0))
+    ).toDF("sex", "disc", "h", "w")
+    val got = GroupOps.imputeWithGroupedMedian(df, Seq("sex", "disc"), Seq("sex"),
+      Seq("h" -> "h_was_null", "w" -> "w_was_null"))
+    assert(got.columns.toSeq == Seq("sex", "disc", "h", "w", "h_was_null", "w_was_null"))
+    // fine: (M,run) h 150, w 70; coarse over the filled columns:
+    // h median(100,200,150,150,300) = 150 (the unfilled values give 200),
+    // w median(60,70,80,70,90) = 70 (the unfilled values give 80)
+    assert(rowsOf(got) == rowsOf(Seq(
+      ("M", "run", 100.0, 60.0, false, false), ("M", "run", 200.0, 70.0, false, true),
+      ("M", "run", 150.0, 80.0, true, false), ("M", "run", 150.0, 70.0, true, true),
+      ("M", "jump", 300.0, 70.0, false, true),
+      ("M", "swim", 150.0, 90.0, true, false)
+    ).toDF("sex", "disc", "h", "w", "h_was_null", "w_was_null")))
   }
 
   test("ffill fills from last non-null within partition order (W4)") {
