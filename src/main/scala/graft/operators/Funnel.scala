@@ -265,9 +265,13 @@ object Funnel {
           .cast("long").as("recency_days"),
         count(lit(1)).as("frequency"),
         (sum(round(col(amountCol) * 100).cast("long")) / 100.0).as("monetary"))
+    // every score fits its breakpoints on `base`, not on the previous
+    // score's output: scoring only adds columns, so the breakpoints are
+    // the same, and each fit reads the input once instead of doubling
+    // the plan's scans per score
     def score(d: DataFrame, metric: String, out: String, invert: Boolean) = {
       val binned = Features.applyQuantileBins(d, metric,
-        Features.fitQuantileBins(d, metric, 5))
+        Features.fitQuantileBins(base, metric, 5))
       val s = if (invert) lit(6) - col("bin") else col("bin")
       binned.withColumn(out, s.cast("long")).drop("bin")
     }

@@ -58,6 +58,11 @@ object Graph {
     * Above the gate every operator runs keyed shuffle joins with its
     * per-round state cut by [[graft.Caches.checkpoint]]; both sides
     * compute the same result.
+    *
+    * [[FilterModel.logisticGd]] applies the same envelope to its
+    * training matrix: while the n·(d+1) doubles of the cached [y, x]
+    * rows fit under it, they are collected once and every GD step after
+    * the first runs on the driver.
     */
   val BroadcastNodeState: Long = 4000000L
 
@@ -508,7 +513,7 @@ object Graph {
   /** Runs `body` with its Spark jobs described as `op/round r`, then
     * restores the caller's description.
     */
-  private def inRound[A](sc: SparkContext, op: String, r: Int)(body: => A): A = {
+  private[operators] def inRound[A](sc: SparkContext, op: String, r: Int)(body: => A): A = {
     val key = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
     val caller = sc.getLocalProperty(key)
     sc.setJobDescription(s"$op/round $r")

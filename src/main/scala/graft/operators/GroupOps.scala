@@ -90,45 +90,56 @@ object GroupOps {
     * (include a unique key) or ids among ties are unspecified.
     */
   def denseId(df: DataFrame, orderCols: Seq[Column], out: String, start: Long = 1L): DataFrame =
-    exclusivePrefixSum(df, orderCols, lit(1L), out, start)
+    exclusivePrefixSum(df, orderCols, Seq(lit(1L) -> out), start)
 
-  /** The two-phase scan itself, generalized: `out` = the exclusive
-    * prefix sum of `weight` over the global `orderCols` order (weight 1
-    * = [[denseId]]; weight = a token count = [[Packing.packConcat]]'s
-    * offsets). One range shuffle + a partitions-count-sized driver
-    * offset array + a partition-local running sum — never a
+  /** The two-phase scan itself, generalized: for each `(weight, out)`
+    * pair, `out` = the exclusive prefix sum of `weight` over the global
+    * `orderCols` order, plus `start` (weight 1 = [[denseId]]; weight = a
+    * token count = [[Packing.packConcat]]'s offsets; the positive and
+    * negative counts of [[Stats.binaryEval]]'s thresholds, together).
+    * One range shuffle + a partitions × pairs driver offset array + a
+    * partition-local running sum, however many pairs — never a
     * single-partition window.
     */
   private[operators] def exclusivePrefixSum(df: DataFrame, orderCols: Seq[Column],
-                                            weight: Column, out: String,
+                                            sums: Seq[(Column, String)],
                                             start: Long = 0L): DataFrame = {
     val spark = df.sparkSession
-    // pick a weight-column name the input does NOT already use —
+    // pick weight-column names the input does NOT already use —
     // withColumn on a caller's column would overwrite-then-drop it
-    val w = Iterator.from(0).map(i => s"__w$i").find(!df.columns.contains(_)).get
+    val ws = Iterator.from(0).map(i => s"__w$i").filterNot(df.columns.contains)
+      .take(sums.size).toSeq
     // null weights (e.g. token count of a null text) count as 0 — the
     // partition scan reads the long primitively and would NPE otherwise
     // EXPLICIT partition count (the Dedup.denseBlockPairJoin
     // convention): the fold's parallelism IS the partition count and a
     // bare range-repartition is AQE-coalescible; global order across
     // partitions holds at any count, so pinning it is parallelism-only
-    val sorted = df.withColumn(w, coalesce(weight.cast(LongType), lit(0L)))
+    val sorted = df.select(col("*") +: sums.zip(ws).map { case ((weight, _), w) =>
+        coalesce(weight.cast(LongType), lit(0L)).as(w) }: _*)
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
     graft.Caches.track(sorted.persist())
-    val wIdx = sorted.schema.fieldIndex(w)
-    val counts = sorted.rdd
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.map(_.getLong(wIdx)).sum)) }
+    val wIdx = ws.map(sorted.schema.fieldIndex).toArray
+    val k = wIdx.length
+    def addRow(acc: Array[Long], r: Row): Unit = {
+      var j = 0; while (j < k) { acc(j) += r.getLong(wIdx(j)); j += 1 }
+    }
+    val totals = sorted.rdd
+      .mapPartitionsWithIndex { case (i, it) =>
+        val t = new Array[Long](k); it.foreach(addRow(t, _)); Iterator((i, t)) }
       .collect()
       .sortBy(_._1)
       .map(_._2)
-    val offsets = counts.scanLeft(start)(_ + _)
+    val offsets = totals.scanLeft(Array.fill(k)(start)) { (o, t) =>
+      Array.tabulate(k)(j => o(j) + t(j)) }
     val withOff = sorted.rdd.mapPartitionsWithIndex { case (i, it) =>
-      var off = offsets(i)
-      it.map { r => val o = Row.fromSeq(r.toSeq :+ off); off += r.getLong(wIdx); o }
+      val off = offsets(i).clone()
+      it.map { r => val o = Row.fromSeq(r.toSeq ++ off); addRow(off, r); o }
     }
-    spark.createDataFrame(withOff, sorted.schema.add(out, LongType, nullable = false))
-      .drop(w)
+    val schema = sums.foldLeft(sorted.schema) { case (s, (_, out)) =>
+      s.add(out, LongType, nullable = false) }
+    spark.createDataFrame(withOff, schema).drop(ws: _*)
   }
 
   /** W1 small-dimension variant: plain `row_number` over a global order —

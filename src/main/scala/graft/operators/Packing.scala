@@ -29,7 +29,7 @@ object Packing {
     val counted = df.select(col(idCol),
       size(split(trim(col(textCol)), "\\s+")).cast("long").as("n_tokens"))
     binned(GroupOps.exclusivePrefixSum(counted, Seq(col(idCol)),
-      col("n_tokens"), "start_off"), budget)
+      Seq(col("n_tokens") -> "start_off")), budget)
   }
 
   /** Exact long bin arithmetic (`div`, not double `/` — offsets past 2^53

@@ -356,10 +356,11 @@ object Stats {
     * `average_precision_score` convention, which never interpolates).
     *
     * Scale: everything reduces from the distinct-score contingency;
-    * the cumulative counts under each threshold come from the
-    * [[GroupOps.exclusivePrefixSum]] two-phase scan — one range
-    * shuffle of the score-distinct table, never a single-partition
-    * window over every threshold. Output: one row (n_pos, n_neg,
+    * both cumulative counts under each threshold (positives and
+    * negatives) come from one [[GroupOps.exclusivePrefixSum]]
+    * two-phase scan — one range shuffle of the score-distinct table
+    * and one partition-offsets job, never a single-partition window
+    * over every threshold. Output: one row (n_pos, n_neg,
     * n_thresholds, roc_auc, pr_auc); both AUCs are NULL when either
     * class is empty (undefined, not 0).
     */
@@ -368,14 +369,14 @@ object Stats {
 
   /** The shared rank machinery of [[binaryEval]] and [[mannWhitney]]:
     * the distinct-score contingency with ascending-exclusive prefix
-    * sums (__cp/__cn via the two-phase scan) and class totals
+    * sums (__cp and __cn from ONE two-phase scan) and class totals
     * (__bigP/__bigN) on every row.
     */
   private def scoreCumFrame(df: DataFrame, scoreCol: String,
                             labelCol: String): DataFrame = {
     val byScore = scoreContingency(df, scoreCol, labelCol)
-    val cp = GroupOps.exclusivePrefixSum(byScore, Seq(col("__s")), col("__p"), "__cp")
-    val c = GroupOps.exclusivePrefixSum(cp, Seq(col("__s")), col("__n"), "__cn")
+    val c = GroupOps.exclusivePrefixSum(byScore, Seq(col("__s")),
+      Seq(col("__p") -> "__cp", col("__n") -> "__cn"))
     val tot = c.agg(sum(col("__p")).as("__bigP"), sum(col("__n")).as("__bigN"))
     c.crossJoin(broadcast(tot))
   }

@@ -931,7 +931,7 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
     val xCols = Seq("len_k", "stop_frac", "tok_len")
     val w = FilterModel.logisticGd(feats, xCols, "is_long",
         iterations = 50, learningRate = 3.0)
-      .orderBy("term_idx").collect().map(_.getAs[Double]("weight"))
+      .collect().sortBy(_.getAs[Long]("term_idx")).map(_.getAs[Double]("weight"))
     val z = xCols.zipWithIndex.foldLeft(lit(w(0)): Column) {
       case (acc, (c, i)) => acc + col(c) * lit(w(i + 1)) }
     val scored = feats.select(

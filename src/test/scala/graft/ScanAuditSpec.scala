@@ -82,16 +82,13 @@ class ScanAuditSpec extends SparkSpec {
       q260_url_canon q57_bm25 q73_tfidf""",
     4 -> """dim_athletes failure_cases_bios q105_robust_outliers q115_incremental_dedup
       q137_join_cardinality q172_ref_integrity q173_gdpr_erase q178_mutual_info q192_rbo
-      q193_mad_outliers q225_spearman q69_set_ops""",
+      q193_mad_outliers q194_rfm_features q225_spearman q69_set_ops""",
     5 -> """q104_temperature_sample q130_dsir_weights q75_pmi_collocations""",
     6 -> """q142_cluster_labels q220_bitext_margin""",
     7 -> """q122_pq_adc q123_retrieval_metrics q152_ivfpq q161_stupid_backoff q91_table_profile""",
     // psiBins: each half's histogram joins the base's bin bounds, and the
     // aligned pair joins its own totals: 2 x 2 x 2
     8 -> "q125_drift_psi",
-    // rfmTable chains three fit-then-apply quantile scorings, each reading
-    // its input twice: 2^3
-    8 -> "q194_rfm_features",
     // the banded check recomputes q125's exact PSI (8) beside the sketch
     // PSI's two halves (2)
     10 -> "q128_sketch_drift",

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class FilterModelSpec extends SparkSpec {
@@ -47,6 +49,92 @@ class FilterModelSpec extends SparkSpec {
       iterations = 5, learningRate = 1.0).orderBy("term_idx").collect()
     assert(r.forall(_.getAs[Long]("n") == 2), "null label/feature rows must drop")
     assert(r(2).getAs[String]("term") == "z" && r(2).getAs[Double]("weight") == 0.0)
+    graft.Caches.unpersistAll()
+  }
+
+  /** A noisy three-feature fixture over several partitions. */
+  private def noisy: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    (1 to 300).map { _ =>
+      val a = rnd.nextGaussian(); val b = rnd.nextDouble(); val c = rnd.nextGaussian() * 3
+      (a + 0.5 * b - 0.2 * c + rnd.nextGaussian() > 0.3, a, b, c)
+    }.toDF("y", "a", "b", "c").repartition(5)
+  }
+
+  /** (term, weight, n, accuracy, log_loss) rows in term order. */
+  private def fit(df: DataFrame, xCols: Seq[String], iterations: Int, gate: Long) =
+    FilterModel.logisticGd(df, xCols, "y", iterations, 1.5, gate)
+      .collect().sortBy(_.getAs[Long]("term_idx"))
+
+  test("logisticGd: the driver tier and the distributed tier agree") {
+    val df = noisy.cache()
+    for (iters <- Seq(1, 2, 50)) {
+      val local = fit(df, Seq("a", "b", "c"), iters, Graph.BroadcastNodeState)
+      val dist = fit(df, Seq("a", "b", "c"), iters, gate = -1L)
+      assert(local.map(_.getAs[String]("term")).toSeq == dist.map(_.getAs[String]("term")).toSeq)
+      assert(local.forall(_.getAs[Long]("n") == 300) && dist.forall(_.getAs[Long]("n") == 300))
+      for ((l, r) <- local.zip(dist); c <- Seq("weight", "accuracy", "log_loss"))
+        assert(math.abs(l.getAs[Double](c) - r.getAs[Double](c)) <= 1e-6,
+          s"$iters iterations, ${l.getAs[String]("term")} $c: ${l.getAs[Double](c)} vs ${r.getAs[Double](c)}")
+    }
+    df.unpersist()
+    graft.Caches.unpersistAll()
+  }
+
+  test("logisticGd: empty and one-row inputs on both tiers") {
+    import spark.implicits._
+    val empty = Seq.empty[(Boolean, Double)].toDF("y", "x")
+    val one = Seq((true, 2.0)).toDF("y", "x")
+    for (gate <- Seq(Graph.BroadcastNodeState, -1L)) {
+      val e = fit(empty, Seq("x"), 3, gate)
+      assert(e.map(_.getAs[Double]("weight")).toSeq == Seq(0.0, 0.0), gate)
+      assert(e.forall(r => r.getAs[Long]("n") == 0 && r.isNullAt(r.fieldIndex("accuracy"))
+        && r.isNullAt(r.fieldIndex("log_loss"))), gate)
+      val o = fit(one, Seq("x"), 1, gate)
+      // one step from w = 0: grad = (0.5 − 1)·[1, 2], η = 1.5
+      assert(o.map(_.getAs[Double]("weight")).toSeq == Seq(0.75, 1.5), gate)
+      assert(o.forall(r => r.getAs[Long]("n") == 1 && r.getAs[Double]("accuracy") == 1.0), gate)
+    }
+    graft.Caches.unpersistAll()
+  }
+
+  test("logisticGd: below the gate 50 iterations run at most 2 jobs, each described") {
+    val df = noisy.cache()
+    df.count()
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    /** Descriptions of the jobs `body` starts, in order. */
+    def jobsOf(body: => Unit): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          seen.add(String.valueOf(js.properties.getProperty(key)))
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        // listener events arrive in order: once the marker job shows,
+        // every job before it has been seen
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1)).count()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      } finally {
+        sc.setJobDescription(null)
+        sc.removeSparkListener(listener)
+      }
+      val all = seen.toArray(Array.empty[String]).toSeq
+      assert(all.contains("marker"))
+      all.takeWhile(_ != "marker")
+    }
+    val local = jobsOf(FilterModel.logisticGd(df, Seq("a", "b", "c"), "y",
+      iterations = 50, learningRate = 1.5))
+    assert(local == Seq("logisticGd/round 1", "logisticGd/round 2"), local)
+    val dist = jobsOf(FilterModel.logisticGd(df, Seq("a", "b", "c"), "y",
+      iterations = 3, learningRate = 1.5, nodeStateGate = -1L))
+    assert(dist == (1 to 4).map(r => s"logisticGd/round $r"), dist)
+    df.unpersist()
     graft.Caches.unpersistAll()
   }
 }

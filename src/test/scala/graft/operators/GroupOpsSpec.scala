@@ -88,9 +88,45 @@ class GroupOpsSpec extends SparkSpec {
       .toDF("id", "t")
     // size(split(null, ...)) is null — must scan as weight 0, not NPE
     val got = GroupOps.exclusivePrefixSum(df, Seq(col("id")),
-        size(split(col("t"), " ")).cast("long"), "off")
+        Seq(size(split(col("t"), " ")).cast("long") -> "off"))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == Map(1L -> 0L, 2L -> 2L, 3L -> 2L), got)
+    graft.Caches.unpersistAll()
+  }
+
+  test("exclusivePrefixSum: two pairs in one scan equal two single-pair scans") {
+    import spark.implicits._
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val order = Seq(col("id"))
+      val both = GroupOps.exclusivePrefixSum(df, order,
+        Seq(col("p") -> "cp", col("n") -> "cn"), start = 5L)
+      assert(both.columns.toSeq == df.columns.toSeq ++ Seq("cp", "cn"))
+      val one = GroupOps.exclusivePrefixSum(
+        GroupOps.exclusivePrefixSum(df, order, Seq(col("p") -> "cp"), start = 5L),
+        order, Seq(col("n") -> "cn"), start = 5L)
+      assert(rowsOf(both) == rowsOf(one))
+      val rows = both.collect()
+      assert(rows.length == df.count())
+      // spot-check the arithmetic, not just the agreement
+      val byId = rows.map(r => r.getAs[Long]("id") -> r).toMap
+      var cp = 5L; var cn = 5L
+      for (id <- byId.keys.toSeq.sorted) {
+        assert(byId(id).getAs[Long]("cp") == cp && byId(id).getAs[Long]("cn") == cn, id)
+        cp += Option(byId(id).getAs[java.lang.Long]("p")).map(_.longValue).getOrElse(0L)
+        cn += Option(byId(id).getAs[java.lang.Long]("n")).map(_.longValue).getOrElse(0L)
+      }
+    }
+    val rows = (1L to 40L).map(i =>
+      (i, if (i % 7 == 0) None else Some(i % 3), if (i % 5 == 0) None else Some(2L)))
+    // null weights count as 0
+    check(rows.toDF("id", "p", "n"))
+    // empty frame
+    check(rows.take(0).toDF("id", "p", "n"))
+    // more partitions than rows
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try check(rows.take(3).toDF("id", "p", "n").repartition(8))
+    finally spark.conf.set("spark.sql.shuffle.partitions", saved)
     graft.Caches.unpersistAll()
   }
 
