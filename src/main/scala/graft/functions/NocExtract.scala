@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.regex.Pattern
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.udf
@@ -15,10 +17,10 @@ import org.apache.spark.sql.functions.udf
   * double-count) → emit the sorted, comma-joined set; if nothing matched,
   * pass through the whitespace-collapsed lowercased original.
   *
-  * This is a Scala UDF over a broadcast country list — one pass over short
-  * strings; per SURVEY §4.3 a codegen Expression is not worth it unless BENCH
-  * shows it hot. The broadcast keeps the (tiny, bounded) lookup off the
-  * closure-serialization hot path at 1000 executors.
+  * This is a Scala UDF over a broadcast, compiled country list — one pass
+  * over short strings; per SURVEY §4.3 a codegen Expression is not worth
+  * it unless BENCH shows it hot. The broadcast keeps the (tiny, bounded)
+  * lookup off the closure-serialization hot path at 1000 executors.
   */
 object NocExtract {
 
@@ -59,31 +61,58 @@ object NocExtract {
     "taiwan" -> "chinese taipei",
     "viet nam" -> "vietnam")
 
-  /** Pure scalar implementation (unit-testable without Spark). */
-  def extract(nocStr: String, validCountriesLongestFirst: Seq[String]): String = {
+  /** Pure scalar implementation (unit-testable without Spark); compiles
+    * the vocabulary's patterns on every call. Per-row callers use
+    * [[Compiled]], which runs the same scan over patterns compiled once.
+    */
+  def extract(nocStr: String, validCountriesLongestFirst: Seq[String]): String =
+    scan(nocStr, validCountriesLongestFirst.view.map(c => c -> wholeWord(c)))
+
+  /** [[extract]] for one vocabulary, its country patterns compiled once:
+    * the value [[nocCountries]] broadcasts. The patterns are
+    * `@transient lazy`, so each JVM compiles them on first use after
+    * deserializing the broadcast, not once per row.
+    */
+  final class Compiled(countriesLongestFirst: Seq[String]) extends Serializable {
+    @transient private lazy val patterns: Array[(String, Pattern)] =
+      countriesLongestFirst.map(c => c -> wholeWord(c)).toArray
+    def apply(nocStr: String): String = scan(nocStr, patterns)
+  }
+
+  private val separators = Pattern.compile("[/,;]")
+  private val andWord = Pattern.compile("\\band\\b")
+  private val whitespace = Pattern.compile("\\s+")
+
+  private def wholeWord(country: String): Pattern =
+    Pattern.compile("(?<!\\w)" + Pattern.quote(country) + "(?!\\w)")
+
+  private def scan(nocStr: String, patterns: Iterable[(String, Pattern)]): String = {
     if (nocStr == null) return ""
     var s = nocStr.toLowerCase.trim
     legacyMap.foreach { case (old, nw) => if (s.contains(old)) s = s.replace(old, nw) }
-    s = s.replaceAll("[/,;]", " ").replaceAll("\\band\\b", " ").replaceAll("\\s+", " ").trim
+    s = separators.matcher(s).replaceAll(" ")
+    s = andWord.matcher(s).replaceAll(" ")
+    s = whitespace.matcher(s).replaceAll(" ").trim
     val found = scala.collection.mutable.SortedSet.empty[String]
-    validCountriesLongestFirst.foreach { country =>
-      val p = java.util.regex.Pattern.compile(
-        "(?<!\\w)" + java.util.regex.Pattern.quote(country) + "(?!\\w)")
-      val m = p.matcher(s)
-      if (m.find()) {
-        found += country
-        s = m.replaceAll(" ")
+    patterns.foreach { case (country, p) =>
+      // the literal is a necessary condition of the whole-word match
+      if (s.contains(country)) {
+        val m = p.matcher(s)
+        if (m.find()) {
+          found += country
+          s = m.replaceAll(" ")
+        }
       }
     }
-    if (found.isEmpty) nocStr.toLowerCase.trim.replaceAll("\\s+", " ")
+    if (found.isEmpty) whitespace.matcher(nocStr.toLowerCase.trim).replaceAll(" ")
     else found.mkString(",")
   }
 
-  /** Column builder: `nocCountries(bcCountries)($"NOC")`. */
+  /** Column builder: `nocCountries(spark, countries)($"NOC")`. */
   def nocCountries(spark: SparkSession, validCountries: Seq[String]): Column => Column = {
     val prepared = validCountries.map(_.toLowerCase.trim).distinct.sortBy(-_.length)
-    val bc: Broadcast[Seq[String]] = spark.sparkContext.broadcast(prepared)
-    val f = udf((s: String) => extract(s, bc.value))
+    val bc: Broadcast[Compiled] = spark.sparkContext.broadcast(new Compiled(prepared))
+    val f = udf((s: String) => bc.value(s))
     (c: Column) => f(c)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distribution-drift monitoring between two snapshots of a corpus —
@@ -22,7 +23,8 @@ import org.apache.spark.sql.functions._
   * finite when a bin empties.
   *
   * Shape: one aggregate per snapshot (group×bin-sized results), a
-  * broadcast bounds join, one full-outer bin alignment — the raw
+  * broadcast bounds join, one full-outer bin alignment, and the
+  * per-group totals as a window over the aligned bins — the raw
   * snapshots are each scanned once and never joined row-to-row.
   */
 object Drift {
@@ -52,12 +54,11 @@ object Drift {
     val joinCols = groupCols :+ "__bin"
     val aligned = b.join(c, joinCols, "full_outer")
       .na.fill(0L, Seq("__nb", "__nc"))
-    val totals = aligned.groupBy(g: _*)
-      .agg(sum(col("__nb")).as("__tb"), sum(col("__nc")).as("__tc"))
-    aligned.join(broadcast(totals), groupCols)
+    val group = if (groupCols.isEmpty) Windows.boundedGlobalWhole else Window.partitionBy(g: _*)
+    aligned
       .select((g :+ col("__bin").as("bin")) ++ Seq(
-        (col("__nb") / col("__tb")).as("expected_frac"),
-        (col("__nc") / col("__tc")).as("actual_frac")): _*)
+        (col("__nb") / sum(col("__nb")).over(group)).as("expected_frac"),
+        (col("__nc") / sum(col("__nc")).over(group)).as("actual_frac")): _*)
       .withColumn("psi_bin",
         (greatest(col("actual_frac"), lit(eps)) - greatest(col("expected_frac"), lit(eps))) *
           log(greatest(col("actual_frac"), lit(eps)) / greatest(col("expected_frac"), lit(eps))))

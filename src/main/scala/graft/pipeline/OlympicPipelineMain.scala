@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-import graft.GraftSession
+import graft.{Caches, GraftSession}
 import graft.sources.Tables
 
 /** CLI driver for the full bronze→silver→gold Olympic pipeline — the
@@ -18,8 +18,17 @@ import graft.sources.Tables
   */
 object OlympicPipelineMain {
 
-  /** The country vocabulary for NOC parsing — at run time this comes from
-    * the ISO lookup's name column (bounded, broadcastable).
+  /** The eight gold and failure-case frames, built lazily. The country
+    * vocabulary for NOC parsing comes from the ISO lookup's name column
+    * (bounded, broadcastable).
+    *
+    * Silver bios (`bios2`) feeds two sinks, `dim_athletes` and
+    * `failure_cases_bios`, as the reference's one silver table does
+    * (data_clean_II.py:165-166). `run` persists it once and tracks it
+    * in the caller's [[graft.Caches]] scope, so whichever sink is written
+    * first fills the cache and the other reads it. Callers therefore
+    * build AND materialize the outputs inside `Caches.withScope`, which
+    * releases the cache on exit.
     */
   def run(bronze: Map[String, DataFrame], iso: DataFrame): Map[String, DataFrame] = {
     val countries = iso.select("English short name lower case")
@@ -34,6 +43,7 @@ object OlympicPipelineMain {
     // stage II
     val bios2 = OlympicCleanII.imputeBornCountry(
       OlympicCleanII.imputeHeightWeight(bios1, results1), iso)
+    Caches.track(bios2.persist())
     val editions2 = OlympicCleanII.imputeEditionDates(editions1)
 
     // validation (lazy collect-all; failure cases materialized, not fatal —
@@ -63,11 +73,12 @@ object OlympicPipelineMain {
       "editions" -> Tables.table(spark, bronzeDir, "editions"))
     val iso = Tables.csv(spark, s"$bronzeDir/iso_codes.csv", OlympicSchemas.isoCountryCodes)
 
-    val out = run(bronze, iso)
-    out.foreach { case (name, df) =>
-      val layer = if (name.startsWith("failure_cases")) "failure_cases" else "gold"
-      Tables.write(df, s"$outDir/$layer/$name", SaveMode.Overwrite)
-      println(s"[pipeline] $name: ${df.columns.length} cols")
+    Caches.withScope {
+      run(bronze, iso).foreach { case (name, df) =>
+        val layer = if (name.startsWith("failure_cases")) "failure_cases" else "gold"
+        Tables.write(df, s"$outDir/$layer/$name", SaveMode.Overwrite)
+        println(s"[pipeline] $name: ${df.columns.length} cols")
+      }
     }
     spark.stop()
   }

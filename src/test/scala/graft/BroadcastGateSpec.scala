@@ -82,7 +82,7 @@ class BroadcastGateSpec extends AnyFunSuite {
     "graft/operators/Dedup.scala" -> (2,
       "gated: denseBlockPairJoin bytes gate (elems*16+48/row <= 128MB); " +
         "caller: ngramContamination broadcastEval flag (eval set small by contract)"),
-    "graft/operators/Drift.scala" -> (4, "contract: per-group bounds/totals/stats — group-count-sized"),
+    "graft/operators/Drift.scala" -> (3, "contract: per-group bounds/stats, 9-row digit totals — group-count-sized"),
     "graft/operators/Dsir.scala" -> (4, "contract: hashed-bucket count tables, 2^b rows by parameter"),
     "graft/operators/Features.scala" -> (3, "contract: per-category stats, scalar agg, k breakpoints"),
     "graft/operators/Funnel.scala" -> (1, "contract: per-variant aggregate, variant-count-sized"),

@@ -172,4 +172,55 @@ class OlympicPipelineSpec extends SparkSpec {
     assert(bm("bmi_sane") == 1)
     assert(badCases.filter(col("failed_check") === "bmi_sane").count() == 1)
   }
+
+  test("run builds silver bios once: failure_cases_bios reads dim_athletes' cache, the scope releases it") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.Caches
+    import graft.sources.Tables
+    object Plans extends AdaptiveSparkPlanHelper
+
+    val dir = java.nio.file.Files.createTempDirectory("olympic-share").toString
+    Map("biodata" -> bronzeBiodata, "results" -> bronzeResults, "editions" -> bronzeEditions)
+      .foreach { case (n, df) => Tables.write(df, s"$dir/bronze/$n.parquet") }
+    val bronze = Seq("biodata", "results", "editions")
+      .map(n => n -> Tables.table(spark, s"$dir/bronze", n)).toMap
+
+    // the un-persisted build: run's stages wired without its persist,
+    // materialized before any cache of them exists
+    val expected = {
+      val isoNames = isoLookup.select("English short name lower case").collect().map(_.getString(0)).toSeq
+      val results = OlympicCleanI.cleanResults(bronze("results"))
+      val editions = OlympicCleanII.imputeEditionDates(OlympicCleanI.cleanEditions(bronze("editions")))
+      val bios = OlympicCleanII.imputeBornCountry(OlympicCleanII.imputeHeightWeight(
+        OlympicCleanI.cleanBiodata(bronze("biodata"), isoNames), results), isoLookup)
+      val (dim, bridge) = OlympicCleanI.affiliationTables(bronze("biodata"))
+      def cases(df: DataFrame, rules: Seq[graft.operators.ValidationRule], keys: Seq[Seq[String]]) =
+        OlympicRules.validateTable(df, rules, keys)._3
+      (OlympicGold.goldTables(bios, results, editions, dim, bridge) ++ Map(
+        "failure_cases_bios" -> cases(bios, OlympicRules.biosRules, OlympicRules.uniqueKeys("bios")),
+        "failure_cases_results" -> cases(results, OlympicRules.resultsRules, Nil),
+        "failure_cases_editions" -> cases(editions, OlympicRules.editionRules,
+          OlympicRules.uniqueKeys("editions"))))
+        .map { case (n, df) => n -> rowsOf(df) }
+    }
+
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Caches.withScope {
+      val out = OlympicPipelineMain.run(bronze, isoLookup)
+      Tables.write(out("dim_athletes"), s"$dir/gold/dim_athletes")
+      val plan = out("failure_cases_bios").queryExecution.executedPlan
+      assert(Plans.collectWithSubqueries(plan) { case s: InMemoryTableScanExec => s }.nonEmpty,
+        s"failure_cases_bios must read the shared silver bios:\n$plan")
+      val bronzeScans = Plans.collectWithSubqueries(plan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.mkString(",")
+      }.filter(p => p.contains("biodata") || p.contains("results"))
+      assert(bronzeScans.isEmpty, s"failure_cases_bios re-reads bronze: $bronzeScans\n$plan")
+      assert(out.keySet == expected.keySet)
+      out.foreach { case (n, df) => assert(rowsOf(df) == expected(n), n) }
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"RDDs still persisted after the scope closed: $left")
+  }
 }

@@ -47,24 +47,28 @@ class ObjectStoreSpec extends SparkSpec {
         "results" -> OlympicFixtures.bronzeResults(spark),
         "editions" -> OlympicFixtures.bronzeEditions(spark))
       .foreach { case (n, df) => Tables.write(df, s"$base/bronze/$n.parquet") }
-    // the pipeline reads bronze FROM the scheme and its gold lands on it
+    // the pipeline reads bronze FROM the scheme and its gold lands on it;
+    // run's shared silver cache lives until the scope closes
     val bronze = Seq("biodata", "results", "editions")
       .map(n => n -> Tables.table(spark, s"$base/bronze", n)).toMap
-    val out = OlympicPipelineMain.run(bronze, OlympicFixtures.isoLookup(spark))
-    out.foreach { case (n, df) => Tables.write(df, s"$base/gold/$n") }
-    // all five gold tables round-trip row-identical
-    val goldNames = out.keys.filterNot(_.startsWith("failure_cases")).toSeq.sorted
-    assert(goldNames.size == 5, s"expected five gold tables, got $goldNames")
-    goldNames.foreach { n =>
-      val back = spark.read.parquet(s"$base/gold/$n")
-      assert(back.inputFiles.nonEmpty && back.inputFiles.forall(_.startsWith("graftstore:")),
-        s"$n must be read from the alternate scheme: ${back.inputFiles.toSeq}")
-      assert(rowsOf(back) == rowsOf(out(n)), s"gold table $n drifted through $base")
+    val outNames = graft.Caches.withScope {
+      val out = OlympicPipelineMain.run(bronze, OlympicFixtures.isoLookup(spark))
+      out.foreach { case (n, df) => Tables.write(df, s"$base/gold/$n") }
+      // all five gold tables round-trip row-identical
+      val goldNames = out.keys.filterNot(_.startsWith("failure_cases")).toSeq.sorted
+      assert(goldNames.size == 5, s"expected five gold tables, got $goldNames")
+      goldNames.foreach { n =>
+        val back = spark.read.parquet(s"$base/gold/$n")
+        assert(back.inputFiles.nonEmpty && back.inputFiles.forall(_.startsWith("graftstore:")),
+          s"$n must be read from the alternate scheme: ${back.inputFiles.toSeq}")
+        assert(rowsOf(back) == rowsOf(out(n)), s"gold table $n drifted through $base")
+      }
+      out.keySet
     }
     // the scheme is an illusion over local disk: the committer's output
     // really moved from staging into the final directory
     val goldDir = new java.io.File(base.stripPrefix("graftstore:"), "gold")
-    assert(goldDir.isDirectory && goldDir.list().toSet == out.keys.toSet)
+    assert(goldDir.isDirectory && goldDir.list().toSet == outNames)
   }
 
   test("configure routes hadoop keys and spark confs to the right layers") {
