@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -140,8 +138,28 @@ object Pq {
       })
   }
 
-  /** One ADC search hit. */
-  final case class PqHit(queryId: Long, neighborId: Long, adcDist: Double)
+  /** A query's ADC table: `table(s*ksub + j)` = ||q_s − cents(s)(j)||². */
+  private def adcTable(v: Array[Float], cb: Codebooks): Array[Double] = {
+    val t = new Array[Double](cb.m * cb.ksub)
+    var s = 0
+    while (s < cb.m) {
+      var j = 0
+      while (j < cb.ksub) {
+        t(s * cb.ksub + j) = sqDistD(v, s * cb.dsub, cb.cents(s)(j))
+        j += 1
+      }
+      s += 1
+    }
+    t
+  }
+
+  /** ADC distance of one code: `m` table lookups, no decompression. */
+  private def adcDist(table: Array[Double], code: Array[Int], m: Int, ksub: Int): Double = {
+    var d = 0.0
+    var s = 0
+    while (s < m) { d += table(s * ksub + code(s)); s += 1 }
+    d
+  }
 
   /** Asymmetric-distance top-k: queries (bounded, collected+broadcast
     * like [[Similarity.bruteForceTopK]]'s query side) each precompute
@@ -159,65 +177,13 @@ object Pq {
       .as[(Long, Array[Float])].collect()
     qs.foreach { case (id, v) => require(v.length == cb.m * cb.dsub,
       s"query dim ${v.length} != ${cb.m}x${cb.dsub} (id=$id)") }
-    // per-query distance tables: table(q)(s*ksub + j) = ||q_s - cents(s)(j)||^2
-    val tables = qs.map { case (_, v) =>
-      val t = new Array[Double](cb.m * cb.ksub)
-      var s = 0
-      while (s < cb.m) {
-        var j = 0
-        while (j < cb.ksub) {
-          t(s * cb.ksub + j) = sqDistD(v, s * cb.dsub, cb.cents(s)(j))
-          j += 1
-        }
-        s += 1
-      }
-      t
-    }
-    val qIds = qs.map(_._1)
-    val bTables = spark.sparkContext.broadcast(tables)
-    val bIds = spark.sparkContext.broadcast(qIds)
-    val ksub = cb.ksub
-    val m = cb.m
-    val partials = codes.mapPartitions { it =>
-      val ts = bTables.value
-      val ids = bIds.value
-      // one bounded heap (max-heap by dist) per query
-      val heaps = Array.fill(ids.length)(
-        new java.util.PriorityQueue[(Double, Long)](k + 1,
-          (a: (Double, Long), b: (Double, Long)) =>
-            java.lang.Double.compare(b._1, a._1) match {
-              case 0 => java.lang.Long.compare(b._2, a._2)
-              case c => c
-            }))
-      it.foreach { row =>
+    val tables = qs.map { case (_, v) => adcTable(v, cb) }
+    val (m, ksub) = (cb.m, cb.ksub)
+    TopK.search(codes, qs.map(_._1), tables, k, descending = false, "neighbor_id", "adc_dist") {
+      (ts, row, heaps) =>
         var q = 0
-        while (q < ids.length) {
-          val t = ts(q)
-          var d = 0.0
-          var s = 0
-          while (s < m) { d += t(s * ksub + row.code(s)); s += 1 }
-          val h = heaps(q)
-          if (h.size < k) h.add((d, row.id))
-          else if (d < h.peek()._1 ||
-            (d == h.peek()._1 && row.id < h.peek()._2)) {
-            h.poll(); h.add((d, row.id))
-          }
-          q += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        h.iterator().asScala.map { case (d, id) => PqHit(ids(q), id, d) }
-      }
+        while (q < ts.length) { heaps.offer(q, adcDist(ts(q), row.code, m, ksub), row.id); q += 1 }
     }
-    // global top-k over the bounded nPartitions*k candidates per query
-    import org.apache.spark.sql.expressions.Window
-    partials.toDF()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("queryId"))
-          .orderBy(col("adcDist").asc, col("neighborId").asc)))
-      .filter(col("rn") <= k)
-      .select(col("queryId").as("query_id"), col("neighborId").as("neighbor_id"),
-        col("adcDist").as("adc_dist"), col("rn").as("rank"))
   }
 
   /** The production PQ shape (FAISS's search pipeline): ADC over codes
@@ -245,12 +211,11 @@ object Pq {
     */
   private def refineExact(short: DataFrame, queries: DataFrame, corpus: DataFrame,
                           idCol: String, vecCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpusVec = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       col(vecCol).as("__nv"))
     val qv = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).as("__qv"))
-    short.hint("broadcast").join(corpusVec, Seq("neighbor_id"))
+    val scored = short.hint("broadcast").join(corpusVec, Seq("neighbor_id"))
       .join(qv.hint("broadcast"), Seq("query_id"))
       .withColumn("exact_dist", aggregate(
         zip_with(col("__qv"), col("__nv"), (a, b) => {
@@ -258,10 +223,7 @@ object Pq {
           d * d
         }),
         lit(0.0), (acc, x) => acc + x))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("exact_dist").asc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
+    TopK.rerank(scored, "query_id", "neighbor_id", "exact_dist", k, descending = false)
       .select(col("query_id"), col("neighbor_id"), col("exact_dist"), col("rank"))
   }
 
@@ -333,68 +295,26 @@ object Pq {
     val codes = resDf.as[(Long, Array[Float], Long)]
       .mapPartitions(_.map { case (id, r, cell) => (id, encodeVec(r, cb), cell) })
       .toDF("id", "code", "cell").as[(Long, Array[Int], Long)]
-    // per (query, probed cell): one ADC table over the QUERY residual
+    // per probed cell: (query index, ADC table over the QUERY residual)
     val qs = queries.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])].collect()
-    val probes: Map[Long, Array[(Long, Array[Double])]] = qs.flatMap { case (qid, qv) =>
+    val probes: Map[Long, Array[(Int, Array[Double])]] = qs.zipWithIndex.flatMap { case ((_, qv), q) =>
       cents.filter(_._2.length == qv.length)
         .map { case (cid, cv) => (sqDistFull(qv, cv), cid, cv) }
         .sortBy { case (d, cid, _) => (d, cid) }
         .take(nProbe)
         .map { case (_, cid, cv) =>
-          val res = Array.tabulate(qv.length)(t => qv(t) - cv(t))
-          val table = new Array[Double](cb.m * cb.ksub)
-          var s = 0
-          while (s < cb.m) {
-            var j = 0
-            while (j < cb.ksub) {
-              table(s * cb.ksub + j) = sqDistD(res, s * cb.dsub, cb.cents(s)(j))
-              j += 1
-            }
-            s += 1
-          }
-          (cid, (qid, table))
+          (cid, (q, adcTable(Array.tabulate(qv.length)(t => qv(t) - cv(t)), cb)))
         }
     }.groupBy(_._1).map { case (cid, arr) => cid -> arr.map(_._2) }
-    val bProbes = spark.sparkContext.broadcast(probes)
-    val qIndex = qs.map(_._1).zipWithIndex.toMap
-    val bQIndex = spark.sparkContext.broadcast(qIndex)
-    val mSub = cb.m
-    val ksubN = cb.ksub
-    val partials = codes.mapPartitions { it =>
-      val byCell = bProbes.value
-      val qi = bQIndex.value
-      val heaps = Array.fill(qi.size)(
-        new java.util.PriorityQueue[(Double, Long)](shortlist + 1,
-          (a: (Double, Long), b: (Double, Long)) =>
-            java.lang.Double.compare(b._1, a._1) match {
-              case 0 => java.lang.Long.compare(b._2, a._2)
-              case c => c
-            }))
-      it.foreach { case (id, code, cell) =>
-        byCell.get(cell).foreach(_.foreach { case (qid, t) =>
-          var d = 0.0
-          var s = 0
-          while (s < mSub) { d += t(s * ksubN + code(s)); s += 1 }
-          val h = heaps(qi(qid))
-          if (h.size < shortlist) h.add((d, id))
-          else if (d < h.peek()._1 || (d == h.peek()._1 && id < h.peek()._2)) {
-            h.poll(); h.add((d, id))
-          }
+    val (mSub, ksubN) = (cb.m, cb.ksub)
+    val short = TopK.search(codes, qs.map(_._1), probes, shortlist, descending = false,
+        "neighbor_id", "adc_dist") {
+      case (byCell, (id, code, cell), heaps) =>
+        byCell.get(cell).foreach(_.foreach { case (q, t) =>
+          heaps.offer(q, adcDist(t, code, mSub, ksubN), id)
         })
-      }
-      import scala.jdk.CollectionConverters._
-      qi.iterator.flatMap { case (qid, qx) =>
-        heaps(qx).iterator().asScala.map { case (d, id) => PqHit(qid, id, d) }
-      }
-    }
-    import org.apache.spark.sql.expressions.Window
-    val short = partials.toDF()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("queryId"))
-          .orderBy(col("adcDist").asc, col("neighborId").asc)))
-      .filter(col("rn") <= shortlist)
-      .select(col("queryId").as("query_id"), col("neighborId").as("neighbor_id"))
+    }.select(col("query_id"), col("neighbor_id"))
     refineExact(short, queries, corpus, idCol, vecCol, k)
   }
 }

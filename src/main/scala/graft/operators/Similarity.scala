@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expressions.GraftFunctions
 
@@ -11,20 +10,21 @@ import graft.expressions.GraftFunctions
   * the Spark API + Charikar '02 (SimHash/hyperplane LSH) + the IVF idea
   * from Jégou et al. '11.
   *
-  * Vector math: the hot kernels (cosine, hyperplane projection) are Scala
-  * UDFs — tight JIT'd JVM loops. Catalyst higher-order functions evaluate
-  * interpreted per element (~100× slower on a 64-dim dot product measured
-  * at bench), and Spark has no native dot-product expression; per the
-  * "native Expression beats UDF beats everything" ladder, a codegen
-  * Expression is the next step if BENCH ever shows the UDF hot. The
-  * expression variant is kept as [[cosineExpr]] for contexts where a UDF
-  * is unwanted (e.g. view-only SQL).
+  * Vector math: relational routes score pairs with graft's native
+  * codegen'd `cosine_similarity` Expression
+  * ([[graft.expressions.CosineSimilarity]]); the map-side scans (the
+  * at-scale top-k kernel, centroid assignment, hyperplane buckets) run
+  * the same double-precision dot product as JIT'd Scala loops. The
+  * [[cosine]] UDF and the higher-order-function [[cosineExpr]] (~100×
+  * slower, interpreted per element) stay for callers that want them.
   *
   * Scale design: brute-force is O(|Q|·|C|) — correct tool when |Q| is a
   * bounded query batch broadcast against a huge corpus (the corpus is
   * scanned once, map-side only, no shuffle of the corpus). The LSH variant
   * prunes the corpus to same-bucket candidates first; recall is tunable
-  * with (nPlanes, nTables).
+  * with (nPlanes, nTables). Every top-k here ranks by [[TopK]]'s rule:
+  * cosine desc, ties to the lower neighbour id, and an undefined (NaN)
+  * cosine — a zero-norm vector — never ranks.
   */
 object Similarity {
 
@@ -69,6 +69,18 @@ object Similarity {
     dot / (na * nb)
   }
 
+  /** `sim >= threshold`, with an undefined (NaN) cosine never similar:
+    * Spark orders NaN above every number, so a bare `>=` would let every
+    * pair touching a zero-norm vector through.
+    */
+  private def atLeast(sim: Column, threshold: Double): Column =
+    sim >= threshold && !isnan(sim)
+
+  /** The per-query window re-rank every relational top-k route ends in. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    TopK.rerank(scored, "query_id", "neighbour_id", "cosine_sim", k, descending = true)
+      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
+
   /** Exact top-k nearest neighbours by cosine for each query vector.
     * `queries` is broadcast (bounded batch); the corpus is scanned once.
     * Self-matches (same id) are excluded. Deterministic tie-break on
@@ -78,13 +90,8 @@ object Similarity {
                      idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
     val c = corpus.select(col(idCol).as("neighbour_id"), col(vecCol).as("cv"))
-    val scored = c.join(q, col("query_id") =!= col("neighbour_id"))
-      .withColumn("cosine_sim", cosineNative(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
+    rankTopK(c.join(q, col("query_id") =!= col("neighbour_id"))
+      .withColumn("cosine_sim", cosineNative(col("qv"), col("cv"))), k)
   }
 
   /** Exact top-k at corpus scale: per-partition bounded heaps instead of
@@ -96,67 +103,41 @@ object Similarity {
     * contract and ordering semantics as [[bruteForceTopK]].
     */
   def bruteForceTopKAtScale(queries: DataFrame, corpus: DataFrame,
-                            idCol: String, vecCol: String, k: Int): DataFrame = {
+                            idCol: String, vecCol: String, k: Int): DataFrame =
+    scanTopK(queries, corpus, idCol, vecCol, k, _ => Array.emptyIntArray)
+
+  /** The one corpus scan behind both at-scale routes ([[TopK.search]]):
+    * each corpus row is scored against every query with a different id,
+    * the same dimension (the null-on-mismatch contract, lifted into a
+    * ranking) and a shared `tag` value in some position — an LSH bucket
+    * in some table; an empty tag admits every row. `tag` runs once per
+    * vector.
+    */
+  private def scanTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
+                       vecCol: String, k: Int, tag: Array[Float] => Array[Int]): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qRows = queries.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])].collect()
-    val qb = spark.sparkContext.broadcast(qRows)
-    val partial = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val qs = qb.value
-        // per-query min-heap of (sim, neighbourId); worst element on top.
-        // eviction ordering mirrors the output ordering (sim desc, id asc)
-        val heapOrd = Ordering.by[(Double, Long), (Double, Long)] {
-          case (sim, id) => (-sim, id)
+    def rows(df: DataFrame) = df.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
+    val qs = rows(queries).collect().map { case (qid, qv) => (qid, qv, normF(qv), tag(qv)) }
+    TopK.search(rows(corpus), qs.map(_._1), qs, k, descending = true, "neighbour_id", "cosine_sim") {
+      case (batch, (cid, cv), heaps) =>
+        val cn = normF(cv)
+        val ct = tag(cv)
+        var i = 0
+        while (i < batch.length) {
+          val (qid, qv, qn, qt) = batch(i)
+          if (qid != cid && qv.length == cv.length && sharesTag(qt, ct))
+            heaps.offer(i, dotF(qv, cv) / (qn * cn), cid)
+          i += 1
         }
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](heapOrd))
-        it.foreach { case (cid, cvec) =>
-          var i = 0
-          while (i < qs.length) {
-            val (qid, qvec) = qs(i)
-            // dim-mismatched corpus rows are skipped — the lift of the
-            // null-on-mismatch contract into a top-k ranking
-            if (qid != cid && qvec.length == cvec.length) {
-              val sim = dotF(qvec, cvec) / (normF(qvec) * normF(cvec))
-              val h = heaps(i)
-              if (h.size < k) h.enqueue((sim, cid))
-              else if (heapOrd.lt((sim, cid), h.head)) { h.dequeue(); h.enqueue((sim, cid)) }
-            }
-            i += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.iterator.map { case (sim, cid) => (qs(i)._1, cid, sim) }
-        }
-      }
-      .toDF("query_id", "neighbour_id", "cosine_sim")
-    // final exact re-rank over the tiny candidate union
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
-    partial.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
+    }.select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
   }
 
-  /** The same exact top-k as a first-class PLANNED operator — custom
-    * logical node + planner strategy + physical exec
-    * ([[graft.plans.CosineTopKJoin]]): the corpus is scanned once with
-    * per-partition heaps and never shuffled; `.explain` shows
-    * `CosineTopKExec` directly. Functionally identical to
-    * [[bruteForceTopKAtScale]]; exists to give the optimizer a node it
-    * can see (and to prove out the whole-operator extension path).
-    */
-  def topKPlanned(queries: DataFrame, corpus: DataFrame,
-                  idCol: String, vecCol: String, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.plans.GraftStrategies.install(spark)
-    val q = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).cast("long").as("neighbour_id"), col(vecCol).as("cv"))
-    org.apache.spark.sql.classic.GraftDatasetBridge.ofRows(spark,
-      graft.plans.CosineTopKJoin(q.queryExecution.analyzed, c.queryExecution.analyzed, k))
+  private def sharesTag(a: Array[Int], b: Array[Int]): Boolean = {
+    var hit = a.isEmpty
+    var t = 0
+    while (!hit && t < a.length) { hit = a(t) == b(t); t += 1 }
+    hit
   }
 
   /** All pairs with cosine ≥ threshold (embedding near-duplicate
@@ -170,13 +151,9 @@ object Similarity {
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
       .withColumn("cosine_sim", cosineNative(col("a.v"), col("b.v")))
-      // explicit NaN kill: a zero-norm vector has UNDEFINED cosine, and
-      // Spark's ordering treats NaN as greater than every number — so
-      // without this, `NaN >= threshold` is TRUE and every pair touching
-      // a degenerate vector leaks into the result. Contract (mirrored by
-      // the blocked variant, which drops zero-norm rows at assignment):
-      // degenerate vectors participate in NO pair.
-      .filter(col("cosine_sim") >= threshold && !isnan(col("cosine_sim")))
+      // contract (mirrored by the blocked variant, which drops zero-norm
+      // rows at assignment): degenerate vectors participate in NO pair
+      .filter(atLeast(col("cosine_sim"), threshold))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cosine_sim"))
   }
 
@@ -344,7 +321,7 @@ object Similarity {
       .filter(col("cell_a") =!= col("cell_b") || col("id_l") < col("id_r"))
       .filter(col("id_l") =!= col("id_r"))
       .withColumn("cosine_sim", cosineNative(col("va"), col("vb")))
-      .filter(col("cosine_sim") >= threshold)
+      .filter(atLeast(col("cosine_sim"), threshold))
       .select(least(col("id_l"), col("id_r")).as("id_a"),
         greatest(col("id_l"), col("id_r")).as("id_b"), col("cosine_sim"))
     (out, stats)
@@ -359,12 +336,12 @@ object Similarity {
     Array.fill(nTables, nPlanes, dim)(rng.nextGaussian())
   }
 
-  /** Sign-signature buckets for ALL tables in one UDF call per row (bit p
-    * of table t's bucket set iff dot(v, plane_tp) > 0) — one JIT'd pass
+  /** Sign-signature buckets for ALL tables in one pass per vector (bit p
+    * of table t's bucket set iff dot(v, plane_tp) > 0) — one JIT'd loop
     * over nTables×nPlanes×dim multiply-adds; the planes ship once per
     * executor inside the closure.
     */
-  private def allBuckets(planes: Array[Array[Array[Double]]]) = udf { (v: Array[Float]) =>
+  private def bucketsOf(planes: Array[Array[Array[Double]]], v: Array[Float]): Array[Int] =
     planes.map { table =>
       var bucket = 0
       var p = 0
@@ -377,7 +354,6 @@ object Similarity {
       }
       bucket
     }
-  }
 
   /** Approximate top-k: random-hyperplane LSH candidate generation
     * (same bucket in ANY of `nTables` tables) + exact cosine re-rank.
@@ -394,7 +370,7 @@ object Similarity {
               k: Int, dim: Int, nTables: Int = 16, nPlanes: Int = 6,
               seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(nTables, nPlanes, dim, seed)
-    val bucketsUdf = allBuckets(planes)
+    val bucketsUdf = udf((v: Array[Float]) => bucketsOf(planes, v))
     def withBuckets(df: DataFrame, id: String, v: String): DataFrame =
       df.select(col(id), col(v), posexplode(bucketsUdf(col(v))).as(Seq("table_id", "bucket")))
     val q = broadcast(withBuckets(
@@ -410,11 +386,7 @@ object Similarity {
         col("q.qv").as("qv"), col("c.cv").as("cv"))
       .dropDuplicates("query_id", "neighbour_id")
       .withColumn("cosine_sim", cosineNative(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
-    cand.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
+    rankTopK(cand, k)
   }
 
   /** [[lshTopK]] at corpus scale: identical candidate semantics (same
@@ -434,66 +406,11 @@ object Similarity {
   def lshTopKAtScale(queries: DataFrame, corpus: DataFrame, idCol: String,
                      vecCol: String, k: Int, dim: Int, nTables: Int = 16,
                      nPlanes: Int = 6, seed: Long = 42L): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val planes = hyperplanes(nTables, nPlanes, dim, seed)
-    def bucketsOf(v: Array[Float]): Array[Int] = planes.map { table =>
-      var bucket = 0
-      var p = 0
-      while (p < table.length) {
-        val plane = table(p)
-        var s = 0.0; var i = 0
-        while (i < plane.length) { s += v(i) * plane(i); i += 1 }
-        if (s > 0) bucket |= 1 << p
-        p += 1
-      }
-      bucket
-    }
-    val qRows = queries.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])].collect()
-      .filter(_._2.length == dim)
-      .map { case (qid, qv) => (qid, qv, bucketsOf(qv), normF(qv)) }
-    val qb = spark.sparkContext.broadcast(qRows)
-    val partial = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val qs = qb.value
-        val heapOrd = Ordering.by[(Double, Long), (Double, Long)] {
-          case (sim, id) => (-sim, id)
-        }
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](heapOrd))
-        it.foreach { case (cid, cvec) =>
-          if (cvec.length == dim) {
-            val cb = bucketsOf(cvec)
-            val cn = normF(cvec)
-            var i = 0
-            while (i < qs.length) {
-              val (qid, qvec, qbk, qn) = qs(i)
-              if (qid != cid) {
-                var t = 0; var hit = false
-                while (t < cb.length && !hit) { hit = cb(t) == qbk(t); t += 1 }
-                if (hit) {
-                  val sim = dotF(qvec, cvec) / (qn * cn)
-                  val h = heaps(i)
-                  if (h.size < k) h.enqueue((sim, cid))
-                  else if (heapOrd.lt((sim, cid), h.head)) { h.dequeue(); h.enqueue((sim, cid)) }
-                }
-              }
-              i += 1
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.iterator.map { case (sim, cid) => (qs(i)._1, cid, sim) }
-        }
-      }
-      .toDF("query_id", "neighbour_id", "cosine_sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
-    partial.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
+    // a corpus row of another dimension is never a candidate (the scan's
+    // dimension test rejects it before its tag is read)
+    scanTopK(queries.filter(size(col(vecCol)) === dim), corpus, idCol, vecCol, k,
+      v => if (v.length == dim) bucketsOf(planes, v) else null)
   }
 
   /** IVF-style coarse quantization: assign every vector to its nearest of
@@ -600,14 +517,9 @@ object Similarity {
     val queryCells = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .withColumn("cell", explode(probeCells(col("__qv"))))
-    val scored = queryCells.join(corpusCells, "cell")
+    rankTopK(queryCells.join(corpusCells, "cell")
       .filter(col("query_id") =!= col("neighbour_id"))
-      .withColumn("cosine_sim", cosineNative(col("__qv"), col("__cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)
-    scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
+      .withColumn("cosine_sim", cosineNative(col("__qv"), col("__cv"))), k)
   }
 
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String, centroids: DataFrame,
@@ -667,7 +579,7 @@ object Similarity {
     val dropIds = a.join(b, "cell")
       .filter(col("__idb") < col("__ida"))
       .withColumn("__sim", cosineNative(col("__va"), col("__vb")))
-      .filter(col("__sim") >= threshold)
+      .filter(atLeast(col("__sim"), threshold))
       .select(col("__ida").as(idCol))
       .distinct()
     assigned.join(dropIds, Seq(idCol), "left_anti")
@@ -692,16 +604,15 @@ object Similarity {
   def semanticDecontaminate(train: DataFrame, evalSet: DataFrame,
                             idCol: String, vecCol: String,
                             threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = broadcast(evalSet.select(col(idCol).as("eval_id"),
       col(vecCol).as("__ev")))
-    train.select(col(idCol), col(vecCol).as("__tv"))
+    // the nearest eval row with a defined cosine is the evidence: a
+    // zero-norm eval vector neither flags a row nor masks a real match
+    val scored = train.select(col(idCol), col(vecCol).as("__tv"))
       .join(ev, col(idCol) =!= col("eval_id"))
       .withColumn("cosine", cosineNative(col("__tv"), col("__ev")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(idCol))
-          .orderBy(col("cosine").desc, col("eval_id").asc)))
-      .filter(col("__rn") === 1 && col("cosine") >= threshold)
+    TopK.rerank(scored, idCol, "eval_id", "cosine", 1, descending = true)
+      .filter(col("cosine") >= threshold)
       .select(col(idCol), col("eval_id"), col("cosine"))
   }
 }

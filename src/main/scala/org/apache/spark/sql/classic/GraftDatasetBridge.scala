@@ -9,21 +9,16 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.StructType
 
-/** Minimal bridge into the classic API's private[sql] Dataset.ofRows —
-  * the one hook a third-party whole-operator extension needs to hand a
-  * custom LogicalPlan back to the session (standard practice for Spark
-  * extension libraries; nothing else in graft lives in Spark's
-  * namespace) — plus the private[sql] half of `graft.Caches`' lineage
-  * cut, frames over driver-built rows that carry the same measured
-  * statistics, and the Column <-> Expression conversions that let
-  * operators build graft's native expressions directly.
+/** Minimal bridge into the classic API's private[sql] members (nothing
+  * else in graft lives in Spark's namespace): the private[sql] half of
+  * `graft.Caches`' lineage cut, frames over driver-built rows that carry
+  * the same measured statistics, and the Column <-> Expression
+  * conversions that let operators build graft's native expressions
+  * directly.
   */
 object GraftDatasetBridge {
   def column(e: Expression): org.apache.spark.sql.Column = ExpressionUtils.column(e)
   def expression(c: org.apache.spark.sql.Column): Expression = ExpressionUtils.expression(c)
-
-  def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
-    Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
   /** `df.localCheckpoint(eager = true)` with MEASURED statistics: the
     * checkpoint job's own row count × the schema's per-row size. The

@@ -107,15 +107,18 @@ class BroadcastGateSpec extends AnyFunSuite {
         "classes x buckets fit gate"),
     "graft/operators/UnigramLm.scala" -> (3,
       "contract: token-count/score + n-best model broadcasts, seed-vocab-sized (chars + seedMulti pieces)"),
-    "graft/operators/Pq.scala" -> (5, "contract: codebooks (k*m*d floats), query ids, probe lists — parameter-sized"),
+    "graft/operators/Pq.scala" -> (1, "contract: IVF centroid table (cells x d floats) — parameter-sized"),
     "graft/operators/PrefilterJoin.scala" -> (1, "contract: bloom filter, fixed bits by parameter"),
     "graft/operators/Sampling.scala" -> (7,
       "contract: scalar grand totals, per-domain plan (domain-count-sized), " +
         "unimax source-count scalar + 1-row m*/τ selections over the bounded source table"),
     "graft/operators/Scoring.scala" -> (13,
       "contract: vocab/df tables bounded by vocab contract, scalar corpus stats (incl. the KN bigram-type total), k candidates"),
-    "graft/operators/Similarity.scala" -> (6,
-      "contract: query sets and centroid/cell tables — parameter-sized by API contract"),
+    "graft/operators/Similarity.scala" -> (4,
+      "contract: query sets (bruteForceTopK, lshTopK), eval set, surviving cell-pair table — parameter-sized by API contract"),
+    "graft/operators/TopK.scala" -> (1,
+      "contract: the top-k query batch — query ids + per-query scoring state " +
+        "(vectors/norms/LSH buckets, ADC tables, or per-cell probe tables) — bounded by the batch"),
     "graft/operators/SkewJoins.scala" -> (3,
       "contract: scalar total for key-share profile, fixed-size CMS sketch pair; " +
         "gated: adaptiveJoin broadcasts right iff Catalyst plan stats sizeInBytes <= broadcastBytes budget"),
@@ -129,7 +132,6 @@ class BroadcastGateSpec extends AnyFunSuite {
     "graft/pipeline/Erasure.scala" -> (2, "contract: subject-key set (erasure requests, small by contract), scalar audit"),
     "graft/pipeline/OlympicCleanI.scala" -> (1, "contract: affiliation dim, bounded by distinct affiliations"),
     "graft/pipeline/OlympicCleanII.scala" -> (1, "contract: ISO lookup (~250 rows)"),
-    "graft/plans/CosineTopKJoin.scala" -> (1, "contract: query-vector rows, parameter-sized (TorrentBroadcast)"),
     "graft/streaming/EventStreams.scala" -> (1, "contract: stream-side dim table, caller-owned dim contract"),
     "graft/operators/PerplexityBuckets.scala" -> (1,
       "contract: per-group tercile thresholds — group-count-sized (languages)"),

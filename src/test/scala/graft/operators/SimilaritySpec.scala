@@ -45,11 +45,47 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .repartition(7) // multiple partitions so the heap-merge path is real
     val queries = emb.filter(col("vec_id") < 10)
-    val a = Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Similarity.bruteForceTopKAtScale(queries, emb, "vec_id", "embedding", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
+    def sims(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val a = sims(Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5))
+    val b = sims(Similarity.bruteForceTopKAtScale(queries, emb, "vec_id", "embedding", 5))
+    assert(a.size == 50 && a.keySet == b.keySet)
+    // the scan's JVM kernel against the native expression
+    a.foreach { case (pair, sim) => assert(math.abs(sim - b(pair)) < 1e-12, s"pair $pair") }
+  }
+
+  test("zero-norm vectors: never a neighbour, no neighbours, every exact path agrees") {
+    import spark.implicits._
+    // a zero vector's cosine is 0/0 = NaN, and Spark orders NaN above
+    // every number: unguarded, it ranks FIRST for every query
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val zero = Seq((-1L, Array.fill(64)(0.0f))).toDF("vec_id", "embedding")
+    val corpus = emb.unionByName(zero).repartition(3)
+    val queries = corpus.filter(col("vec_id") < 5) // 5 real queries + the zero one
+    def pairs(df: org.apache.spark.sql.DataFrame) = {
+      val rows = df.collect()
+      assert(rows.forall(r => !r.getDouble(2).isNaN), "NaN similarity in the output")
+      rows.map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    }
+    val window = pairs(Similarity.bruteForceTopK(queries, corpus, "vec_id", "embedding", 5))
+    assert(window.size == 25 && window.keySet.forall { case (q, n) => q >= 0 && n >= 0 },
+      s"the zero vector must neither rank nor get neighbours: ${window.keySet}")
+    val codebook = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    for (other <- Seq(
+        Similarity.bruteForceTopKAtScale(queries, corpus, "vec_id", "embedding", 5),
+        Similarity.ivfTopK(queries, corpus, "vec_id", "embedding", codebook, "cid", "cvec",
+          k = 5, nProbe = 8))) {
+      val got = pairs(other)
+      assert(got.keySet == window.keySet)
+      got.foreach { case (pair, sim) => assert(math.abs(sim - window(pair)) < 1e-12, s"pair $pair") }
+    }
+    val lsh = pairs(Similarity.lshTopK(queries, corpus, "vec_id", "embedding",
+      k = 5, dim = 64, nTables = 64, nPlanes = 4))
+    val lshScan = pairs(Similarity.lshTopKAtScale(queries, corpus, "vec_id", "embedding",
+      k = 5, dim = 64, nTables = 64, nPlanes = 4))
+    assert(lsh.keySet == lshScan.keySet && lsh.keySet.forall { case (q, n) => q >= 0 && n >= 0 })
   }
 
   test("lshTopK recall vs brute force on real embeddings") {
@@ -67,17 +103,19 @@ class SimilaritySpec extends SparkSpec {
   test("lshTopKAtScale == lshTopK row-for-row (same planes, same candidates)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 10)
-    for ((nt, np) <- Seq((16, 6), (64, 4))) {
+    // 7 corpus partitions: the heap merge across partitions is exercised
+    for ((nt, np) <- Seq((16, 6), (64, 4)); corpus <- Seq(emb, emb.repartition(7))) {
       val joined = Similarity.lshTopK(emb.filter(col("vec_id") < 10), emb,
         "vec_id", "embedding", k = 5, dim = 64, nTables = nt, nPlanes = np)
-      val scanned = Similarity.lshTopKAtScale(queries, emb,
+      val scanned = Similarity.lshTopKAtScale(queries, corpus,
         "vec_id", "embedding", k = 5, dim = 64, nTables = nt, nPlanes = np)
       // compare on ids; sims are computed by different kernels (expression
       // vs closure) but from identical float inputs — compare rounded
       def keyed(df: org.apache.spark.sql.DataFrame) =
         rowsOf(df.select(col("query_id"), col("neighbour_id"),
           round(col("cosine_sim"), 9)))
-      assert(keyed(scanned) == keyed(joined), s"tables=$nt planes=$np")
+      assert(keyed(scanned) == keyed(joined),
+        s"tables=$nt planes=$np partitions=${corpus.rdd.getNumPartitions}")
     }
   }
 
@@ -319,6 +357,37 @@ class SimilaritySpec extends SparkSpec {
       .semanticDedup(corpus, "vec_id", "embedding", cents, "cid", "cvec", 0.92)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == Map(30L -> 0L, 31L -> 1L))
+  }
+
+  test("semanticDedup: a zero-norm vector suppresses no cell-mate") {
+    import spark.implicits._
+    val cents = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f))).toDF("cid", "cvec")
+    // -1 lands in cell 0 (its cosine to every centroid is NaN, so the
+    // lowest centroid id wins) with the lowest id; NaN >= threshold must
+    // not drop its higher-id cell-mates
+    val corpus = Seq(
+      (-1L, Array(0.0f, 0.0f)),
+      (10L, Array(1.0f, 0.0f)),
+      (11L, Array(0.999f, 0.01f)), // ~1.0 cosine to 10 -> dropped
+      (12L, Array(0.0f, 1.0f))
+    ).toDF("vec_id", "embedding")
+    val got = Similarity
+      .semanticDedup(corpus, "vec_id", "embedding", cents, "cid", "cvec", 0.92)
+      .collect().map(_.getLong(0)).toSet
+    assert(got == Set(-1L, 10L, 12L), s"got $got")
+  }
+
+  test("semanticDecontaminate: a zero-norm eval vector flags nothing and masks nothing") {
+    import spark.implicits._
+    val evalSet = Seq(
+      (0L, Array(0f, 0f, 0f)), (1L, Array(1f, 0f, 0f))).toDF("id", "v")
+    val train = Seq(
+      (10L, Array(0.99f, 0.14f, 0f)), // ~cos 0.99 to eval 1 -> leaked
+      (11L, Array(0f, 0f, 1f))        // orthogonal -> clean
+    ).toDF("id", "v")
+    val got = Similarity.semanticDecontaminate(train, evalSet, "id", "v", 0.9)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(10L -> 1L), s"got $got")
   }
 
   test("semanticDecontaminate flags the paraphrase-close train row with its eval evidence") {
