@@ -71,10 +71,12 @@ object Similarity {
 
   /** `sim >= threshold`, with an undefined (NaN) cosine never similar:
     * Spark orders NaN above every number, so a bare `>=` would let every
-    * pair touching a zero-norm vector through.
+    * pair touching a zero-norm vector through. NaN becomes null rather
+    * than being tested apart, so `sim` is referenced once: the filter is
+    * pushed into the scoring join's condition.
     */
   private def atLeast(sim: Column, threshold: Double): Column =
-    sim >= threshold && !isnan(sim)
+    nanvl(sim, lit(null).cast("double")) >= threshold
 
   /** The per-query window re-rank every relational top-k route ends in. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame =
