@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query against
@@ -21,6 +22,12 @@ import org.apache.spark.sql.SparkSession
   * record as "retimed". Both layers are off for subset dev runs;
   * SPARK_GRAFT_BENCH_PASSES / SPARK_GRAFT_BENCH_REPEAT override
   * (1 / 0 disable) — pinned by BenchSpec.
+  *
+  * Cold/warm contract: the full record also keeps each query's
+  * first-pass time (`first_s`) and the number of classes Spark compiled
+  * for generated code in its first pass and in the timing it kept
+  * (`compiled`), so a record shows what a query costs before its code
+  * is cached as well as after.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -48,12 +55,15 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.contains)) }
 
+    // one timing: seconds, classes compiled for generated code, error
+    final case class Timing(name: String, sec: Double, compiled: Long, err: Option[String])
     def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (String, Double, Option[String]) = {
+        : Timing = {
       // progress marker on stderr (the Verify convention): log4j
       // warnings interleave with these, so a CacheManager/broadcast
       // warning in the stream attributes to the query that logged it
       System.err.println(s"[bench] running $name")
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       // noop sink: full materialization of every output column (count()
       // would let Spark prune the projections being measured)
@@ -63,7 +73,8 @@ object Bench {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case t: Throwable => Some(t.getClass.getSimpleName) }
       }
-      (name, (System.nanoTime() - t0) / 1e9, err)
+      Timing(name, (System.nanoTime() - t0) / 1e9,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, err)
     }
 
     // per-scale-point state audit, OUTSIDE any timed region (it used to
@@ -72,8 +83,8 @@ object Bench {
     catch { case _: Throwable => }
 
     val runs = selected.map { case (name, fn) => time(name, fn) }
-    val firstPass = runs.collect { case (name, sec, None) => name -> sec }
-    val errors = runs.collect { case (name, _, Some(e)) => name -> e }
+    val firstPass = runs.collect { case Timing(name, sec, _, None) => name -> sec }
+    val errors = runs.collect { case Timing(name, _, _, Some(e)) => name -> e }
     val byName = selected.toMap
     // noise control, two layers (the r8 verdict's "retire the mid-pack
     // single-sample noise" task — single-sampled mid-pack queries swung
@@ -88,29 +99,32 @@ object Bench {
     // SPARK_GRAFT_BENCH_PASSES / SPARK_GRAFT_BENCH_REPEAT override.
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt)
       .getOrElse(defaultPasses(only.isDefined))
-    val secondPass: Map[String, Double] =
-      if (passes <= 1) Map.empty
-      else firstPass.flatMap { case (name, _) =>
-        val (_, sec, err) = time(name, byName(name))
-        if (err.isEmpty) Some(name -> sec) else None
-      }.toMap
+    val secondRuns: Seq[Timing] =
+      if (passes <= 1) Nil
+      else firstPass.map { case (name, _) => time(name, byName(name)) }.filter(_.err.isEmpty)
+    val secondPass = secondRuns.map(t => t.name -> t.sec).toMap
     val afterTwo = mergeRetimes(firstPass, secondPass)
     val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT").map(_.toInt)
       .getOrElse(defaultRepeat(only.isDefined))
-    val tailPass: Map[String, Double] =
-      if (repeat <= 0) Map.empty
-      else afterTwo.sortBy(-_._2).take(repeat).flatMap { case (name, _) =>
-        val (_, sec, err) = time(name, byName(name))
-        if (err.isEmpty) Some(name -> sec) else None
-      }.toMap
+    val tailRuns: Seq[Timing] =
+      if (repeat <= 0) Nil
+      else afterTwo.sortBy(-_._2).take(repeat)
+        .map { case (name, _) => time(name, byName(name)) }.filter(_.err.isEmpty)
+    val tailPass = tailRuns.map(t => t.name -> t.sec).toMap
     val ok = mergeRetimes(afterTwo, tailPass)
     val retimed = secondPass.keySet ++ tailPass.keySet
+    // the kept timing is the fastest ok sample, the earliest on a tie —
+    // the one mergeRetimes kept
+    val samples = (runs ++ secondRuns ++ tailRuns).filter(_.err.isEmpty).groupBy(_.name)
+    val compiled = samples.map { case (name, ts) =>
+      name -> (ts.head.compiled, ts.minBy(_.sec).compiled)
+    }
     // a subset run is a partial record and must never clobber the
     // committed full one (bit the round-5 adjudication)
     val effOut = effectiveOutPath(outPath, only.isDefined)
     // full per-query detail goes to the file; stdout gets a compact line
     java.nio.file.Files.write(java.nio.file.Paths.get(effOut),
-      (fullJson(ok, errors, sfDir, retimed) + "\n")
+      (fullJson(ok, errors, sfDir, retimed, firstPass, compiled) + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val summary = summaryJson(ok, errors, sfDir, effOut)
     // stop BEFORE printing: Spark's shutdown logs (stderr) can't land
@@ -163,14 +177,25 @@ object Bench {
   /** The full record written to the bench-out file: every query, every
     * error, millisecond precision, plus which queries were re-timed
     * (min-of-3) so a record's noise treatment is self-describing.
+    * `queries` holds the kept (min-of-N) times; `first_s` holds each
+    * query's first-pass time, and `compiled` the classes Spark compiled
+    * for it in the first pass and in the kept timing.
     */
   private[graft] def fullJson(ok: Seq[(String, Double)],
                               errors: Seq[(String, String)], sfDir: String,
-                              retimed: Set[String] = Set.empty): String = {
-    val qs = ok.map { case (k, v) => s"\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
-    val es = errors.map { case (k, e) => s"\"" + k + "\":\"" + e + "\"" }.mkString("{", ",", "}")
+                              retimed: Set[String] = Set.empty,
+                              firstPass: Seq[(String, Double)] = Nil,
+                              compiled: Map[String, (Long, Long)] = Map.empty): String = {
+    def obj[V](kvs: Seq[(String, V)])(value: V => String): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + value(v) }.mkString("{", ",", "}")
+    val qs = obj(ok)(ms)
+    val es = obj(errors)("\"" + _ + "\"")
     val rt = retimed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ms(ok.map(_._2).sum)},"unit":"sec","queries":$qs,"errors":$es,"retimed":$rt,"sf":"$sfDir"}"""
+    val fs = obj(firstPass)(ms)
+    val cs = obj(compiled.toSeq.sortBy(_._1)) { case (first, kept) =>
+      s"""{"first":$first,"kept":$kept}"""
+    }
+    s"""{"metric":"total","value":${ms(ok.map(_._2).sum)},"unit":"sec","queries":$qs,"errors":$es,"retimed":$rt,"first_s":$fs,"compiled":$cs,"sf":"$sfDir"}"""
   }
 
   /** The final stdout line. CONTRACT (BenchSpec pins it): valid JSON,

@@ -415,21 +415,6 @@ object Similarity {
       v => if (v.length == dim) bucketsOf(planes, v) else null)
   }
 
-  /** IVF-style coarse quantization: assign every vector to its nearest of
-    * `centroids` (a small table id → vec; ids cast to long), so downstream
-    * searches probe only matching cells. The centroid table would come
-    * from a sampled k-means at scale; any bounded centroid set works here.
-    *
-    * Per-row argmax over the collected centroid array — pure map-side,
-    * ZERO shuffle and zero row amplification (the earlier join+window
-    * formulation expanded the corpus |centroids|× and shuffled the
-    * expansion into a window — a non-starter at 100 TB). The collect is
-    * bounded by contract: a centroid set is k ≤ thousands of rows; the
-    * array ships once per executor in the UDF closure. Ties break on the
-    * lowest centroid id; dim-mismatched centroids are skipped and a row no
-    * centroid matches gets a null cell (the cosine null contract, lifted).
-    * Output: input + `cell` column (long).
-    */
   /** Spherical k-means fit (Lloyd's algorithm, cosine assignment): the
     * training loop that produces the centroid table [[ivfAssign]] and the
     * IVF/ANN searches consume. Deterministic throughout — seed centroids
@@ -524,6 +509,25 @@ object Similarity {
       .withColumn("cosine_sim", cosineNative(col("__qv"), col("__cv"))), k)
   }
 
+  /** IVF-style coarse quantization: assign every vector to its nearest of
+    * `centroids` (a small table id → vec; ids cast to long), so downstream
+    * searches probe only matching cells. The centroid table would come
+    * from a sampled k-means at scale; any bounded centroid set works here.
+    *
+    * Per-row argmax over the collected centroid array — pure map-side,
+    * ZERO shuffle and zero row amplification (the earlier join+window
+    * formulation expanded the corpus |centroids|× and shuffled the
+    * expansion into a window — a non-starter at 100 TB). The collect is
+    * bounded by contract: a centroid set is k ≤ thousands of rows; the
+    * array ships once per executor in the UDF closure. Ties break on the
+    * lowest centroid id; dim-mismatched and zero-norm centroids are
+    * skipped (a zero-norm centroid's cosine is NaN against every row, and
+    * a NaN best would win every later `>` test), and a row no centroid
+    * matches gets a null cell (the cosine null contract, lifted). A
+    * zero-norm row has no defined cosine to any centroid, so it joins
+    * the lowest-id eligible one, like any other tie.
+    * Output: input + `cell` column (long).
+    */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String, centroids: DataFrame,
                 centroidId: String, centroidVec: String): DataFrame = {
     val spark = df.sparkSession
@@ -533,14 +537,18 @@ object Similarity {
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val cNorms: Array[Double] = cents.map { case (_, cv) => normF(cv) }
     val assign = udf { (v: Array[Float]) =>
-      var bestId = 0L; var bestSim = Double.NegativeInfinity; var found = false
+      val nv = normF(v)
+      var bestId = 0L; var bestSim = Double.NaN; var found = false
       var i = 0
       while (i < cents.length) {
         val cv = cents(i)._2
-        if (cv.length == v.length) {
-          val sim = dotF(v, cv) / (normF(v) * cNorms(i))
-          // strict > with cid-ascending iteration = lowest id wins ties
-          if (!found || sim > bestSim) { found = true; bestSim = sim; bestId = cents(i)._1 }
+        if (cv.length == v.length && cNorms(i) > 0.0) {
+          val sim = dotF(v, cv) / (nv * cNorms(i))
+          // strict > with cid-ascending iteration = lowest id wins ties;
+          // a defined similarity always beats a NaN one
+          if (!found || sim > bestSim || (bestSim.isNaN && !sim.isNaN)) {
+            found = true; bestSim = sim; bestId = cents(i)._1
+          }
         }
         i += 1
       }

@@ -42,6 +42,19 @@ class BenchSpec extends AnyFunSuite {
       queries(108).map(_._2).sum) < 0.001)
   }
 
+  test("full record keeps each query's first-pass time and its compiled-class counts") {
+    val first = Seq("q_a" -> 5.0, "q_b" -> 2.0)
+    val s = Bench.fullJson(Seq("q_a" -> 0.9, "q_b" -> 2.0), Nil, "/tmp/sf1", Set("q_a"),
+      first, Map("q_a" -> (143L, 0L), "q_b" -> (12L, 12L)))
+    val node = mapper.readTree(s)
+    assert(node.get("queries").get("q_a").asDouble == 0.9, "queries keeps the min-of-N time")
+    assert(node.get("first_s").get("q_a").asDouble == 5.0)
+    assert(node.get("first_s").size == 2)
+    val a = node.get("compiled").get("q_a")
+    assert(a.get("first").asLong == 143L && a.get("kept").asLong == 0L)
+    assert(node.get("compiled").get("q_b").get("kept").asLong == 12L)
+  }
+
   test("subset runs divert to a .partial sibling; full runs keep the path") {
     assert(Bench.effectiveOutPath("bench_out.json", isSubset = false) == "bench_out.json")
     assert(Bench.effectiveOutPath("bench_out.json", isSubset = true) == "bench_out.partial.json")

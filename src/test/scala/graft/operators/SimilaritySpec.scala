@@ -275,6 +275,22 @@ class SimilaritySpec extends SparkSpec {
     assert(!plan.contains("Window"), s"assignment must not window:\n$plan")
   }
 
+  test("ivfAssign: a zero-norm lowest-id centroid takes no rows") {
+    import spark.implicits._
+    // centroid 0's cosine is NaN against every row; as the first centroid
+    // tried it used to become the best, and no `sim > NaN` ever displaced it
+    val centroids = Seq(
+      (0L, Array(0.0f, 0.0f, 0.0f)),
+      (1L, Array(1.0f, 0.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f, 0.0f))).toDF("cid", "cvec")
+    val rows = Seq((10L, Array(1.0f, 0.1f, 0.0f)), (11L, Array(0.1f, 1.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.ivfAssign(rows, "vec_id", "embedding", centroids, "cid", "cvec")
+      .select(col("vec_id"), col("cell")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(10L -> 1L, 11L -> 2L), s"got $got")
+  }
+
   test("kmeansFit separates well-separated blobs and is partitioning-invariant") {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
