@@ -17,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * Checkpoint/release contract (the one place it is stated): every
   * SQL iteration loop ([[operators.Components]], [[operators.Graph]]'s
   * operators; `pageRank` and `kCore` only above
-  * [[operators.Graph.BroadcastNodeState]], below which their per-round
+  * [[Gates.NodeState]], below which their per-round
   * state is a driver array and there is no plan to cut) cuts its
   * per-round state with [[checkpoint]] — an eager local checkpoint
   * that computes the round, truncates lineage (state feeds two plan

@@ -10,21 +10,26 @@ import org.apache.spark.sql.functions._
   * so pairs must first be closed into components. No reference
   * implementation (SURVEY.md §7.4 LLM-pipeline category); algorithm is
   * the standard large-graph label propagation (a.k.a. "hash-to-min")
-  * plus pointer jumping: every node adopts the smallest component id
+  * plus one pointer jump: every node adopts the smallest component id
   * among itself and its neighbours, AND then its candidate label's own
-  * current label (labels are node ids, so a label lookup is a self-join)
-  * — path lengths double per round, until a fixpoint.
+  * current label (labels are node ids, so a label lookup is a
+  * self-join), until a fixpoint.
   *
   * Scale shape: each iteration is one aggregation over the (narrow)
   * edge list joined to current labels plus one label self-join — no
-  * driver-side graph, no union-find in memory; rounds needed =
-  * O(log diameter) (neighbour-only propagation would be O(diameter) —
-  * a >20-hop duplicate chain would exit non-converged). A non-converged
-  * exit throws rather than returning mixed components.
+  * driver-side graph, no union-find in memory. Rounds are NOT
+  * O(log diameter): the jump only follows labels, so it halves a path
+  * whose ids run in path order, but on a path whose ids are not in path
+  * order the rounds grow linearly with its length (a replay of this
+  * update rule needed 60 rounds at n = 100 and 470 at n = 1,000). The
+  * default `maxIterations = 20` therefore throws on such a chain —
+  * ROADMAP direction 1 (Large-Star/Small-Star) is the fix. A
+  * non-converged exit throws rather than returning mixed components.
   * The edge list is symmetrized once up front; iteration stops when an
   * iteration changes no label (checked with one count per round — the
   * driver-side loop is bounded by `maxIterations`, not data size).
-  * Each round's labels are cut with [[graft.Caches.checkpoint]].
+  * Each round's labels are cut with [[graft.Caches.checkpoint]], and its
+  * jobs are described `connectedComponents/round r`.
   */
 object Components {
 
@@ -36,30 +41,16 @@ object Components {
     *
     * Size-gated hybrid: a dedup-cluster graph is usually TINY relative
     * to the corpus it came from (it has one node per distinct content
-    * class in some pair), so when the deduped edge list fits the
-    * `driverSideLimit` gate it is collected and closed with union-find —
-    * O(E·α) in one pass, no per-round shuffle overhead (measured 7.7 s →
-    * 0.3 s on a 292k-edge class graph at sf0.1). Past the gate (or with
-    * `driverSideLimit = 0`) the distributed label propagation runs; both
-    * paths produce identical labels (spec-asserted).
+    * class in some pair), so when the deduped edge list fits under
+    * [[graft.Gates.UnionFindEdges]] it is collected and closed with
+    * union-find — O(E·α) in one pass, no per-round shuffle overhead
+    * (measured 7.7 s → 0.3 s on a 292k-edge class graph at sf0.1). Past
+    * the gate the distributed label propagation runs; both paths
+    * produce identical labels (spec-asserted).
     */
-  /** Hard ceiling on [[connectedComponents]]'s `driverSideLimit`: 50M
-    * symmetrized edges ≈ 800 MB of boxed (Long, Long) on the driver —
-    * beyond this the collect itself is the failure mode. The gate makes
-    * a miscalled 100 TB graph fail with THIS message instead of a
-    * driver OOM half an hour in (the q141/q74 bounded-broadcast
-    * convention).
-    */
-  val MaxDriverSideEdges: Long = 50000000L
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           allIds: DataFrame = null, idCol: String = "id",
-                          maxIterations: Int = 20,
-                          driverSideLimit: Long = 5000000L): DataFrame = {
-    require(driverSideLimit <= MaxDriverSideEdges,
-      s"driverSideLimit=$driverSideLimit exceeds the $MaxDriverSideEdges-edge " +
-        "driver-collect ceiling; the distributed pointer-jumping path handles " +
-        "any size — lower the limit (or pass 0 to force distributed)")
+                          maxIterations: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     // symmetrize once: src -> dst and dst -> src
     val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
@@ -67,9 +58,11 @@ object Components {
         fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist()
-    val edgeCount = edges.count()
-    if (edgeCount <= driverSideLimit) {
-      val result = unionFindDriverSide(spark, edges, allIds, idCol)
+    val sc = spark.sparkContext
+    val op = "connectedComponents"
+    if (graft.Gates.under(spark, Graph.inRound(sc, op, 0)(edges.count()),
+        graft.Gates.UnionFindEdges)) {
+      val result = Graph.inRound(sc, op, 0)(unionFindDriverSide(spark, edges, allIds, idCol))
       edges.unpersist(blocking = false)
       return result
     }
@@ -77,10 +70,12 @@ object Components {
     val nodes = (if (allIds == null) nodes0
                  else nodes0.unionByName(allIds.select(col(idCol).cast("long").as("id")))
                    .distinct())
-    var labels = graft.Caches.checkpoint(nodes.select(col("id"), col("id").as("component")))
+    var labels = Graph.inRound(sc, op, 0)(
+      graft.Caches.checkpoint(nodes.select(col("id"), col("id").as("component"))))
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxIterations) {
+      round += 1
       // candidate label per node: min over (own, neighbours' labels)
       val viaEdges = edges.join(labels.withColumnsRenamed(
           Map("id" -> "dst", "component" -> "nbr")), "dst")
@@ -92,24 +87,25 @@ object Components {
             .as("cand"),
           col("component").as("prev"))
       // pointer jump: a label is itself a node id, so each node also
-      // adopts its candidate label's OWN current label — path lengths
-      // double per round, turning O(diameter) neighbour-only propagation
-      // into O(log diameter) (labels only ever decrease, so the jump is
-      // always sound)
-      val next = graft.Caches.checkpoint(cand.join(labels.withColumnsRenamed(
-          Map("id" -> "cand", "component" -> "cand_lbl")), Seq("cand"), "left")
-        .select(col("id"),
-          least(col("cand"), coalesce(col("cand_lbl"), col("cand"))).as("component"),
-          col("prev")))
-      changed = next.filter(col("component") =!= col("prev")).count()
+      // adopts its candidate label's OWN current label (labels only ever
+      // decrease, so the jump is always sound). It shortcuts label
+      // chains only: rounds still grow linearly on a path whose ids are
+      // not in path order (see the object's scaladoc)
+      val next = Graph.inRound(sc, op, round)(graft.Caches.checkpoint(
+        cand.join(labels.withColumnsRenamed(
+            Map("id" -> "cand", "component" -> "cand_lbl")), Seq("cand"), "left")
+          .select(col("id"),
+            least(col("cand"), coalesce(col("cand_lbl"), col("cand"))).as("component"),
+            col("prev"))))
+      changed = Graph.inRound(sc, op, round)(
+        next.filter(col("component") =!= col("prev")).count())
       graft.Caches.release(labels)
       labels = next.select("id", "component")
-      round += 1
     }
     edges.unpersist(blocking = false)
     // non-convergence is a correctness failure, not a degraded answer:
-    // labels would still mix components. Fail loudly — with pointer
-    // jumping, hitting this needs a component diameter over ~2^maxIterations
+    // labels would still mix components. Fail loudly — a long chain
+    // whose ids are not in path order reaches this at the default bound
     if (changed > 0) {
       graft.Caches.release(labels)
       throw new IllegalStateException(

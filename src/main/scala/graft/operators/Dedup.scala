@@ -37,9 +37,10 @@ object Dedup {
     * (`estPairs` — the caller's already-measured Σ|block|²), not the
     * session default.
     *
-    * The build side broadcasts only under a BYTES gate, never a row
-    * gate (a row bound let a long-document corpus smuggle a multi-GB
-    * broadcast past it — caught OOMing at the 10× scale-up):
+    * The build side broadcasts only under a BYTES gate
+    * ([[graft.Gates.DenseBlockBytes]]), never a row gate (a row bound
+    * let a long-document corpus smuggle a multi-GB broadcast past it —
+    * caught OOMing at the 10× scale-up):
     * `elemCount`·16 B covers each payload long + array overhead, plus
     * a 48 B/row fixed term for the row object itself — without it a
     * corpus of millions of one-element rows passes a pure element
@@ -78,12 +79,14 @@ object Dedup {
                                  estPairs: Long): DataFrame = {
     val stream = side.repartition(
       pairPartitions(side.sparkSession, estPairs), col("id"))
-    val estBytes = {
+    def estBytes: Long = {
       val r = side.agg(sum(elemCount.cast("long") * 16L + 48L)).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0) // null = empty corpus
     }
     val right =
-      if (estBytes <= 128L * 1024 * 1024) broadcast(side) else side
+      if (graft.Gates.under(side.sparkSession, estBytes, graft.Gates.DenseBlockBytes))
+        broadcast(side)
+      else side
     stream.as("a").join(right.as("b"),
       col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
   }

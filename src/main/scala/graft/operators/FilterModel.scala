@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Scale split (the k-means-centroid convention): the weight vector is
   * d+1 driver-held doubles. The first GD step is ONE map-side-combined
   * scalar aggregate over the corpus (d+1 gradient sums and the row
-  * count n). Below the [[Graph.BroadcastNodeState]] gate — at most that
+  * count n). Below the [[graft.Gates.NodeState]] gate — at most that
   * many doubles in the n·(d+1) training matrix — the cached rows are
   * collected once and every later step, and the final metrics pass,
   * runs on the driver with no job at all: a step over a few thousand
@@ -41,15 +41,7 @@ object FilterModel {
     * (term, weight, n, accuracy, log_loss), weight/metrics at 6 dp.
     */
   def logisticGd(df: DataFrame, xCols: Seq[String], labelCol: String,
-                 iterations: Int, learningRate: Double): DataFrame =
-    logisticGd(df, xCols, labelCol, iterations, learningRate, Graph.BroadcastNodeState)
-
-  /** [[logisticGd]] with the gate as an argument, so specs can force
-    * either tier.
-    */
-  private[operators] def logisticGd(df: DataFrame, xCols: Seq[String], labelCol: String,
-                                    iterations: Int, learningRate: Double,
-                                    nodeStateGate: Long): DataFrame = {
+                 iterations: Int, learningRate: Double): DataFrame = {
     require(xCols.nonEmpty, "need at least one feature column")
     require(iterations >= 1, s"need >= 1 iterations, got $iterations")
     require(learningRate > 0, s"learningRate must be positive, got $learningRate")
@@ -99,7 +91,7 @@ object FilterModel {
       var w = Array.fill(d + 1)(0.0)
       val first = run(1, gradient(d, w))
       w = step(w, first)
-      if (first._2 * (d + 1) <= nodeStateGate)
+      if (graft.Gates.under(spark, first._2 * (d + 1), graft.Gates.NodeState))
         local = Some(Graph.inRound(sc, "logisticGd", 2)(data.glom().collect()))
       for (r <- 2 to iterations) w = step(w, run(r, gradient(d, w)))
       val (accSum, lossSum, n) = run(iterations + 1, metrics(d, w))

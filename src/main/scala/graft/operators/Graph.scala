@@ -9,6 +9,7 @@ import org.apache.spark.sql.classic.GraftDatasetBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import graft.Gates
 import graft.expressions.GraftFunctions
 
 /** Iterative link-analysis over edge lists — centrality for corpus
@@ -25,46 +26,11 @@ import graft.expressions.GraftFunctions
   * per NODE (never per edge) and each round's state is cut with
   * [[graft.Caches.checkpoint]], so the plan and its stage DAG stay
   * constant-size regardless of iteration count. How much node-sized
-  * state may reach the driver is the [[BroadcastNodeState]] contract;
-  * nothing edge-sized ever does.
+  * state may reach the driver is [[graft.Gates.NodeState]]; nothing
+  * edge-sized ever does. Above it every operator runs keyed shuffle
+  * joins; both tiers compute the same result.
   */
 object Graph {
-
-  /** [[triangleCounts]] broadcasts the oriented adjacency table while
-    * the graph has at most this many edges (total adjacency payload is
-    * one entry per edge — ~130 MB of longs plus row overhead at the
-    * cutoff); larger graphs fall back to keyed shuffle joins.
-    */
-  val BroadcastAdjacencyEdges: Long = 8000000L
-
-  /** The node-state gate of the iterative operators: below it, node-
-    * sized state lives on the driver and is broadcast; above it, no
-    * node- or edge-sized state leaves the executors.
-    *
-    * [[hits]] and [[labelPropagation]] broadcast their per-iteration
-    * state table (scores / labels) while the graph has at most this many
-    * nodes — ~200 MB of id+score rows at the cutoff — so no iteration
-    * shuffles the edge list (guide §2.4: a broadcast join replaces the
-    * shuffle of the large side). [[pageRank]] (nodes) and [[kCore]]
-    * (2·edges, the node bound before the first peel) go further below
-    * it: the driver holds the distinct node ids, one dense index
-    * broadcast once per call, and one primitive array per round
-    * (`double[n]` ranks or an n-bit alive set), broadcast in turn; the
-    * edge list is cached once as `Array[Int]` index pairs, and each
-    * round is one `treeReduce` of per-partition `n`-sized partials,
-    * with no SQL plan. The index is a boxed hash map, tens of bytes
-    * per node on the driver and on each executor, and each running
-    * task holds one n-sized partial (32 MB of doubles at the cutoff).
-    * Above the gate every operator runs keyed shuffle joins with its
-    * per-round state cut by [[graft.Caches.checkpoint]]; both sides
-    * compute the same result.
-    *
-    * [[FilterModel.logisticGd]] applies the same envelope to its
-    * training matrix: while the n·(d+1) doubles of the cached [y, x]
-    * rows fit under it, they are collected once and every GD step after
-    * the first runs on the driver.
-    */
-  val BroadcastNodeState: Long = 4000000L
 
   /** Damped PageRank over a DIRECTED edge list, fixed iteration count.
     *
@@ -84,15 +50,7 @@ object Graph {
     * Output: (id, pr), one row per node.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int, damping: Double = 0.85): DataFrame =
-    pageRank(edges, srcCol, dstCol, iterations, damping, BroadcastNodeState)
-
-  /** [[pageRank]] with the node-state gate as an argument, so specs can
-    * run the SQL path on small graphs.
-    */
-  private[operators] def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-                                  iterations: Int, damping: Double,
-                                  nodeStateGate: Long): DataFrame = {
+               iterations: Int, damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
@@ -113,7 +71,7 @@ object Graph {
       return nodes.withColumn("pr", lit(0.0))
     }
     val teleport = (1.0 - damping) / n
-    if (n <= nodeStateGate)
+    if (Gates.under(edges.sparkSession, n, Gates.NodeState))
       return pageRankArrays(e, nodes, iterations, damping, teleport)
 
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
@@ -213,6 +171,7 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
+    val sc = edges.sparkSession.sparkContext
     val e = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
@@ -223,16 +182,17 @@ object Graph {
       .distinct()
       .persist()
     graft.Caches.track(nodes)
-    val n = nodes.count()
+    val n = inRound(sc, "hits", 0)(nodes.count())
     if (n == 0) {
       return nodes.withColumn("auth", lit(0.0)).withColumn("hub", lit(0.0))
     }
 
-    // node-sized score tables broadcast below the [[BroadcastNodeState]]
-    // gate: both per-half-step joins go map-side and the edge list is
-    // never shuffled
+    // node-sized score tables broadcast below the node-state gate: both
+    // per-half-step joins go map-side and the edge list is never
+    // shuffled
     val attach: DataFrame => DataFrame =
-      if (n <= BroadcastNodeState) df => broadcast(df) else identity
+      if (Gates.under(edges.sparkSession, n, Gates.NodeState)) df => broadcast(df)
+      else identity
 
     // one L1-normalized propagation half-step: scores flow across the
     // edge list from `from` endpoints onto `onto` endpoints. `raw` is
@@ -261,14 +221,14 @@ object Graph {
       (out, raw)
     }
 
-    var scores = graft.Caches.checkpoint(nodes
+    var scores = inRound(sc, "hits", 0)(graft.Caches.checkpoint(nodes
       .withColumn("auth", lit(0.0))
-      .withColumn("hub", lit(1.0 / n)))
-    for (_ <- 1 to iterations) {
+      .withColumn("hub", lit(1.0 / n))))
+    for (r <- 1 to iterations) {
       val (auth, rawA) = halfStep(scores.select(col("id"), col("hub")), "hub",
         "src", "dst", "auth")
       val (hub, rawH) = halfStep(auth, "auth", "dst", "src", "hub")
-      val next = graft.Caches.checkpoint(auth.join(hub, "id"))
+      val next = inRound(sc, "hits", r)(graft.Caches.checkpoint(auth.join(hub, "id")))
       Seq(rawA, rawH, scores).foreach(graft.Caches.release)
       scores = next
     }
@@ -294,6 +254,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
+    val sc = edges.sparkSession.sparkContext
     val e = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
@@ -304,15 +265,17 @@ object Graph {
       .distinct()
       .persist()
     graft.Caches.track(nodes)
-    val n = nodes.count()
-    // node-sized label state broadcasts below the [[BroadcastNodeState]]
-    // gate: the per-iteration joins go map-side and the edge list is
-    // never shuffled
+    // node-sized label state broadcasts below the node-state gate: the
+    // per-iteration joins go map-side and the edge list is never
+    // shuffled
     val attach: DataFrame => DataFrame =
-      if (n <= BroadcastNodeState) df => broadcast(df) else identity
+      if (Gates.under(edges.sparkSession, inRound(sc, "labelPropagation", 0)(nodes.count()),
+          Gates.NodeState)) df => broadcast(df)
+      else identity
 
-    var labels = graft.Caches.checkpoint(nodes.withColumn("label", col("id")))
-    for (_ <- 1 to iterations) {
+    var labels = inRound(sc, "labelPropagation", 0)(
+      graft.Caches.checkpoint(nodes.withColumn("label", col("id"))))
+    for (r <- 1 to iterations) {
       val votes = e
         .join(attach(labels.withColumnRenamed("id", "dst")), "dst")
         .groupBy(col("src").as("id"), col("label"))
@@ -330,9 +293,10 @@ object Graph {
       // labels IS the node spine (one row per node by construction), so
       // joining back through `nodes` was a redundant third node-sized
       // join per iteration — carry the old label directly
-      val next = graft.Caches.checkpoint(labels.withColumnRenamed("label", "__old")
-        .join(attach(winner), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("__old")).as("label")))
+      val next = inRound(sc, "labelPropagation", r)(graft.Caches.checkpoint(
+        labels.withColumnRenamed("label", "__old")
+          .join(attach(winner), Seq("id"), "left")
+          .select(col("id"), coalesce(col("__new"), col("__old")).as("label"))))
       graft.Caches.release(labels)
       labels = next
     }
@@ -358,14 +322,7 @@ object Graph {
     * edge drop out with it.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, rounds: Int): DataFrame =
-    kCore(edges, srcCol, dstCol, k, rounds, BroadcastNodeState)
-
-  /** [[kCore]] with the node-state gate as an argument, so specs can
-    * run the SQL path on small graphs.
-    */
-  private[operators] def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-                               k: Int, rounds: Int, nodeStateGate: Long): DataFrame = {
+            k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val sc = edges.sparkSession.sparkContext
@@ -379,7 +336,8 @@ object Graph {
       .distinct()))
     // survivor sets are node-sized, at most 2·edges before the first
     // peel; the checkpoint measured the edge count
-    if (2 * e.queryExecution.optimizedPlan.stats.rowCount.get <= nodeStateGate)
+    if (Gates.under(edges.sparkSession,
+        2 * e.queryExecution.optimizedPlan.stats.rowCount.get.toLong, Gates.NodeState))
       return kCoreArrays(e, k, rounds, degrees(e).schema)
     for (r <- 1 to rounds) {
       // persisted: surv feeds BOTH semi-joins — without it the degree
@@ -453,7 +411,9 @@ object Graph {
     * on the driver in a dense order, and `edges` (two id columns) cached
     * once on the executors as one `Array[Int]` of endpoint-index pairs
     * per partition, a null endpoint as −1. The id → index map is
-    * broadcast once, for that cache.
+    * broadcast once, for that cache: a boxed hash map, tens of bytes per
+    * node on the driver and on each executor. Each round's task then
+    * holds one n-sized partial (32 MB of doubles at the gate).
     */
   private final class DenseGraph(val ids: Array[Any], val pairs: RDD[Array[Int]],
                                  index: Broadcast[_]) {
@@ -590,13 +550,14 @@ object Graph {
     // same struct type)
     val ordA = struct(col("__da").as("d"), col("a").as("n"))
     val ordB = struct(col("__db").as("d"), col("b").as("n"))
-    // deg is node-sized: below the node cutoff it BROADCASTS onto both
-    // endpoints, so the orientation pass streams the edge list through
-    // two map-side joins instead of shuffling it twice (sort-merge on a
-    // then on b — the two biggest exchanges in the old plan); above the
-    // cutoff, plain keyed joins as before
+    // deg is node-sized: below the node-state gate it BROADCASTS onto
+    // both endpoints, so the orientation pass streams the edge list
+    // through two map-side joins instead of shuffling it twice
+    // (sort-merge on a then on b — the two biggest exchanges in the old
+    // plan); above the gate, plain keyed joins as before
     val attachDeg: DataFrame => DataFrame =
-      if (deg.count() <= BroadcastNodeState) df => broadcast(df) else identity
+      if (Gates.under(edges.sparkSession, deg.count(), Gates.NodeState)) df => broadcast(df)
+      else identity
     val oriented = und
       .join(attachDeg(deg.select(col("id").as("a"), col("degree").as("__da"))), "a")
       .join(attachDeg(deg.select(col("id").as("b"), col("degree").as("__db"))), "b")
@@ -623,13 +584,13 @@ object Graph {
     // rows on the sf0.1 co-order graph; here the same intersections
     // run inside the projection on edge-sized rows. The adjacency
     // table is m entries spread over n rows (~16 MB at m = 1.2M):
-    // below the cutoff it BROADCASTS, so edges stream through both
-    // probes in one stage and the per-edge array payload is never
+    // below the adjacency gate it BROADCASTS, so edges stream through
+    // both probes in one stage and the per-edge array payload is never
     // shuffled twice; above it, plain keyed joins (size dispatch on
     // the persisted edge count, the [[Components]] pattern).
-    val attach =
-      if (und.count() <= BroadcastAdjacencyEdges) (df: DataFrame) => broadcast(df)
-      else (df: DataFrame) => df
+    val attach: DataFrame => DataFrame =
+      if (Gates.under(edges.sparkSession, und.count(), Gates.AdjacencyEdges)) df => broadcast(df)
+      else identity
     val closed = oriented
       .join(attach(adj.select(col("lo"), col("nb").as("__nbu"))), Seq("lo"))
       .join(attach(adj.select(col("lo").as("hi"), col("nb").as("__nbv"))), Seq("hi"))

@@ -22,8 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - RUNTIME-GATED: the input scales with the data; a runtime check
   *    decides broadcast vs shuffle. The gate MUST bound bytes:
   *      * Dedup.denseBlockPairJoin — Σ(elemCount·16 B + 48 B/row)
-  *        ≤ 128 MB (payload longs + array overhead + fixed row term).
-  *      * Graph.triangleCounts — edge count ≤ BroadcastAdjacencyEdges;
+  *        ≤ Gates.DenseBlockBytes, 128 MB (payload longs + array
+  *        overhead + fixed row term).
+  *      * Graph.triangleCounts — edge count ≤ Gates.AdjacencyEdges;
   *        a proven proxy: the adjacency payload is exactly one long
   *        (plus amortized row overhead) per oriented edge.
   *      * SkewJoins.adaptiveJoin — right side broadcast iff its
@@ -80,23 +81,23 @@ class BroadcastGateSpec extends AnyFunSuite {
       "contract: scalar aggs + q233's 1-row AUC pair"),
     "graft/functions/NocExtract.scala" -> (1, "contract: 33-entry static legacy-country map"),
     "graft/operators/Dedup.scala" -> (2,
-      "gated: denseBlockPairJoin bytes gate (elems*16+48/row <= 128MB); " +
+      "gated: denseBlockPairJoin bytes gate (elems*16+48/row <= Gates.DenseBlockBytes); " +
         "caller: ngramContamination broadcastEval flag (eval set small by contract)"),
     "graft/operators/Drift.scala" -> (3, "contract: per-group bounds/stats, 9-row digit totals — group-count-sized"),
     "graft/operators/Dsir.scala" -> (4, "contract: hashed-bucket count tables, 2^b rows by parameter"),
     "graft/operators/Features.scala" -> (3, "contract: per-category stats, scalar agg, k breakpoints"),
     "graft/operators/Funnel.scala" -> (1, "contract: per-variant aggregate, variant-count-sized"),
     "graft/operators/Graph.scala" -> (8,
-      "gated: adjacency broadcast iff edges <= BroadcastAdjacencyEdges (bytes proxy: one long/edge); " +
+      "gated: adjacency broadcast iff edges <= Gates.AdjacencyEdges (bytes proxy: one long/edge); " +
         "the two iterative-state attach sites (hits scores, labelPropagation " +
-        "labels/winner) broadcast iff nodes <= BroadcastNodeState (bytes proxy: " +
+        "labels/winner) broadcast iff nodes <= Gates.NodeState (bytes proxy: " +
         "one edge-width id + one fixed-width score/label per node); the three " +
         "sc.broadcast sites of pageRank's and kCore's array paths (the dense id " +
         "index once per call, pageRank's double[n] rank shares and kCore's n-bit " +
-        "alive set once per round) run only below BroadcastNodeState (nodes; " +
+        "alive set once per round) run only below Gates.NodeState (nodes; " +
         "2·edges for kCore) — driver broadcasts of node state, same proxy: one id " +
         "+ one fixed-width value per node; triangleCounts' degree attach broadcasts iff " +
-        "nodes <= BroadcastNodeState (same proxy: one id + one long degree per node); " +
+        "nodes <= Gates.NodeState (same proxy: one id + one long degree per node); " +
         "contract: hits' 1-row L1 total"),
     "graft/operators/GroupOps.scala" -> (6,
       "contract: per-group medians/MADs/percentile bounds over bounded dims, " +
@@ -166,19 +167,42 @@ class BroadcastGateSpec extends AnyFunSuite {
     // compared against a byte budget — not a bare row count
     assert(dedup.contains("* 16L + 48L"),
       "Dedup.denseBlockPairJoin lost its per-element+per-row bytes estimate")
-    assert(dedup.contains("estBytes <= 128L * 1024 * 1024"),
-      "Dedup.denseBlockPairJoin lost its 128 MB byte budget")
     // exactly one dense-path gate implementation — the twice-pasted
     // copies drifted once (commit 1688f12); keep it extracted
     assert("denseBlockPairJoin\\(".r.findAllIn(dedup).size == 3, // 1 def + 2 calls
       "denseBlockPairJoin should be defined once and called from both dense paths")
-    val graph = read("graft/operators/Graph.scala")
-    assert(graph.contains("BroadcastAdjacencyEdges"),
-      "Graph.triangleCounts lost its edge-count (bytes-proxy) broadcast gate")
-    // every iterative operator's node-state attach must dispatch on the
-    // node-count gate (one per operator: pageRank, hits, labelProp, kCore)
-    assert("BroadcastNodeState\\b".r.findAllIn(graph).size >= 5, // 1 def + 4 uses
-      "Graph's iterative node-state broadcasts lost their BroadcastNodeState gate")
+    // every gated site asks Gates whether its own size is under its gate
+    // (the body of `def name(` runs to the next top-level member)
+    def body(rel: String, name: String): String = {
+      val src = read(rel)
+      val start = src.indexOf(s"def $name(")
+      assert(start >= 0, s"$rel: no def $name")
+      val end = "\n  (?:private |final |/\\*\\*)".r.findFirstMatchIn(src.substring(start))
+        .fold(src.length)(start + _.start)
+      src.substring(start, end)
+    }
+    val sites = Seq(
+      ("graft/operators/Graph.scala", "pageRank", Seq("NodeState")),
+      ("graft/operators/Graph.scala", "hits", Seq("NodeState")),
+      ("graft/operators/Graph.scala", "labelPropagation", Seq("NodeState")),
+      ("graft/operators/Graph.scala", "kCore", Seq("NodeState")),
+      ("graft/operators/Graph.scala", "triangleCounts", Seq("NodeState", "AdjacencyEdges")),
+      ("graft/operators/FilterModel.scala", "logisticGd", Seq("NodeState")),
+      ("graft/operators/Components.scala", "connectedComponents", Seq("UnionFindEdges")),
+      ("graft/operators/Dedup.scala", "denseBlockPairJoin", Seq("DenseBlockBytes")))
+    for ((rel, name, gates) <- sites; gate <- gates) {
+      val b = body(rel, name)
+      assert(s"Gates\\.under\\([^\\n]*\\n?[^\\n]*Gates\\.$gate\\b".r.findFirstIn(b).isDefined,
+        s"$rel: $name no longer asks Gates.under about Gates.$gate")
+    }
+    // each gate value is defined once, in Gates, and nowhere else
+    val all = scalaFiles(srcRoot).map(f => new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)).mkString("\n")
+    for (c <- Seq("NodeState", "AdjacencyEdges", "UnionFindEdges", "DenseBlockBytes"))
+      assert(s"val $c\\b".r.findAllIn(all).size == 1, s"Gates.$c should be defined once")
+    for (literal <- Seq("4000000L", "8000000L", "5000000L", "128L * 1024 * 1024"))
+      assert(all.indexOf(literal) == all.lastIndexOf(literal) &&
+        read("graft/Gates.scala").contains(literal), s"$literal should appear only in Gates")
   }
 
   /** THE REPARTITION-BEFORE-FOLD CONVENTION, enforced the same way.

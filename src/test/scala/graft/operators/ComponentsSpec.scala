@@ -21,10 +21,10 @@ class ComponentsSpec extends SparkSpec {
   test("long path converges (distributed propagation crosses many hops)") {
     import spark.implicits._
     // a 60-node path: worst case for label propagation rounds at this
-    // size; driverSideLimit = 0 forces the DISTRIBUTED path
+    // size; atScale forces the DISTRIBUTED path
     val pairs = (0L until 59L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val got = Components.connectedComponents(pairs, "id_a", "id_b",
-        maxIterations = 100, driverSideLimit = 0L)
+    val got = atScale(Components.connectedComponents(pairs, "id_a", "id_b",
+        maxIterations = 100))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 60 && got.forall(_._2 == 0L))
     graft.Caches.unpersistAll()
@@ -35,8 +35,8 @@ class ComponentsSpec extends SparkSpec {
     // neighbour-only propagation needs ~300 rounds here; pointer jumping
     // needs ~log2(300) ≈ 9 — 12 rounds is tight enough to prove the jump
     val pairs = (0L until 300L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val got = Components.connectedComponents(pairs, "id_a", "id_b",
-        maxIterations = 12, driverSideLimit = 0L)
+    val got = atScale(Components.connectedComponents(pairs, "id_a", "id_b",
+        maxIterations = 12))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 301 && got.forall(_._2 == 0L))
     graft.Caches.unpersistAll()
@@ -46,22 +46,10 @@ class ComponentsSpec extends SparkSpec {
     import spark.implicits._
     val pairs = (0L until 300L).map(i => (i + 1, i)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      Components.connectedComponents(pairs, "id_a", "id_b",
-        maxIterations = 3, driverSideLimit = 0L).collect()
+      atScale(Components.connectedComponents(pairs, "id_a", "id_b", maxIterations = 3))
     }
     assert(e.getMessage.contains("did not converge"))
     graft.Caches.unpersistAll()
-  }
-
-  test("refusal: a driverSideLimit past the hard collect ceiling fails loudly, not OOM") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L)).toDF("a", "b")
-    val ex = intercept[IllegalArgumentException] {
-      Components.connectedComponents(pairs, "a", "b",
-        driverSideLimit = 1000000000000L)
-    }
-    assert(ex.getMessage.contains("ceiling") && ex.getMessage.contains("distributed"),
-      ex.getMessage)
   }
 
   test("driver-side union-find == distributed propagation") {
@@ -70,11 +58,11 @@ class ComponentsSpec extends SparkSpec {
     val pairs = ((0L until 150L).map(i => (i, (i * 37 + 11) % 150)) ++
       (200L until 230L).map(i => (i, 200L))).toDF("id_a", "id_b")
     val all = (0L until 260L).toDF("node")
-    def run(limit: Long) = Components.connectedComponents(pairs, "id_a", "id_b",
-        allIds = all, idCol = "node", maxIterations = 100, driverSideLimit = limit)
+    def run = Components.connectedComponents(pairs, "id_a", "id_b",
+        allIds = all, idCol = "node", maxIterations = 100)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val uf = run(Components.MaxDriverSideEdges)
-    val dist = run(0L)
+    val uf = run
+    val dist = atScale(run)
     assert(uf == dist)
     graft.Caches.unpersistAll()
   }

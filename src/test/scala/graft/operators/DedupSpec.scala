@@ -565,13 +565,18 @@ class DedupSpec extends SparkSpec {
     assert(kept == Set(10L, 12L, 20L))
   }
 
+  /** Checks both tiers of the dense path's broadcast gate: the default
+    * and [[atScale]].
+    */
   private def checkContainmentExact(texts: Int => String, nDocs: Int,
                                     threshold: Double): Unit = {
     import spark.implicits._
     val docs = (0 until nDocs).map(i => (i.toLong, texts(i), "en"))
       .toDF("doc_id", "text", "lang")
-    val got = Dedup.containmentPairs(docs, "doc_id", "text", "lang", 2, threshold)
+    def pairs = Dedup.containmentPairs(docs, "doc_id", "text", "lang", 2, threshold)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = pairs
+    assert(atScale(pairs) == got, "the at-scale tier found other pairs")
     def sh(t: String): Set[String] =
       t.split(" ").sliding(2).map(_.mkString(" ")).toSet
     val local = (0 until nDocs).flatMap { i => (i + 1 until nDocs).map(j => (i, j)) }

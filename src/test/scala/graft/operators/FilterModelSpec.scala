@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -62,16 +61,19 @@ class FilterModelSpec extends SparkSpec {
     }.toDF("y", "a", "b", "c").repartition(5)
   }
 
-  /** (term, weight, n, accuracy, log_loss) rows in term order. */
-  private def fit(df: DataFrame, xCols: Seq[String], iterations: Int, gate: Long) =
-    FilterModel.logisticGd(df, xCols, "y", iterations, 1.5, gate)
-      .collect().sortBy(_.getAs[Long]("term_idx"))
+  /** (term, weight, n, accuracy, log_loss) rows in term order, from the
+    * driver tier or, [[atScale]], the distributed tier.
+    */
+  private def fit(df: DataFrame, xCols: Seq[String], iterations: Int, scale: Boolean) = {
+    def run = FilterModel.logisticGd(df, xCols, "y", iterations, 1.5)
+    (if (scale) atScale(run) else run).collect().sortBy(_.getAs[Long]("term_idx"))
+  }
 
   test("logisticGd: the driver tier and the distributed tier agree") {
     val df = noisy.cache()
     for (iters <- Seq(1, 2, 50)) {
-      val local = fit(df, Seq("a", "b", "c"), iters, Graph.BroadcastNodeState)
-      val dist = fit(df, Seq("a", "b", "c"), iters, gate = -1L)
+      val local = fit(df, Seq("a", "b", "c"), iters, scale = false)
+      val dist = fit(df, Seq("a", "b", "c"), iters, scale = true)
       assert(local.map(_.getAs[String]("term")).toSeq == dist.map(_.getAs[String]("term")).toSeq)
       assert(local.forall(_.getAs[Long]("n") == 300) && dist.forall(_.getAs[Long]("n") == 300))
       for ((l, r) <- local.zip(dist); c <- Seq("weight", "accuracy", "log_loss"))
@@ -86,15 +88,15 @@ class FilterModelSpec extends SparkSpec {
     import spark.implicits._
     val empty = Seq.empty[(Boolean, Double)].toDF("y", "x")
     val one = Seq((true, 2.0)).toDF("y", "x")
-    for (gate <- Seq(Graph.BroadcastNodeState, -1L)) {
-      val e = fit(empty, Seq("x"), 3, gate)
-      assert(e.map(_.getAs[Double]("weight")).toSeq == Seq(0.0, 0.0), gate)
+    for (scale <- Seq(false, true)) {
+      val e = fit(empty, Seq("x"), 3, scale)
+      assert(e.map(_.getAs[Double]("weight")).toSeq == Seq(0.0, 0.0), scale)
       assert(e.forall(r => r.getAs[Long]("n") == 0 && r.isNullAt(r.fieldIndex("accuracy"))
-        && r.isNullAt(r.fieldIndex("log_loss"))), gate)
-      val o = fit(one, Seq("x"), 1, gate)
+        && r.isNullAt(r.fieldIndex("log_loss"))), scale)
+      val o = fit(one, Seq("x"), 1, scale)
       // one step from w = 0: grad = (0.5 − 1)·[1, 2], η = 1.5
-      assert(o.map(_.getAs[Double]("weight")).toSeq == Seq(0.75, 1.5), gate)
-      assert(o.forall(r => r.getAs[Long]("n") == 1 && r.getAs[Double]("accuracy") == 1.0), gate)
+      assert(o.map(_.getAs[Double]("weight")).toSeq == Seq(0.75, 1.5), scale)
+      assert(o.forall(r => r.getAs[Long]("n") == 1 && r.getAs[Double]("accuracy") == 1.0), scale)
     }
     graft.Caches.unpersistAll()
   }
@@ -102,37 +104,11 @@ class FilterModelSpec extends SparkSpec {
   test("logisticGd: below the gate 50 iterations run at most 2 jobs, each described") {
     val df = noisy.cache()
     df.count()
-    val sc = spark.sparkContext
-    val key = "spark.job.description"
-    /** Descriptions of the jobs `body` starts, in order. */
-    def jobsOf(body: => Unit): Seq[String] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          seen.add(String.valueOf(js.properties.getProperty(key)))
-      }
-      sc.addSparkListener(listener)
-      try {
-        body
-        // listener events arrive in order: once the marker job shows,
-        // every job before it has been seen
-        sc.setJobDescription("marker")
-        sc.parallelize(Seq(1)).count()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      } finally {
-        sc.setJobDescription(null)
-        sc.removeSparkListener(listener)
-      }
-      val all = seen.toArray(Array.empty[String]).toSeq
-      assert(all.contains("marker"))
-      all.takeWhile(_ != "marker")
-    }
     val local = jobsOf(FilterModel.logisticGd(df, Seq("a", "b", "c"), "y",
       iterations = 50, learningRate = 1.5))
     assert(local == Seq("logisticGd/round 1", "logisticGd/round 2"), local)
-    val dist = jobsOf(FilterModel.logisticGd(df, Seq("a", "b", "c"), "y",
-      iterations = 3, learningRate = 1.5, nodeStateGate = -1L))
+    val dist = jobsOf(atScale(FilterModel.logisticGd(df, Seq("a", "b", "c"), "y",
+      iterations = 3, learningRate = 1.5)))
     assert(dist == (1 to 4).map(r => s"logisticGd/round $r"), dist)
     df.unpersist()
     graft.Caches.unpersistAll()

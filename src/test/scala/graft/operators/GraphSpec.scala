@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -261,28 +260,37 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  /** Below [[Graph.BroadcastNodeState]] pageRank and kCore run on driver
-    * arrays; the SQL path (forced with a gate of −1) is the reference.
-    * Same schema, same rows, values equal up to the order of the
-    * floating-point sums; the array path's frame carries its row count.
+  /** `build` at the default gates and [[atScale]]: same schema, same
+    * rows by id, doubles equal up to the order of the floating-point
+    * sums. Below the node-state gate pageRank and kCore run on driver
+    * arrays, hits, labelPropagation and triangleCounts broadcast their
+    * node state; the at-scale tier is the SQL path. Returns the
+    * default-tier result.
     */
-  private def sameAsSql(arrays: DataFrame, sql: DataFrame): Unit = {
-    assert(arrays.schema == sql.schema)
-    val rows = arrays.count()
-    assert(arrays.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(rows)))
-    def byId(df: DataFrame): Map[Any, Double] = df.collect().map { r =>
-      val id = r.get(0) match {
+  private def sameTiers(build: => DataFrame): DataFrame = {
+    val small = build
+    val large = atScale(build)
+    assert(small.schema == large.schema)
+    def byId(df: DataFrame): Map[Any, Seq[Any]] = df.collect().map { r =>
+      val vs = r.toSeq.map {
         case b: Array[Byte] => b.toSeq
         case other => other
       }
-      id -> r.getAs[Number](1).doubleValue
+      vs.head -> vs.tail
     }.toMap
-    val (a, s) = (byId(arrays), byId(sql))
-    assert(a.size == rows && a.keySet == s.keySet)
-    a.foreach { case (id, v) =>
-      assert(math.abs(v - s(id)) <= 1e-12 * math.max(1.0, math.abs(v)), s"$id: $v vs ${s(id)}")
+    val (a, s) = (byId(small), byId(large))
+    assert(a.size == small.count() && a.keySet == s.keySet)
+    for ((id, row) <- a; (v, w) <- row.zip(s(id))) (v, w) match {
+      case (x: Double, y: Double) =>
+        assert(math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(x)), s"$id: $row vs ${s(id)}")
+      case _ => assert(v == w, s"$id: $row vs ${s(id)}")
     }
+    small
   }
+
+  /** The driver-array tier's frame carries its row count. */
+  private def measured(df: DataFrame): Unit =
+    assert(df.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(df.count())))
 
   /** Long, string and binary ids over one graph: hubs, chains, dangling
     * sinks (50..60 have no out-edges), duplicate edges and self-loops.
@@ -300,9 +308,8 @@ class GraphSpec extends SparkSpec {
 
   test("pageRank: the array path equals the SQL path") {
     import spark.implicits._
-    def check(e: DataFrame, iterations: Int): Unit = sameAsSql(
-      Graph.pageRank(e, "s", "d", iterations, 0.85, Graph.BroadcastNodeState),
-      Graph.pageRank(e, "s", "d", iterations, 0.85, nodeStateGate = -1L))
+    def check(e: DataFrame, iterations: Int): Unit =
+      measured(sameTiers(Graph.pageRank(e, "s", "d", iterations)))
     for (e <- idVariants(mixed); iterations <- Seq(0, 1, 4)) check(e, iterations)
     // a null id is a node: it gets only the teleport term, it passes no
     // rank on, and the edge a -> null still counts in a's out-degree
@@ -316,9 +323,8 @@ class GraphSpec extends SparkSpec {
 
   test("kCore: the array path equals the SQL path") {
     import spark.implicits._
-    def check(e: DataFrame, k: Int, rounds: Int): Unit = sameAsSql(
-      Graph.kCore(e, "s", "d", k, rounds, Graph.BroadcastNodeState),
-      Graph.kCore(e, "s", "d", k, rounds, nodeStateGate = -1L))
+    def check(e: DataFrame, k: Int, rounds: Int): Unit =
+      measured(sameTiers(Graph.kCore(e, "s", "d", k, rounds)))
     for (e <- idVariants(mixed); (k, rounds) <- Seq((3, 0), (9, 1), (9, 3), (12, 2), (99, 2)))
       check(e, k, rounds)
     // the cascade graph, plus a null endpoint (dropped like a self-loop)
@@ -330,53 +336,41 @@ class GraphSpec extends SparkSpec {
     graft.Caches.unpersistAll()
   }
 
+  test("hits, labelPropagation and triangleCounts: both tiers agree") {
+    for (e <- idVariants(mixed)) {
+      for (iterations <- Seq(0, 1, 3)) {
+        sameTiers(Graph.hits(e, "s", "d", iterations))
+        sameTiers(Graph.labelPropagation(e, "s", "d", iterations))
+      }
+      sameTiers(Graph.triangleCounts(e, "s", "d"))
+      graft.Caches.unpersistAll()
+    }
+  }
+
   test("pageRank and kCore describe each round's jobs; below the gate a round is one job") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val key = "spark.job.description"
     val e = mixed.toDF("s", "d")
-    /** Descriptions of the jobs `body` starts, in order. */
-    def jobsOf(body: => Unit): Seq[String] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          seen.add(String.valueOf(js.properties.getProperty(key)))
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobDescription("caller")
-        body
-        assert(sc.getLocalProperty(key) == "caller", "the caller's description is restored")
-        // listener events arrive in order: once the marker job shows,
-        // every job before it has been seen
-        sc.setJobDescription("marker")
-        sc.parallelize(Seq(1)).count()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      } finally {
-        sc.setJobDescription(null)
-        sc.removeSparkListener(listener)
-      }
-      val all = seen.toArray(Array.empty[String]).toSeq
-      assert(all.contains("marker"))
-      all.takeWhile(_ != "marker")
-    }
-    def perRound(jobs: Seq[String], op: String): Map[Int, Int] = {
-      assert(jobs.forall(_.startsWith(s"$op/round ")), jobs)
-      jobs.groupBy(_.stripPrefix(s"$op/round ").toInt).map { case (r, js) => r -> js.size }
-    }
-    val prArrays = perRound(jobsOf(Graph.pageRank(e, "s", "d", 3, 0.85, Graph.BroadcastNodeState)),
-      "pageRank")
+    val prArrays = perRound(jobsOf(Graph.pageRank(e, "s", "d", 3)), "pageRank")
     assert(prArrays.keySet == Set(0, 1, 2, 3) && (1 to 3).forall(prArrays(_) == 1), prArrays)
-    val prSql = perRound(jobsOf(Graph.pageRank(e, "s", "d", 3, 0.85, nodeStateGate = -1L)),
-      "pageRank")
+    val prSql = perRound(jobsOf(atScale(Graph.pageRank(e, "s", "d", 3))), "pageRank")
     assert(prSql.keySet == Set(0, 1, 2, 3), prSql)
     // k = 9 peels in both rounds on this graph
-    val kcArrays = perRound(jobsOf(Graph.kCore(e, "s", "d", 9, 2, Graph.BroadcastNodeState)),
-      "kCore")
+    val kcArrays = perRound(jobsOf(Graph.kCore(e, "s", "d", 9, 2)), "kCore")
     assert(kcArrays.keySet == Set(0, 1, 2) && (1 to 2).forall(kcArrays(_) == 1), kcArrays)
-    val kcSql = perRound(jobsOf(Graph.kCore(e, "s", "d", 9, 2, nodeStateGate = -1L)), "kCore")
+    val kcSql = perRound(jobsOf(atScale(Graph.kCore(e, "s", "d", 9, 2))), "kCore")
     assert(kcSql.keySet == Set(0, 1, 2), kcSql)
+    graft.Caches.unpersistAll()
+  }
+
+  test("hits and labelPropagation describe each round's jobs on both tiers") {
+    import spark.implicits._
+    val e = mixed.toDF("s", "d")
+    for (tier <- Seq[(=> DataFrame) => DataFrame](df => df, df => atScale(df))) {
+      val h = perRound(jobsOf(tier(Graph.hits(e, "s", "d", 3))), "hits")
+      assert(h.keySet == Set(0, 1, 2, 3), h)
+      val lp = perRound(jobsOf(tier(Graph.labelPropagation(e, "s", "d", 3))), "labelPropagation")
+      assert(lp.keySet == Set(0, 1, 2, 3), lp)
+    }
     graft.Caches.unpersistAll()
   }
 }
