@@ -33,7 +33,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = GraftSession.local()
     // steady-state measurement: one unmeasured flagship run warms JVM,
     // codegen compiler, and parquet reader paths
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

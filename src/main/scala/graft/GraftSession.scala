@@ -18,9 +18,15 @@ import org.apache.spark.sql.SparkSession
   * Janino and then the JIT. Sized to hold a whole `Bench` pass, a
   * repeated plan in a long-lived session reuses its compiled code. A
   * single cold pass in a fresh JVM still compiles each class once.
+  *
+  * The core count defaults to `SPARK_GRAFT_CPUS` when it is set, else to
+  * every processor the JVM sees; every main takes it from here.
   */
 object GraftSession {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  private val defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

@@ -13,8 +13,7 @@ object SqlRunner {
     require(args.length >= 2, "usage: SqlRunner <sfDir> <sql>")
     val dir = args(0)
     val sql = args.drop(1).mkString(" ")
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, appName = "graft-sql")
+    val spark = GraftSession.local(appName = "graft-sql")
     Tables.testTables.foreach { name =>
       try Tables.table(spark, dir, name).createOrReplaceTempView(name)
       catch { case _: Throwable => () } // tolerate absent tables

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // dev loop (same contract as Bench's SPARK_GRAFT_BENCH_ONLY): restrict
     // the dump to a comma-separated substring match; the driver sets no

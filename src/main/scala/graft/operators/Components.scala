@@ -161,10 +161,16 @@ object Components {
     * into the form a dedup pipeline consumes.
     */
   def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    connectedComponents(pairs, aCol, bCol)
-      .groupBy(col("component"))
-      .agg(min(col("id")).as("keep_id"),
-        sort_array(collect_list(col("id"))).as("member_ids"),
+    clusterRows(connectedComponents(pairs, aCol, bCol), "id")
+
+  /** One `(keep_id, member_ids, cluster_size)` row per `component` of
+    * `members`, over its `idCol` values: the minimum id, the sorted ids
+    * and their count.
+    */
+  private[operators] def clusterRows(members: DataFrame, idCol: String): DataFrame =
+    members.groupBy(col("component"))
+      .agg(min(col(idCol)).as("keep_id"),
+        sort_array(collect_list(col(idCol))).as("member_ids"),
         count(lit(1)).as("cluster_size"))
       .select(col("keep_id"), col("member_ids"), col("cluster_size"))
 }

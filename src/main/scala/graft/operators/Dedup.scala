@@ -20,6 +20,32 @@ import graft.expressions.GraftFunctions
   */
 object Dedup {
 
+  /** Shuffle-partition count for a pair-mining stage, sized by the
+    * MEASURED candidate-pair estimate (the Σdf² / Σ|block|² scalars the
+    * cost-based strategy already computes) instead of the session
+    * default. The failure mode this prevents (reproduced at the 10×
+    * board on the default 8 GiB heap): per-task pair state is
+    * `pairs ∕ partitions`, so at a FIXED partition count a 10× data
+    * step grows every task's hash-map state ~100× until the final
+    * aggregate's `BytesToBytesMap` cannot acquire its initial page and
+    * the query hard-fails — the engine must size the fan-out from the
+    * data, exactly as a real cluster does by scaling partitions with
+    * input. Budget: ~2²⁰ pairs/task ≈ 64 MB of aggregate state (64 B
+    * per entry: 16 B two-long key + map/pointer overhead), safely
+    * inside the ≈150 MB execution-memory share a 32-thread 8 GiB
+    * executor gives each task. Never BELOW the session default (small
+    * corpora keep the pinned parallelism contract); capped at 2¹⁶
+    * tasks — past that, task-launch overhead dominates and the
+    * sort-based spill fallback is the right tool.
+    */
+  private[operators] def pairPartitions(spark: org.apache.spark.sql.SparkSession,
+                                        estPairs: Long): Int = {
+    val default = spark.sessionState.conf.numShufflePartitions.toLong
+    val perTask = 1L << 20
+    val needed = (math.max(0L, estPairs) + perTask - 1) / perTask
+    math.min(1L << 16, math.max(default, needed)).toInt
+  }
+
   /** Dense-path block self-join shared by [[containmentPairs]] and
     * [[winnowedOverlapPairs]] (extracted after commit 1688f12 shipped a
     * column-name drift between the two pasted copies): joins `side` —
@@ -49,32 +75,6 @@ object Dedup {
     * convention. Beyond the bound: plain shuffled join, AQE skew
     * split takes over.
     */
-  /** Shuffle-partition count for a pair-mining stage, sized by the
-    * MEASURED candidate-pair estimate (the Σdf² / Σ|block|² scalars the
-    * cost-based strategy already computes) instead of the session
-    * default. The failure mode this prevents (reproduced at the 10×
-    * board on the default 8 GiB heap): per-task pair state is
-    * `pairs ∕ partitions`, so at a FIXED partition count a 10× data
-    * step grows every task's hash-map state ~100× until the final
-    * aggregate's `BytesToBytesMap` cannot acquire its initial page and
-    * the query hard-fails — the engine must size the fan-out from the
-    * data, exactly as a real cluster does by scaling partitions with
-    * input. Budget: ~2²⁰ pairs/task ≈ 64 MB of aggregate state (64 B
-    * per entry: 16 B two-long key + map/pointer overhead), safely
-    * inside the ≈150 MB execution-memory share a 32-thread 8 GiB
-    * executor gives each task. Never BELOW the session default (small
-    * corpora keep the pinned parallelism contract); capped at 2¹⁶
-    * tasks — past that, task-launch overhead dominates and the
-    * sort-based spill fallback is the right tool.
-    */
-  private[operators] def pairPartitions(spark: org.apache.spark.sql.SparkSession,
-                                        estPairs: Long): Int = {
-    val default = spark.sessionState.conf.numShufflePartitions.toLong
-    val perTask = 1L << 20
-    val needed = (math.max(0L, estPairs) + perTask - 1) / perTask
-    math.min(1L << 16, math.max(default, needed)).toInt
-  }
-
   private def denseBlockPairJoin(side: DataFrame, elemCount: Column,
                                  estPairs: Long): DataFrame = {
     val stream = side.repartition(
@@ -89,6 +89,48 @@ object Dedup {
       else side
     stream.as("a").join(right.as("b"),
       col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
+  }
+
+  /** The cost-based candidate strategy of [[containmentPairs]] and
+    * [[winnowedOverlapPairs]]. Both have two exact candidate generators,
+    * and which one is cheaper is a DATA property: a posting-keyed
+    * inverted index wins on sparse corpora (web-scale vocabulary, low
+    * per-key df), a block self-join ([[denseBlockPairJoin]]) on dense
+    * ones (a small shared vocabulary, where the index degenerates to
+    * MORE rows than the within-block pair space itself). So this
+    * measures both pair-row counts — Σdf² over `postings`' `key` and
+    * Σ|block|² over `sets`' `blk`, two scalar collects (bounded driver
+    * state, the engine's gate pattern) — and runs `block` or `index`
+    * with its own estimate.
+    */
+  private def blockOrIndex(sets: DataFrame, postings: DataFrame, key: String)(
+      block: Long => DataFrame, index: Long => DataFrame): DataFrame = {
+    def pairRows(counts: DataFrame): Long = {
+      val r = counts.agg(sum(col("__d") * col("__d"))).collect()(0)
+      if (r.isNullAt(0)) 0L else r.getLong(0) // null = empty corpus
+    }
+    val indexPairRows = pairRows(
+      postings.groupBy(col(key)).agg(count(lit(1)).as("__d")))
+    val blockPairRows = pairRows(
+      sets.groupBy(col("blk")).agg(count(lit(1)).as("__d")))
+    if (blockPairRows <= indexPairRows) block(blockPairRows)
+    else index(indexPairRows)
+  }
+
+  /** The index path's candidate pairs ahead of their pair aggregate.
+    * The aggregate's hash map holds the stage's pair state, so when the
+    * measured estimate outgrows the session default the pairs fan out
+    * to [[pairPartitions]] on the aggregate's own `keys` (one shuffle:
+    * the aggregate reuses the exchange), keeping per-task state bounded
+    * at any SF. Below that the bare aggregate keeps its map-side
+    * partial combine, which an explicit repartition forfeits (measured
+    * +12% on q174 at sf0.1).
+    */
+  private def fanOutPairs(pairs: DataFrame, estPairs: Long, keys: Column*): DataFrame = {
+    val spark = pairs.sparkSession
+    if (pairPartitions(spark, estPairs) > spark.sessionState.conf.numShufflePartitions)
+      pairs.repartition(pairPartitions(spark, estPairs), keys: _*)
+    else pairs
   }
 
   /** Whitespace-token set of a text column (lowercased, trimmed). */
@@ -236,32 +278,23 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        blockCol: String, n: Int, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Exact filter-verify with a COST-BASED candidate strategy.
-    // Shingles are sorted distinct xxhash64 longs via the fused kernel
-    // (no gram strings; 64-bit collisions need ~|S|²/2⁶⁴ luck —
-    // negligible). Two exact candidate generators exist, and which one
-    // is cheaper is a DATA property, so the operator measures both with
-    // vocabulary-/block-sized aggregates (two scalar collects — bounded
-    // driver state, the engine's documented gate pattern) and picks:
+    // Exact filter-verify under the cost-based candidate strategy
+    // ([[blockOrIndex]]). Shingles are sorted distinct xxhash64 longs
+    // via the fused kernel (no gram strings; 64-bit collisions need
+    // ~|S|²/2⁶⁴ luck — negligible).
     //
-    //  SPARSE corpora (web-scale vocab, low per-gram df — Σdf² small):
-    //  asymmetric prefix-filtered inverted index (SSJoin/PPJoin prefix
-    //  principle — Chaudhuri et al. ICDE'06, Xiao et al. WWW'08 —
-    //  adapted to the min-relative threshold). A qualifying pair needs
-    //  shared ≥ α = t·|small|, so the SMALL side's prefix of length
-    //  |small| − ⌈α⌉ + 1 under a global df-ascending gram order must
-    //  hit the large side's FULL postings (if no intersection gram sat
-    //  in the prefix, all ≥α of them would squeeze into α−1 suffix
-    //  slots). The symmetric both-prefixes scheme does NOT hold for
-    //  min-relative thresholds — a short doc fully inside a long one
-    //  can miss the long doc's own prefix (spec-pinned). High-df grams
-    //  fan out by (full-df × prefix-df), and df-ascending ordering
-    //  keeps them out of prefixes.
-    //
-    //  DENSE corpora (small shared vocabulary — Σ|block|² < Σdf²):
-    //  every gram is common, an inverted index degenerates to MORE
-    //  rows than the within-block pair space itself; join blocks
-    //  directly and verify each pair map-side.
+    // The index path is an asymmetric prefix-filtered inverted index
+    // (SSJoin/PPJoin prefix principle — Chaudhuri et al. ICDE'06, Xiao
+    // et al. WWW'08 — adapted to the min-relative threshold). A
+    // qualifying pair needs shared ≥ α = t·|small|, so the SMALL side's
+    // prefix of length |small| − ⌈α⌉ + 1 under a global df-ascending
+    // gram order must hit the large side's FULL postings (if no
+    // intersection gram sat in the prefix, all ≥α of them would squeeze
+    // into α−1 suffix slots). The symmetric both-prefixes scheme does
+    // NOT hold for min-relative thresholds — a short doc fully inside a
+    // long one can miss the long doc's own prefix (spec-pinned).
+    // High-df grams fan out by (full-df × prefix-df), and df-ascending
+    // ordering keeps them out of prefixes.
     //
     // Verification is identical and exact in both paths: one sorted-
     // array intersection per candidate. The 1e-9 bias on the floor
@@ -279,27 +312,18 @@ object Dedup {
     graft.Caches.track(base)
     val tok = base.select(col("id"), col("blk"), col("n"),
       explode(col("grams")).as("g"))
-    def pairRows(counts: DataFrame): Long = {
-      val r = counts.agg(sum(col("__d") * col("__d"))).collect()(0)
-      if (r.isNullAt(0)) 0L else r.getLong(0) // null = empty corpus
-    }
-    val iiPairRows = pairRows(
-      tok.groupBy(col("g")).agg(count(lit(1)).as("__d")))
-    val blockPairRows = pairRows(
-      base.groupBy(col("blk")).agg(count(lit(1)).as("__d")))
-    val verified =
-      if (blockPairRows <= iiPairRows) {
-        // dense: one self-join on the block key with the intersection
-        // INLINE — no candidate materialization, no array re-join
-        // (partitioning + broadcast-gate policy in [[denseBlockPairJoin]])
+    val verified = blockOrIndex(base, tok, "g")(
+      // the intersection INLINE in the block join — no candidate
+      // materialization, no array re-join
+      blockPairRows =>
         denseBlockPairJoin(
             base.select(col("id"), col("blk"), col("n"), col("grams")),
             col("n"), blockPairRows)
           .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
             col("a.n").as("na"), col("b.n").as("nb"),
             GraftFunctions.call("sorted_intersect_size",
-              col("a.grams"), col("b.grams")).as("shared"))
-      } else {
+              col("a.grams"), col("b.grams")).as("shared")),
+      iiPairRows => {
         val dfreq = tok.groupBy(col("g")).agg(count(lit(1)).as("__df"))
         val prefix = tok.join(dfreq, Seq("g"))
           .withColumn("__rk", row_number().over(
@@ -311,30 +335,15 @@ object Dedup {
         // probe side = the ≤-size side (its own size IS the pair's
         // min, so its prefix bound is exact); equal sizes probe both
         // ways and the canonical projection + distinct dedupes
-        val candidates = prefix.as("a")
-          .join(tok.as("b"),
-            col("a.g") === col("b.g") &&
-              col("a.blk") === col("b.blk") &&
-              (col("a.n") < col("b.n") ||
-                (col("a.n") === col("b.n") && col("a.id") =!= col("b.id"))))
-          .select(least(col("a.id"), col("b.id")).as("id_a"),
-            greatest(col("a.id"), col("b.id")).as("id_b"))
-          // the dedup aggregate's hash map holds this stage's pair
-          // state — when the measured Σdf² estimate outgrows the
-          // session default, fan it out so per-task state stays
-          // bounded at any SF (the explicit repartition shares its
-          // exchange with the distinct: same keys, no second shuffle).
-          // Below the threshold keep the bare distinct: its map-side
-          // partial dedup combines duplicate pairs before the shuffle,
-          // which an explicit repartition would forfeit (measured
-          // +12% on q174 at sf0.1)
-          .transform { cands =>
-            if (pairPartitions(df.sparkSession, iiPairRows) >
-                df.sparkSession.sessionState.conf.numShufflePartitions)
-              cands.repartition(pairPartitions(df.sparkSession, iiPairRows),
-                col("id_a"), col("id_b"))
-            else cands
-          }
+        val candidates = fanOutPairs(prefix.as("a")
+            .join(tok.as("b"),
+              col("a.g") === col("b.g") &&
+                col("a.blk") === col("b.blk") &&
+                (col("a.n") < col("b.n") ||
+                  (col("a.n") === col("b.n") && col("a.id") =!= col("b.id"))))
+            .select(least(col("a.id"), col("b.id")).as("id_a"),
+              greatest(col("a.id"), col("b.id")).as("id_b")),
+            iiPairRows, col("id_a"), col("id_b"))
           .distinct()
         candidates
           .join(base.select(col("id").as("id_a"), col("grams").as("__ga"),
@@ -344,7 +353,7 @@ object Dedup {
           .select(col("id_a"), col("id_b"), col("na"), col("nb"),
             GraftFunctions.call("sorted_intersect_size",
               col("__ga"), col("__gb")).as("shared"))
-      }
+      })
     // lineage barrier: without it Catalyst pushes the threshold filter
     // INTO the join condition, re-evaluating the intersection kernel
     // per conjunct on every raw match instead of once per pair above
@@ -378,13 +387,13 @@ object Dedup {
                            blockCol: String, k: Int, w: Int,
                            minShared: Int): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    // Same cost-based strategy as [[containmentPairs]], and for the
-    // same reason: on a small shared vocabulary the window minima
-    // concentrate on the globally smallest hash values, so a
+    // The cost-based candidate strategy ([[blockOrIndex]]), as in
+    // [[containmentPairs]]: on a small shared vocabulary the window
+    // minima concentrate on the globally smallest hash values, so a
     // fingerprint-keyed join degenerates past the within-block pair
     // space itself (measured 430 s vs 2 s at sf0.1 on the synthetic
     // corpus). Real web corpora are the sparse case; both paths are
-    // exact and share the sorted-intersect verification.
+    // exact.
     // winnowing STAGED through materialized columns: the one-Column
     // form (winnowingFingerprintsPortable) embeds the gram-array
     // expression inside the window lambda, and higher-order functions
@@ -414,43 +423,22 @@ object Dedup {
       .persist()
     graft.Caches.track(base) // scope cleanup (see containmentPairs)
     val tok = base.select(col("id"), col("blk"), explode(col("fps")).as("fp"))
-    def pairRows(counts: DataFrame): Long = {
-      val r = counts.agg(sum(col("__d") * col("__d"))).collect()(0)
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    val fpPairRows = pairRows(
-      tok.groupBy(col("fp")).agg(count(lit(1)).as("__d")))
-    val blockPairRows = pairRows(
-      base.groupBy(col("blk")).agg(count(lit(1)).as("__d")))
-    val counted =
-      if (blockPairRows <= fpPairRows) {
+    val counted = blockOrIndex(base, tok, "fp")(
+      blockPairRows =>
         denseBlockPairJoin(
             base.select(col("id"), col("blk"), col("fps")),
             size(col("fps")), blockPairRows)
           .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
             GraftFunctions.call("sorted_intersect_size",
-              col("a.fps"), col("b.fps")).cast("long").as("shared_fps"))
-      } else {
-        tok.as("a")
-          .join(tok.as("b"),
-            col("a.fp") === col("b.fp") &&
-              col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-          // the pair-count aggregate holds this stage's state — when
-          // the measured Σdf² estimate outgrows the session default,
-          // size its fan-out (see [[pairPartitions]]; the repartition
-          // hash-partitions on the groupBy keys, one shuffle total);
-          // below the threshold keep the bare groupBy's map-side
-          // partial counts, which the explicit repartition forfeits
-          .transform { joined =>
-            if (pairPartitions(df.sparkSession, fpPairRows) >
-                df.sparkSession.sessionState.conf.numShufflePartitions)
-              joined.repartition(pairPartitions(df.sparkSession, fpPairRows),
-                col("a.id"), col("b.id"))
-            else joined
-          }
+              col("a.fps"), col("b.fps")).cast("long").as("shared_fps")),
+      fpPairRows =>
+        fanOutPairs(tok.as("a")
+            .join(tok.as("b"),
+              col("a.fp") === col("b.fp") &&
+                col("a.blk") === col("b.blk") && col("a.id") < col("b.id")),
+            fpPairRows, col("a.id"), col("b.id"))
           .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .agg(count(lit(1)).as("shared_fps"))
-      }
+          .agg(count(lit(1)).as("shared_fps")))
     counted.filter(col("shared_fps") >= minShared)
   }
 
@@ -476,20 +464,78 @@ object Dedup {
     df.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** Exact Jaccard pair mining via equivalence-class collapse — the scale
-    * path for corpora with repeated content (exactly what LLM training
-    * data looks like): group documents by identical token SET first
-    * (within-class pairs have jaccard 1.0 by construction), then mine
-    * pairs between the (far fewer) class representatives and expand back
-    * to document pairs. Compared to [[jaccardPairs]]'s inverted index this
-    * replaces the token-fanout shuffle (quadratic in document frequency)
-    * with a within-block class self-join on hashed-long token arrays.
-    * Output contract identical to [[jaccardPairs]].
+  /** The content-class table: `docs` — `(id, keys…, toks)` with `toks`
+    * a sorted distinct hash set — grouped by identical set within
+    * `keys`, as `(keys…, toks, ids, cls)` with `ids` sorted and `cls`
+    * the class hash. Every pair inside a class is an exact duplicate
+    * (jaccard 1.0, hamming 0) by construction, so the classed miners
+    * run their quadratic candidate stage on distinct content only. A
+    * document whose set is null or empty (null text, or fewer than n
+    * tokens under n-gram shingling) joins no class: such documents
+    * would otherwise form one giant class of spurious duplicates. At
+    * n = 1 a blank text still hashes its one "" token and is kept, as
+    * [[jaccardPairs]] keeps it.
+    *
+    * Deliberate materialization point, persisted and tracked: the table
+    * feeds several plan branches (within-class pairs, both sides of the
+    * candidate join, the verification or expansion joins); without the
+    * persist each branch re-runs the scan + groupBy.
     */
-  /** Shared core of the classed Jaccard family: the persisted
-    * token-set-equivalence class table and the verified CLASS-level
-    * qualifying pairs (no doc expansion). Returns (classes, classPairs)
-    * where classes = (blk, toks, ids, cls) and classPairs =
+  private def contentClasses(docs: DataFrame, keys: Column*): DataFrame = {
+    val classKey = keys :+ col("toks")
+    graft.Caches.track(docs
+      .filter(size(col("toks")) > 0)
+      .groupBy(classKey: _*)
+      .agg(sort_array(collect_list(col("id"))).as("ids"))
+      .withColumn("cls", xxhash64(classKey: _*))
+      .persist())
+  }
+
+  /** Document pairs `(id_a, id_b, score)`, id_a < id_b, of a class table
+    * and its qualifying class pairs `(ids_a, ids_b, score)`: every pair
+    * inside a class scores `same`, and a class pair expands to every
+    * cross pair of its members.
+    */
+  private def documentPairs(classes: DataFrame, classPairs: DataFrame,
+                            score: String, same: Column): DataFrame = {
+    val within = classes.filter(size(col("ids")) > 1)
+      .select(explode(col("ids")).as("id_a"), col("ids"))
+      .select(col("id_a"), explode(col("ids")).as("id_b"))
+      .filter(col("id_a") < col("id_b"))
+      .withColumn(score, same)
+      .select("id_a", "id_b", score)
+    val cross = classPairs
+      .select(explode(col("ids_a")).as("ia"), col("ids_b"), col(score))
+      .select(col("ia"), explode(col("ids_b")).as("ib"), col(score))
+      .select(least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"), col(score))
+    within.unionByName(cross)
+  }
+
+  /** The pairs of `pairs` whose exact Jaccard over the sorted distinct
+    * hash sets in columns `a` and `b` reaches `threshold`. The sets are
+    * sorted+distinct by construction, so the native O(n+m) merge kernel
+    * computes the intersection (codegen) and |union| = |a| + |b| − inter
+    * — array_intersect/array_union built a per-row hash set twice for
+    * the same numbers. Two empty sets meet 0/0, which under ANSI
+    * throws DIVIDE_BY_ZERO; `try_divide` makes that jaccard NULL, and it
+    * falls out of the filter. Catalyst pushes the filter into the join
+    * condition with `__inter` inlined, and a `nullif` on the union
+    * evaluated the merge kernel there a third time per candidate.
+    */
+  private def jaccardAtLeast(a: String, b: String, threshold: Double)(
+      pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("__inter",
+        GraftFunctions.call("sorted_intersect_size", col(a), col(b)))
+      .withColumn("jaccard", try_divide(col("__inter").cast("double"),
+        size(col(a)) + size(col(b)) - col("__inter")))
+      .filter(col("jaccard") >= threshold)
+
+  /** Shared core of the classed Jaccard family: the
+    * [[contentClasses]] table and the verified CLASS-level qualifying
+    * pairs (no doc expansion). Returns (classes, classPairs) where
+    * classes = (blk, toks, ids, cls) and classPairs =
     * (cls_a, cls_b, ids_a, ids_b, jaccard).
     */
   private def classedJaccardCore(df: DataFrame, idCol: String, textCol: String,
@@ -499,17 +545,10 @@ object Dedup {
                                    graft.functions.Tokenize.Whitespace): (DataFrame, DataFrame) = {
     // ngram > 1 mines word-shingle Jaccard (sequence-sensitive) instead of
     // token-set Jaccard (bag-of-words); hashing is the fused native kernel
-    val toks = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      hashedShingleSet(col(textCol), ngram, removeEmpty = false, mode).as("toks"))
-    // deliberate materialization point: the class table feeds three plan
-    // branches (within-pairs + both sides of the class join); without
-    // persist each branch re-runs the scan + groupBy
-    val classes = toks
-      .groupBy(col("blk"), col("toks"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .withColumn("cls", xxhash64(col("blk"), col("toks")))
-      .persist()
-    graft.Caches.track(classes)
+    val classes = contentClasses(
+      df.select(col(idCol).as("id"), col(blockCol).as("blk"),
+        hashedShingleSet(col(textCol), ngram, removeEmpty = false, mode).as("toks")),
+      col("blk"))
 
     // cross-class pairs: all-pairs within block over class reps (bounded by
     // distinct-content count, not corpus size), jaccard on long arrays.
@@ -532,18 +571,22 @@ object Dedup {
           least(size(col("a.toks")), size(col("b.toks"))).cast("double") >=
             lit(threshold) *
               greatest(size(col("a.toks")), size(col("b.toks"))))
-      // toks are sorted+distinct by construction → native O(n+m) merge
-      // intersect (codegen) instead of array_intersect's per-pair hash set
-      .withColumn("__inter",
-        GraftFunctions.call("sorted_intersect_size", col("a.toks"), col("b.toks")))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        (size(col("a.toks")) + size(col("b.toks")) - col("__inter")))
-      .filter(col("jaccard") >= threshold)
+      .transform(jaccardAtLeast("a.toks", "b.toks", threshold))
       .select(col("a.cls").as("cls_a"), col("b.cls").as("cls_b"),
         col("a.ids").as("ids_a"), col("b.ids").as("ids_b"), col("jaccard"))
     (classes, classPairs)
   }
 
+  /** Exact Jaccard pair mining via equivalence-class collapse — the scale
+    * path for corpora with repeated content (exactly what LLM training
+    * data looks like): group documents by identical token SET first
+    * (within-class pairs have jaccard 1.0 by construction), then mine
+    * pairs between the (far fewer) class representatives and expand back
+    * to document pairs. Compared to [[jaccardPairs]]'s inverted index this
+    * replaces the token-fanout shuffle (quadratic in document frequency)
+    * with a within-block class self-join on hashed-long token arrays.
+    * Output contract identical to [[jaccardPairs]].
+    */
   def jaccardPairsClassed(df: DataFrame, idCol: String, textCol: String,
                           blockCol: String, threshold: Double,
                           ngram: Int = 1,
@@ -551,22 +594,7 @@ object Dedup {
                             graft.functions.Tokenize.Whitespace): DataFrame = {
     val (classes, classPairs) =
       classedJaccardCore(df, idCol, textCol, blockCol, threshold, ngram, mode)
-
-    // within-class doc pairs: jaccard 1.0
-    val within = classes
-      .filter(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("jaccard", lit(1.0))
-
-    val cross = classPairs
-      .select(explode(col("ids_a")).as("ia"), col("ids_b"), col("jaccard"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("jaccard"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
-
-    within.select("id_a", "id_b", "jaccard").unionByName(cross)
+    documentPairs(classes, classPairs, "jaccard", lit(1.0))
   }
 
   /** Near-dup clusters end-to-end, entirely on the CLASS graph: mine
@@ -592,14 +620,11 @@ object Dedup {
     val comp = Components.connectedComponents(
       classPairs.select(col("cls_a"), col("cls_b")), "cls_a", "cls_b",
       allIds = classes.select(col("cls")), idCol = "cls")
-    classes.join(comp, classes("cls") === comp("id"))
-      .select(col("component"), explode(col("ids")).as("doc_id"))
-      .groupBy(col("component"))
-      .agg(min(col("doc_id")).as("keep_id"),
-        sort_array(collect_list(col("doc_id"))).as("member_ids"),
-        count(lit(1)).as("cluster_size"))
+    Components.clusterRows(
+        classes.join(comp, classes("cls") === comp("id"))
+          .select(col("component"), explode(col("ids")).as("doc_id")),
+        "doc_id")
       .filter(col("cluster_size") > 1)
-      .select(col("keep_id"), col("member_ids"), col("cluster_size"))
   }
 
   /** Retention policy over near-dup clusters: which duplicate do we
@@ -672,10 +697,38 @@ object Dedup {
   private[operators] def autoBanding(threshold: Double): (Int, Int) = {
     val configs = Seq((48, 6), (48, 8), (48, 12), (48, 16))
     configs.find { case (k, b) =>
-      val r = k / b
-      math.pow(1 - math.pow(threshold, r.toDouble), b.toDouble) <= 1e-6
+      math.pow(1 - math.pow(threshold, (k / b).toDouble), b.toDouble) <= 1e-6
     }.getOrElse((48, 24))
   }
+
+  /** The miners' (numHashes, bands): the caller's override, or
+    * [[autoBanding]]'s for the threshold.
+    */
+  private def resolveBanding(threshold: Double, numHashes: Int, bands: Int): (Int, Int) = {
+    require((numHashes > 0) == (bands > 0),
+      s"numHashes and bands must be overridden together (got numHashes=$numHashes, bands=$bands) — " +
+        "a half-specified banding would be silently replaced by the auto-tuned one")
+    val (k, b) = if (numHashes > 0) (numHashes, bands) else autoBanding(threshold)
+    require(k % b == 0, "bands must divide numHashes")
+    (k, b)
+  }
+
+  /** The banding projection `(key, blk, band_idx, band_hash)`, one row
+    * per band, from the fused signature+banding kernel
+    * ([[graft.expressions.LshBandHashes]], bit-identical to [[lshBands]]
+    * over [[minhashSignature]] — DedupSpec pins it) over the hashed
+    * `items`. The two-step form let projection collapse inline the
+    * signature into lshBands' interpreted transform lambda (no CSE
+    * inside HOF lambdas), re-evaluating it once per band — b× the
+    * kernel cost, with JIT-profile-dependent 8× bench swings.
+    */
+  private def bandRows(rows: DataFrame, key: Column, blk: Column, items: Column,
+                       k: Int, b: Int): DataFrame =
+    rows.select(key, blk,
+        explode(GraftFunctions.call("lsh_band_hashes", items, lit(k), lit(b))).as("band"))
+      .withColumn("band_idx", col("band.band_idx"))
+      .withColumn("band_hash", col("band.band_hash"))
+      .drop("band")
 
   /** Most-selective banding within a hash budget: the LARGEST rows-per-
     * band r (with the minimal band count b) whose at-threshold miss
@@ -730,29 +783,15 @@ object Dedup {
   def minhashDupPairs(df: DataFrame, idCol: String, textCol: String,
                       blockCol: String, threshold: Double,
                       numHashes: Int = 0, bands: Int = 0): DataFrame = {
-    require((numHashes > 0) == (bands > 0),
-      s"numHashes and bands must be overridden together (got numHashes=$numHashes, bands=$bands) — " +
-        "a half-specified banding would be silently replaced by the auto-tuned one")
-    val (k, b) = if (numHashes > 0 && bands > 0) (numHashes, bands)
-                 else autoBanding(threshold)
-    require(k % b == 0, "bands must divide numHashes")
-    val r = k / b
+    val (k, b) = resolveBanding(threshold, numHashes, bands)
     // Banding rows stay NARROW (id, blk, band) — carrying the token arrays
     // through a bands×-amplified self-join + distinct was the dominant cost
     // at bench; token sets are joined back only for the deduped candidates.
     // Tokens are hashed to longs once, then the native signature kernel
     // runs (statistically equivalent to slot-hashing the strings directly;
     // candidates differ but the exact-Jaccard verify fixes the output).
-    // the fused signature+banding kernel (LshBandHashes): the two-step
-    // minhash_signature → lshBands form re-evaluated the signature once
-    // per band inside the interpreted transform lambda after projection
-    // collapse (no CSE inside HOF lambdas) — b× the kernel cost
-    val withBand = df.select(
-      col(idCol).as("id"), col(blockCol).as("blk"),
-      explode(GraftFunctions.call("lsh_band_hashes",
-        hashedShingleSet(col(textCol), 1), lit(k), lit(b))).as("band"))
-      .select(col("id"), col("blk"),
-        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
+    val withBand = bandRows(df, col(idCol).as("id"), col(blockCol).as("blk"),
+      hashedShingleSet(col(textCol), 1), k, b)
     val candidates = withBand.as("a")
       .join(withBand.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -776,53 +815,24 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** MinHash LSH over token-set equivalence classes: identical token sets
-    * have identical signatures by construction, so banding, candidate
-    * distinct, and exact verification all run on class representatives
-    * (bounded by distinct-content count); within-class doc pairs are
-    * jaccard 1.0 and emitted directly. Output-identical to
-    * [[minhashDupPairs]] — same LSH guarantees, strictly less work on
-    * duplicate-heavy corpora.
+  /** MinHash LSH over token-set equivalence classes ([[contentClasses]]):
+    * identical token sets have identical signatures by construction, so
+    * banding, candidate distinct, and exact verification all run on
+    * class representatives (bounded by distinct-content count);
+    * within-class doc pairs are jaccard 1.0 and emitted directly.
+    * Output-identical to [[minhashDupPairs]] — same LSH guarantees,
+    * strictly less work on duplicate-heavy corpora.
     */
   def minhashDupPairsClassed(df: DataFrame, idCol: String, textCol: String,
                              blockCol: String, threshold: Double,
                              numHashes: Int = 0, bands: Int = 0,
                              ngram: Int = 1): DataFrame = {
-    require((numHashes > 0) == (bands > 0),
-      s"numHashes and bands must be overridden together (got numHashes=$numHashes, bands=$bands) — " +
-        "a half-specified banding would be silently replaced by the auto-tuned one")
-    val (k, b) = if (numHashes > 0 && bands > 0) (numHashes, bands)
-                 else autoBanding(threshold)
-    require(k % b == 0, "bands must divide numHashes")
-    val r = k / b
-    // persist: this class table feeds five plan branches (within-pairs,
-    // both band-join sides, and two verification joins)
-    val classes = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        hashedShingleSet(col(textCol), ngram).as("toks"))
-      .groupBy(col("blk"), col("toks"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .withColumn("cls", xxhash64(col("blk"), col("toks")))
-      .persist()
-    graft.Caches.track(classes)
-
-    val within = classes.filter(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("jaccard", lit(1.0))
-      .select("id_a", "id_b", "jaccard")
-
-    // signature + banding in ONE native codegen'd kernel (LshBandHashes,
-    // bit-identical to lshBands over the HOF/native signature — DedupSpec
-    // pins it): splitting them let projection collapse inline
-    // minhash_signature into lshBands' interpreted transform lambda,
-    // re-evaluating the signature once per band (104× here under
-    // selective banding) with JIT-profile-dependent 8× bench swings
-    val banded = classes
-      .select(col("cls"), col("blk"),
-        explode(GraftFunctions.call("lsh_band_hashes", col("toks"), lit(k), lit(b))).as("band"))
-      .select(col("cls"), col("blk"),
-        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
+    val (k, b) = resolveBanding(threshold, numHashes, bands)
+    val classes = contentClasses(
+      df.select(col(idCol).as("id"), col(blockCol).as("blk"),
+        hashedShingleSet(col(textCol), ngram).as("toks")),
+      col("blk"))
+    val banded = bandRows(classes, col("cls"), col("blk"), col("toks"), k, b)
     val candidates = banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -831,22 +841,11 @@ object Dedup {
       .select(col("a.cls").as("cls_a"), col("b.cls").as("cls_b"))
       .dropDuplicates("cls_a", "cls_b")
     val clsInfo = classes.select(col("cls"), col("toks"), col("ids"))
-    val cross = candidates
+    val classPairs = candidates
       .join(clsInfo.withColumnsRenamed(Map("cls" -> "cls_a", "toks" -> "ta", "ids" -> "ids_a")), "cls_a")
       .join(clsInfo.withColumnsRenamed(Map("cls" -> "cls_b", "toks" -> "tb", "ids" -> "ids_b")), "cls_b")
-      .withColumn("__inter", GraftFunctions.call("sorted_intersect_size", col("ta"), col("tb")))
-      // nullif: two sub-n-token documents both shingle to EMPTY arrays
-      // and meet 0/0 here — under ANSI that throws DIVIDE_BY_ZERO; a
-      // NULL jaccard instead falls out of the >= threshold filter
-      .withColumn("jaccard", col("__inter").cast("double") /
-        nullif(size(col("ta")) + size(col("tb")) - col("__inter"), lit(0)))
-      .filter(col("jaccard") >= threshold)
-      .select(explode(col("ids_a")).as("ia"), col("ids_b"), col("jaccard"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("jaccard"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
-
-    within.unionByName(cross)
+      .transform(jaccardAtLeast("ta", "tb", threshold))
+    documentPairs(classes, classPairs, "jaccard", lit(1.0))
   }
 
   // ------------------------------------------------------------------
@@ -877,29 +876,12 @@ object Dedup {
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
                    blockCol: String, threshold: Double, ngram: Int = 1,
                    numHashes: Int = 0, bands: Int = 0): DataFrame = {
-    require((numHashes > 0) == (bands > 0),
-      s"numHashes and bands must be overridden together (got numHashes=$numHashes, bands=$bands)")
-    val (k, b) = if (numHashes > 0 && bands > 0) (numHashes, bands)
-                 else autoBanding(threshold)
-    require(k % b == 0, "bands must divide numHashes")
-    bandRows(df, idCol, textCol, blockCol, k, b, ngram)
+    val (k, b) = resolveBanding(threshold, numHashes, bands)
+    bandRows(df, col(idCol).as("id"), col(blockCol).as("blk"),
+        hashedShingleSet(col(textCol), ngram), k, b)
       .withColumn("num_hashes", lit(k))
       .withColumn("bands", lit(b))
       .withColumn("ngram", lit(ngram))
-  }
-
-  /** The shared banding projection: `(id, blk, band_idx, band_hash)` via
-    * the native signature kernel over hashed n-gram shingles.
-    */
-  private def bandRows(df: DataFrame, idCol: String, textCol: String,
-                       blockCol: String, k: Int, b: Int, ngram: Int): DataFrame = {
-    // fused kernel — see [[minhashDupPairs]] for why the two-step form
-    // re-evaluated the signature once per band
-    df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        explode(GraftFunctions.call("lsh_band_hashes",
-          hashedShingleSet(col(textCol), ngram), lit(k), lit(b))).as("band"))
-      .select(col("id"), col("blk"),
-        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
   }
 
   /** New-batch-vs-corpus near-duplicate pairs through a persisted
@@ -927,7 +909,8 @@ object Dedup {
     require(idxNgram == ngram,
       s"index was built over $idxNgram-gram shingles but the probe asked for $ngram-gram — " +
         "signatures would be incomparable and recall silently zero")
-    val probe = bandRows(newDf, idCol, textCol, blockCol, k, b, ngram)
+    val probe = bandRows(newDf, col(idCol).as("id"), col(blockCol).as("blk"),
+      hashedShingleSet(col(textCol), ngram), k, b)
     val candidates = probe.as("n")
       .join(index.as("x"),
         col("n.blk") === col("x.blk") &&
@@ -940,21 +923,10 @@ object Dedup {
       hashedShingleSet(col(textCol), ngram).as("ta"))
     val ntoks = newDf.select(col(idCol).as("new_id"),
       hashedShingleSet(col(textCol), ngram).as("tb"))
-    // the shingle sets are sorted+distinct by construction, so the
-    // native O(n+m) merge kernel computes the intersection (codegen)
-    // and |union| = na + nb - inter — array_intersect/array_union
-    // built a per-row hash set twice for the same numbers
     candidates
       .join(ctoks, "corpus_id")
       .join(ntoks, "new_id")
-      .withColumn("__inter",
-        GraftFunctions.call("sorted_intersect_size", col("ta"), col("tb")))
-      // nullif: two sub-n-token documents both shingle to EMPTY arrays
-      // and meet 0/0 here — under ANSI that throws DIVIDE_BY_ZERO; a
-      // NULL jaccard instead falls out of the >= threshold filter
-      .withColumn("jaccard", col("__inter").cast("double") /
-        nullif(size(col("ta")) + size(col("tb")) - col("__inter"), lit(0)))
-      .filter(col("jaccard") >= threshold)
+      .transform(jaccardAtLeast("ta", "tb", threshold))
       .select(col("corpus_id"), col("new_id"), col("jaccard"))
   }
 
@@ -1267,24 +1239,12 @@ object Dedup {
                                portableHash: Boolean = false): DataFrame = {
     val nSeg = maxDistance + 1
     val segBits = 64 / nSeg
-    // class collapse: group ids by identical token set. Zero-token docs
-    // (empty/whitespace text) are excluded — same contract as
-    // [[simhashTable]]: they'd otherwise form one giant hamming-0 class.
+    // class collapse over the token set; zero-token docs (empty or
+    // whitespace text, whose "" token removeEmpty strips) join no class
+    // — same contract as [[simhashTable]]
     val tokHashes = if (portableHash) md5TokenHashes(col(textCol))
                     else hashedShingleSet(col(textCol), 1, removeEmpty = true)
-    val classes = df.select(col(idCol).as("id"), tokHashes.as("toks"))
-      .filter(size(col("toks")) > 0)
-      .groupBy(col("toks"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .withColumn("cls", xxhash64(col("toks")))
-      .persist()
-    graft.Caches.track(classes)
-    val within = classes.filter(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", lit(0))
-      .select("id_a", "id_b", "hamming")
+    val classes = contentClasses(df.select(col(idCol).as("id"), tokHashes.as("toks")))
     // simhash per class: native one-pass kernel over the pre-hashed
     // tokens — map-side, replacing an explode + 64-sum hash aggregate
     // (one shuffled row per (class, token)) with zero shuffle
@@ -1304,13 +1264,10 @@ object Dedup {
       .dropDuplicates("cls_a", "cls_b")
       .filter(col("hamming") <= maxDistance)
     val clsIds = classes.select(col("cls"), col("ids"))
-    val cross = crossCls
-      .join(clsIds.withColumnsRenamed(Map("cls" -> "cls_a", "ids" -> "ids_a")), "cls_a")
-      .join(clsIds.withColumnsRenamed(Map("cls" -> "cls_b", "ids" -> "ids_b")), "cls_b")
-      .select(explode(col("ids_a")).as("ia"), col("ids_b"), col("hamming"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("hamming"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("hamming"))
-    within.unionByName(cross)
+    documentPairs(classes,
+      crossCls
+        .join(clsIds.withColumnsRenamed(Map("cls" -> "cls_a", "ids" -> "ids_a")), "cls_a")
+        .join(clsIds.withColumnsRenamed(Map("cls" -> "cls_b", "ids" -> "ids_b")), "cls_b"),
+      "hamming", lit(0))
   }
 }

@@ -72,8 +72,13 @@ object Similarity {
   /** `sim >= threshold`, with an undefined (NaN) cosine never similar:
     * Spark orders NaN above every number, so a bare `>=` would let every
     * pair touching a zero-norm vector through. NaN becomes null rather
-    * than being tested apart, so `sim` is referenced once: the filter is
-    * pushed into the scoring join's condition.
+    * than being tested apart, so the test names `sim` once. Catalyst
+    * pushes the test into the scoring join's condition, and where the
+    * output keeps the score (`cosinePairsAbove`, `cosinePairsAboveBlocked`)
+    * the projection above the join computes the cosine again for each
+    * pair that passed. Scoring once through a one-element explode, which
+    * stops the pushdown, measured slower: q26 at sf0.1 on 4 cores took
+    * 4.45 s against 3.30 s (medians of 6 alternating runs).
     */
   private def atLeast(sim: Column, threshold: Double): Column =
     nanvl(sim, lit(null).cast("double")) >= threshold

@@ -13,9 +13,7 @@ object CorpusCurationMain {
       "usage: CorpusCurationMain <documentsParquet> <outDir> [lang]")
     val Array(in, out) = args.take(2)
     val lang = if (args.length > 2) args(2) else "en"
-    val spark = graft.GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      appName = "graft-curation")
+    val spark = graft.GraftSession.local(appName = "graft-curation")
     try graft.Caches.withScope {
       val docs = spark.read.parquet(in)
       // one pipeline run feeds BOTH outputs — the audit counts and the

@@ -16,8 +16,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val spark = graft.GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, appName = "graft-profile")
+    val spark = graft.GraftSession.local(appName = "graft-profile")
 
     @volatile var verbose = false
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

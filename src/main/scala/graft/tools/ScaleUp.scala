@@ -43,8 +43,7 @@ object ScaleUp {
       case _ => sys.error(
         "usage: ScaleUp <inDir> <outDir> <factor> [perturb]")
     }
-    val spark = graft.GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, appName = "graft-scaleup")
+    val spark = graft.GraftSession.local(appName = "graft-scaleup")
     try run(spark, inDir, outDir, factorS.toInt, perturb)
     finally spark.stop()
   }

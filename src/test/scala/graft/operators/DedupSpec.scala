@@ -565,30 +565,67 @@ class DedupSpec extends SparkSpec {
     assert(kept == Set(10L, 12L, 20L))
   }
 
-  /** Checks both tiers of the dense path's broadcast gate: the default
-    * and [[atScale]].
+  /** Checks a pair miner against its brute-force predicate over every
+    * document pair, on both tiers of the dense path's broadcast gate:
+    * the default and [[atScale]].
     */
-  private def checkContainmentExact(texts: Int => String, nDocs: Int,
-                                    threshold: Double): Unit = {
+  private def checkPairsExact(texts: Int => String, nDocs: Int)(
+      mine: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      qualifies: (String, String) => Boolean): Unit = {
     import spark.implicits._
     val docs = (0 until nDocs).map(i => (i.toLong, texts(i), "en"))
       .toDF("doc_id", "text", "lang")
-    def pairs = Dedup.containmentPairs(docs, "doc_id", "text", "lang", 2, threshold)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairs = mine(docs).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = pairs
     assert(atScale(pairs) == got, "the at-scale tier found other pairs")
-    def sh(t: String): Set[String] =
-      t.split(" ").sliding(2).map(_.mkString(" ")).toSet
     val local = (0 until nDocs).flatMap { i => (i + 1 until nDocs).map(j => (i, j)) }
-      .flatMap { case (i, j) =>
-        val (a, b) = (sh(texts(i)), sh(texts(j)))
-        val shared = (a intersect b).size
-        val cont = math.max(shared.toDouble / a.size, shared.toDouble / b.size)
-        if (cont >= threshold) Some((i.toLong, j.toLong)) else None
-      }.toSet
+      .collect { case (i, j) if qualifies(texts(i), texts(j)) => (i.toLong, j.toLong) }
+      .toSet
     assert(local.nonEmpty, "fixture must produce qualifying pairs")
     assert(got == local, s"candidate strategy lost or invented pairs: " +
       s"missing=${local -- got} extra=${got -- local}")
+  }
+
+  private def checkContainmentExact(texts: Int => String, nDocs: Int,
+                                    threshold: Double): Unit = {
+    def sh(t: String): Set[String] =
+      t.split(" ").sliding(2).map(_.mkString(" ")).toSet
+    checkPairsExact(texts, nDocs)(
+      Dedup.containmentPairs(_, "doc_id", "text", "lang", 2, threshold),
+      { (x, y) =>
+        val (a, b) = (sh(x), sh(y))
+        val shared = (a intersect b).size
+        math.max(shared.toDouble / a.size, shared.toDouble / b.size) >= threshold
+      })
+  }
+
+  /** Winnowing's brute force: md5 word k-gram hashes (the first 32 bits,
+    * as `winnowedOverlapPairs` takes them), their window-w minima, and
+    * at least `minShared` fingerprints in common.
+    */
+  private def checkWinnowingExact(texts: Int => String, nDocs: Int, k: Int, w: Int,
+                                  minShared: Int, blockPath: Boolean): Unit = {
+    def fps(t: String): Set[Long] = {
+      val toks = t.trim.toLowerCase.split("\\s+")
+      val grams = (0 to math.max(toks.length - k, 0)).map { i =>
+        val d = java.security.MessageDigest.getInstance("MD5")
+          .digest(toks.slice(i, i + k).mkString(" ").getBytes("UTF-8"))
+        java.lang.Long.parseLong(d.take(4).map("%02x".format(_)).mkString, 16)
+      }
+      (0 to math.max(grams.length - w, 0)).map(j => grams.slice(j, j + w).min).toSet
+    }
+    def mine(df: org.apache.spark.sql.DataFrame) = {
+      val pairs = Dedup.winnowedOverlapPairs(df, "doc_id", "text", "lang", k, w, minShared)
+      // the fingerprint index explodes the persisted fingerprint sets (a
+      // Generate over the cached table); the block join does not
+      val indexed = pairs.queryExecution.optimizedPlan.collectFirst {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+      }.isDefined
+      assert(indexed != blockPath,
+        s"expected the ${if (blockPath) "block join" else "fingerprint index"}")
+      pairs
+    }
+    checkPairsExact(texts, nDocs)(mine, (x, y) => (fps(x) intersect fps(y)).size >= minShared)
   }
 
   test("containmentPairs is EXACT on a dense small-vocab corpus (block-join path)") {
@@ -649,6 +686,96 @@ class DedupSpec extends SparkSpec {
         prev.split(" ").slice(2, 6).mkString(" ")
       } else (0 until 8).map(j => s"t${i}x$j").mkString(" ")
     checkContainmentExact(text, nDocs = 60, threshold = 0.8)
+  }
+
+  test("winnowedOverlapPairs is EXACT on a dense small-vocab corpus (block-join path)") {
+    // 60 docs over a 2-token universe: four bigram fingerprints carry
+    // every document (Σdf² = 7,830 > Σ|block|² = 3,600), so the cost
+    // model must pick the block join; 510 of the 1,770 pairs qualify
+    val vocab = "x y".split(" ")
+    checkWinnowingExact(i =>
+      (0 until 6 + i % 9).map(j => vocab((i * 7 + j) * (j + 3) / 5 % 2)).mkString(" "),
+      nDocs = 60, k = 2, w = 2, minShared = 3, blockPath = true)
+  }
+
+  test("winnowedOverlapPairs is EXACT on a sparse unique-vocab corpus (fingerprint-index path)") {
+    // per-doc-unique tokens except every 4th doc, which copies a run of
+    // its predecessor: df ≈ 1 per fingerprint (Σdf² = 370 < Σ|block|²
+    // = 3,600), so the index is cheaper; 15 pairs qualify
+    def text(i: Int): String =
+      if (i % 4 == 1) {
+        val prev = (0 until 12).map(j => s"t${i - 1}x$j").mkString(" ")
+        s"fresh${i}a " + prev.split(" ").slice(2, 10).mkString(" ") + s" fresh${i}b"
+      } else (0 until 12).map(j => s"t${i}x$j").mkString(" ")
+    checkWinnowingExact(text, nDocs = 60, k = 2, w = 3, minShared = 2, blockPath = false)
+  }
+
+  test("classed miners on degenerate input: no throw, no empty-set document, " +
+    "one hot class is every within-class pair") {
+    import spark.implicits._
+    def frame(texts: Seq[String]) = texts.zipWithIndex
+      .map { case (t, i) => (i.toLong + 1, t, "en") }.toDF("doc_id", "text", "lang")
+    val hot = 5
+    val fixtures = Seq(
+      "empty" -> frame(Nil),
+      "all-null" -> frame(Seq(null, null, null)),
+      // 6 and 7 are the real pair; the rest have one token (1, 3, 8),
+      // none (4, 5: a blank text's one token is "", which n = 1 keeps,
+      // so 4 and 5 pair there too) or no text (2)
+      "sub-n" -> frame(Seq("alpha", null, "beta", "   ", "",
+        "the same four words", "The same four words", "gamma")),
+      "one row" -> frame(Seq("just one document")),
+      "hot class" -> frame(Seq.fill(hot)("every row says this")))
+    def pairsOf(out: org.apache.spark.sql.DataFrame, score: String) =
+      out.select(col("id_a"), col("id_b"), col(score).cast("double")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    for ((fixture, df) <- fixtures; n <- Seq(1, 2)) {
+      def setless(items: org.apache.spark.sql.Column): Set[Long] =
+        df.filter(coalesce(size(items), lit(0)) <= 0).select("doc_id").as[Long].collect().toSet
+      val subN = if (n == 1) Seq((4L, 5L), (6L, 7L)) else Seq((6L, 7L))
+      val miners = Seq(
+        ("jaccardPairsClassed", setless(Dedup.hashedShingleSet(col("text"), n)), 1.0, subN,
+          () => pairsOf(Dedup.jaccardPairsClassed(df, "doc_id", "text", "lang", 0.5, ngram = n),
+            "jaccard")),
+        ("minhashDupPairsClassed", setless(Dedup.hashedShingleSet(col("text"), n)), 1.0, subN,
+          () => pairsOf(Dedup.minhashDupPairsClassed(df, "doc_id", "text", "lang", 0.8,
+            ngram = n), "jaccard"))) ++
+        // SimHash mines the token set without "" (it takes no n): run it once
+        (if (n == 1) Seq(("simhashDupPairsSegmented",
+          setless(Dedup.hashedShingleSet(col("text"), 1, removeEmpty = true)), 0.0,
+          Seq((6L, 7L)),
+          () => pairsOf(Dedup.simhashDupPairsSegmented(df, "doc_id", "text", 3), "hamming")))
+        else Nil)
+      for ((miner, degenerate, same, subNPairs, run) <- miners) {
+        val at = s"$miner, n=$n, $fixture"
+        val pairs = run()
+        assert(!pairs.exists(p => degenerate(p._1) || degenerate(p._2)),
+          s"$at: a pair holds a document with no shingles: $pairs")
+        if (fixture == "hot class")
+          assert(pairs.size == hot * (hot - 1) / 2 && pairs.forall(_._3 == same), s"$at: $pairs")
+        if (fixture == "sub-n")
+          assert(pairs.map(p => (p._1, p._2)).sorted == subNPairs, s"$at: $pairs")
+      }
+      val degenerate = setless(Dedup.hashedShingleSet(col("text"), n))
+      // the incremental probe has no class table: two empty sets meet
+      // 0/0 in its Jaccard, and the pair must drop, not throw
+      if (fixture == "sub-n") {
+        val index = Dedup.minhashIndex(df, "doc_id", "text", "lang", 0.8, ngram = n)
+        val probed = Dedup.incrementalDupPairs(df, df, index, "doc_id", "text", "lang", 0.8,
+            ngram = n)
+          .select("corpus_id", "new_id").as[(Long, Long)].collect().toSet
+        assert(probed == subN.flatMap(p => Seq(p, p.swap)).toSet,
+          s"incrementalDupPairs, n=$n: $probed")
+      }
+      val clusters = Dedup.dedupClustersClassed(df, "doc_id", "text", "lang", 0.5, ngram = n)
+        .select("member_ids").as[Seq[Long]].collect().toSeq
+      val at = s"dedupClustersClassed, n=$n, $fixture"
+      assert(!clusters.flatten.exists(degenerate), s"$at: $clusters")
+      if (fixture == "hot class") assert(clusters == Seq((1L to hot).toSeq), s"$at: $clusters")
+      if (fixture == "sub-n")
+        assert(clusters.toSet == subN.map(p => Seq(p._1, p._2)).toSet, s"$at: $clusters")
+      graft.Caches.unpersistAll()
+    }
   }
 
   test("pairPartitions scales with the measured pair estimate, floored at the session default") {

@@ -2,14 +2,10 @@
 # Run a graft main directly against the sbt-compiled classes, bypassing
 # sbt (useful when sbt's lock is held by a concurrent test run).
 # Usage: tools/run_main.sh <mainClass> [args...]
-# Env passthrough: SPARK_GRAFT_* vars are read by the mains themselves.
+# Env passthrough: SPARK_GRAFT_* vars are read by the mains themselves
+# (SPARK_GRAFT_CPUS defaults to every processor, in GraftSession).
 set -euo pipefail
 CLS="$1"; shift
-# Bench/Verify default to local[4] when SPARK_GRAFT_CPUS is unset — the
-# driver always exports 32. Match it, or every timing silently runs on
-# an eighth of the machine (cost a whole false-regression investigation).
-: "${SPARK_GRAFT_CPUS:=32}"
-export SPARK_GRAFT_CPUS
 # 128+ queries x whole-stage codegen generate enough JIT'd classes to
 # exhaust the default 240 MB reserved code cache mid-run, after which
 # HotSpot silently stops compiling and everything runs interpreted —
