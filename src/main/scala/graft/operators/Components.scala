@@ -70,8 +70,7 @@ object Components {
     val nodes = (if (allIds == null) nodes0
                  else nodes0.unionByName(allIds.select(col(idCol).cast("long").as("id")))
                    .distinct())
-    var labels = Graph.inRound(sc, op, 0)(
-      graft.Caches.checkpoint(nodes.select(col("id"), col("id").as("component"))))
+    var labels = Graph.cut(sc, op, 0)(nodes.select(col("id"), col("id").as("component")))
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxIterations) {
@@ -91,12 +90,12 @@ object Components {
       // decrease, so the jump is always sound). It shortcuts label
       // chains only: rounds still grow linearly on a path whose ids are
       // not in path order (see the object's scaladoc)
-      val next = Graph.inRound(sc, op, round)(graft.Caches.checkpoint(
+      val next = Graph.cut(sc, op, round)(
         cand.join(labels.withColumnsRenamed(
             Map("id" -> "cand", "component" -> "cand_lbl")), Seq("cand"), "left")
           .select(col("id"),
             least(col("cand"), coalesce(col("cand_lbl"), col("cand"))).as("component"),
-            col("prev"))))
+            col("prev")))
       changed = Graph.inRound(sc, op, round)(
         next.filter(col("component") =!= col("prev")).count())
       graft.Caches.release(labels)

@@ -560,17 +560,8 @@ object Dedup {
     // would be the whole corpus in every executor. (For mostly-unique
     // corpora prefer [[minhashDupPairsClassed]] outright: all-pairs over
     // class reps is quadratic regardless of join strategy.)
-    // size-ratio prefilter INSIDE the join condition (the similarity-
-    // join length filter): J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so any
-    // pair with min < t·max can never reach the threshold — pruned
-    // BEFORE the per-pair merge intersect, which dominated the classed
-    // family's CPU (q49/q95/q159/q171). Exact: exclusion uses a
-    // necessary condition of jaccard ≥ t, never the estimate itself.
     val classPairs = classes.as("a").join(classes.as("b"),
-        col("a.blk") === col("b.blk") && col("a.cls") < col("b.cls") &&
-          least(size(col("a.toks")), size(col("b.toks"))).cast("double") >=
-            lit(threshold) *
-              greatest(size(col("a.toks")), size(col("b.toks"))))
+        col("a.blk") === col("b.blk") && col("a.cls") < col("b.cls"))
       .transform(jaccardAtLeast("a.toks", "b.toks", threshold))
       .select(col("a.cls").as("cls_a"), col("b.cls").as("cls_b"),
         col("a.ids").as("ids_a"), col("b.ids").as("ids_b"), col("jaccard"))

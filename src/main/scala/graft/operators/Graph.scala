@@ -1,34 +1,43 @@
 package graft.operators
 
+import scala.reflect.ClassTag
 import org.apache.spark.SparkContext
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.GraftDatasetBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.Gates
 import graft.expressions.GraftFunctions
 
-/** Iterative link-analysis over edge lists — centrality for corpus
-  * graphs a training-data pipeline actually builds (near-duplicate
-  * graphs, citation/link graphs, entity co-occurrence). No reference
-  * implementation (the pandas ETL has no graph surface, SURVEY.md §2.12);
-  * the semantics are the classic damped PageRank (Page et al. 1999)
-  * by power iteration.
+/** Iterative link analysis and cohesion over edge lists — centrality and
+  * communities for the corpus graphs a training-data pipeline actually
+  * builds (near-duplicate graphs, citation/link graphs, entity
+  * co-occurrence). No reference implementation (the pandas ETL has no
+  * graph surface, SURVEY.md §2.12); each operator cites its algorithm.
   *
-  * Scale shape (the 100 TB contract): each iteration is two shuffle
-  * joins keyed on node id — edge ⨝ rank on `src`, contribution sum on
-  * `dst` — plus a left join back to the node spine, all distributed
-  * hash aggregations with map-side combine. The rank table is one row
-  * per NODE (never per edge) and each round's state is cut with
-  * [[graft.Caches.checkpoint]], so the plan and its stage DAG stay
-  * constant-size regardless of iteration count. How much node-sized
-  * state may reach the driver is [[graft.Gates.NodeState]]; nothing
-  * edge-sized ever does. Above it every operator runs keyed shuffle
-  * joins; both tiers compute the same result.
+  * Front ends. [[pageRank]], [[hits]] and [[labelPropagation]] read a
+  * DIRECTED edge list: duplicate (src, dst) pairs collapse and the node
+  * spine is every distinct endpoint, a null id included. [[kCore]] and
+  * [[triangleCounts]] read an UNDIRECTED one: null endpoints and
+  * self-loops drop, and each edge is kept once as (a, b) with a < b.
+  *
+  * Tiers. Each operator asks [[graft.Gates]] whether its node-sized
+  * state fits [[graft.Gates.NodeState]]; nothing edge-sized ever reaches
+  * the driver. Below the gate, `pageRank` and `kCore` run on driver
+  * arrays (a dense id index, the edge list cached once as index pairs,
+  * one job per round), and `hits`, `labelPropagation` and
+  * `triangleCounts` broadcast their node tables into the joins, so the
+  * edge list streams through map-side joins and is never shuffled
+  * (`triangleCounts`' adjacency also asks [[graft.Gates.AdjacencyEdges]]).
+  * Above it every operator runs keyed shuffle joins with map-side
+  * combine. Both tiers compute the same result. The SQL loops keep one
+  * row per node of state (`kCore`: the surviving edge set) and cut each
+  * round with [[graft.Caches.checkpoint]], so the plan and its stage DAG
+  * stay constant-size over rounds. Every round's jobs are described as
+  * `op/round r`.
   */
 object Graph {
 
@@ -45,7 +54,9 @@ object Graph {
     *
     * A fixed iteration count (not a convergence test) keeps the output
     * a pure function of (edges, iterations, damping) — oracle-checkable
-    * by unrolling the same joins in SQL.
+    * by unrolling the same joins in SQL. Each SQL round is two shuffle
+    * joins keyed on node id — edge ⨝ rank on `src`, contribution sum on
+    * `dst` — plus a left join back to the node spine.
     *
     * Output: (id, pr), one row per node.
     */
@@ -55,21 +66,10 @@ object Graph {
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
     val sc = edges.sparkSession.sparkContext
-    val e = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .persist()
-    graft.Caches.track(e)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct()
-      .persist()
-    graft.Caches.track(nodes)
+    val (e, nodes) = directed(edges, srcCol, dstCol)
     val n = inRound(sc, "pageRank", 0)(nodes.count())
-    if (n == 0) {
-      // empty graph: empty (id, pr) result with the right schema
-      return nodes.withColumn("pr", lit(0.0))
-    }
+    // empty graph: empty (id, pr) result with the right schema
+    if (n == 0) return nodes.withColumn("pr", lit(0.0))
     val teleport = (1.0 - damping) / n
     if (Gates.under(edges.sparkSession, n, Gates.NodeState))
       return pageRankArrays(e, nodes, iterations, damping, teleport)
@@ -82,23 +82,18 @@ object Graph {
     val eDeg = e.join(outDeg, "src").persist()
     graft.Caches.track(eDeg)
 
-    var ranks = inRound(sc, "pageRank", 0)(
-      graft.Caches.checkpoint(nodes.withColumn("pr", lit(1.0 / n))))
-    for (r <- 1 to iterations) {
+    sqlRounds(sc, "pageRank", iterations,
+        cut(sc, "pageRank", 0)(nodes.withColumn("pr", lit(1.0 / n)))) { (ranks, _) =>
       val contribs = eDeg
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), (col("pr") / col("__deg")).as("__c"))
         .groupBy("id")
         .agg(sum(col("__c")).as("__in"))
-      val next = inRound(sc, "pageRank", r)(graft.Caches.checkpoint(nodes
+      nodes
         .join(contribs, Seq("id"), "left")
         .select(col("id"),
-          (lit(teleport) + lit(damping) * coalesce(col("__in"), lit(0.0)))
-            .as("pr"))))
-      graft.Caches.release(ranks)
-      ranks = next
+          (lit(teleport) + lit(damping) * coalesce(col("__in"), lit(0.0))).as("pr"))
     }
-    ranks
   }
 
   /** [[pageRank]] below the node-state gate, with the SQL path's
@@ -110,44 +105,30 @@ object Graph {
     * match null.
     */
   private def pageRankArrays(e: DataFrame, nodes: DataFrame, iterations: Int,
-                             damping: Double, teleport: Double): DataFrame = {
-    val sc = e.sparkSession.sparkContext
-    val g = inRound(sc, "pageRank", 0)(denseGraph(nodes, e))
-    val n = g.ids.length
-    try {
-      lazy val outDeg = inRound(sc, "pageRank", 0) {
-        g.pairs.map { p =>
-          val d = new Array[Int](n)
-          var j = 0
-          while (j < p.length) { if (p(j) >= 0) d(p(j)) += 1; j += 2 }
-          d
-        }.treeReduce(addInto)
-      }
+                             damping: Double, teleport: Double): DataFrame =
+    dense("pageRank", nodes, e, nodes.withColumn("pr", lit(0.0)).schema, Seq(e, nodes)) { g =>
+      val n = g.ids.length
+      lazy val outDeg = g.round(0, ()) { (_, p) =>
+        val d = new Array[Int](n)
+        var j = 0
+        while (j < p.length) { if (p(j) >= 0) d(p(j)) += 1; j += 2 }
+        d
+      }(addInto)
       var ranks = Array.fill(n)(1.0 / n)
       for (r <- 1 to iterations) {
-        val share = sc.broadcast(
-          Array.tabulate(n)(i => if (outDeg(i) > 0) ranks(i) / outDeg(i) else 0.0))
-        val in = try inRound(sc, "pageRank", r) {
-          g.pairs.map { p =>
-            val s = share.value
-            val acc = new Array[Double](n)
-            var j = 0
-            while (j < p.length) {
-              if (p(j) >= 0 && p(j + 1) >= 0) acc(p(j + 1)) += s(p(j))
-              j += 2
-            }
-            acc
-          }.treeReduce(addInto)
-        } finally share.destroy()
-        ranks = in.map(c => teleport + damping * c)
+        val share = Array.tabulate(n)(i => if (outDeg(i) > 0) ranks(i) / outDeg(i) else 0.0)
+        ranks = g.round(r, share) { (s, p) =>
+          val acc = new Array[Double](n)
+          var j = 0
+          while (j < p.length) {
+            if (p(j) >= 0 && p(j + 1) >= 0) acc(p(j + 1)) += s(p(j))
+            j += 2
+          }
+          acc
+        }(addInto).map(c => teleport + damping * c)
       }
-      driverFrame(e.sparkSession, nodes.withColumn("pr", lit(0.0)).schema,
-        ranks.indices.map(i => InternalRow(g.ids(i), ranks(i))))
-    } finally {
-      g.release()
-      Seq(e, nodes).foreach(graft.Caches.release)
+      ranks.indices.map(i => InternalRow(g.ids(i), ranks(i)))
     }
-  }
 
   /** HITS hubs-and-authorities (Kleinberg, JACM 1999) over a DIRECTED
     * edge list, fixed iteration count — the link-analysis complement
@@ -162,9 +143,8 @@ object Graph {
     * start uniform at 1∕N. Sources with no in-links hold authority 0,
     * sinks with no out-links hub 0 — both stay in the output.
     *
-    * Scale shape mirrors [[pageRank]]: per half-iteration one edge ⨝
-    * score join, a node-keyed sum with map-side combine, a 1-row total
-    * broadcast back; score state is one row per node.
+    * Per half-iteration: one edge ⨝ score join, a node-keyed sum with
+    * map-side combine, a 1-row total broadcast back.
     *
     * Output: (id, auth, hub), one row per node.
     */
@@ -172,67 +152,39 @@ object Graph {
            iterations: Int): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     val sc = edges.sparkSession.sparkContext
-    val e = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .persist()
-    graft.Caches.track(e)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct()
-      .persist()
-    graft.Caches.track(nodes)
+    val (e, nodes) = directed(edges, srcCol, dstCol)
     val n = inRound(sc, "hits", 0)(nodes.count())
-    if (n == 0) {
-      return nodes.withColumn("auth", lit(0.0)).withColumn("hub", lit(0.0))
-    }
-
-    // node-sized score tables broadcast below the node-state gate: both
-    // per-half-step joins go map-side and the edge list is never
-    // shuffled
-    val attach: DataFrame => DataFrame =
-      if (Gates.under(edges.sparkSession, n, Gates.NodeState)) df => broadcast(df)
-      else identity
-
+    val attach = broadcastIf(Gates.under(edges.sparkSession, n, Gates.NodeState))
     // one L1-normalized propagation half-step: scores flow across the
     // edge list from `from` endpoints onto `onto` endpoints. `raw` is
-    // persisted for the step: it feeds both the 1-row total and the
-    // node join, and used to be recomputed (a whole extra edge pass)
-    // for each.
-    // returns (normalized scores, the persisted per-step `raw` table) —
-    // the caller releases `raw` once the round's checkpoint has
-    // materialized, keeping cache usage O(1) in iterations
-    def halfStep(scores: DataFrame, scoreCol: String,
-                 from: String, onto: String, outCol: String)
-        : (DataFrame, DataFrame) = {
-      val raw = e
+    // kept for the round: it feeds both the 1-row total and the node
+    // join, each of which would otherwise recompute it (an edge pass)
+    def halfStep(scores: DataFrame, keep: DataFrame => DataFrame, scoreCol: String,
+                 from: String, onto: String, outCol: String): DataFrame = {
+      val raw = keep(e
         .join(attach(scores.select(col("id").as(from), col(scoreCol))), from)
         .groupBy(col(onto).as("id"))
-        .agg(sum(col(scoreCol)).as("__raw"))
-        .persist()
-      graft.Caches.track(raw)
+        .agg(sum(col(scoreCol)).as("__raw")))
       val tot = raw.agg(sum(col("__raw")).as("__tot"))
-      val out = nodes
+      nodes
         .join(attach(raw), Seq("id"), "left")
         .crossJoin(broadcast(tot))
         .select(col("id"),
           when(col("__tot") > 0, coalesce(col("__raw"), lit(0.0)) / col("__tot"))
             .otherwise(lit(0.0)).as(outCol))
-      (out, raw)
     }
 
-    var scores = inRound(sc, "hits", 0)(graft.Caches.checkpoint(nodes
-      .withColumn("auth", lit(0.0))
-      .withColumn("hub", lit(1.0 / n))))
-    for (r <- 1 to iterations) {
-      val (auth, rawA) = halfStep(scores.select(col("id"), col("hub")), "hub",
-        "src", "dst", "auth")
-      val (hub, rawH) = halfStep(auth, "auth", "dst", "src", "hub")
-      val next = inRound(sc, "hits", r)(graft.Caches.checkpoint(auth.join(hub, "id")))
-      Seq(rawA, rawH, scores).foreach(graft.Caches.release)
-      scores = next
+    def round(scores: DataFrame, keep: DataFrame => DataFrame): DataFrame = {
+      val auth = halfStep(scores.select(col("id"), col("hub")), keep, "hub", "src", "dst", "auth")
+      // left: a null id is a node too, and no edge leaves it (hub 0)
+      auth.join(halfStep(auth, keep, "auth", "dst", "src", "hub"), Seq("id"), "left")
+        .na.fill(0.0, Seq("hub"))
     }
-    scores.select(col("id"), col("auth"), col("hub"))
+    val start = nodes.withColumn("auth", lit(0.0)).withColumn("hub", lit(1.0 / n))
+    // an empty graph runs no job, and keeps the schema its rounds give
+    (if (n == 0) (if (iterations == 0) start else round(start, identity))
+     else sqlRounds(sc, "hits", iterations, cut(sc, "hits", 0)(start))(round))
+      .select(col("id"), col("auth"), col("hub"))
   }
 
   /** Synchronous label propagation (Raghavan, Albert & Kumara 2007) —
@@ -246,36 +198,19 @@ object Graph {
     * unrolling, where the classic asynchronous variant is
     * order-dependent.
     *
-    * Scale shape mirrors [[pageRank]]: per iteration one edge ⨝ label
-    * join, an (id, label)-keyed count with map-side combine, a
-    * node-keyed window over the ≤ degree candidate labels per node.
-    * Label state is one row per node.
+    * Per iteration: one edge ⨝ label join, an (id, label)-keyed count
+    * with map-side combine, and a node-keyed min over the ≤ degree
+    * candidate labels per node.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     val sc = edges.sparkSession.sparkContext
-    val e = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .persist()
-    graft.Caches.track(e)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct()
-      .persist()
-    graft.Caches.track(nodes)
-    // node-sized label state broadcasts below the node-state gate: the
-    // per-iteration joins go map-side and the edge list is never
-    // shuffled
-    val attach: DataFrame => DataFrame =
-      if (Gates.under(edges.sparkSession, inRound(sc, "labelPropagation", 0)(nodes.count()),
-          Gates.NodeState)) df => broadcast(df)
-      else identity
-
-    var labels = inRound(sc, "labelPropagation", 0)(
-      graft.Caches.checkpoint(nodes.withColumn("label", col("id"))))
-    for (r <- 1 to iterations) {
+    val (e, nodes) = directed(edges, srcCol, dstCol)
+    val attach = broadcastIf(Gates.under(edges.sparkSession,
+      inRound(sc, "labelPropagation", 0)(nodes.count()), Gates.NodeState))
+    sqlRounds(sc, "labelPropagation", iterations,
+        cut(sc, "labelPropagation", 0)(nodes.withColumn("label", col("id")))) { (labels, _) =>
       val votes = e
         .join(attach(labels.withColumnRenamed("id", "dst")), "dst")
         .groupBy(col("src").as("id"), col("label"))
@@ -293,14 +228,10 @@ object Graph {
       // labels IS the node spine (one row per node by construction), so
       // joining back through `nodes` was a redundant third node-sized
       // join per iteration — carry the old label directly
-      val next = inRound(sc, "labelPropagation", r)(graft.Caches.checkpoint(
-        labels.withColumnRenamed("label", "__old")
-          .join(attach(winner), Seq("id"), "left")
-          .select(col("id"), coalesce(col("__new"), col("__old")).as("label"))))
-      graft.Caches.release(labels)
-      labels = next
+      labels.withColumnRenamed("label", "__old")
+        .join(attach(winner), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__new"), col("__old")).as("label"))
     }
-    labels
   }
 
   /** Bounded k-core peeling (Matula–Beck): iteratively delete every
@@ -315,43 +246,31 @@ object Graph {
     * ≥ the peel depth reaches the true k-core and extra rounds are
     * no-ops (spec'd).
     *
-    * Scale shape: each round is one degree aggregation (map-side
-    * combined) + two node-keyed semi-joins restricting the edge list;
-    * state is the edge set itself, shrinking monotonically. Output:
-    * (id, degree) over the surviving subgraph — nodes that lost every
-    * edge drop out with it.
+    * Each SQL round is one degree aggregation (map-side combined) + two
+    * node-keyed semi-joins restricting the edge list; state is the edge
+    * set itself, shrinking monotonically. Output: (id, degree) over the
+    * surviving subgraph — nodes that lost every edge drop out with it.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val sc = edges.sparkSession.sparkContext
-    def degrees(e: DataFrame) = e.select(col("a").as("id"))
-      .unionByName(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
-    var e = inRound(sc, "kCore", 0)(graft.Caches.checkpoint(edges
-      .select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()))
+    val e = cut(sc, "kCore", 0)(undirected(edges, col(srcCol), col(dstCol)))
     // survivor sets are node-sized, at most 2·edges before the first
     // peel; the checkpoint measured the edge count
     if (Gates.under(edges.sparkSession,
         2 * e.queryExecution.optimizedPlan.stats.rowCount.get.toLong, Gates.NodeState))
-      return kCoreArrays(e, k, rounds, degrees(e).schema)
-    for (r <- 1 to rounds) {
-      // persisted: surv feeds BOTH semi-joins — without it the degree
+      return kCoreArrays(e, k, rounds)
+    degrees(sqlRounds(sc, "kCore", rounds, e) { (live, keep) =>
+      // kept: surv feeds BOTH semi-joins — without it the degree
       // aggregation runs twice per round (the two subtrees' exprIds
       // differ, so exchange reuse never matched them)
-      val surv = degrees(e).filter(col("degree") >= k).select(col("id"))
-        .persist()
-      val next = inRound(sc, "kCore", r)(graft.Caches.checkpoint(e
+      val surv = keep(degrees(live).filter(col("degree") >= k).select(col("id")))
+      live
         .join(surv.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-        .join(surv.withColumnRenamed("id", "b"), Seq("b"), "left_semi")))
-      Seq(e, surv).foreach(graft.Caches.release)
-      e = next
-    }
-    degrees(e)
+        .join(surv.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
+    })
   }
 
   /** [[kCore]] below the node-state gate: the survivors are an n-bit
@@ -360,17 +279,11 @@ object Graph {
     * r−1 (round 0 counts every edge). Peeling is monotone, so a round
     * that removes no node is the fixpoint and ends the loop early.
     */
-  private def kCoreArrays(e: DataFrame, k: Int, rounds: Int,
-                          schema: StructType): DataFrame = {
-    val sc = e.sparkSession.sparkContext
-    val nodes = e.select(col("a").as("id")).unionByName(e.select(col("b").as("id"))).distinct()
-    val g = inRound(sc, "kCore", 0)(denseGraph(nodes, e))
-    val n = g.ids.length
-    try {
-      def degrees(alive: java.util.BitSet): Array[Int] = {
-        val live = sc.broadcast(alive)
-        try g.pairs.map { p =>
-          val a = live.value
+  private def kCoreArrays(e: DataFrame, k: Int, rounds: Int): DataFrame =
+    dense("kCore", endpoints(e, "a", "b").distinct(), e, degrees(e).schema, Seq(e)) { g =>
+      val n = g.ids.length
+      def degreesAmong(r: Int, alive: java.util.BitSet): Array[Int] =
+        g.round(r, alive) { (a, p) =>
           val d = new Array[Int](n)
           var j = 0
           while (j < p.length) {
@@ -380,12 +293,10 @@ object Graph {
             j += 2
           }
           d
-        }.treeReduce(addInto)
-        finally live.destroy()
-      }
+        }(addInto)
       val all = new java.util.BitSet(n)
       all.set(0, n)
-      var deg = if (n == 0) Array.emptyIntArray else inRound(sc, "kCore", 0)(degrees(all))
+      var deg = if (n == 0) Array.emptyIntArray else degreesAmong(0, all)
       var alive = n
       var fixpoint = n == 0
       var r = 1
@@ -395,91 +306,12 @@ object Graph {
         fixpoint = survivors.cardinality == alive
         if (!fixpoint) {
           alive = survivors.cardinality
-          deg = inRound(sc, "kCore", r)(degrees(survivors))
+          deg = degreesAmong(r, survivors)
         }
         r += 1
       }
-      driverFrame(e.sparkSession, schema,
-        deg.indices.filter(deg(_) > 0).map(i => InternalRow(g.ids(i), deg(i).toLong)))
-    } finally {
-      g.release()
-      graft.Caches.release(e)
+      deg.indices.filter(deg(_) > 0).map(i => InternalRow(g.ids(i), deg(i).toLong))
     }
-  }
-
-  /** Below the node-state gate: the distinct node ids (`nodes.id`) held
-    * on the driver in a dense order, and `edges` (two id columns) cached
-    * once on the executors as one `Array[Int]` of endpoint-index pairs
-    * per partition, a null endpoint as −1. The id → index map is
-    * broadcast once, for that cache: a boxed hash map, tens of bytes per
-    * node on the driver and on each executor. Each round's task then
-    * holds one n-sized partial (32 MB of doubles at the gate).
-    */
-  private final class DenseGraph(val ids: Array[Any], val pairs: RDD[Array[Int]],
-                                 index: Broadcast[_]) {
-    def release(): Unit = {
-      pairs.unpersist(blocking = false)
-      index.destroy()
-    }
-  }
-
-  private def denseGraph(nodes: DataFrame, edges: DataFrame): DenseGraph = {
-    val idType = nodes.schema("id").dataType
-    // binary ids are byte arrays, equal only by reference: key them by
-    // content, as SQL equality compares them
-    def key(v: Any): Any = v match {
-      case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-      case other => other
-    }
-    val ids = nodes.queryExecution.toRdd.map(_.copy().get(0, idType)).collect()
-    val index = new java.util.HashMap[Any, Int](2 * ids.length)
-    ids.indices.foreach(i => if (ids(i) != null) index.put(key(ids(i)), i))
-    val bIndex = edges.sparkSession.sparkContext.broadcast(index)
-    // endpoints cast to the node id type, as the SQL joins compare them
-    val pairs = edges.select(edges.columns.map(c => col(c).cast(idType)).toIndexedSeq: _*)
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val ix = bIndex.value
-        val out = Array.newBuilder[Int]
-        rows.foreach { row =>
-          out += ix.getOrDefault(key(row.get(0, idType)), -1)
-          out += ix.getOrDefault(key(row.get(1, idType)), -1)
-        }
-        Iterator.single(out.result())
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    new DenseGraph(ids, pairs, bIndex)
-  }
-
-  /** Elementwise `a += b` for the per-partition partials. */
-  private def addInto(a: Array[Int], b: Array[Int]): Array[Int] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  /** A node-sized result built on the driver, with measured statistics. */
-  private def driverFrame(spark: SparkSession, schema: StructType,
-                          rows: Seq[InternalRow]): DataFrame = {
-    val sc = spark.sparkContext
-    GraftDatasetBridge.ofRows(spark, schema,
-      sc.parallelize(rows, sc.defaultParallelism), rows.length.toLong)
-  }
-
-  /** Runs `body` with its Spark jobs described as `op/round r`, then
-    * restores the caller's description.
-    */
-  private[operators] def inRound[A](sc: SparkContext, op: String, r: Int)(body: => A): A = {
-    val key = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
-    val caller = sc.getLocalProperty(key)
-    sc.setJobDescription(s"$op/round $r")
-    try body
-    finally sc.setLocalProperty(key, caller)
-  }
 
   /** Per-node triangle counts + local clustering coefficient over an
     * UNDIRECTED graph (input edge list may carry either or both
@@ -520,28 +352,16 @@ object Graph {
     // columns must be integral: dispatching on src alone would
     // cast("long") a string dst to null and silently DROP those edges
     // via the null filter instead of taking the generic path.
-    def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
+    def isIntegral(dt: DataType): Boolean = dt match {
+      case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
     val integralIds = isIntegral(edges.schema(srcCol).dataType) &&
       isIntegral(edges.schema(dstCol).dataType)
-    val und0 = edges
-      .select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val und = (if (integralIds)
-      und0.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-    else und0)
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .persist()
+    val id: String => Column = c => if (integralIds) col(c).cast("long") else col(c)
+    val und = undirected(edges, id(srcCol), id(dstCol)).persist()
     graft.Caches.track(und)
-
-    val deg = und.select(col("a").as("id"))
-      .unionByName(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
-      .persist()
+    val deg = degrees(und).persist()
     graft.Caches.track(deg)
 
     // orient a—b from the smaller to the larger (degree, id) pair;
@@ -550,14 +370,11 @@ object Graph {
     // same struct type)
     val ordA = struct(col("__da").as("d"), col("a").as("n"))
     val ordB = struct(col("__db").as("d"), col("b").as("n"))
-    // deg is node-sized: below the node-state gate it BROADCASTS onto
-    // both endpoints, so the orientation pass streams the edge list
-    // through two map-side joins instead of shuffling it twice
-    // (sort-merge on a then on b — the two biggest exchanges in the old
-    // plan); above the gate, plain keyed joins as before
-    val attachDeg: DataFrame => DataFrame =
-      if (Gates.under(edges.sparkSession, deg.count(), Gates.NodeState)) df => broadcast(df)
-      else identity
+    // deg is node-sized: below the node-state gate the orientation pass
+    // streams the edge list through two map-side joins instead of
+    // shuffling it twice (sort-merge on a then on b — the two biggest
+    // exchanges in the old plan)
+    val attachDeg = broadcastIf(Gates.under(edges.sparkSession, deg.count(), Gates.NodeState))
     val oriented = und
       .join(attachDeg(deg.select(col("id").as("a"), col("degree").as("__da"))), "a")
       .join(attachDeg(deg.select(col("id").as("b"), col("degree").as("__db"))), "b")
@@ -584,13 +401,11 @@ object Graph {
     // rows on the sf0.1 co-order graph; here the same intersections
     // run inside the projection on edge-sized rows. The adjacency
     // table is m entries spread over n rows (~16 MB at m = 1.2M):
-    // below the adjacency gate it BROADCASTS, so edges stream through
+    // below the adjacency gate it broadcasts, so edges stream through
     // both probes in one stage and the per-edge array payload is never
-    // shuffled twice; above it, plain keyed joins (size dispatch on
-    // the persisted edge count, the [[Components]] pattern).
-    val attach: DataFrame => DataFrame =
-      if (Gates.under(edges.sparkSession, und.count(), Gates.AdjacencyEdges)) df => broadcast(df)
-      else identity
+    // shuffled twice (size dispatch on the persisted edge count, the
+    // [[Components]] pattern).
+    val attach = broadcastIf(Gates.under(edges.sparkSession, und.count(), Gates.AdjacencyEdges))
     val closed = oriented
       .join(attach(adj.select(col("lo"), col("nb").as("__nbu"))), Seq("lo"))
       .join(attach(adj.select(col("lo").as("hi"), col("nb").as("__nbv"))), Seq("hi"))
@@ -633,4 +448,148 @@ object Graph {
             (col("degree") * (col("degree") - lit(1.0))))
           .otherwise(lit(0.0)).as("lcc"))
   }
+
+  /** The directed front end: `edges`' deduped (src, dst) pairs and their
+    * node spine (id), both persisted and tracked.
+    */
+  private def directed(edges: DataFrame, srcCol: String,
+                       dstCol: String): (DataFrame, DataFrame) = {
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct().persist()
+    graft.Caches.track(e)
+    val nodes = endpoints(e, "src", "dst").distinct().persist()
+    graft.Caches.track(nodes)
+    (e, nodes)
+  }
+
+  /** The undirected front end: each edge of (`u`, `v`) once as (a, b)
+    * with a < b, null endpoints and self-loops dropped.
+    */
+  private def undirected(edges: DataFrame, u: Column, v: Column): DataFrame =
+    edges.select(u.as("u"), v.as("v"))
+      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+      .distinct()
+
+  /** Both endpoint columns of `e`, stacked into one `id` column. */
+  private def endpoints(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(col(a).as("id")).unionByName(e.select(col(b).as("id")))
+
+  /** (id, degree) of an [[undirected]] edge list. */
+  private def degrees(und: DataFrame): DataFrame =
+    endpoints(und, "a", "b").groupBy("id").agg(count(lit(1)).as("degree"))
+
+  /** A frame's join side: broadcast when its size was `under` the gate. */
+  private def broadcastIf(under: Boolean): DataFrame => DataFrame =
+    if (under) df => broadcast(df) else identity
+
+  /** A driver-array tier over the graph of `nodes` (one `id` column) and
+    * `edges` (two id columns). Under `op/round 0` the distinct node ids
+    * are held on the driver in a dense order, and `edges` is cached once
+    * on the executors as one `Array[Int]` of endpoint-index pairs per
+    * partition, a null endpoint as −1. The id → index map is broadcast
+    * once, for that cache: a boxed hash map, tens of bytes per node on
+    * the driver and on each executor. `body` computes the result's rows
+    * from the [[DenseGraph]]; the pair cache, the index and `tracked`
+    * are released once it returns or throws. The result is a
+    * driver-built frame with measured statistics.
+    */
+  private def dense(op: String, nodes: DataFrame, edges: DataFrame, schema: StructType,
+                    tracked: Seq[DataFrame])(body: DenseGraph => Seq[InternalRow]): DataFrame = {
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val idType = nodes.schema("id").dataType
+    // binary ids are byte arrays, equal only by reference: key them by
+    // content, as SQL equality compares them
+    def key(v: Any): Any = v match {
+      case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+      case other => other
+    }
+    val ids = inRound(sc, op, 0)(nodes.queryExecution.toRdd.map(_.copy().get(0, idType)).collect())
+    val index = new java.util.HashMap[Any, Int](2 * ids.length)
+    ids.indices.foreach(i => if (ids(i) != null) index.put(key(ids(i)), i))
+    val bIndex = sc.broadcast(index)
+    // endpoints cast to the node id type, as the SQL joins compare them
+    val pairs = edges.select(edges.columns.map(c => col(c).cast(idType)).toIndexedSeq: _*)
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ix = bIndex.value
+        val out = Array.newBuilder[Int]
+        rows.foreach { row =>
+          out += ix.getOrDefault(key(row.get(0, idType)), -1)
+          out += ix.getOrDefault(key(row.get(1, idType)), -1)
+        }
+        Iterator.single(out.result())
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rows = body(new DenseGraph(sc, op, ids, pairs))
+      GraftDatasetBridge.ofRows(spark, schema,
+        sc.parallelize(rows, sc.defaultParallelism), rows.length.toLong)
+    } finally {
+      pairs.unpersist(blocking = false)
+      bIndex.destroy()
+      tracked.foreach(graft.Caches.release)
+    }
+  }
+
+  /** A [[dense]] tier's graph: the node ids in index order and the
+    * cached endpoint-index pairs.
+    */
+  private final class DenseGraph(sc: SparkContext, op: String,
+                                 val ids: Array[Any], pairs: RDD[Array[Int]]) {
+    /** Round r, one job described as `op/round r`: `state` is broadcast,
+      * `kernel` folds each partition's pairs into one n-sized partial
+      * (32 MB of doubles at the gate), and `add` sums the partials.
+      */
+    def round[S: ClassTag, P: ClassTag](r: Int, state: S)(kernel: (S, Array[Int]) => P)(
+        add: (P, P) => P): P = {
+      val b = sc.broadcast(state)
+      try inRound(sc, op, r)(pairs.map(p => kernel(b.value, p)).treeReduce(add))
+      finally b.destroy()
+    }
+  }
+
+  /** Elementwise `a += b` for the per-partition partials. */
+  private def addInto(a: Array[Int], b: Array[Int]): Array[Int] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  /** Runs `body` with its Spark jobs described as `op/round r`, then
+    * restores the caller's description.
+    */
+  private[operators] def inRound[A](sc: SparkContext, op: String, r: Int)(body: => A): A = {
+    val key = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
+    val caller = sc.getLocalProperty(key)
+    sc.setJobDescription(s"$op/round $r")
+    try body
+    finally sc.setLocalProperty(key, caller)
+  }
+
+  /** `df` cut with [[graft.Caches.checkpoint]], its jobs described as
+    * `op/round r`.
+    */
+  private[operators] def cut(sc: SparkContext, op: String, r: Int)(df: DataFrame): DataFrame =
+    inRound(sc, op, r)(graft.Caches.checkpoint(df))
+
+  /** The SQL round loop: from the cut round-0 state `state0`, round
+    * r = 1 to `rounds` [[cut]]s `step(state, keep)` under `op/round r`.
+    * Once that cut has materialized, the previous state and every frame
+    * the step passed to `keep` (which persists and tracks it) are
+    * released, so cache use stays flat in the round count; the last
+    * state stays tracked for the caller's scope.
+    */
+  private[operators] def sqlRounds(sc: SparkContext, op: String, rounds: Int, state0: DataFrame)(
+      step: (DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(state0) { (state, r) =>
+      val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val next = cut(sc, op, r)(step(state, df => { kept += graft.Caches.track(df.persist()); df }))
+      (kept :+ state).foreach(graft.Caches.release)
+      next
+    }
 }

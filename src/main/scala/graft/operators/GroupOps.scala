@@ -203,15 +203,6 @@ object GroupOps {
   def unionByNameAll(dfs: Seq[DataFrame]): DataFrame =
     dfs.reduce(_.unionByName(_, allowMissingColumns = true))
 
-  /** Skew-safe equi join: when a handful of hot keys melt one reducer in
-    * a shuffle join (and the small side is too big to broadcast), salt the
-    * join — each `left` row gets a deterministic salt in [0, saltFactor),
-    * `right` is replicated once per salt value, and the join key becomes
-    * (key, salt), spreading each hot key over saltFactor tasks. Output is
-    * row-identical to `left.join(right, keys)`; cost is saltFactor× the
-    * right side's shuffle volume (use AQE skew-join first; salt when the
-    * skew is extreme or the join is not an AQE-supported shape).
-    */
   /** One-pass table profile (ANALYZE-style column statistics): per
     * column the row count, null count, distinct count and min/max
     * (string-rendered so one long table covers every type) — the
@@ -483,18 +474,6 @@ object GroupOps {
       .withColumn(out,
         lit(0.6745) * (col(valueCol) - col("__med")) / nullif(col("__mad"), lit(0.0)))
       .drop("__med", "__mad")
-  }
-
-  def saltedJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-                 saltFactor: Int): DataFrame = {
-    require(saltFactor > 0, "saltFactor must be positive")
-    // deterministic per-row salt: hash of the whole left row (not just the
-    // keys — that would put every row of a hot key in the same bucket again)
-    val l = left.withColumn("__salt",
-      pmod(hash(left.columns.map(col): _*), lit(saltFactor)))
-    val r = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    l.join(r, keys :+ "__salt").drop("__salt")
   }
 
   /** Robust per-group outlier gate via Median Absolute Deviation

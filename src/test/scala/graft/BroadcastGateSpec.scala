@@ -87,17 +87,16 @@ class BroadcastGateSpec extends AnyFunSuite {
     "graft/operators/Dsir.scala" -> (4, "contract: hashed-bucket count tables, 2^b rows by parameter"),
     "graft/operators/Features.scala" -> (3, "contract: per-category stats, scalar agg, k breakpoints"),
     "graft/operators/Funnel.scala" -> (1, "contract: per-variant aggregate, variant-count-sized"),
-    "graft/operators/Graph.scala" -> (8,
-      "gated: adjacency broadcast iff edges <= Gates.AdjacencyEdges (bytes proxy: one long/edge); " +
-        "the two iterative-state attach sites (hits scores, labelPropagation " +
-        "labels/winner) broadcast iff nodes <= Gates.NodeState (bytes proxy: " +
-        "one edge-width id + one fixed-width score/label per node); the three " +
-        "sc.broadcast sites of pageRank's and kCore's array paths (the dense id " +
-        "index once per call, pageRank's double[n] rank shares and kCore's n-bit " +
-        "alive set once per round) run only below Gates.NodeState (nodes; " +
-        "2·edges for kCore) — driver broadcasts of node state, same proxy: one id " +
-        "+ one fixed-width value per node; triangleCounts' degree attach broadcasts iff " +
-        "nodes <= Gates.NodeState (same proxy: one id + one long degree per node); " +
+    "graft/operators/Graph.scala" -> (4,
+      "gated: broadcastIf, the one data-sized join broadcast, whose callers pass " +
+        "their own Gates.under: triangleCounts' adjacency iff edges <= " +
+        "Gates.AdjacencyEdges (bytes proxy: one long/edge), and hits' scores, " +
+        "labelPropagation's labels/winner and triangleCounts' degrees iff nodes <= " +
+        "Gates.NodeState (bytes proxy: one edge-width id + one fixed-width " +
+        "score/label/degree per node); the two sc.broadcast sites of the dense " +
+        "driver-array tier (dense's id index once per call, DenseGraph.round's " +
+        "per-round state: pageRank's double[n] shares, kCore's n-bit alive set) " +
+        "run only below Gates.NodeState (nodes; 2·edges for kCore), same proxy; " +
         "contract: hits' 1-row L1 total"),
     "graft/operators/GroupOps.scala" -> (6,
       "contract: per-group medians/MADs/percentile bounds over bounded dims, " +

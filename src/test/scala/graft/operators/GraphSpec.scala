@@ -373,4 +373,51 @@ class GraphSpec extends SparkSpec {
     }
     graft.Caches.unpersistAll()
   }
+
+  test("all five operators on degenerate edge lists: no throw, the usual schema, the expected rows") {
+    import spark.implicits._
+    def edges(es: (String, String)*): DataFrame = es.toDF("s", "d")
+    val ops = Seq[(String, (DataFrame, Int) => DataFrame)](
+      "pageRank" -> ((e, r) => Graph.pageRank(e, "s", "d", r)),
+      "hits" -> ((e, r) => Graph.hits(e, "s", "d", r)),
+      "labelPropagation" -> ((e, r) => Graph.labelPropagation(e, "s", "d", r)),
+      "kCore" -> ((e, r) => Graph.kCore(e, "s", "d", 1, r)),
+      "triangleCounts" -> ((e, _) => Graph.triangleCounts(e, "s", "d")))
+    val triangle = edges(("a", "b"), ("b", "c"), ("c", "a"))
+    def none: Map[Any, Seq[Any]] = Map.empty
+    // expected rows by id, per operator in `ops`' order, at 0 and at 2 rounds
+    val cases = Seq[(String, DataFrame, Int => Seq[Map[Any, Seq[Any]]])](
+      ("empty", edges(), _ => Seq.fill(5)(none)),
+      // a null id is a node no edge reaches: the teleport-only rank, no
+      // authority or hub after a round, its own (null) label
+      ("all-null", edges((null, null), (null, null)), r => Seq(
+        Map((null: Any) -> Seq(if (r == 0) 1.0 else 0.15)),
+        Map((null: Any) -> Seq(0.0, if (r == 0) 1.0 else 0.0)),
+        Map((null: Any) -> Seq(null)), none, none)),
+      ("self-loop", edges(("a", "a")), r => Seq(
+        Map("a" -> Seq(1.0)),
+        Map("a" -> Seq(if (r == 0) 0.0 else 1.0, 1.0)),
+        Map("a" -> Seq("a")), none, none)),
+      ("single edge", edges(("a", "b")), r => Seq(
+        if (r == 0) Map("a" -> Seq(0.5), "b" -> Seq(0.5))
+        else Map("a" -> Seq(0.075), "b" -> Seq(0.075 + 0.85 * 0.075)),
+        if (r == 0) Map("a" -> Seq(0.0, 0.5), "b" -> Seq(0.0, 0.5))
+        else Map("a" -> Seq(0.0, 1.0), "b" -> Seq(1.0, 0.0)),
+        Map("a" -> Seq(if (r == 0) "a" else "b"), "b" -> Seq("b")),
+        Map("a" -> Seq(1L), "b" -> Seq(1L)),
+        Map("a" -> Seq(1L, 0L, 0.0), "b" -> Seq(1L, 0L, 0.0)))))
+    for ((fixture, e, expected) <- cases; rounds <- Seq(0, 2);
+         ((name, op), want) <- ops.zip(expected(rounds))) {
+      val what = s"$name, $fixture, $rounds rounds"
+      val got = sameTiers(op(e, rounds))
+      assert(got.schema == op(triangle, rounds).schema, what)
+      val rows = got.collect().map(r => r.get(0) -> r.toSeq.tail).toMap
+      assert(rows.size == got.count() && rows.keySet == want.keySet, s"$what: $rows")
+      for ((id, row) <- want; (w, v) <- row.zip(rows(id))) (w, v) match {
+        case (x: Double, y: Double) => assert(math.abs(x - y) < 1e-12, s"$what: $rows")
+        case _ => assert(w == v, s"$what: $rows")
+      }
+    }
+    graft.Caches.unpersistAll()
+  }
 }

@@ -148,16 +148,6 @@ class GroupOpsSpec extends SparkSpec {
     assert(rows.size == 2)
   }
 
-  test("saltedJoin is row-identical to the plain equi join") {
-    import spark.implicits._
-    // a hot key (1) with many rows on both sides, plus normal keys
-    val left = ((1 to 50).map(i => (1, s"l$i")) ++ Seq((2, "x"), (3, "y"))).toDF("k", "lv")
-    val right = (Seq((1, 10.0), (1, 20.0), (2, 99.0))).toDF("k", "rv")
-    val plain = left.join(right, Seq("k"))
-    val salted = GroupOps.saltedJoin(left, right, Seq("k"), saltFactor = 4)
-    assert(rowsOf(salted) == rowsOf(plain))
-  }
-
   test("duplicateKeys reports multiplicity (A9)") {
     import spark.implicits._
     val df = Seq((1, "a"), (1, "a"), (1, "a"), (2, "b")).toDF("k1", "k2")

@@ -4,6 +4,7 @@
 # Usage: tools/run_main.sh <mainClass> [args...]
 # Env passthrough: SPARK_GRAFT_* vars are read by the mains themselves
 # (SPARK_GRAFT_CPUS defaults to every processor, in GraftSession).
+# SPARK_DRIVER_MEM sets the heap, 8g by default, as in build.sbt.
 set -euo pipefail
 CLS="$1"; shift
 # 128+ queries x whole-stage codegen generate enough JIT'd classes to
@@ -11,7 +12,7 @@ CLS="$1"; shift
 # HotSpot silently stops compiling and everything runs interpreted —
 # the bench's erratic 5-30x per-query tail. Reserve enough for the
 # whole suite.
-exec java -Xmx96g -XX:ReservedCodeCacheSize=1g \
+exec java -Xmx"${SPARK_DRIVER_MEM:-8g}" -XX:ReservedCodeCacheSize=1g \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
