@@ -30,8 +30,9 @@ object Gates {
     */
   val AdjacencyEdges: Long = 8000000L
 
-  /** connectedComponents' union-find over the collected, symmetrized
-    * edge list. Measured in edges.
+  /** connectedComponents' union-find over the edge rows it collects:
+    * each pair once as (a, b) with a < b, null ids and self-loops
+    * dropped. Measured in those rows.
     */
   val UnionFindEdges: Long = 5000000L
 

@@ -30,11 +30,6 @@ object CleanFunctions {
   /** en-dash → hyphen (competition dates). */
   def normalizeDashes(c: Column): Column = regexp_replace(c, "–", "-")
 
-  // ---- F2: split + element ----
-  /** `split(c, sep)[i]`, null when the element is absent or empty. */
-  def splitItem(c: Column, sep: String, i: Int): Column =
-    nullif(trim(split(c, sep).getItem(i)), lit(""))
-
   // ---- F3: substring strip (NOT charset strip — §2.13.7) ----
   def stripSubstring(c: Column, sub: String): Column =
     trim(regexp_replace(c, java.util.regex.Pattern.quote(sub), ""))
@@ -116,7 +111,4 @@ object CleanFunctions {
     weightKg / pow(heightCm / lit(100.0), 2)
   def bmiSane(weightKg: Column, heightCm: Column): Column =
     bmi(weightKg, heightCm).between(15, 45)
-
-  // ---- M5 ----
-  def isIso3(c: Column): Column = length(c) === 3
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected pair list — the step between
@@ -8,28 +10,29 @@ import org.apache.spark.sql.functions._
   * deduplicated corpus: near-duplication is not transitive, but dedup
   * policy treats it as if it were (keep ONE doc per similarity cluster),
   * so pairs must first be closed into components. No reference
-  * implementation (SURVEY.md §7.4 LLM-pipeline category); algorithm is
-  * the standard large-graph label propagation (a.k.a. "hash-to-min")
-  * plus one pointer jump: every node adopts the smallest component id
-  * among itself and its neighbours, AND then its candidate label's own
-  * current label (labels are node ids, so a label lookup is a
-  * self-join), until a fixpoint.
+  * implementation (SURVEY.md §7.4 LLM-pipeline category).
   *
-  * Scale shape: each iteration is one aggregation over the (narrow)
-  * edge list joined to current labels plus one label self-join — no
-  * driver-side graph, no union-find in memory. Rounds are NOT
-  * O(log diameter): the jump only follows labels, so it halves a path
-  * whose ids run in path order, but on a path whose ids are not in path
-  * order the rounds grow linearly with its length (a replay of this
-  * update rule needed 60 rounds at n = 100 and 470 at n = 1,000). The
-  * default `maxIterations = 20` therefore throws on such a chain —
-  * ROADMAP direction 1 (Large-Star/Small-Star) is the fix. A
-  * non-converged exit throws rather than returning mixed components.
-  * The edge list is symmetrized once up front; iteration stops when an
-  * iteration changes no label (checked with one count per round — the
-  * driver-side loop is bounded by `maxIterations`, not data size).
-  * Each round's labels are cut with [[graft.Caches.checkpoint]], and its
-  * jobs are described `connectedComponents/round r`.
+  * One front end for both tiers: the pair ids cast to long and
+  * persisted once; the edges are their [[Graph.undirected]] list (each
+  * pair once as (a, b) with a < b, null ids and self-loops dropped); the
+  * nodes are every non-null endpoint, a self-loop's id included, plus
+  * `allIds`. Each tier maps the ids in some edge to their component's
+  * minimum id, the root, and one labelling step left-joins the nodes to
+  * that map: a node in no edge is its own root.
+  *
+  * The distributed tier alternates Large-Star and Small-Star steps
+  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  * SoCC 2014). Large-Star links every larger neighbour of a node to the
+  * least of the node and its neighbours; Small-Star links a node's
+  * smaller neighbours to the least of them. Both keep each component
+  * connected, and the edge list shrinks to one star per component,
+  * centred on its minimum id, in O(log n) rounds in practice (10 on a
+  * 2,000-node chain whose ids are not in path order, where hash-to-min
+  * label propagation needs rounds linear in its length). A round is
+  * two window minimums and one dedup over the edge list, no join; it is
+  * cut with [[graft.Caches.checkpoint]], its jobs are described
+  * `connectedComponents/round r`, and the loop stops after the round
+  * that changes no edge, the fixpoint.
   */
 object Components {
 
@@ -37,93 +40,91 @@ object Components {
     * reachable in the undirected closure. Nodes appearing only as
     * singletons must be fed through `allIds` (a near-dup pair list by
     * construction omits unique docs); pass null to label pair members
-    * only.
+    * only. Null ids are dropped.
     *
     * Size-gated hybrid: a dedup-cluster graph is usually TINY relative
     * to the corpus it came from (it has one node per distinct content
-    * class in some pair), so when the deduped edge list fits under
+    * class in some pair), so when the edge list fits under
     * [[graft.Gates.UnionFindEdges]] it is collected and closed with
     * union-find — O(E·α) in one pass, no per-round shuffle overhead
     * (measured 7.7 s → 0.3 s on a 292k-edge class graph at sf0.1). Past
-    * the gate the distributed label propagation runs; both paths
-    * produce identical labels (spec-asserted).
+    * the gate the star rounds run; both tiers produce identical labels
+    * (spec-asserted).
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          allIds: DataFrame = null, idCol: String = "id",
-                          maxIterations: Int = 20): DataFrame = {
+                          allIds: DataFrame = null, idCol: String = "id"): DataFrame = {
     val spark = pairs.sparkSession
-    // symmetrize once: src -> dst and dst -> src
-    val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-    val edges = fwd.unionByName(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist()
     val sc = spark.sparkContext
     val op = "connectedComponents"
-    if (graft.Gates.under(spark, Graph.inRound(sc, op, 0)(edges.count()),
-        graft.Gates.UnionFindEdges)) {
-      val result = Graph.inRound(sc, op, 0)(unionFindDriverSide(spark, edges, allIds, idCol))
-      edges.unpersist(blocking = false)
-      return result
-    }
-    val nodes0 = edges.select(col("src").as("id")).distinct()
-    val nodes = (if (allIds == null) nodes0
-                 else nodes0.unionByName(allIds.select(col(idCol).cast("long").as("id")))
-                   .distinct())
-    var labels = Graph.cut(sc, op, 0)(nodes.select(col("id"), col("id").as("component")))
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxIterations) {
-      round += 1
-      // candidate label per node: min over (own, neighbours' labels)
-      val viaEdges = edges.join(labels.withColumnsRenamed(
-          Map("id" -> "dst", "component" -> "nbr")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("nbr")).as("nbr_min"))
-      val cand = labels.join(viaEdges, Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("cand"),
-          col("component").as("prev"))
-      // pointer jump: a label is itself a node id, so each node also
-      // adopts its candidate label's OWN current label (labels only ever
-      // decrease, so the jump is always sound). It shortcuts label
-      // chains only: rounds still grow linearly on a path whose ids are
-      // not in path order (see the object's scaladoc)
-      val next = Graph.cut(sc, op, round)(
-        cand.join(labels.withColumnsRenamed(
-            Map("id" -> "cand", "component" -> "cand_lbl")), Seq("cand"), "left")
-          .select(col("id"),
-            least(col("cand"), coalesce(col("cand_lbl"), col("cand"))).as("component"),
-            col("prev")))
-      changed = Graph.inRound(sc, op, round)(
-        next.filter(col("component") =!= col("prev")).count())
-      graft.Caches.release(labels)
-      labels = next.select("id", "component")
-    }
-    edges.unpersist(blocking = false)
-    // non-convergence is a correctness failure, not a degraded answer:
-    // labels would still mix components. Fail loudly — a long chain
-    // whose ids are not in path order reaches this at the default bound
-    if (changed > 0) {
-      graft.Caches.release(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIterations rounds " +
-          s"($changed labels still changing); raise maxIterations")
-    }
-    labels
+    // persisted: the edges and the nodes both read it, and `pairs` is
+    // typically an expensive pair join
+    val ends = graft.Caches.track(
+      pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")).persist())
+    val edges = graft.Caches.track(Graph.undirected(ends, col("a"), col("b")).persist())
+    val roots =
+      if (graft.Gates.under(spark, Graph.inRound(sc, op, 0)(edges.count()),
+          graft.Gates.UnionFindEdges)) {
+        val uf = Graph.inRound(sc, op, 0)(unionFind(spark, edges))
+        graft.Caches.release(edges)
+        uf
+      } else starRounds(sc, op, edges)
+    val ids = Graph.endpoints(ends, "a", "b")
+    (if (allIds == null) ids
+     else ids.unionByName(allIds.select(col(idCol).cast("long").as("id"))))
+      .where(col("id").isNotNull)
+      .distinct()
+      .join(roots, Seq("id"), "left")
+      .select(col("id"), coalesce(col("root"), col("id")).as("component"))
   }
 
-  /** Union-find with path compression + union-by-min over a collected
-    * edge list (the under-gate path of [[connectedComponents]]): the
-    * bounded-collect pattern — the edge list was already counted, the
-    * result mapping is one broadcastable (id → component) table.
+  /** The distributed tier over the (a, b) edge list `edges`: Large-Star
+    * then Small-Star each round until a round moves no edge, which is
+    * then a star forest; (id, root) for every id but the roots. Each
+    * round's edges are cut, and the previous round's released.
     */
-  private def unionFindDriverSide(spark: org.apache.spark.sql.SparkSession,
-                                  edges: DataFrame, allIds: DataFrame,
-                                  idCol: String): DataFrame = {
+  private def starRounds(sc: SparkContext, op: String, edges: DataFrame): DataFrame = {
+    var state = edges
+    var moved = 1L
+    var r = 0
+    while (moved > 0) {
+      r += 1
+      val next = Graph.cut(sc, op, r)(smallStar(largeStar(state)))
+      moved = Graph.inRound(sc, op, r)(next.where(col("moved")).count())
+      graft.Caches.release(state)
+      state = next
+    }
+    state.select(col("b").as("id"), col("a").as("root"))
+  }
+
+  /** Large-Star: node u links each larger neighbour v to m, the least of
+    * u and its neighbours, as (m, v). The edge `moved` when m is not u.
+    */
+  private def largeStar(e: DataFrame): DataFrame =
+    e.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+      .withColumn("m", least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
+      .where(col("v") > col("u"))
+      .select(col("m").as("a"), col("v").as("b"), (col("m") < col("u")).as("moved"))
+
+  /** Small-Star: node b links itself and each smaller neighbour a to m,
+    * the least of them, as (m, b) and (m, a), deduped. An edge `moved`
+    * when a step re-pointed any edge it came from; a round in which no
+    * edge moved returned its input unchanged.
+    */
+  private def smallStar(e: DataFrame): DataFrame =
+    e.withColumn("m", min(col("a")).over(Window.partitionBy("b")))
+      .select(col("m").as("a"), explode(array(col("b"), col("a"))).as("b"),
+        (col("moved") || col("a") =!= col("m")).as("moved"))
+      .where(col("a") =!= col("b"))
+      .groupBy("a", "b")
+      .agg(max(col("moved")).as("moved"))
+
+  /** Union-find with path compression + union-by-min over the collected
+    * (a, b) edge list (the under-gate tier): (id, root) for every id but
+    * the roots, as one driver-built table.
+    */
+  private def unionFind(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
-    val es = edges.as[(Long, Long)].collect()
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var root = x
@@ -135,24 +136,15 @@ object Components {
       }
       root
     }
-    def union(a: Long, b: Long): Unit = {
+    edges.as[(Long, Long)].collect().foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
       // union by MIN id so the root IS the canonical label
       if (ra < rb) parent.put(rb, ra)
       else if (rb < ra) parent.put(ra, rb)
     }
-    es.foreach { case (a, b) => parent.putIfAbsent(a, a); parent.putIfAbsent(b, b); union(a, b) }
     val labeled = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     parent.keySet().forEach(id => labeled += ((id, find(id))))
-    var out = labeled.toSeq.toDF("id", "component")
-    if (allIds != null) {
-      val extra = allIds.select(col(idCol).cast("long").as("id"))
-        .distinct()
-        .join(out.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("component"))
-      out = out.unionByName(extra)
-    }
-    out
+    labeled.toSeq.toDF("id", "root")
   }
 
   /** The dedup decision itself: one row per component with the canonical

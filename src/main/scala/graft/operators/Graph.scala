@@ -146,7 +146,8 @@ object Graph {
     * Per half-iteration: one edge ⨝ score join, a node-keyed sum with
     * map-side combine, a 1-row total broadcast back.
     *
-    * Output: (id, auth, hub), one row per node.
+    * Output: (id, auth, hub), one row per node; `auth` and `hub` are
+    * non-null at every iteration count, so the schema is one.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int): DataFrame = {
@@ -170,8 +171,7 @@ object Graph {
         .join(attach(raw), Seq("id"), "left")
         .crossJoin(broadcast(tot))
         .select(col("id"),
-          when(col("__tot") > 0, coalesce(col("__raw"), lit(0.0)) / col("__tot"))
-            .otherwise(lit(0.0)).as(outCol))
+          coalesce(try_divide(col("__raw"), col("__tot")), lit(0.0)).as(outCol))
     }
 
     def round(scores: DataFrame, keep: DataFrame => DataFrame): DataFrame = {
@@ -464,14 +464,14 @@ object Graph {
   /** The undirected front end: each edge of (`u`, `v`) once as (a, b)
     * with a < b, null endpoints and self-loops dropped.
     */
-  private def undirected(edges: DataFrame, u: Column, v: Column): DataFrame =
+  private[operators] def undirected(edges: DataFrame, u: Column, v: Column): DataFrame =
     edges.select(u.as("u"), v.as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
       .distinct()
 
   /** Both endpoint columns of `e`, stacked into one `id` column. */
-  private def endpoints(e: DataFrame, a: String, b: String): DataFrame =
+  private[operators] def endpoints(e: DataFrame, a: String, b: String): DataFrame =
     e.select(col(a).as("id")).unionByName(e.select(col(b).as("id")))
 
   /** (id, degree) of an [[undirected]] edge list. */

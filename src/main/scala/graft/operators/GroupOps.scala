@@ -185,15 +185,27 @@ object GroupOps {
     * Output: one row per column (column_name, null_frac).
     */
   def nullProfile(df: DataFrame): DataFrame = {
-    val aggs = df.columns.map(c => avg(col(c).isNull.cast("double")).as(c))
-    val one = df.agg(aggs.head, aggs.tail: _*)
+    val aggs = df.columns.toSeq.zipWithIndex.map { case (c, i) =>
+      avg(col(c).isNull.cast("double")).as(s"__nf_$i") }
     // unpivot to long form so the profile is a table, not a 1-row monster
-    val spark = df.sparkSession
-    val stacked = one.select(expr(
-      s"stack(${df.columns.length}, " +
-        df.columns.map(c => s"'$c', `$c`").mkString(", ") +
-        ") as (column_name, null_frac)"))
-    stacked
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(stackRows(df.columns.toSeq, i => Seq(s"__nf_$i"), "column_name", "null_frac"))
+  }
+
+  /** A `stack()` unpivot of a one-row frame: one row per name of
+    * `names`, row i the string `names(i)` followed by the columns
+    * `cols(i)`, the output columns named `as`. Names enter the SQL as
+    * quoted literals and values by positional intermediate names:
+    * interpolating raw column names into the SQL breaks on any name that
+    * is not a plain identifier ("order date", "it's") — exactly the
+    * messy ingest tables a profiler exists to sanity-check.
+    */
+  private[operators] def stackRows(names: Seq[String], cols: Int => Seq[String],
+                                   as: String*): Column = {
+    def quoted(n: String): String =
+      s"'${n.replace("\\", "\\\\").replace("'", "\\'")}'"
+    val rows = names.indices.map(i => (quoted(names(i)) +: cols(i)).mkString(", "))
+    expr(s"stack(${names.length}, ${rows.mkString(", ")}) AS (${as.mkString(", ")})")
   }
 
   /** U1 union-by-name with null-fill for drifting schemas — the reference's
@@ -246,12 +258,6 @@ object GroupOps {
     }
     val exact = exactDistinct &&
       (exactDistinctMaxRows == Long.MaxValue || underGate)
-    // positional intermediate names + quoted literals: interpolating raw
-    // column names into the stack() SQL breaks on any name that is not a
-    // plain identifier ("order date", "it's") — exactly the messy ingest
-    // tables a profiler exists to sanity-check
-    def quoted(n: String): String =
-      s"'${n.replace("\\", "\\\\").replace("'", "\\'")}'"
     if (exact) {
       // NO multi-distinct Expand (the q52/q91 pathology: N exact
       // countDistincts in one aggregate multiply every input row
@@ -267,12 +273,9 @@ object GroupOps {
         min(col(n)).cast("string").as(s"__mn_$i"),
         max(col(n)).cast("string").as(s"__mx_$i")) }
       val one = df.agg(count(lit(1)).as("__n"), aggs: _*)
-      val stackArgs = names.indices
-        .map(i => s"${quoted(names(i))}, __nn_$i, __mn_$i, __mx_$i")
-        .mkString(", ")
-      val base = one.select(col("__n"), expr(
-        s"stack(${names.length}, $stackArgs) AS " +
-          "(column_name, __non_null, min_value, max_value)"))
+      val base = one.select(col("__n"),
+        stackRows(names, i => Seq(s"__nn_$i", s"__mn_$i", s"__mx_$i"),
+          "column_name", "__non_null", "min_value", "max_value"))
       val dst = names.map { n =>
         df.select(col(n))
           .agg(countDistinct(col(n)).as("n_distinct"))
@@ -289,12 +292,9 @@ object GroupOps {
         min(col(n)).cast("string").as(s"__mn_$i"),
         max(col(n)).cast("string").as(s"__mx_$i")) }
       val one = df.agg(count(lit(1)).as("__n"), aggs: _*)
-      val stackArgs = names.indices
-        .map(i => s"${quoted(names(i))}, __nn_$i, __nd_$i, __mn_$i, __mx_$i")
-        .mkString(", ")
-      one.select(col("__n"), expr(
-          s"stack(${names.length}, $stackArgs) AS " +
-            "(column_name, __non_null, n_distinct, min_value, max_value)"))
+      one.select(col("__n"),
+          stackRows(names, i => Seq(s"__nn_$i", s"__nd_$i", s"__mn_$i", s"__mx_$i"),
+            "column_name", "__non_null", "n_distinct", "min_value", "max_value"))
         .select(col("column_name"), col("__n").as("n_rows"),
           (col("__n") - col("__non_null")).as("n_nulls"),
           col("n_distinct"), col("min_value"), col("max_value"))

@@ -264,6 +264,26 @@ object Scoring {
         .as("postings"))
   }
 
+  /** Per-document bigram multiplicities of `df`'s `textCol` tokens,
+    * (__id, w1, w2, __m), persisted and tracked: the corpus side of
+    * [[bigramCrossEntropy]] and [[kneserNeyBigram]].
+    */
+  private def docBigrams(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val toks = df.select(col(idCol).as("__id"),
+      graft.functions.TextFunctions.tokens(col(textCol)).as("__t"))
+    // bigrams by zipping the token array with itself shifted one left;
+    // slice() is 1-based and clamps, so a 1-token doc yields no rows
+    val bg = toks
+      .select(col("__id"),
+        explode(arrays_zip(
+          slice(col("__t"), lit(1), greatest(size(col("__t")) - 1, lit(0))),
+          slice(col("__t"), lit(2), greatest(size(col("__t")) - 1, lit(0))))).as("__b"))
+      .select(col("__id"), col("__b.0").as("w1"), col("__b.1").as("w2"))
+    graft.Caches.track(bg.groupBy(col("__id"), col("w1"), col("w2"))
+      .agg(count(lit(1)).as("__m"))
+      .persist())
+  }
+
   /** Per-document bigram-LM cross-entropy — the perplexity-style quality
     * signal training-data pipelines use to rank documents against the
     * corpus distribution (a KenLM-shaped filter without the external
@@ -291,20 +311,7 @@ object Scoring {
     * tokens have no bigrams and produce no row.
     */
   def bigramCrossEntropy(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("__id"),
-      graft.functions.TextFunctions.tokens(col(textCol)).as("__t"))
-    // bigrams by zipping the token array with itself shifted one left;
-    // slice() is 1-based and clamps, so a 1-token doc yields no rows
-    val bg = toks
-      .select(col("__id"),
-        explode(arrays_zip(
-          slice(col("__t"), lit(1), greatest(size(col("__t")) - 1, lit(0))),
-          slice(col("__t"), lit(2), greatest(size(col("__t")) - 1, lit(0))))).as("__b"))
-      .select(col("__id"), col("__b.0").as("w1"), col("__b.1").as("w2"))
-    val docBg = bg.groupBy(col("__id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("__m"))
-      .persist()
-    graft.Caches.track(docBg)
+    val docBg = docBigrams(df, idCol, textCol)
     val c12 = docBg.groupBy(col("w1"), col("w2")).agg(sum(col("__m")).as("__c12"))
     val c1 = docBg.groupBy(col("w1")).agg(sum(col("__m")).as("__c1"))
     val model = c12.join(c1, "w1")
@@ -352,18 +359,7 @@ object Scoring {
   def kneserNeyBigram(df: DataFrame, idCol: String, textCol: String,
                       discount: Double = 0.75): DataFrame = {
     require(discount > 0 && discount < 1, s"discount must be in (0,1), got $discount")
-    val toks = df.select(col(idCol).as("__id"),
-      graft.functions.TextFunctions.tokens(col(textCol)).as("__t"))
-    val bg = toks
-      .select(col("__id"),
-        explode(arrays_zip(
-          slice(col("__t"), lit(1), greatest(size(col("__t")) - 1, lit(0))),
-          slice(col("__t"), lit(2), greatest(size(col("__t")) - 1, lit(0))))).as("__b"))
-      .select(col("__id"), col("__b.0").as("w1"), col("__b.1").as("w2"))
-    val docBg = bg.groupBy(col("__id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("__m"))
-      .persist()
-    graft.Caches.track(docBg)
+    val docBg = docBigrams(df, idCol, textCol)
     val c12 = docBg.groupBy(col("w1"), col("w2")).agg(sum(col("__m")).as("__c12"))
       .persist()
     graft.Caches.track(c12)

@@ -22,12 +22,10 @@ object Validation {
     * (check_name, n_violations) sorted by check_name.
     */
   def violationCounts(df: DataFrame, rules: Seq[ValidationRule]): DataFrame = {
-    val aggs = rules.map(r => sum(violates(r)).as(r.name))
-    val one = df.agg(aggs.head, aggs.tail: _*)
-    one.select(expr(
-        s"stack(${rules.length}, " +
-          rules.map(r => s"'${r.name}', `${r.name}`").mkString(", ") +
-          ") as (check_name, n_violations)"))
+    val aggs = rules.zipWithIndex.map { case (r, i) => sum(violates(r)).as(s"__nv_$i") }
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(GroupOps.stackRows(rules.map(_.name), i => Seq(s"__nv_$i"),
+        "check_name", "n_violations"))
       .orderBy("check_name")
   }
 

@@ -57,19 +57,11 @@ object Tables {
     }
   }
 
-  /** S1 with a pinned schema (skip footer-schema merge on huge table dirs). */
-  def tableWithSchema(spark: SparkSession, dir: String, name: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(s"$dir/$name.parquet")
-
   /** S2: header CSV scan with explicit schema (never inferSchema at scale —
     * inference is a full extra pass over the data).
     */
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
-
-  /** S5: wildcard/union scan over a checkpoint-style directory of parts. */
-  def multiScan(spark: SparkSession, glob: String): DataFrame =
-    spark.read.parquet(glob)
 
   /** JSON-lines scan with a pinned schema (inference would cost a full
     * extra pass; same rule as CSV).

@@ -9,7 +9,8 @@ import org.apache.spark.sql.DataFrame
   * scope that materializes the results frees every block the loops
   * persisted or checkpointed. Checked at the default gates and
   * [[atScale]], where pageRank, kCore and connectedComponents run
-  * their SQL loops too.
+  * their SQL loops too; connectedComponents runs to its fixpoint, the
+  * others 30 rounds.
   */
 class CheckpointSpec extends SparkSpec {
 
@@ -28,7 +29,7 @@ class CheckpointSpec extends SparkSpec {
       "labelPropagation" -> (() => Graph.labelPropagation(sym, "src", "dst", 30)),
       "kCore" -> (() => Graph.kCore(sym, "src", "dst", 2, 30)),
       "connectedComponents" -> (() => Components.connectedComponents(pairs, "id_a", "id_b",
-        allIds = all, idCol = "node", maxIterations = 100)))
+        allIds = all, idCol = "node")))
     for (scale <- Seq(false, true)) {
       // every RDD created inside the scope gets a higher id than this one
       val firstRdd = sc.emptyRDD[Int].id
@@ -46,7 +47,13 @@ class CheckpointSpec extends SparkSpec {
           // has already materialized it, which is a race (hits' `raw`)
           val later = rounds.filter(_._1 >= 2).values
           assert(later.isEmpty || later.max - later.min <= 1, s"$what: jobs per round $rounds")
-          if (scale) assert(rounds.size > 20, s"$what ran ${rounds.size} rounds")
+          if (scale && name == "connectedComponents") {
+            // runs to its fixpoint: at least 2 rounds, at most 2·⌈log2 260⌉
+            // for the 260 nodes, and fewer jobs in all than the 205 of the
+            // hash-to-min loop it replaced (25 rounds of 8 jobs, plus 5)
+            assert(rounds.keys.max >= 2 && rounds.keys.max <= 18, s"$what: rounds $rounds")
+            assert(rounds.values.sum < 205, s"$what: jobs per round $rounds")
+          } else if (scale) assert(rounds.size > 20, s"$what ran ${rounds.size} rounds")
           val bits = df.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
           assert(bits < 64, s"$what: size estimate grew to $bits bits")
           assert(df.count() > 0, what)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 class ComponentsSpec extends SparkSpec {
 
@@ -23,32 +23,61 @@ class ComponentsSpec extends SparkSpec {
     // a 60-node path: worst case for label propagation rounds at this
     // size; atScale forces the DISTRIBUTED path
     val pairs = (0L until 59L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val got = atScale(Components.connectedComponents(pairs, "id_a", "id_b",
-        maxIterations = 100))
+    val got = atScale(Components.connectedComponents(pairs, "id_a", "id_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 60 && got.forall(_._2 == 0L))
     graft.Caches.unpersistAll()
   }
 
-  test("pointer jumping: a 300-hop path converges within log-bounded rounds") {
+  test("a 300-hop path converges within 12 star rounds") {
     import spark.implicits._
-    // neighbour-only propagation needs ~300 rounds here; pointer jumping
-    // needs ~log2(300) ≈ 9 — 12 rounds is tight enough to prove the jump
+    // neighbour-only propagation needs ~300 rounds here; alternating
+    // Large-Star/Small-Star needs ~log2(300) ≈ 9, plus the round that
+    // confirms the fixpoint
     val pairs = (0L until 300L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val got = atScale(Components.connectedComponents(pairs, "id_a", "id_b",
-        maxIterations = 12))
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    var cc: DataFrame = null
+    val rounds = perRound(jobsOf {
+      cc = atScale(Components.connectedComponents(pairs, "id_a", "id_b"))
+    }, "connectedComponents")
+    assert(rounds.keys.max <= 12, rounds)
+    val got = cc.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 301 && got.forall(_._2 == 0L))
     graft.Caches.unpersistAll()
   }
 
-  test("non-convergence throws instead of returning mixed components") {
+  test("a 2,000-node random-id chain and three cliques: union-find's labels within 2·log2(n) rounds") {
     import spark.implicits._
-    val pairs = (0L until 300L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val e = intercept[IllegalStateException] {
-      atScale(Components.connectedComponents(pairs, "id_a", "id_b", maxIterations = 3))
-    }
-    assert(e.getMessage.contains("did not converge"))
+    // ids in random order along the chain: hash-to-min with a pointer
+    // jump needs rounds linear in the chain's length here
+    val chain = new scala.util.Random(7).shuffle((0L until 2000L).toVector)
+    val cliques = for (c <- 0 until 3; i <- 0 until 5; j <- i + 1 until 5)
+      yield (10000L + 10 * c + i, 10000L + 10 * c + j)
+    val pairs = (chain.sliding(2).map(p => (p(0), p(1))).toSeq ++ cliques).toDF("id_a", "id_b")
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val uf = labels(Components.connectedComponents(pairs, "id_a", "id_b"))
+    var cc: DataFrame = null
+    val rounds = perRound(jobsOf {
+      cc = atScale(Components.connectedComponents(pairs, "id_a", "id_b"))
+    }, "connectedComponents")
+    val n = uf.size
+    assert(n == 2015 && uf.values.toSet == Set(0L, 10000L, 10010L, 10020L))
+    val bound = 2 * (64 - java.lang.Long.numberOfLeadingZeros(n - 1L))
+    assert(rounds.keys.max <= bound, s"${rounds.keys.max} rounds > 2·⌈log2 $n⌉ = $bound")
+    assert(labels(cc) == uf)
+    graft.Caches.unpersistAll()
+  }
+
+  test("null ids drop out of pairs and allIds alike on both tiers") {
+    import spark.implicits._
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((null, 3L), (1L, 2L), (4L, null))
+      .toDF("id_a", "id_b")
+    val all = Seq[java.lang.Long](null, 1L, 5L).toDF("doc_id")
+    def run = rowsOf(Components.connectedComponents(pairs, "id_a", "id_b",
+      allIds = all, idCol = "doc_id"))
+    val uf = run
+    assert(uf == Seq(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 3L), Seq(4L, 4L), Seq(5L, 5L)))
+    assert(atScale(run) == uf)
     graft.Caches.unpersistAll()
   }
 
@@ -59,7 +88,7 @@ class ComponentsSpec extends SparkSpec {
       (200L until 230L).map(i => (i, 200L))).toDF("id_a", "id_b")
     val all = (0L until 260L).toDF("node")
     def run = Components.connectedComponents(pairs, "id_a", "id_b",
-        allIds = all, idCol = "node", maxIterations = 100)
+        allIds = all, idCol = "node")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val uf = run
     val dist = atScale(run)

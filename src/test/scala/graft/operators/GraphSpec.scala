@@ -411,6 +411,7 @@ class GraphSpec extends SparkSpec {
       val what = s"$name, $fixture, $rounds rounds"
       val got = sameTiers(op(e, rounds))
       assert(got.schema == op(triangle, rounds).schema, what)
+      assert(got.schema == op(triangle, 2).schema, s"$what, against 2 rounds")
       val rows = got.collect().map(r => r.get(0) -> r.toSeq.tail).toMap
       assert(rows.size == got.count() && rows.keySet == want.keySet, s"$what: $rows")
       for ((id, row) <- want; (w, v) <- row.zip(rows(id))) (w, v) match {

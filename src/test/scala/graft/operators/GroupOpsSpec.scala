@@ -138,6 +138,19 @@ class GroupOpsSpec extends SparkSpec {
     assert(got("a") == 0.5 && got("b") == 0.25)
   }
 
+  test("nullProfile and tableProfile keep column names that are not plain identifiers") {
+    import spark.implicits._
+    val df = Seq((Some(1), "x"), (None, "y"), (None, null.asInstanceOf[String]), (Some(2), "z"))
+      .toDF("it's", "order date")
+    val nulls = GroupOps.nullProfile(df).collect().map(r => (r.getString(0), r.getDouble(1))).toMap
+    assert(nulls == Map("it's" -> 0.5, "order date" -> 0.25))
+    for (exact <- Seq(true, false)) {
+      val got = GroupOps.tableProfile(df, exactDistinct = exact)
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      assert(got == Map("it's" -> (4L, 2L, 2L), "order date" -> (4L, 1L, 3L)), s"exact=$exact")
+    }
+  }
+
   test("unionByNameAll aligns drifted schemas with null fill (U1, §2.13.10)") {
     import spark.implicits._
     val a = Seq((1, "x")).toDF("id", "name")

@@ -26,6 +26,14 @@ class ValidationSpec extends SparkSpec {
     assert(got == Map("h_range" -> 1L, "w_range" -> 1L, "id_pos" -> 0L))
   }
 
+  test("violationCounts keeps rule names that are not plain identifiers") {
+    val got = Validation.violationCounts(fixture, Seq(
+        ValidationRule("it's tall", col("h").between(100, 250)),
+        ValidationRule("order date", col("id") >= 1)))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(got == Map("it's tall" -> 1L, "order date" -> 0L))
+  }
+
   test("failureCases tags each violating row with the failed check") {
     val got = Validation.failureCases(fixture, rules)
       .select("id", "failed_check").collect().map(r => (r.getInt(0), r.getString(1))).toSet
