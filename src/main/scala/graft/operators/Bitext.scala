@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * Decomposed from candidate GENERATION: [[marginMine]] takes the two
   * candidate frames `(query_id, neighbour_id, cosine_sim)` from any
-  * top-k generator — [[Similarity.bruteForceTopKAtScale]] for a
-  * bounded mining batch (the q220 form), [[Similarity.lshTopKAtScale]]
-  * or [[Similarity.ivfTopK]] for full-corpus mining at 100 TB. The
+  * top-k generator — [[Similarity.bruteForceTopK]] for a bounded
+  * mining batch (the q220 form), [[Similarity.lshTopK]] or
+  * [[Similarity.ivfTopK]] for full-corpus mining at 100 TB. The
   * scoring itself is all group-sized windows and key joins: the only
   * shuffles are on the query/neighbour ids, nothing corpus-quadratic,
   * nothing on the driver.

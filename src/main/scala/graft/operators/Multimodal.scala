@@ -429,50 +429,35 @@ object Multimodal {
                            decodedWidth: Int, decodedHeight: Int,
                            nFramesSampled: Int, feature: Array[Float])
 
-  /** REAL BMP decode, pure byte arithmetic — no codec dependency. Reads
-    * the little-endian headers (data offset at 10, dims at 18/22, bpp at
-    * 28, compression at 30), walks the pixel rows in their on-disk
-    * order (bottom-up when height is positive, the common case; top-down
-    * when negative) skipping the per-row padding to 4 bytes, and
-    * computes a 16-dim feature: lane d = the mean intensity of pixel-
-    * array bytes at logical position ≡ d (mod 16), bytes as UNSIGNED
-    * 0–255 intensities. Supports exactly what it claims — 24-bit
-    * uncompressed BI_RGB — and refuses anything else loudly.
+  /** REAL BMP decode, pure byte arithmetic — no codec dependency. The
+    * headers and pixels come from [[decodeBmpRgb]], which supports
+    * exactly 24-bit uncompressed BI_RGB and refuses anything else, and
+    * every hostile header, loudly with the media_id. The 16-dim feature:
+    * lane d = the mean intensity of the pixel bytes at logical position
+    * ≡ d (mod 16), bytes as UNSIGNED 0–255 intensities in B, G, R order,
+    * rows top-down.
     */
   private[operators] def decodeBmp(id: Long, payload: Array[Byte]): MediaFeatures = {
-    val buf = java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    require(payload.length >= 54 && payload(0) == 'B'.toByte && payload(1) == 'M'.toByte,
+    require(payload.length >= 2 && payload(0) == 'B'.toByte && payload(1) == 'M'.toByte,
       s"not a BMP payload (media_id=$id)")
-    val dataOffset = buf.getInt(10)
-    val w = buf.getInt(18)
-    val hRaw = buf.getInt(22)
-    val bitCount = buf.getShort(28).toInt
-    val compression = buf.getInt(30)
-    require(bitCount == 24 && compression == 0,
-      s"decodeBmp supports 24-bit uncompressed BI_RGB only, got bpp=$bitCount compression=$compression (media_id=$id)")
-    val bottomUp = hRaw > 0
-    val h = math.abs(hRaw)
-    val rowSize = ((w * 3 + 3) / 4) * 4
-    require(payload.length >= dataOffset + rowSize * h,
-      s"truncated BMP: need ${dataOffset + rowSize * h} bytes, have ${payload.length} (media_id=$id)")
-    val laneSum = new Array[Long](16)
-    val laneN = new Array[Long](16)
-    var y = 0
-    while (y < h) {
-      val srcRow = if (bottomUp) h - 1 - y else y
-      val base = dataOffset + srcRow * rowSize
-      var x = 0
-      while (x < w * 3) {
-        val lane = (y * w * 3 + x) % 16
-        laneSum(lane) += (payload(base + x) & 0xff).toLong
-        laneN(lane) += 1
-        x += 1
-      }
-      y += 1
-    }
-    val feature = Array.tabulate(16)(d =>
-      if (laneN(d) == 0) 0f else (laneSum(d).toDouble / laneN(d)).toFloat)
-    MediaFeatures(id, "image", w, h, 1, feature)
+    val img = decodeBmpRgb(id, payload, "decodeBmp")
+    val feature = laneMeans(img.w * img.h * 3, { j =>
+      val p = j / 3
+      (img.rgb(p % img.w, p / img.w) >> (8 * (j % 3))) & 0xff
+    })
+    MediaFeatures(id, "image", img.w, img.h, 1, feature)
+  }
+
+  /** Lane d = the mean of `value(j)` over j < n with j ≡ d (mod 16); 0
+    * for an empty lane. The 16-dim feature of [[decodeBmp]] and
+    * [[decodeWavFeatures]].
+    */
+  private def laneMeans(n: Int, value: Int => Int): Array[Float] = {
+    val sum = new Array[Long](16)
+    val cnt = new Array[Long](16)
+    var j = 0
+    while (j < n) { sum(j % 16) += value(j); cnt(j % 16) += 1; j += 1 }
+    Array.tabulate(16)(d => if (cnt(d) == 0) 0f else (sum(d).toDouble / cnt(d)).toFloat)
   }
 
   /** Parsed PCM audio: fmt-chunk fields + the decoded samples as signed
@@ -570,17 +555,8 @@ object Multimodal {
     */
   private[operators] def decodeWavFeatures(id: Long, payload: Array[Byte]): MediaFeatures = {
     val pcm = parseWav(id, payload)
-    val laneSum = new Array[Long](16)
-    val laneN = new Array[Long](16)
-    var j = 0
-    while (j < pcm.samples.length) {
-      laneSum(j % 16) += pcm.samples(j)
-      laneN(j % 16) += 1
-      j += 1
-    }
-    val feature = Array.tabulate(16)(d =>
-      if (laneN(d) == 0) 0f else (laneSum(d).toDouble / laneN(d)).toFloat)
-    MediaFeatures(id, "audio", pcm.sampleRate, pcm.channels, pcm.nFrames, feature)
+    MediaFeatures(id, "audio", pcm.sampleRate, pcm.channels, pcm.nFrames,
+      laneMeans(pcm.samples.length, pcm.samples(_)))
   }
 
   /** Parsed ISO BMFF metadata: movie-header clock + the video trak's

@@ -227,26 +227,16 @@ object Pq {
       .select(col("query_id"), col("neighbor_id"), col("exact_dist"), col("rank"))
   }
 
-  private def sqDistFull(a: Array[Float], b: Array[Float]): Double = {
-    var d = 0.0
-    var t = 0
-    while (t < a.length) {
-      val diff = a(t).toDouble - b(t).toDouble
-      d += diff * diff
-      t += 1
-    }
-    d
-  }
-
   /** The full FAISS IVFPQ search shape — the 100 TB ANN architecture
     * this file's pieces compose into: the corpus partitions into coarse
-    * centroid cells ONCE ([[Similarity.ivfAssign]]), each vector is PQ-
-    * encoded as the RESIDUAL v − c(cell) (residuals cluster far tighter
-    * than raw vectors, so the same ksub buys more accuracy — the reason
-    * FAISS encodes residuals), and a query touches only its `nProbe`
-    * nearest cells' CODES: per probed cell one m×ksub ADC table on the
-    * query's own residual, m lookups per member code, per-partition
-    * bounded heaps, then exact re-rank of the `shortlist` survivors.
+    * centroid cells ONCE ([[Similarity.ivfAssign]]'s rule), each vector
+    * is PQ-encoded as the RESIDUAL v − c(cell) (residuals cluster far
+    * tighter than raw vectors, so the same ksub buys more accuracy — the
+    * reason FAISS encodes residuals), and a query touches only its
+    * `nProbe` nearest cells' CODES, by cosine as [[Similarity.ivfTopK]]
+    * probes: per probed cell one m×ksub ADC table on the query's own
+    * residual, m lookups per member code, per-partition bounded heaps,
+    * then exact re-rank of the `shortlist` survivors.
     *
     * Cost per query: nProbe·(m·ksub·dsub) table arithmetic +
     * |corpus|·nProbe/|cells| code lookups + `shortlist` exact
@@ -269,26 +259,20 @@ object Pq {
       s"need k >= 1, nProbe >= 1, shortlist >= k; got k=$k nProbe=$nProbe shortlist=$shortlist")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(centroidId).cast("long"), col(centroidVec))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "empty centroid table")
-    val bCents = spark.sparkContext.broadcast(cents.toMap)
-    // corpus → cells, residual-encode (one pass; vectors never shuffle
-    // beyond the assignment's own scan)
-    val assigned = Similarity
-      .ivfAssign(corpus, idCol, vecCol, centroids, centroidId, centroidVec)
-      .filter(col("cell").isNotNull)
-      .select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"),
-        col("cell").cast("long").as("__cell"))
-    val resDf = assigned.as[(Long, Array[Float], Long)]
+    val cents = Similarity.centroidTable(centroids, centroidId, centroidVec)
+    require(cents.ids.nonEmpty, "empty centroid table")
+    val bCents = spark.sparkContext.broadcast(cents)
+    // corpus → nearest cell → residual, in one map-side pass (vectors
+    // never shuffle); a row with no eligible cell is dropped
+    val resDf = corpus.select(col(idCol).cast("long"), col(vecCol))
+      .as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val cm = bCents.value
-        it.map { case (id, v, cell) =>
-          val c = cm(cell)
-          require(c.length == v.length,
-            s"dim mismatch vs centroid $cell (id=$id)")
-          (id, Array.tabulate(v.length)(t => v(t) - c(t)), cell)
+        val cs = bCents.value
+        it.flatMap { case (id, v) =>
+          cs.nearest(v).map { case (i, _) =>
+            val c = cs.vecs(i)
+            (id, Array.tabulate(v.length)(t => v(t) - c(t)), cs.ids(i))
+          }
         }
       }.toDF("__id", "__res", "__cell")
     val cb = fit(resDf, "__id", "__res", m, ksub, iters)
@@ -299,13 +283,10 @@ object Pq {
     val qs = queries.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])].collect()
     val probes: Map[Long, Array[(Int, Array[Double])]] = qs.zipWithIndex.flatMap { case ((_, qv), q) =>
-      cents.filter(_._2.length == qv.length)
-        .map { case (cid, cv) => (sqDistFull(qv, cv), cid, cv) }
-        .sortBy { case (d, cid, _) => (d, cid) }
-        .take(nProbe)
-        .map { case (_, cid, cv) =>
-          (cid, (q, adcTable(Array.tabulate(qv.length)(t => qv(t) - cv(t)), cb)))
-        }
+      cents.probe(qv).take(nProbe).map { i =>
+        val cv = cents.vecs(i)
+        (cents.ids(i), (q, adcTable(Array.tabulate(qv.length)(t => qv(t) - cv(t)), cb)))
+      }
     }.groupBy(_._1).map { case (cid, arr) => cid -> arr.map(_._2) }
     val (mSub, ksubN) = (cb.m, cb.ksub)
     val short = TopK.search(codes, qs.map(_._1), probes, shortlist, descending = false,

@@ -13,8 +13,8 @@ import graft.expressions.GraftFunctions
   * Vector math: relational routes score pairs with graft's native
   * codegen'd `cosine_similarity` Expression
   * ([[graft.expressions.CosineSimilarity]]); the map-side scans (the
-  * at-scale top-k kernel, centroid assignment, hyperplane buckets) run
-  * the same double-precision dot product as JIT'd Scala loops. The
+  * top-k scan, centroid assignment, hyperplane buckets) run the same
+  * double-precision dot product as JIT'd Scala loops. The
   * [[cosine]] UDF and the higher-order-function [[cosineExpr]] (~100×
   * slower, interpreted per element) stay for callers that want them.
   *
@@ -83,48 +83,31 @@ object Similarity {
   private def atLeast(sim: Column, threshold: Double): Column =
     nanvl(sim, lit(null).cast("double")) >= threshold
 
-  /** The per-query window re-rank every relational top-k route ends in. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
-    TopK.rerank(scored, "query_id", "neighbour_id", "cosine_sim", k, descending = true)
-      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
-
-  /** Exact top-k nearest neighbours by cosine for each query vector.
-    * `queries` is broadcast (bounded batch); the corpus is scanned once.
-    * Self-matches (same id) are excluded. Deterministic tie-break on
-    * neighbour id. Output: (query_id, neighbour_id, cosine_sim).
+  /** Exact top-k nearest neighbours by cosine for each query vector,
+    * through [[TopK.search]]: the bounded query batch broadcasts once,
+    * the corpus is scanned once into per-(query, partition) heaps, and
+    * only k·|Q|·numPartitions rows reach the one re-rank — nothing of
+    * |C|·|Q| size is ever shuffled. Self-matches (same id) are excluded;
+    * ties break on neighbour id. Output: (query_id, neighbour_id,
+    * cosine_sim).
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
-                     idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbour_id"), col(vecCol).as("cv"))
-    rankTopK(c.join(q, col("query_id") =!= col("neighbour_id"))
-      .withColumn("cosine_sim", cosineNative(col("qv"), col("cv"))), k)
-  }
-
-  /** Exact top-k at corpus scale: per-partition bounded heaps instead of
-    * scoring-then-windowing. [[bruteForceTopK]] shuffles |C|·|Q| scored
-    * rows into a window — fine at test scale, fatal at 100 TB; this keeps
-    * k candidates per (query, partition) in a heap (`mapPartitions` is
-    * justified here: genuinely per-partition imperative state), so only
-    * k·|Q|·numPartitions rows reach the final exact re-rank. Same output
-    * contract and ordering semantics as [[bruteForceTopK]].
-    */
-  def bruteForceTopKAtScale(queries: DataFrame, corpus: DataFrame,
-                            idCol: String, vecCol: String, k: Int): DataFrame =
+                     idCol: String, vecCol: String, k: Int): DataFrame =
     scanTopK(queries, corpus, idCol, vecCol, k, _ => Array.emptyIntArray)
 
-  /** The one corpus scan behind both at-scale routes ([[TopK.search]]):
-    * each corpus row is scored against every query with a different id,
-    * the same dimension (the null-on-mismatch contract, lifted into a
+  /** The one corpus scan behind [[bruteForceTopK]] and [[lshTopK]]: each
+    * corpus row is scored against every query with a different id, the
+    * same dimension (the null-on-mismatch contract, lifted into a
     * ranking) and a shared `tag` value in some position — an LSH bucket
-    * in some table; an empty tag admits every row. `tag` runs once per
-    * vector.
+    * in some table; an empty tag admits every row. A query or corpus row
+    * with a null id or vector is skipped. `tag` runs once per vector.
     */
   private def scanTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                        vecCol: String, k: Int, tag: Array[Float] => Array[Int]): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    def rows(df: DataFrame) = df.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
+    def rows(df: DataFrame) = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+      .select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
     val qs = rows(queries).collect().map { case (qid, qv) => (qid, qv, normF(qv), tag(qv)) }
     TopK.search(rows(corpus), qs.map(_._1), qs, k, descending = true, "neighbour_id", "cosine_sim") {
       case (batch, (cid, cv), heaps) =>
@@ -245,37 +228,20 @@ object Similarity {
     // k-means-refined centroids (deterministic: seeded from the k
     // lowest ids, fixed iteration count) — correctness never depends on
     // them, only the pruned fraction does
-    val cents: Array[(Long, Array[Float])] =
+    val cents = new Centroids(
       kmeansFit(df.select(col(idCol).cast("long").as(idCol), col(vecCol)),
           idCol, vecCol, k, iters = 3)
-        .as[(Long, Array[Float])]
-        .collect().sortBy(_._1)
-    val cNorms = cents.map(c => normF(c._2))
+        .as[(Long, Array[Float])].collect())
     // Degenerate-vector guard: a zero-norm embedding has undefined cosine
     // (NaN on the exact path, where `cosine_sim >= threshold` drops it),
-    // so it is dropped at assignment here too — and, critically, it must
-    // never poison a cell's radius: max(angle) over a NaN makes the
-    // radius NaN, every pruning comparison involving that cell goes
-    // false, and VALID pairs get silently pruned. Zero-norm centroids are
-    // likewise skipped (their similarity is NaN against every vector).
+    // so a row whose best cosine is NaN is dropped at assignment here
+    // too — and, critically, it must never poison a cell's radius:
+    // max(angle) over a NaN makes the radius NaN, every pruning
+    // comparison involving that cell goes false, and VALID pairs get
+    // silently pruned.
     val assignUdf = udf { (v: Array[Float]) =>
-      val nv = normF(v)
-      if (nv == 0.0) None
-      else {
-        var bestId = 0L; var bestSim = Double.NegativeInfinity; var found = false
-        var i = 0
-        while (i < cents.length) {
-          val cv = cents(i)._2
-          if (cv.length == v.length && cNorms(i) > 0.0) {
-            val sim = dotF(v, cv) / (nv * cNorms(i))
-            if (!sim.isNaN && (!found || sim > bestSim)) {
-              found = true; bestSim = sim; bestId = cents(i)._1
-            }
-          }
-          i += 1
-        }
-        if (found) Some((bestId, math.acos(math.max(-1.0, math.min(1.0, bestSim)))))
-        else None
+      cents.nearest(v).filter(!_._2.isNaN).map { case (i, sim) =>
+        (cents.ids(i), math.acos(math.max(-1.0, math.min(1.0, sim))))
       }
     }
     val assigned = graft.Caches.track(df
@@ -294,17 +260,17 @@ object Similarity {
       .toMap
     val thetaThr = math.acos(threshold)
     def angleBetween(a: Int, b: Int): Double = {
-      val sim = dotF(cents(a)._2, cents(b)._2) / (cNorms(a) * cNorms(b))
+      val sim = dotF(cents.vecs(a), cents.vecs(b)) / (cents.norms(a) * cents.norms(b))
       math.acos(math.max(-1.0, math.min(1.0, sim)))
     }
     // surviving (cell_a ≤ cell_b) pairs — driver-side loop over ≤ |C|²
-    val occupied = cents.indices.filter(i => radii.contains(cents(i)._1))
+    val occupied = cents.ids.indices.filter(i => radii.contains(cents.ids(i)))
     val cellPairs = for {
       i <- occupied
       j <- occupied if j >= i
-      ra = radii(cents(i)._1); rb = radii(cents(j)._1)
+      ra = radii(cents.ids(i)); rb = radii(cents.ids(j))
       if i == j || angleBetween(i, j) - ra - rb <= thetaThr
-    } yield (cents(i)._1, cents(j)._1)
+    } yield (cents.ids(i), cents.ids(j))
     val nOcc = occupied.length.toLong
     val stats = BlockingStats(occupied.length,
       nOcc * (nOcc + 1) / 2, cellPairs.length.toLong)
@@ -371,53 +337,96 @@ object Similarity {
     * recall ≈ 0.7 for neighbours at cosine ≈ 0.45; scale nPlanes up with
     * corpus size to keep buckets small (2^nPlanes buckets per table) and
     * add tables to buy recall back.
+    *
+    * The same scan as [[bruteForceTopK]]: the query batch broadcasts with
+    * its precomputed per-table buckets, each corpus row's buckets are
+    * computed in-loop (nTables·nPlanes·dim JIT'd multiply-adds) and
+    * matched against every query, and nothing is row-amplified. A
+    * corpus row of another dimension is never a candidate.
     * Output contract matches [[bruteForceTopK]].
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
               k: Int, dim: Int, nTables: Int = 16, nPlanes: Int = 6,
               seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(nTables, nPlanes, dim, seed)
-    val bucketsUdf = udf((v: Array[Float]) => bucketsOf(planes, v))
-    def withBuckets(df: DataFrame, id: String, v: String): DataFrame =
-      df.select(col(id), col(v), posexplode(bucketsUdf(col(v))).as(Seq("table_id", "bucket")))
-    val q = broadcast(withBuckets(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id", "qv"))
-    val c = withBuckets(
-      corpus.select(col(idCol).as("neighbour_id"), col(vecCol).as("cv")), "neighbour_id", "cv")
-    // join on (table_id, bucket), dedupe across tables, then exact re-rank
-    val cand = c.as("c").join(q.as("q"),
-        col("c.table_id") === col("q.table_id") &&
-          col("c.bucket") === col("q.bucket") &&
-          col("q.query_id") =!= col("c.neighbour_id"))
-      .select(col("q.query_id").as("query_id"), col("c.neighbour_id").as("neighbour_id"),
-        col("q.qv").as("qv"), col("c.cv").as("cv"))
-      .dropDuplicates("query_id", "neighbour_id")
-      .withColumn("cosine_sim", cosineNative(col("qv"), col("cv")))
-    rankTopK(cand, k)
-  }
-
-  /** [[lshTopK]] at corpus scale: identical candidate semantics (same
-    * bucket in ANY of `nTables` tables, same planes for the same seed —
-    * so the OUTPUT is identical row-for-row), radically different plan.
-    * [[lshTopK]] explodes the corpus nTables× with full vector payloads
-    * through a shuffle join + dropDuplicates + window; at 100 TB that is
-    * nTables copies of the corpus through the wire for a bounded query
-    * batch. Here the query batch (bounded by contract, like
-    * [[bruteForceTopKAtScale]]) broadcasts with PRECOMPUTED per-table
-    * buckets; the corpus is scanned ONCE, each row's buckets are computed
-    * in-loop (nTables·nPlanes·dim JIT'd multiply-adds), matched against
-    * every query bitwise, and survivors go straight into per-(query,
-    * partition) k-heaps — only k·|Q|·numPartitions rows ever leave the
-    * scan, and nothing is ever row-amplified.
-    */
-  def lshTopKAtScale(queries: DataFrame, corpus: DataFrame, idCol: String,
-                     vecCol: String, k: Int, dim: Int, nTables: Int = 16,
-                     nPlanes: Int = 6, seed: Long = 42L): DataFrame = {
-    val planes = hyperplanes(nTables, nPlanes, dim, seed)
-    // a corpus row of another dimension is never a candidate (the scan's
-    // dimension test rejects it before its tag is read)
+    // the scan's dimension test rejects another dimension's corpus row
+    // before its tag is read
     scanTopK(queries.filter(size(col(vecCol)) === dim), corpus, idCol, vecCol, k,
       v => if (v.length == dim) bucketsOf(planes, v) else null)
+  }
+
+  /** A centroid table, collected once per call: ids cast to long and
+    * sorted, norms precomputed. Every centroid consumer here — the cell
+    * assignments of [[ivfAssign]], [[kmeansFit]],
+    * [[cosinePairsAboveBlocked]] and [[Pq.ivfPqTopK]], and
+    * [[ivfTopK]]'s probes — decides "nearest cell" through it. A
+    * centroid of another dimension or of zero norm (its cosine is NaN
+    * against every vector) is never eligible.
+    */
+  private[operators] final class Centroids(table: Array[(Long, Array[Float])])
+      extends Serializable {
+    private val sorted = table.sortBy(_._1)
+    val ids: Array[Long] = sorted.map(_._1)
+    val vecs: Array[Array[Float]] = sorted.map(_._2)
+    val norms: Array[Double] = vecs.map(normF)
+
+    private def eligible(i: Int, v: Array[Float]): Boolean =
+      vecs(i).length == v.length && norms(i) > 0.0
+
+    /** The index of `v`'s nearest eligible centroid and its cosine: a
+      * defined cosine beats NaN (a zero-norm `v` has NaN against every
+      * centroid), ties go to the lowest id. None for a null `v` or when
+      * no centroid is eligible.
+      */
+    def nearest(v: Array[Float]): Option[(Int, Double)] =
+      if (v == null) None
+      else {
+        val nv = normF(v)
+        var best = -1; var bestSim = Double.NaN
+        var i = 0
+        while (i < ids.length) {
+          if (eligible(i, v)) {
+            val sim = dotF(v, vecs(i)) / (nv * norms(i))
+            // strict > in id order keeps the lowest id on a tie
+            if (best < 0 || sim > bestSim || (bestSim.isNaN && !sim.isNaN)) {
+              best = i; bestSim = sim
+            }
+          }
+          i += 1
+        }
+        if (best < 0) None else Some((best, bestSim))
+      }
+
+    /** The eligible centroids' indices in probe order: cosine descending
+      * (NaN last), then id ascending. Empty for a null `v`.
+      */
+    def probe(v: Array[Float]): Seq[Int] =
+      if (v == null) Nil
+      else {
+        val nv = normF(v)
+        // indices run in id order, so the index breaks a tie as the id would
+        ids.indices.filter(eligible(_, v))
+          .map(i => (-(dotF(v, vecs(i)) / (nv * norms(i))), i))
+          .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+          .map(_._2)
+      }
+  }
+
+  /** Collect a (`idCol`, `vecCol`) centroid frame into a [[Centroids]]. */
+  private[operators] def centroidTable(centroids: DataFrame, idCol: String,
+                                       vecCol: String): Centroids = {
+    val spark = centroids.sparkSession
+    import spark.implicits._
+    new Centroids(centroids.select(col(idCol).cast("long"), col(vecCol))
+      .as[(Long, Array[Float])].collect())
+  }
+
+  /** `df` plus the `cell` (long) of each row's nearest centroid, null
+    * where none is eligible. Map-side only.
+    */
+  private def withCell(df: DataFrame, vecCol: String, cents: Centroids): DataFrame = {
+    val assign = udf((v: Array[Float]) => cents.nearest(v).map(n => cents.ids(n._1)))
+    df.withColumn("cell", assign(col(vecCol)))
   }
 
   /** Spherical k-means fit (Lloyd's algorithm, cosine assignment): the
@@ -446,8 +455,7 @@ object Similarity {
       .as[(Long, Array[Float])].collect().toMap
     var it = 0
     while (it < iters) {
-      val centDf = cents.toSeq.toDF("cid", "cvec")
-      val means = ivfAssign(df, idCol, vecCol, centDf, "cid", "cvec")
+      val means = withCell(df, vecCol, new Centroids(cents.toArray))
         .filter(col("cell").isNotNull) // dim-mismatch rows can't vote
         .select(col("cell"), posexplode(col(vecCol)))
         .groupBy(col("cell"), col("pos"))
@@ -464,10 +472,10 @@ object Similarity {
   }
 
   /** IVF (inverted-file) approximate top-k search — the cell-probed
-    * scale path that completes the ANN family next to [[lshTopKAtScale]]:
-    * the corpus partitions into centroid cells ONCE (map-side argmax,
-    * [[ivfAssign]]); each query probes only its `nProbe`
-    * nearest cells, so the scored candidate set is ~|corpus|·nProbe/k
+    * scale path that completes the ANN family next to [[lshTopK]]: the
+    * corpus partitions into centroid cells ONCE (map-side argmax,
+    * [[ivfAssign]]); each query probes only its `nProbe` nearest cells
+    * ([[Centroids.probe]]'s order), so the scored candidate set is ~|corpus|·nProbe/k
     * cells instead of the whole corpus. One cell-keyed equi-join (the
     * corpus shuffles once on `cell`; at a persisted index the corpus
     * side is pre-bucketed by cell and never moves), exact cosine on the
@@ -477,41 +485,27 @@ object Similarity {
     * each corpus row lives in exactly one cell, so no candidate dedup is
     * needed. Ties break like every top-k here: sim desc, neighbour id
     * asc. Centroids are caller-provided ([[kmeansFit]] or any codebook)
-    * — a bounded table collected to the driver, like every centroid
-    * consumer in this file.
+    * — a bounded table collected to the driver once.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
               centroids: DataFrame, centroidId: String, centroidVec: String,
               k: Int, nProbe: Int): DataFrame = {
     require(k >= 1 && nProbe >= 1, s"need k >= 1, nProbe >= 1; got k=$k nProbe=$nProbe")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(centroidId).cast("long"), col(centroidVec))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val cNorms: Array[Double] = cents.map { case (_, cv) => normF(cv) }
-    // top-nProbe nearest centroids per query, deterministic (sim desc,
-    // cid asc — same convention as the assignment's tie-break)
-    val probeCells = udf { (v: Array[Float]) =>
-      // null query vector → no cells (skip the row) — throwing here
-      // would kill a 100 TB job on one bad row, the contract the rest of
-      // this file keeps (cosineUdf nulls, corpus side filters its cells)
-      if (v == null) Array.empty[Long]
-      else cents.indices
-        .filter(i => cents(i)._2.length == v.length)
-        .map(i => (dotF(v, cents(i)._2) / (normF(v) * cNorms(i)), cents(i)._1))
-        .sortBy { case (sim, cid) => (-sim, cid) }
-        .take(nProbe).map(_._2).toArray
-    }
-    val corpusCells = ivfAssign(corpus, idCol, vecCol, centroids, centroidId, centroidVec)
+    val cents = centroidTable(centroids, centroidId, centroidVec)
+    // a null query vector probes no cell (the row is skipped): throwing
+    // here would kill a 100 TB job on one bad row
+    val probeCells = udf((v: Array[Float]) => cents.probe(v).take(nProbe).map(cents.ids))
+    val corpusCells = withCell(corpus, vecCol, cents)
       .filter(col("cell").isNotNull)
       .select(col(idCol).as("neighbour_id"), col(vecCol).as("__cv"), col("cell"))
     val queryCells = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .withColumn("cell", explode(probeCells(col("__qv"))))
-    rankTopK(queryCells.join(corpusCells, "cell")
+    val scored = queryCells.join(corpusCells, "cell")
       .filter(col("query_id") =!= col("neighbour_id"))
-      .withColumn("cosine_sim", cosineNative(col("__qv"), col("__cv"))), k)
+      .withColumn("cosine_sim", cosineNative(col("__qv"), col("__cv")))
+    TopK.rerank(scored, "query_id", "neighbour_id", "cosine_sim", k, descending = true)
+      .select(col("query_id"), col("neighbour_id"), col("cosine_sim"))
   }
 
   /** IVF-style coarse quantization: assign every vector to its nearest of
@@ -519,48 +513,21 @@ object Similarity {
     * searches probe only matching cells. The centroid table would come
     * from a sampled k-means at scale; any bounded centroid set works here.
     *
-    * Per-row argmax over the collected centroid array — pure map-side,
-    * ZERO shuffle and zero row amplification (the earlier join+window
-    * formulation expanded the corpus |centroids|× and shuffled the
-    * expansion into a window — a non-starter at 100 TB). The collect is
-    * bounded by contract: a centroid set is k ≤ thousands of rows; the
-    * array ships once per executor in the UDF closure. Ties break on the
-    * lowest centroid id; dim-mismatched and zero-norm centroids are
-    * skipped (a zero-norm centroid's cosine is NaN against every row, and
-    * a NaN best would win every later `>` test), and a row no centroid
-    * matches gets a null cell (the cosine null contract, lifted). A
-    * zero-norm row has no defined cosine to any centroid, so it joins
-    * the lowest-id eligible one, like any other tie.
+    * Per-row argmax over the collected [[Centroids]] table — pure
+    * map-side, ZERO shuffle and zero row amplification (the earlier
+    * join+window formulation expanded the corpus |centroids|× and
+    * shuffled the expansion into a window — a non-starter at 100 TB).
+    * The collect is bounded by contract: a centroid set is k ≤ thousands
+    * of rows; the table ships once per executor in the UDF closure. The
+    * nearest-cell rule is [[Centroids.nearest]]'s; a null row, or one no
+    * centroid matches, gets a null cell (the cosine null contract,
+    * lifted). A zero-norm row has no defined cosine to any centroid, so
+    * it joins the lowest-id eligible one, like any other tie.
     * Output: input + `cell` column (long).
     */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String, centroids: DataFrame,
-                centroidId: String, centroidVec: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(centroidId).cast("long"), col(centroidVec))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val cNorms: Array[Double] = cents.map { case (_, cv) => normF(cv) }
-    val assign = udf { (v: Array[Float]) =>
-      val nv = normF(v)
-      var bestId = 0L; var bestSim = Double.NaN; var found = false
-      var i = 0
-      while (i < cents.length) {
-        val cv = cents(i)._2
-        if (cv.length == v.length && cNorms(i) > 0.0) {
-          val sim = dotF(v, cv) / (nv * cNorms(i))
-          // strict > with cid-ascending iteration = lowest id wins ties;
-          // a defined similarity always beats a NaN one
-          if (!found || sim > bestSim || (bestSim.isNaN && !sim.isNaN)) {
-            found = true; bestSim = sim; bestId = cents(i)._1
-          }
-        }
-        i += 1
-      }
-      if (found) Some(bestId) else None
-    }
-    df.withColumn("cell", assign(col(vecCol)))
-  }
+                centroidId: String, centroidVec: String): DataFrame =
+    withCell(df, vecCol, centroidTable(centroids, centroidId, centroidVec))
 
   /** SemDeDup-style semantic deduplication (the Abbas et al. 2023 shape):
     * every vector is assigned to its nearest coarse centroid

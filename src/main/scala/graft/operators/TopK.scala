@@ -84,6 +84,6 @@ private[operators] object TopK {
     val w = Window.partitionBy(col(queryCol))
       .orderBy(if (descending) key.desc_nulls_last else key.asc_nulls_last, col(idCol).asc)
     candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k && !isnan(s))
+      .filter(col("rank") <= k && key.isNotNull)
   }
 }

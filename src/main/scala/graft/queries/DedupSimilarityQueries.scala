@@ -91,13 +91,12 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
 
 
   /** Brute-force cosine top-5 neighbours for a bounded query batch —
-    * per-partition-heap scale path (window variant kept in the library;
-    * spec asserts equality).
+    * one corpus scan into per-partition heaps.
     */
   private def q27AnnTopK(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val emb = t(s, dir, "embeddings")
-    Similarity.bruteForceTopKAtScale(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding", 5)
+    Similarity.bruteForceTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding", 5)
       .select(col("query_id"), col("neighbour_id"), round(col("cosine_sim"), 6).as("cosine_sim"))
       .orderBy(col("query_id"), col("neighbour_id"))
   }
@@ -115,10 +114,8 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
   private def q28AnnLsh(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val emb = t(s, dir, "embeddings")
-    // the at-scale form: single corpus pass + per-partition heaps;
-    // output-identical to lshTopK (same planes, same candidates —
-    // SimilaritySpec asserts row equality), no nTables× row blowup
-    Similarity.lshTopKAtScale(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
+    // single corpus pass + per-partition heaps, no nTables× row blowup
+    Similarity.lshTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
         k = 5, dim = 64, nTables = 64, nPlanes = 4)
       .select(col("query_id"), col("neighbour_id"), round(col("cosine_sim"), 6).as("cosine_sim"))
       .orderBy(col("query_id"), col("neighbour_id"))
@@ -389,7 +386,7 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
   private def q103FilteredAnn(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val emb = t(s, dir, "embeddings")
-    Similarity.bruteForceTopKAtScale(emb.filter(col("vec_id") < 20),
+    Similarity.bruteForceTopK(emb.filter(col("vec_id") < 20),
         emb.filter(col("label") === 3), "vec_id", "embedding", 5)
       .select(col("query_id"), col("neighbour_id"),
         round(col("cosine_sim"), 6).as("cosine_sim"))
@@ -642,7 +639,7 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
     import org.apache.spark.sql.expressions.Window
     val emb = t(s, dir, "embeddings")
     val results = Similarity
-      .bruteForceTopKAtScale(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 10)
+      .bruteForceTopK(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 10)
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)))
@@ -715,7 +712,7 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
     import org.apache.spark.sql.expressions.Window
     val emb = t(s, dir, "embeddings")
     val results = Similarity
-      .bruteForceTopKAtScale(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 20)
+      .bruteForceTopK(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 20)
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)))
@@ -787,7 +784,7 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
       .filter(col("rank") <= 20)
     val emb = t(s, dir, "embeddings")
     val vector = Similarity
-      .bruteForceTopKAtScale(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 20)
+      .bruteForceTopK(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 20)
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("cosine_sim").desc, col("neighbour_id").asc)))
@@ -964,9 +961,9 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
     import graft.operators.Similarity
     val emb = t(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 20)
-    val full = Similarity.bruteForceTopKAtScale(queries, emb, "vec_id", "embedding", 10)
+    val full = Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 10)
       .select(col("query_id"), col("neighbour_id"))
-    val trunc = Similarity.bruteForceTopKAtScale(
+    val trunc = Similarity.bruteForceTopK(
         queries.withColumn("embedding", slice(col("embedding"), 1, 16)),
         emb.withColumn("embedding", slice(col("embedding"), 1, 16)),
         "vec_id", "embedding", 10)
@@ -1162,10 +1159,10 @@ private[graft] object DedupSimilarityQueries extends QueryRegistry {
     val emb = t(s, dir, "embeddings")
     val batch = emb.filter(col("vec_id") % 2 === 0 && col("vec_id") < 200)
     val tgt = emb.filter(col("vec_id") % 2 === 1)
-    val fwd = Similarity.bruteForceTopKAtScale(batch, tgt, "vec_id", "embedding", 4)
+    val fwd = Similarity.bruteForceTopK(batch, tgt, "vec_id", "embedding", 4)
     val bwdQueries = emb.join(
       fwd.select(col("neighbour_id").as("vec_id")).distinct(), "vec_id")
-    val bwd = Similarity.bruteForceTopKAtScale(bwdQueries, batch, "vec_id", "embedding", 4)
+    val bwd = Similarity.bruteForceTopK(bwdQueries, batch, "vec_id", "embedding", 4)
     Bitext.marginMine(fwd, bwd, 1.0)
       .select(col("src_id"), col("tgt_id"),
         round(col("cosine_sim"), 6).as("cosine_sim"),

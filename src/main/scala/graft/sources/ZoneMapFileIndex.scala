@@ -8,9 +8,9 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
 /** Zone-map data skipping as a real Catalyst [[FileIndex]] — the scan
-  * itself prunes, instead of a helper API handing back a file list
-  * ([[ZoneMaps.readPruned]], which stays for callers composing their own
-  * reads). Because the skipping lives in the scan's file index:
+  * itself prunes, instead of a helper API handing back a file list.
+  * [[read]] is the one zone-map reader. Because the skipping lives in
+  * the scan's file index:
   *
   *  - it composes with EVERYTHING that consumes the relation — any
   *    reader, any join strategy, partition pruning (the inner

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** File-level zone maps: per-file min/max for chosen columns, harvested
   * from the parquet FOOTER statistics at write time (no second data
@@ -18,9 +17,10 @@ import org.apache.spark.sql.functions._
   * driver, so pruned files cost zero I/O, zero footer reads, zero tasks.
   *
   * Correctness contract: pruning is an OPTIMIZATION only — the caller's
-  * predicate must still be applied to the returned frame (readPruned
-  * re-applies the range filters itself), and a file with absent/
-  * unreadable statistics is conservatively KEPT, never skipped. Bounds
+  * predicate must still be applied to the pruned scan
+  * ([[ZoneMapFileIndex.read]] keeps the planner's filter above it), and
+  * a file with absent/unreadable statistics is conservatively KEPT,
+  * never skipped. Bounds
   * compare in the column's physical space: integer types as long,
   * FLOAT/DOUBLE as double, UTF-8 BINARY as string — the three families
   * the manifest records; other types are ignored (never pruned on).
@@ -216,24 +216,5 @@ object ZoneMaps {
   private def toDouble(v: Any): Double = v match {
     case n: Number => n.doubleValue
     case other => other.toString.toDouble
-  }
-
-  /** Read with file-list pruning, then RE-APPLY the range filters so the
-    * result is exactly the predicate's rows regardless of how coarse the
-    * zones are (zone bounds only skip whole files; surviving files still
-    * contain out-of-range rows, which parquet row-group pushdown and the
-    * re-applied filter remove).
-    */
-  def readPruned(spark: SparkSession, path: String,
-                 filters: Seq[ZoneFilter]): DataFrame = {
-    val manifest = Tables.readManifest(spark, path)
-    val kept = selectFiles(manifest, filters)
-    val base =
-      if (kept.isEmpty) spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(kept.map(f => s"$path/$f"): _*)
-    filters.foldLeft(base) { (df, flt) =>
-      val afterLo = flt.lo.map(v => df.filter(col(flt.col) >= lit(v))).getOrElse(df)
-      flt.hi.map(v => afterLo.filter(col(flt.col) <= lit(v))).getOrElse(afterLo)
-    }
   }
 }

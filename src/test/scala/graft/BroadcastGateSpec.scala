@@ -114,8 +114,8 @@ class BroadcastGateSpec extends AnyFunSuite {
         "unimax source-count scalar + 1-row m*/τ selections over the bounded source table"),
     "graft/operators/Scoring.scala" -> (13,
       "contract: vocab/df tables bounded by vocab contract, scalar corpus stats (incl. the KN bigram-type total), k candidates"),
-    "graft/operators/Similarity.scala" -> (4,
-      "contract: query sets (bruteForceTopK, lshTopK), eval set, surviving cell-pair table — parameter-sized by API contract"),
+    "graft/operators/Similarity.scala" -> (2,
+      "contract: eval set, surviving cell-pair table — parameter-sized by API contract"),
     "graft/operators/TopK.scala" -> (1,
       "contract: the top-k query batch — query ids + per-query scoring state " +
         "(vectors/norms/LSH buckets, ADC tables, or per-cell probe tables) — bounded by the batch"),

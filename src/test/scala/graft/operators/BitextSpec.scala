@@ -15,9 +15,9 @@ class BitextSpec extends SparkSpec {
                    k: Int, threshold: Double) = {
     val sDf = src.toDF("vec_id", "embedding")
     val tDf = tgt.toDF("vec_id", "embedding")
-    val fwd = Similarity.bruteForceTopKAtScale(sDf, tDf, "vec_id", "embedding", k)
+    val fwd = Similarity.bruteForceTopK(sDf, tDf, "vec_id", "embedding", k)
     val bwdQ = tDf.join(fwd.select(col("neighbour_id").as("vec_id")).distinct(), "vec_id")
-    val bwd = Similarity.bruteForceTopKAtScale(bwdQ, sDf, "vec_id", "embedding", k)
+    val bwd = Similarity.bruteForceTopK(bwdQ, sDf, "vec_id", "embedding", k)
     Bitext.marginMine(fwd, bwd, threshold)
       .orderBy("src_id", "tgt_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))

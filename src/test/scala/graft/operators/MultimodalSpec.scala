@@ -88,6 +88,31 @@ class MultimodalSpec extends SparkSpec {
     assert(ex.getMessage.contains("24-bit"))
   }
 
+  test("decodeFeatures refuses hostile BMP headers with the media_id, as imagePool does") {
+    import spark.implicits._
+    // a 54-byte header plus 16 pixel bytes, 24-bit BI_RGB
+    def bmp(w: Int, h: Int, dataOffset: Int): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(54 + 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.put('B'.toByte).put('M'.toByte)
+        .putInt(70).putInt(0).putInt(dataOffset)
+        .putInt(40).putInt(w).putInt(h)
+        .putShort(1).putShort(24).putInt(0)
+        .putInt(16).putInt(2835).putInt(2835).putInt(0).putInt(0)
+      buf.array()
+    }
+    val hostile = Seq(
+      71L -> bmp(1000000000, 1, 54), 72L -> bmp(-5, 2, 54),
+      73L -> bmp(0, 2, 54), 74L -> bmp(2, 2, -100))
+    for ((id, payload) <- hostile) {
+      val media = Seq((id, payload)).toDF("media_id", "payload")
+      val err = intercept[Exception](Multimodal.decodeFeatures(media).collect())
+      val chain = Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        String.valueOf(t.getMessage).contains(s"media_id=$id")),
+        s"media $id: ${chain.map(_.toString).mkString(" | ")}")
+    }
+  }
+
   test("image payloads are real BMPs and the real decoder recovers the synthetic pixels") {
     val media = Multimodal.synthesize(spark, 30).filter(col("modality") === "image")
     val payloads = media.select("media_id", "payload").collect()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -41,51 +42,103 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Set((0L, 1L)))
   }
 
-  test("bruteForceTopKAtScale == window variant on real embeddings") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .repartition(7) // multiple partitions so the heap-merge path is real
+  private def embeddings = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    .select(col("vec_id"), col("embedding"))
+
+  /** The exact top-k by an independent route: the queries cross-joined
+    * with the corpus, self pairs excluded, each pair scored by the
+    * [[Similarity.cosine]] UDF and ranked on the driver by cosine
+    * descending, then neighbour id ascending. A NaN or null cosine never
+    * ranks.
+    */
+  private def referenceTopK(queries: DataFrame, corpus: DataFrame,
+                            k: Int): Map[(Long, Long), Double] =
+    queries.select(col("vec_id").as("q"), col("embedding").as("qv"))
+      .crossJoin(corpus.select(col("vec_id").as("n"), col("embedding").as("nv")))
+      .filter(col("q") =!= col("n"))
+      .select(col("q"), col("n"), Similarity.cosine(col("qv"), col("nv")))
+      .collect().toSeq
+      .collect { case r if !r.isNullAt(2) && !r.getDouble(2).isNaN =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2)) }
+      .groupBy(_._1).values
+      .flatMap(_.sortBy { case (_, n, sim) => (-sim, n) }.take(k))
+      .map { case (q, n, sim) => (q, n) -> sim }.toMap
+
+  /** Top-k rows keyed by (query, neighbour); no similarity may be NaN. */
+  private def pairs(df: DataFrame): Map[(Long, Long), Double] = {
+    val rows = df.collect()
+    assert(rows.forall(r => !r.isNullAt(2) && !r.getDouble(2).isNaN), "NaN similarity in the output")
+    rows.map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+  }
+
+  /** Same (query, neighbour) ids, similarities within 1e-12. */
+  private def assertMatches(got: Map[(Long, Long), Double], want: Map[(Long, Long), Double],
+                            what: String): Unit = {
+    assert(got.keySet == want.keySet, what)
+    got.foreach { case (pair, sim) => assert(math.abs(sim - want(pair)) < 1e-12, s"$what: pair $pair") }
+  }
+
+  test("bruteForceTopK == the cosine-UDF cross-join reference") {
+    val emb = embeddings
     val queries = emb.filter(col("vec_id") < 10)
-    def sims(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val a = sims(Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5))
-    val b = sims(Similarity.bruteForceTopKAtScale(queries, emb, "vec_id", "embedding", 5))
-    assert(a.size == 50 && a.keySet == b.keySet)
-    // the scan's JVM kernel against the native expression
-    a.foreach { case (pair, sim) => assert(math.abs(sim - b(pair)) < 1e-12, s"pair $pair") }
+    val want = referenceTopK(queries, emb, 5)
+    assert(want.size == 50)
+    // several partitions make the heap merge real
+    for (corpus <- Seq(emb.coalesce(1), emb.repartition(7)))
+      assertMatches(pairs(Similarity.bruteForceTopK(queries, corpus, "vec_id", "embedding", 5)),
+        want, s"${corpus.rdd.getNumPartitions} partitions")
   }
 
   test("zero-norm vectors: never a neighbour, no neighbours, every exact path agrees") {
     import spark.implicits._
     // a zero vector's cosine is 0/0 = NaN, and Spark orders NaN above
     // every number: unguarded, it ranks FIRST for every query
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
+    val emb = embeddings
     val zero = Seq((-1L, Array.fill(64)(0.0f))).toDF("vec_id", "embedding")
     val corpus = emb.unionByName(zero).repartition(3)
     val queries = corpus.filter(col("vec_id") < 5) // 5 real queries + the zero one
-    def pairs(df: org.apache.spark.sql.DataFrame) = {
-      val rows = df.collect()
-      assert(rows.forall(r => !r.getDouble(2).isNaN), "NaN similarity in the output")
-      rows.map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    }
-    val window = pairs(Similarity.bruteForceTopK(queries, corpus, "vec_id", "embedding", 5))
-    assert(window.size == 25 && window.keySet.forall { case (q, n) => q >= 0 && n >= 0 },
-      s"the zero vector must neither rank nor get neighbours: ${window.keySet}")
+    val want = referenceTopK(queries, corpus, 5)
+    assert(want.size == 25 && want.keySet.forall { case (q, n) => q >= 0 && n >= 0 },
+      s"the zero vector must neither rank nor get neighbours: ${want.keySet}")
     val codebook = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    for (other <- Seq(
-        Similarity.bruteForceTopKAtScale(queries, corpus, "vec_id", "embedding", 5),
-        Similarity.ivfTopK(queries, corpus, "vec_id", "embedding", codebook, "cid", "cvec",
-          k = 5, nProbe = 8))) {
-      val got = pairs(other)
-      assert(got.keySet == window.keySet)
-      got.foreach { case (pair, sim) => assert(math.abs(sim - window(pair)) < 1e-12, s"pair $pair") }
-    }
+    assertMatches(pairs(Similarity.bruteForceTopK(queries, corpus, "vec_id", "embedding", 5)),
+      want, "bruteForceTopK")
+    assertMatches(pairs(Similarity.ivfTopK(queries, corpus, "vec_id", "embedding",
+      codebook, "cid", "cvec", k = 5, nProbe = 8)), want, "ivfTopK, all 8 cells probed")
     val lsh = pairs(Similarity.lshTopK(queries, corpus, "vec_id", "embedding",
       k = 5, dim = 64, nTables = 64, nPlanes = 4))
-    val lshScan = pairs(Similarity.lshTopKAtScale(queries, corpus, "vec_id", "embedding",
-      k = 5, dim = 64, nTables = 64, nPlanes = 4))
-    assert(lsh.keySet == lshScan.keySet && lsh.keySet.forall { case (q, n) => q >= 0 && n >= 0 })
+    assert(lsh.nonEmpty && lsh.keySet.forall { case (q, n) => q >= 0 && n >= 0 })
+  }
+
+  test("null ids, null vectors and another dimension's vectors never rank and never query") {
+    import spark.implicits._
+    val emb = embeddings
+    val queries = emb.filter(col("vec_id") < 10)
+    val v0 = emb.filter(col("vec_id") === 0L).select("embedding").as[Array[Float]].head()
+    // the null-id row copies query 0's vector: were it scored, it would
+    // be every query's best neighbour
+    val extra = Seq[(Option[Long], Option[Array[Float]])](
+      (Some(-1L), None), (None, Some(v0)), (Some(-2L), Some(v0.take(32))))
+      .toDF("vec_id", "embedding")
+    val corpus = emb.unionByName(extra).repartition(3)
+    val withNullQuery = queries.unionByName(
+      Seq[(Option[Long], Option[Array[Float]])]((Some(-3L), None)).toDF("vec_id", "embedding"))
+    def same(search: (DataFrame, DataFrame) => DataFrame, what: String): Unit =
+      assert(rowsOf(search(withNullQuery, corpus)) == rowsOf(search(queries, emb)), what)
+    same(Similarity.bruteForceTopK(_, _, "vec_id", "embedding", 5), "bruteForceTopK")
+    same(Similarity.lshTopK(_, _, "vec_id", "embedding", k = 5, dim = 64,
+      nTables = 16, nPlanes = 4), "lshTopK")
+  }
+
+  test("TopK.rerank: a null or NaN score never ranks") {
+    import spark.implicits._
+    val candidates = Seq[(Long, Long, Option[Double])](
+      (1L, 1L, None), (1L, 2L, Some(Double.NaN)), (1L, 3L, Some(0.5)), (2L, 4L, None))
+      .toDF("query_id", "neighbour_id", "cosine_sim")
+    for (descending <- Seq(true, false))
+      assert(rowsOf(TopK.rerank(candidates, "query_id", "neighbour_id", "cosine_sim",
+        k = 3, descending).select("neighbour_id")) == Seq(Seq(3L)), s"descending=$descending")
   }
 
   test("lshTopK recall vs brute force on real embeddings") {
@@ -100,23 +153,14 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.5, s"LSH recall@5 too low at default params: $recall")
   }
 
-  test("lshTopKAtScale == lshTopK row-for-row (same planes, same candidates)") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+  test("lshTopK with nPlanes = 0 puts every vector in one bucket: == bruteForceTopK") {
+    val emb = embeddings
     val queries = emb.filter(col("vec_id") < 10)
-    // 7 corpus partitions: the heap merge across partitions is exercised
-    for ((nt, np) <- Seq((16, 6), (64, 4)); corpus <- Seq(emb, emb.repartition(7))) {
-      val joined = Similarity.lshTopK(emb.filter(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, dim = 64, nTables = nt, nPlanes = np)
-      val scanned = Similarity.lshTopKAtScale(queries, corpus,
-        "vec_id", "embedding", k = 5, dim = 64, nTables = nt, nPlanes = np)
-      // compare on ids; sims are computed by different kernels (expression
-      // vs closure) but from identical float inputs — compare rounded
-      def keyed(df: org.apache.spark.sql.DataFrame) =
-        rowsOf(df.select(col("query_id"), col("neighbour_id"),
-          round(col("cosine_sim"), 9)))
-      assert(keyed(scanned) == keyed(joined),
-        s"tables=$nt planes=$np partitions=${corpus.rdd.getNumPartitions}")
-    }
+    for (corpus <- Seq(emb.coalesce(1), emb.repartition(7)))
+      assert(rowsOf(Similarity.lshTopK(queries, corpus, "vec_id", "embedding",
+          k = 5, dim = 64, nTables = 3, nPlanes = 0)) ==
+        rowsOf(Similarity.bruteForceTopK(queries, corpus, "vec_id", "embedding", 5)),
+        s"${corpus.rdd.getNumPartitions} partitions")
   }
 
   test("ivfAssign puts every vector in its nearest centroid cell") {
@@ -136,7 +180,7 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     val codebook = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val exact = Similarity.bruteForceTopKAtScale(queries, emb, "vec_id", "embedding", 5)
+    val exact = Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val full = Similarity.ivfTopK(queries, emb, "vec_id", "embedding",
         codebook, "cid", "cvec", k = 5, nProbe = 8)
@@ -154,7 +198,7 @@ class SimilaritySpec extends SparkSpec {
     val bdf = blobs.toDF("vec_id", "embedding")
     val cents = axes.zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("cid", "cvec")
     val bq = bdf.filter(col("vec_id") < 6)
-    val bExact = Similarity.bruteForceTopKAtScale(bq, bdf, "vec_id", "embedding", 3)
+    val bExact = Similarity.bruteForceTopK(bq, bdf, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val oneProbe = Similarity.ivfTopK(bq, bdf, "vec_id", "embedding",
         cents, "cid", "cvec", k = 3, nProbe = 1)
@@ -418,5 +462,19 @@ class SimilaritySpec extends SparkSpec {
     val got = Similarity.semanticDecontaminate(train, evalSet, "id", "v", 0.9)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(10L -> 1L, 12L -> 2L), s"got $got")
+  }
+
+  test("ivfTopK and ivfPqTopK collect their centroid table once") {
+    val emb = embeddings
+    val queries = emb.filter(col("vec_id") < 5)
+    val codebook = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val ivf = jobsOf(Similarity.ivfTopK(queries, emb, "vec_id", "embedding",
+      codebook, "cid", "cvec", k = 5, nProbe = 2)).size
+    val ivfPq = jobsOf(Pq.ivfPqTopK(queries, emb, "vec_id", "embedding", codebook, "cid", "cvec",
+      m = 8, ksub = 16, iters = 2, k = 5, nProbe = 2, shortlist = 32)).size
+    // the centroid table is the one job ivfTopK runs while it builds;
+    // ivfPqTopK adds the codebook's training sample and the query batch
+    assert((ivf, ivfPq) == (1, 3))
   }
 }

@@ -40,7 +40,7 @@ object ZoneMapsPropertySpec extends Properties("zonemaps") {
     b <- strGen
   } yield (vals, if (a <= b) a else b, if (a <= b) b else a)
 
-  property("readPruned == plain filter for ANY long data + range") =
+  property("FileIndex scan == plain scan for ANY long data + range") =
     Prop.forAll(longData) { case (vals, lo, hi) =>
       import spark.implicits._
       val path = java.nio.file.Files.createTempDirectory("zmprop").toString
@@ -51,8 +51,8 @@ object ZoneMapsPropertySpec extends Properties("zonemaps") {
       val expected = spark.read.parquet(path)
         .filter(col("v") >= lo && col("v") <= hi)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val got = ZoneMaps.readPruned(spark, path,
-          Seq(ZoneMaps.ZoneFilter("v", Some(lo), Some(hi))))
+      val got = ZoneMapFileIndex.read(spark, path)
+        .filter(col("v") >= lo && col("v") <= hi)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       got == expected
     }

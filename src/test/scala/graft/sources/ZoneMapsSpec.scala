@@ -50,13 +50,13 @@ class ZoneMapsSpec extends SparkSpec {
       Seq(ZoneMaps.ZoneFilter("id", Some(5000L), None))).isEmpty)
   }
 
-  test("readPruned returns exactly the predicate rows — pruning is invisible") {
+  test("ZoneMapFileIndex.read returns exactly the predicate rows") {
     val path = tmp()
     clustered(path)
     val expected = spark.read.parquet(path)
       .filter(col("id") >= 250L && col("id") <= 300L)
-    val pruned = ZoneMaps.readPruned(spark, path,
-      Seq(ZoneMaps.ZoneFilter("id", Some(250L), Some(300L))))
+    val pruned = ZoneMapFileIndex.read(spark, path)
+      .filter(col("id") >= 250L && col("id") <= 300L)
     assert(rowsOf(pruned) == rowsOf(expected))
     assert(pruned.count() == 51)
   }
@@ -70,8 +70,8 @@ class ZoneMapsSpec extends SparkSpec {
     // id <= 500 keeps the lower files, name >= s0900 keeps the upper —
     // the intersection is empty or a single boundary file
     assert(kept.isEmpty || kept.length == 1, s"expected disjoint prune, kept $kept")
-    val got = ZoneMaps.readPruned(spark, path, Seq(
-      ZoneMaps.ZoneFilter("score", Some(10.0), Some(12.0))))
+    val got = ZoneMapFileIndex.read(spark, path)
+      .filter(col("score") >= 10.0 && col("score") <= 12.0)
     assert(got.count() == 21) // ids 100..120
   }
 
@@ -95,8 +95,8 @@ class ZoneMapsSpec extends SparkSpec {
     assert(xPruned.length < all.length, s"x-range should prune: ${xPruned.length}/${all.length}")
     assert(yPruned.length < all.length, s"y-range should prune: ${yPruned.length}/${all.length}")
     // correctness through the pruned read on the second dimension
-    val got = ZoneMaps.readPruned(spark, path,
-      Seq(ZoneMaps.ZoneFilter("y", Some(28L), Some(31L))))
+    val got = ZoneMapFileIndex.read(spark, path)
+      .filter(col("y") >= 28L && col("y") <= 31L)
     assert(got.count() == 32 * 4)
   }
 
@@ -131,8 +131,8 @@ class ZoneMapsSpec extends SparkSpec {
   test("an empty prune still returns the correct (empty) frame with the right schema") {
     val path = tmp()
     clustered(path)
-    val got = ZoneMaps.readPruned(spark, path,
-      Seq(ZoneMaps.ZoneFilter("id", Some(9999L), None)))
+    val got = ZoneMapFileIndex.read(spark, path)
+      .filter(col("id") >= 9999L)
     assert(got.columns.toSeq == Seq("id", "score", "name"))
     assert(got.count() == 0)
   }

@@ -5,8 +5,10 @@
 # Env passthrough: SPARK_GRAFT_* vars are read by the mains themselves
 # (SPARK_GRAFT_CPUS defaults to every processor, in GraftSession).
 # SPARK_DRIVER_MEM sets the heap, 8g by default, as in build.sbt.
+# The classpath is this checkout's compiled classes plus $SPARK_HOME/jars.
 set -euo pipefail
 CLS="$1"; shift
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 # 128+ queries x whole-stage codegen generate enough JIT'd classes to
 # exhaust the default 240 MB reserved code cache mid-run, after which
 # HotSpot silently stops compiling and everything runs interpreted —
@@ -28,5 +30,5 @@ exec java -Xmx"${SPARK_DRIVER_MEM:-8g}" -XX:ReservedCodeCacheSize=1g \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dderby.system.home=/tmp/derby \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?SPARK_HOME must name the Spark install}/jars/*" \
   "$CLS" "$@"
